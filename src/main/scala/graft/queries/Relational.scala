@@ -2096,28 +2096,30 @@ object Relational {
     }),
 
     // ZONE-MAP data skipping (Iceberg manifest bounds / Delta file
-    // stats): orders are written range-sorted on price into 16 files
-    // with a per-file min/max manifest; the read consults the MANIFEST
-    // and opens only the files whose bounds intersect the predicate
-    // range (~10% selective here), then re-applies the exact predicate.
-    // At 100 TB this is the layer above footer pruning — the planner
-    // reads kilobytes of stats instead of listing thousands of files.
-    // The oracle recomputes the aggregate with a plain WHERE over the
-    // raw table, so an UNSOUND skip (a dropped file that held matches)
-    // fails the hash; the gated `skipped` boolean additionally pins
-    // that the scan really did read a strict, non-empty subset of the
-    // files (WritersSpec covers the zero-candidate path's empty scan).
+    // stats): orders are committed to a snapshot table range-sorted on
+    // price into 16 files whose manifest records each file's typed
+    // min/max; the read descends the manifests
+    // ([[sources.SnapshotTable.readPrunedCol]]) and opens only the
+    // files whose bounds intersect the predicate range (~10% selective
+    // here), then re-applies the exact predicate. At 100 TB this is the
+    // layer above footer pruning — the planner reads kilobytes of stats
+    // instead of listing thousands of files. The oracle recomputes the
+    // aggregate with a plain WHERE over the raw table, so an UNSOUND
+    // skip (a dropped file that held matches) fails the hash; the gated
+    // `skipped` boolean additionally pins that the scan really did read
+    // a strict, non-empty subset of the files (SnapshotTableSpec covers
+    // the zero-candidate path's empty scan).
     "q_zonemap_prune" -> ((s, d) => {
       val dir = rtDir("zmap", d)
       // identical build to q_zonemap_delete's prologue — ONE cached
       // base ("zmdel") serves both gates' copies
       cachedPrologue("zmdel", d, dir)(b =>
-        graft.sources.Writers.writeWithZoneMap(
+        graft.sources.SnapshotTable.commitAppend(
           orders(s, d).select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice").cast("decimal(18,2)").as("price")),
           b, "price", 16))
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePruned(s, dir, 100000.0, 150000.0)
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "price", 100000, 150000)
       cand.filter(col("price").between(lit(100000), lit(150000)))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
@@ -2128,33 +2130,35 @@ object Relational {
     }),
 
     // DELETE composed with the zone map — data skipping must stay
-    // sound through a takedown: [[sources.Writers.deleteKeysZoneMapped]]
-    // runs the touched-files-only COW delete, drops the touched files'
-    // manifest rows (metadata-scale), adopts the rewritten survivors
-    // through the diff-driven refresh, and rebuilds the meta summary —
-    // so the post-delete pruned read neither crashes on a manifest row
-    // whose file is gone nor skips a file it must read. Tombstones by
-    // ORDER KEY against a PRICE-sorted table deliberately spray across
-    // every file (the worst-case locality for a delete), and the gated
-    // aggregate equals the oracle's whole-table filter with the strict
-    // skip boolean intact.
+    // sound through a takedown: [[sources.SnapshotTable.commitDelete]]
+    // rewrites the touched files' survivors range-sorted on price,
+    // rewrites the touched manifests minus their dead rows, and
+    // publishes both in one new snapshot — so the post-delete pruned
+    // read neither opens a replaced file nor skips a file it must
+    // read. Tombstones by ORDER KEY against a PRICE-sorted table
+    // deliberately spray across every file (the worst-case locality
+    // for a delete), and the gated aggregate equals the oracle's
+    // whole-table filter with the strict skip boolean intact.
+    // `deleted_gone` counts the snapshot's LIVE rows: the directory
+    // still holds the replaced files until vacuum.
     "q_zonemap_delete" -> ((s, d) => {
       val dir = rtDir("zmdel", d)
       cachedPrologue("zmdel", d, dir)(base =>
-        graft.sources.Writers.writeWithZoneMap(
+        graft.sources.SnapshotTable.commitAppend(
           orders(s, d).select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice").cast("decimal(18,2)").as("price")),
           base, "price", 16))
       val tomb = orders(s, d).filter(col("o_orderkey") % 97 === 3)
         .select(col("o_orderkey"))
       val nTomb = tomb.count()
-      val (deleted, _, _) = graft.sources.Writers.deleteKeysZoneMapped(
+      val (deleted, _) = graft.sources.SnapshotTable.commitDelete(
         s, dir, "o_orderkey", tomb, "price")
       val s2 = s.newSession()
       val deletedGone = deleted == nTomb &&
-        diskRowCount(s2, dir) == orders(s2, d).count() - nTomb
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePruned(s2, dir, 100000.0, 150000.0)
+        graft.sources.SnapshotTable.read(s2, dir).count() ==
+          orders(s2, d).count() - nTomb
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s2, dir, "price", 100000, 150000)
       require(read > 0 && read < total,
         s"q_zonemap_delete: expected a strict non-empty file subset, " +
           s"scan read $read of $total files")
@@ -2168,20 +2172,19 @@ object Relational {
         .orderBy(col("o_orderpriority"))
     }),
 
-    // STREAMING INGESTION into the zone-mapped table — the bridge
-    // between the engine's two halves: a Structured Streaming pipeline
-    // lands micro-batches in the lakehouse layer EXACTLY ONCE via
-    // [[sources.Writers.zoneMapIngestCommit]] (staged write ->
-    // atomically-published movelist -> idempotent deterministic-name
-    // moves -> diff-driven manifest refresh -> batch ledger; every
-    // foreachBatch retry window converges to one copy — see the
-    // protocol note there; ZoneMapIngestSpec replays the crash windows
-    // explicitly). Two dated drops replay as micro-batches through
-    // runWithBatchCommit, a second AvailableNow run over the same
-    // checkpoint proves no re-commit, and the FRESH-SESSION pruned
-    // read must equal q_zonemap_prune's whole-table answer with the
-    // skip boolean still strict — streaming ingestion must cost the
-    // table none of its zone-map pruning.
+    // STREAMING INGESTION into the zone-mapped table — a Structured
+    // Streaming pipeline lands micro-batches in the snapshot table
+    // EXACTLY ONCE via [[sources.SnapshotTable.commitAppendOnce]] (the
+    // batch id and the writer id — the checkpoint path — ride the
+    // LATEST pointer, so a replay after a crash-after-swing
+    // short-circuits and a crash-before-swing retry sweeps the
+    // invisible orphans; SnapshotTableSpec replays both windows). Two
+    // dated drops replay as micro-batches through runWithBatchCommit,
+    // a second AvailableNow run over the same checkpoint proves no
+    // re-commit, and the FRESH-SESSION pruned read must equal
+    // q_zonemap_prune's whole-table answer with the skip boolean still
+    // strict — streaming ingestion must cost the table none of its
+    // zone-map pruning.
     "q_stream_zonemap_ingest" -> ((s, d) => {
       val dir = rtDir("zmsi", d)
       deleteRecursive(java.nio.file.Paths.get(dir))
@@ -2200,22 +2203,24 @@ object Relational {
         def drainOnce(): Unit = {
           val raw = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(drop.toString)
-          graft.streaming.Streams.runWithBatchCommit(raw, s"$dir/ckpt") {
+          val ckpt = s"$dir/ckpt"
+          graft.streaming.Streams.runWithBatchCommit(raw, ckpt) {
             (b, bid) =>
-              graft.sources.Writers.zoneMapIngestCommit(
-                b, table, "price", 8, bid)
+              graft.sources.SnapshotTable.commitAppendOnce(
+                b, table, "price", 8, bid, writerId = ckpt)
               ()
           }.awaitTermination()
         }
         drainOnce()
         // restart with nothing new: restored offsets -> no batch, and
-        // the ledger would refuse a re-commit even if one replayed
+        // the pointer's provenance would refuse a re-commit even if one
+        // replayed
         drainOnce()
         val s2 = s.newSession()
-        val ingestedOnce = diskRowCount(s2, table) == o.count()
-        val (cand, read, total) =
-          graft.sources.Writers.readZonePruned(s2, table, 100000.0,
-            150000.0)
+        val ingestedOnce =
+          graft.sources.SnapshotTable.read(s2, table).count() == o.count()
+        val (cand, read, total) = graft.sources.SnapshotTable
+          .readPrunedCol(s2, table, "price", 100000, 150000)
         require(read > 0 && read < total,
           s"q_stream_zonemap_ingest: expected a strict non-empty file " +
             s"subset, scan read $read of $total files")
@@ -2230,25 +2235,26 @@ object Relational {
       } finally deleteRecursive(drop)
     }),
 
-    // TYPED zone-map bounds — the STRING form of q_zonemap_prune: the
-    // numeric manifest casts to DOUBLE, so string keys (names, ids,
-    // URLs) were unprunable; this gates the string-bounds writer/reader
-    // (lexicographic min/max manifests, common-prefix bucket grid) on a
-    // name-range probe. Same soundness contract: the pruned scan plus
-    // the exact residual must equal the oracle's whole-table filter,
-    // and `skipped` pins a strict non-empty file subset.
+    // TYPED zone-map bounds — the STRING form of q_zonemap_prune:
+    // string keys (names, ids, URLs) prune through the manifest's
+    // typed bounds, compared in UTF-8 byte order — the order Spark's
+    // own string min/max uses, so no double cast can misorder them.
+    // This gates a name-range probe over a name-clustered table. Same
+    // soundness contract: the pruned scan plus the exact residual must
+    // equal the oracle's whole-table filter, and `skipped` pins a
+    // strict non-empty file subset.
     "q_zonemap_string" -> ((s, d) => {
       val dir = rtDir("zms", d)
       // deterministic build fixture; the pruned-read teeth run on the
       // gate's own copy
       cachedPrologue("zms", d, dir)(b =>
-        graft.sources.Writers.writeWithZoneMapString(
+        graft.sources.SnapshotTable.commitAppend(
           customer(s, d).select(col("c_custkey"), col("c_name"),
             col("c_mktsegment")),
           b, "c_name", 12))
       val (lo, hi) = ("Customer#000000020", "Customer#000000090")
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePrunedString(s, dir, lo, hi)
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "c_name", lo, hi)
       // fail DIAGNOSABLY on a pruning regression: the gated `skipped`
       // boolean is the point of the query, but a data/synth shift that
       // widens the probe to every file would surface as a misleading
@@ -2268,19 +2274,19 @@ object Relational {
     // The DATE form: a date renders losslessly as its ISO-8601 string,
     // whose lexicographic order IS the date order, so date-partitioned
     // pruning (the single most common lake predicate) rides the string
-    // zone map unchanged — one quarter's probe over a date-sorted table.
+    // bounds unchanged — one quarter's probe over a date-sorted table.
     "q_zonemap_date" -> ((s, d) => {
       val dir = rtDir("zmd", d)
       // identical build to q_zonemap_delete_date's prologue — ONE
       // cached base ("zmdd") serves both gates' copies
       cachedPrologue("zmdd", d, dir)(b =>
-        graft.sources.Writers.writeWithZoneMapString(
+        graft.sources.SnapshotTable.commitAppend(
           orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("day")),
           b, "day", 16))
       val (lo, hi) = ("1996-01-01", "1996-03-31")
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePrunedString(s, dir, lo, hi)
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "day", lo, hi)
       require(read > 0 && read < total,
         s"q_zonemap_date: expected a strict non-empty file subset " +
           s"for probe [$lo,$hi], scan read $read of $total files — " +
@@ -2294,32 +2300,33 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // DELETE composed with the DATE/string zone map — the takedown a
+    // DELETE composed with the DATE/string bounds — the takedown a
     // production user actually runs first (order-key tombstones
-    // against a date-sorted table): the lexicographic twin of
-    // q_zonemap_delete through [[deleteKeysZoneMappedString]]. The
-    // spray-across-files tombstones exercise manifest surgery,
-    // survivor adoption, and the meta heal; the post-delete quarter
-    // probe must stay a strict subset AND aggregate exactly like the
-    // oracle's whole-table filter minus the tombstones.
+    // against a date-sorted table): q_zonemap_delete's lexicographic
+    // twin, the same [[sources.SnapshotTable.commitDelete]] with
+    // survivors range-sorted on the day string. The spray-across-files
+    // tombstones rewrite every file and manifest; the post-delete
+    // quarter probe must stay a strict subset AND aggregate exactly
+    // like the oracle's whole-table filter minus the tombstones.
     "q_zonemap_delete_date" -> ((s, d) => {
       val dir = rtDir("zmdd", d)
       cachedPrologue("zmdd", d, dir)(base =>
-        graft.sources.Writers.writeWithZoneMapString(
+        graft.sources.SnapshotTable.commitAppend(
           orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("day")),
           base, "day", 16))
       val tomb = orders(s, d).filter(col("o_orderkey") % 97 === 3)
         .select(col("o_orderkey"))
       val nTomb = tomb.count()
-      val (deleted, _, _) = graft.sources.Writers
-        .deleteKeysZoneMappedString(s, dir, "o_orderkey", tomb, "day")
+      val (deleted, _) = graft.sources.SnapshotTable
+        .commitDelete(s, dir, "o_orderkey", tomb, "day")
       val s2 = s.newSession()
       val deletedGone = deleted == nTomb &&
-        diskRowCount(s2, dir) == orders(s2, d).count() - nTomb
+        graft.sources.SnapshotTable.read(s2, dir).count() ==
+          orders(s2, d).count() - nTomb
       val (lo, hi) = ("1996-01-01", "1996-03-31")
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePrunedString(s2, dir, lo, hi)
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s2, dir, "day", lo, hi)
       require(read > 0 && read < total,
         s"q_zonemap_delete_date: expected a strict non-empty file " +
           s"subset, scan read $read of $total files")
@@ -2333,32 +2340,36 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // DELETE composed with the Z-ORDERED two-column zone map: after a
-    // spray takedown ([[deleteKeysZoneMapped2]] — survivors re-Morton,
-    // four-bound manifest rows drop/adopt, meta heals), range probes
-    // on EITHER dimension must still each read a strict subset and
-    // aggregate exactly like the oracle's filtered whole table.
+    // DELETE composed with the Z-ORDERED two-column layout: after a
+    // spray takedown, range probes on EITHER dimension must still each
+    // read a strict subset and aggregate exactly like the oracle's
+    // filtered whole table. The takedown is the MERGE-ON-READ delete
+    // ([[sources.SnapshotTable.commitDeleteMor]]): the keys land as one
+    // tombstone line that reads apply, and every Morton file keeps its
+    // tight 2-D bounds — a copy-on-write rewrite would re-lay the
+    // touched files (here: all of them) range-sorted on ONE column and
+    // leave the other dimension unprunable.
     "q_zonemap_delete_zorder" -> ((s, d) => {
       val dir = rtDir("zzdel", d)
       val base = orders(s, d).select(col("o_orderkey"),
         datediff(col("o_orderdate"), lit("1995-01-01")).as("day"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
       cachedPrologue("zzdel", d, dir)(b =>
-        graft.sources.Writers.writeZOrderedWithZoneMap(
+        graft.sources.SnapshotTable.commitAppendZOrdered(
           base, b, "day", "price", 16))
       val tomb = orders(s, d).filter(col("o_orderkey") % 97 === 3)
         .select(col("o_orderkey"))
       val nTomb = tomb.count()
-      val (deleted, _, _) = graft.sources.Writers
-        .deleteKeysZoneMapped2(s, dir, "o_orderkey", tomb, "day", "price")
+      val (tombKeys, _) = graft.sources.SnapshotTable
+        .commitDeleteMor(s, dir, "o_orderkey", tomb)
       val s2 = s.newSession()
-      val deletedGone = deleted == nTomb &&
-        diskRowCount(s2, dir) == orders(s2, d).count() - nTomb
-      val inf = Double.MaxValue
-      val (dayDf, dayRead, total) = graft.sources.Writers
-        .readZonePruned2(s2, dir, 365.0, 546.0, -inf, inf)
-      val (priceDf, priceRead, _) = graft.sources.Writers
-        .readZonePruned2(s2, dir, -inf, inf, 100000.0, 150000.0)
+      val deletedGone = tombKeys == nTomb &&
+        graft.sources.SnapshotTable.read(s2, dir).count() ==
+          orders(s2, d).count() - nTomb
+      val (dayDf, dayRead, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s2, dir, "day", 365, 546)
+      val (priceDf, priceRead, _) = graft.sources.SnapshotTable
+        .readPrunedCol(s2, dir, "price", 100000, 150000)
       require(dayRead > 0 && dayRead < total &&
         priceRead > 0 && priceRead < total,
         s"q_zonemap_delete_zorder: expected strict subsets, read " +
@@ -2378,12 +2389,12 @@ object Relational {
         .withColumn("deleted_gone", lit(deletedGone))
     }),
 
-    // EXACTLY-ONCE streaming ingestion into the DATE/string zone map —
-    // q_stream_zonemap_ingest's lexicographic twin through
-    // [[zoneMapIngestCommitString]]: two dated drops as micro-batches,
-    // a restart that must not re-commit, and a fresh-session quarter
-    // probe that equals q_zonemap_date's whole-table answer with the
-    // skip boolean strict.
+    // EXACTLY-ONCE streaming ingestion into the DATE/string bounds —
+    // q_stream_zonemap_ingest's lexicographic twin: two dated drops as
+    // micro-batches through [[sources.SnapshotTable.commitAppendOnce]]
+    // range-sorted on the day string, a restart that must not
+    // re-commit, and a fresh-session quarter probe that equals
+    // q_zonemap_date's whole-table answer with the skip boolean strict.
     "q_stream_zonemap_ingest_date" -> ((s, d) => {
       val dir = rtDir("zmsd", d)
       deleteRecursive(java.nio.file.Paths.get(dir))
@@ -2401,20 +2412,22 @@ object Relational {
         def drainOnce(): Unit = {
           val raw = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(drop.toString)
-          graft.streaming.Streams.runWithBatchCommit(raw, s"$dir/ckpt") {
+          val ckpt = s"$dir/ckpt"
+          graft.streaming.Streams.runWithBatchCommit(raw, ckpt) {
             (b, bid) =>
-              graft.sources.Writers.zoneMapIngestCommitString(
-                b, table, "day", 8, bid)
+              graft.sources.SnapshotTable.commitAppendOnce(
+                b, table, "day", 8, bid, writerId = ckpt)
               ()
           }.awaitTermination()
         }
         drainOnce()
         drainOnce()
         val s2 = s.newSession()
-        val ingestedOnce = diskRowCount(s2, table) == o.count()
+        val ingestedOnce =
+          graft.sources.SnapshotTable.read(s2, table).count() == o.count()
         val (lo, hi) = ("1996-01-01", "1996-03-31")
-        val (cand, read, total) =
-          graft.sources.Writers.readZonePrunedString(s2, table, lo, hi)
+        val (cand, read, total) = graft.sources.SnapshotTable
+          .readPrunedCol(s2, table, "day", lo, hi)
         require(read > 0 && read < total,
           s"q_stream_zonemap_ingest_date: expected a strict non-empty " +
             s"file subset, scan read $read of $total files")
@@ -2429,11 +2442,11 @@ object Relational {
       } finally deleteRecursive(drop)
     }),
 
-    // EXACTLY-ONCE streaming ingestion into the Z-ORDERED table
-    // ([[zoneMapIngestCommit2]]): each micro-batch stages in its own
-    // Morton layout, the four-bound manifest absorbs it
-    // incrementally, and after a no-op restart BOTH single-dimension
-    // probes prune strictly and aggregate exactly.
+    // EXACTLY-ONCE streaming ingestion into the Z-ORDERED layout
+    // ([[sources.SnapshotTable.commitAppendOnceZOrdered]]): each
+    // micro-batch lands in its own Morton layout under the same
+    // exactly-once pointer provenance, and after a no-op restart BOTH
+    // single-dimension probes prune strictly and aggregate exactly.
     "q_stream_zonemap_ingest_zorder" -> ((s, d) => {
       val dir = rtDir("zzsi", d)
       deleteRecursive(java.nio.file.Paths.get(dir))
@@ -2452,22 +2465,23 @@ object Relational {
         def drainOnce(): Unit = {
           val raw = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(drop.toString)
-          graft.streaming.Streams.runWithBatchCommit(raw, s"$dir/ckpt") {
+          val ckpt = s"$dir/ckpt"
+          graft.streaming.Streams.runWithBatchCommit(raw, ckpt) {
             (b, bid) =>
-              graft.sources.Writers.zoneMapIngestCommit2(
-                b, table, "day", "price", 8, bid)
+              graft.sources.SnapshotTable.commitAppendOnceZOrdered(
+                b, table, "day", "price", 8, bid, writerId = ckpt)
               ()
           }.awaitTermination()
         }
         drainOnce()
         drainOnce()
         val s2 = s.newSession()
-        val ingestedOnce = diskRowCount(s2, table) == o.count()
-        val inf = Double.MaxValue
-        val (dayDf, dayRead, total) = graft.sources.Writers
-          .readZonePruned2(s2, table, 365.0, 546.0, -inf, inf)
-        val (priceDf, priceRead, _) = graft.sources.Writers
-          .readZonePruned2(s2, table, -inf, inf, 100000.0, 150000.0)
+        val ingestedOnce =
+          graft.sources.SnapshotTable.read(s2, table).count() == o.count()
+        val (dayDf, dayRead, total) = graft.sources.SnapshotTable
+          .readPrunedCol(s2, table, "day", 365, 546)
+        val (priceDf, priceRead, _) = graft.sources.SnapshotTable
+          .readPrunedCol(s2, table, "price", 100000, 150000)
         require(dayRead > 0 && dayRead < total &&
           priceRead > 0 && priceRead < total,
           s"q_stream_zonemap_ingest_zorder: expected strict subsets, " +
@@ -3042,9 +3056,9 @@ object Relational {
     // fresh-session range probe on EITHER dimension a strict subset —
     // where a one-column sort gives the second column the full value
     // range in every file and prunes nothing. The oracle recomputes
-    // both aggregates from the raw table; the Writers twin
-    // (q_zonemap_zorder) pins the standalone format, this pins the
-    // commit-log one.
+    // both aggregates from the raw table; q_zonemap_zorder probes a
+    // copy of the shared cached prologue in the calling session, this
+    // one commits its own table and probes it from a fresh session.
     "q_snapshot_zorder" -> ((s, d) => {
       val dir = rtDir("snapzz", d)
       deleteRecursive(java.nio.file.Paths.get(dir))
@@ -4052,27 +4066,27 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // INCREMENTAL zone-map maintenance: a base write (keys % 5 < 3)
-    // then a daily-style APPEND of the complement, with the manifest
-    // updated from the NEW files' stats only — the maintenance cost
-    // tracks the batch, not the table. The pruned read must then span
-    // BOTH segments correctly: the gated aggregate equals the oracle's
-    // whole-table filter (a manifest that missed an appended file or
-    // double-listed one loses/doubles rows), and the booleans pin that
-    // the manifest covers exactly the table's files and that the probe
-    // still skipped a strict subset.
+    // INCREMENTAL zone-map maintenance: a base commit (keys % 5 < 3)
+    // then a daily-style APPEND of the complement as a second commit,
+    // whose manifest holds the NEW files' stats only — the maintenance
+    // cost tracks the batch, not the table. The pruned read must then
+    // span BOTH segments correctly: the gated aggregate equals the
+    // oracle's whole-table filter (a snapshot that missed an appended
+    // file or double-listed one loses/doubles rows), and the booleans
+    // pin that the snapshot lists exactly the table's data files and
+    // that the probe still skipped a strict subset.
     "q_zonemap_append" -> ((s, d) => {
       val dir = rtDir("zma", d)
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
       cachedPrologue("zma", d, dir)(b =>
-        graft.sources.Writers.writeWithZoneMap(
+        graft.sources.SnapshotTable.commitAppend(
           base.filter(col("o_orderkey") % 5 < 3), b, "price", 12))
-      graft.sources.Writers.appendWithZoneMap(
+      graft.sources.SnapshotTable.commitAppend(
         base.filter(col("o_orderkey") % 5 >= 3), dir, "price", 4)
-      val (cand, read, total) =
-        graft.sources.Writers.readZonePruned(s, dir, 100000.0, 150000.0)
+      val (cand, read, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "price", 100000, 150000)
       val nFilesOnDisk = s.read.parquet(dir).inputFiles.length.toLong
       cand.filter(col("price").between(lit(100000), lit(150000)))
         .groupBy(col("o_orderpriority"))
@@ -4164,11 +4178,13 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // Z-ORDER + zone map, the read-side payoff: orders laid out on the
-    // Morton code of (order day, price) give every file tight min/max
-    // bounds in BOTH dimensions, so a range probe on EITHER column
-    // alone skips files — the property a lexicographic (day, price)
-    // sort cannot provide for price. Two independent probes (a ~7%
+    // Z-ORDER + zone map, the read-side payoff: orders committed on the
+    // Morton code of (order day, price)
+    // ([[sources.SnapshotTable.commitAppendZOrdered]]) give every file
+    // tight min/max bounds in BOTH dimensions, so a range probe on
+    // EITHER column alone skips files — the property a lexicographic
+    // (day, price) sort cannot provide for price. Two independent
+    // probes (a ~7%
     // day band with price unconstrained, and a price band with day
     // unconstrained) each must read a strict subset of the 16 files
     // (gated booleans) AND aggregate exactly like a plain WHERE over
@@ -4183,13 +4199,12 @@ object Relational {
       // identical build to q_zonemap_delete_zorder's prologue — ONE
       // cached base ("zzdel") serves both gates' copies
       cachedPrologue("zzdel", d, dir)(b =>
-        graft.sources.Writers.writeZOrderedWithZoneMap(
+        graft.sources.SnapshotTable.commitAppendZOrdered(
           base, b, "day", "price", 16))
-      val inf = Double.MaxValue
-      val (dayDf, dayRead, total) = graft.sources.Writers
-        .readZonePruned2(s, dir, 365.0, 546.0, -inf, inf)
-      val (priceDf, priceRead, _) = graft.sources.Writers
-        .readZonePruned2(s, dir, -inf, inf, 100000.0, 150000.0)
+      val (dayDf, dayRead, total) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "day", 365, 546)
+      val (priceDf, priceRead, _) = graft.sources.SnapshotTable
+        .readPrunedCol(s, dir, "price", 100000, 150000)
       val aDay = dayDf
         .filter(col("day").between(lit(365), lit(546)))
         .agg(count(lit(1)).as("n_date"),

@@ -8,13 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** SNAPSHOT TABLE — the unification of the repo's two half-lakehouses:
-  * [[TxJsonSink]] has the commit-log mechanism (immutable versioned
-  * manifests, atomic latest-pointer, time travel, vacuum) but a
-  * stats-free JSON payload; the [[Writers]] zone maps have file-bounds
-  * skipping but a single mutable manifest with no history. This layer
-  * is one table format with BOTH, the Iceberg/Delta shape in
-  * miniature, over plain parquet data files:
+/** SNAPSHOT TABLE — the repo's one zone-mapped table format: the
+  * commit-log mechanism of [[TxJsonSink]] (immutable versioned
+  * manifests, atomic latest-pointer, time travel, vacuum) with per-file
+  * bounds for data skipping in the same manifests — the Iceberg/Delta
+  * shape in miniature, over plain parquet data files:
   *
   * {{{
   *   path/
@@ -37,8 +35,7 @@ import org.apache.spark.sql.types._
   * manifests (each batch-sized), and opens only the files whose bounds
   * intersect — the driver never materializes the full file list of a
   * 100 TB table. This is exactly Iceberg's snapshot → manifest-list →
-  * manifest pyramid; the [[Writers]] zone map's bucket meta is the
-  * same idea with a hash grid instead of commit grouping.
+  * manifest pyramid.
   *
   * PER-COLUMN STATS (this is what lets keyed writes plan through the
   * pyramid, not only reads): every data file's manifest line carries
@@ -465,8 +462,15 @@ object SnapshotTable {
     ("""\{"manifest":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
       """"files":(\d+),"rows":(\d+)""" +
       """(?:,"cols":\[(.*?)\])?(?:,"bf":\[(.*?)\])?\}""").r
+  // one JSON string body (escapes included) in the UNROLLED form
+  // normal* (escape normal*)*: java.util.regex recurses once per
+  // repetition of a group, so the alternation form (?:[^"\\]|\\.)*
+  // overflows the stack on a ~1,000-character bound, while this form
+  // recurses once per ESCAPE and parses any length
+  private val JStr = """[^"\\]*(?:\\.[^"\\]*)*"""
+
   private val BloomRe =
-    """\{"c":"((?:[^"\\]|\\.)*)","b":"([A-Za-z0-9+/=]*)"\}""".r
+    raw"""\{"c":"($JStr)","b":"([A-Za-z0-9+/=]*)"\}""".r
 
   private def bloomsJson(bfs: Seq[(String, String)]): String =
     if (bfs.isEmpty) ""
@@ -478,8 +482,8 @@ object SnapshotTable {
     else BloomRe.findAllMatchIn(payload)
       .map(m => (unesc(m.group(1)), m.group(2))).toIndexedSeq
   private val ColRe =
-    ("""\{"c":"((?:[^"\\]|\\.)*)","t":"([a-z]+)"""" +
-      """(?:,"lo":"((?:[^"\\]|\\.)*)","hi":"((?:[^"\\]|\\.)*)")?\}""").r
+    (raw"""\{"c":"($JStr)","t":"([a-z]+)"""" +
+      raw"""(?:,"lo":"($JStr)","hi":"($JStr)")?\}""").r
 
   private def parseCols(payload: String): Seq[ColStat] =
     if (payload == null || payload.isEmpty) Nil
@@ -518,8 +522,8 @@ object SnapshotTable {
       s""""v":${d.v}}"""
 
   private val PredDelLine =
-    ("""\{"pdelete":"((?:[^"\\]|\\.)*)","t":"([a-z]+)"""" +
-      """(?:,"lo":"((?:[^"\\]|\\.)*)")?(?:,"hi":"((?:[^"\\]|\\.)*)")?""" +
+    (raw"""\{"pdelete":"($JStr)","t":"([a-z]+)"""" +
+      raw"""(?:,"lo":"($JStr)")?(?:,"hi":"($JStr)")?""" +
       ""","v":(\d+)\}""").r
 
   private def predDelLine(d: PredDeleteRef): String =
@@ -726,7 +730,8 @@ object SnapshotTable {
 
   /** Range-clustered layout on one column of ANY orderable type —
     * string/date clustering is what makes the typed envelopes
-    * selective, exactly like [[Writers.writeWithZoneMapString]].
+    * selective: each file then holds one compact slice of the
+    * column's lexicographic (or date) order.
     */
   private def rangeLayout(df: DataFrame, zcol: String,
       nFiles: Int): DataFrame =
@@ -777,7 +782,13 @@ object SnapshotTable {
         StandardCopyOption.ATOMIC_MOVE)
       dst
     }
-    collectFileStats(s, path, moved, zcol, bloomCols, laid.schema)
+    // Spark writes one zero-row file for an empty input; the committed
+    // schema lives in the log, so that file is dropped, never listed:
+    // an empty batch adds no data file for every later read to open
+    val (live, empty) = collectFileStats(s, path, moved, zcol, bloomCols,
+      laid.schema).partition(_.rows > 0)
+    empty.foreach(f => Files.delete(Paths.get(path, f.file)))
+    live
   }
 
   /** Stats dispatcher: per-file manifest stats from the parquet FOOTERS
@@ -1192,28 +1203,27 @@ object SnapshotTable {
     * the next slot, so two racing appends BOTH commit.
     */
   def commitAppend(df: DataFrame, path: String, zcol: String,
-      nFiles: Int, bloomCols: Seq[String] = Nil): Int = {
-    val (prevPtr, v, nonce) = claimNext(path)
-    try {
-      appendCore(path, v, prevPtr.map(_._1), carriedBatchId(prevPtr),
-        rangeLayout(df, zcol, nFiles), zcol, bloomCols, Some(nonce))
-      v
-    } finally releaseClaim(path, v)
-  }
+      nFiles: Int, bloomCols: Seq[String] = Nil): Int =
+    append(path, rangeLayout(df, zcol, nFiles), zcol, bloomCols)
 
   /** Z-ORDERED append: rows lay out on the Morton interleave of
     * (`c1`, `c2`) — each file covers a compact 2-D block, so the typed
     * per-column envelopes are selective on EITHER column and
-    * [[readPrunedCol]] prunes both probe dimensions (the unified-format
-    * twin of [[Writers.writeZOrderedWithZoneMap]]). The legacy double
-    * channel tracks `c1`.
+    * [[readPrunedCol]] prunes both probe dimensions, where a one-column
+    * range sort leaves `c2` the full value range in every file. The
+    * legacy double channel tracks `c1`.
     */
   def commitAppendZOrdered(df: DataFrame, path: String, c1: String,
-      c2: String, nFiles: Int): Int = {
+      c2: String, nFiles: Int): Int =
+    append(path, Writers.zOrderLayout(df, c1, c2, nFiles), c1, Nil)
+
+  /** Claim the next slot and append the already-laid-out `laid`. */
+  private def append(path: String, laid: DataFrame, zcol: String,
+      bloomCols: Seq[String]): Int = {
     val (prevPtr, v, nonce) = claimNext(path)
     try {
       appendCore(path, v, prevPtr.map(_._1), carriedBatchId(prevPtr),
-        Writers.zOrderLayout(df, c1, c2, nFiles), c1, Nil, Some(nonce))
+        laid, zcol, bloomCols, Some(nonce))
       v
     } finally releaseClaim(path, v)
   }
@@ -1290,7 +1300,7 @@ object SnapshotTable {
     else {
       val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       val Re =
-        """\{"transform":"(\w+)","col":"((?:[^"\\]|\\.)*)","n":(\d+)\}""".r
+        raw"""\{"transform":"(\w+)","col":"($JStr)","n":(\d+)\}""".r
       s.trim match {
         case Re(t, c, n) => Some(PartitionSpec(t, unesc(c), n.toInt))
         case _ => throw new IllegalStateException(
@@ -1508,10 +1518,9 @@ object SnapshotTable {
     *  - crash AFTER the swing: the retry reads its own batch id off
     *    the pointer and short-circuits to "already committed".
     * Checking only the LAST batch id suffices because foreachBatch is
-    * sequential — batch N+1 never starts until N's commit returned
-    * (the same argument as [[Writers.zoneMapIngestCommit]]'s ledger,
-    * collapsed into the pointer); the stream must be the table's only
-    * streaming writer for the same reason. Non-streaming commits
+    * sequential — batch N+1 never starts until N's commit returned,
+    * so no per-batch ledger is needed; the stream must be the table's
+    * only streaming writer for the same reason. Non-streaming commits
     * (compaction, COW/MOR rewrites) CARRY the id forward (see
     * [[readPointer]]), so a background OPTIMIZE landing between a
     * stream crash and its restart cannot erase the provenance the
@@ -1526,14 +1535,31 @@ object SnapshotTable {
     */
   def commitAppendOnce(df: DataFrame, path: String, zcol: String,
       nFiles: Int, batchId: Long,
-      bloomCols: Seq[String] = Nil, writerId: String = ""): Boolean = {
+      bloomCols: Seq[String] = Nil, writerId: String = ""): Boolean =
+    appendOnce(path, rangeLayout(df, zcol, nFiles), zcol, bloomCols,
+      batchId, writerId)
+
+  /** [[commitAppendOnce]] in the Morton layout of
+    * [[commitAppendZOrdered]]: each micro-batch lands as Z-ordered
+    * files on (`c1`, `c2`) — the batch's own grid, which only moves
+    * where file boundaries fall, never what bounds the manifest
+    * records — with the same exactly-once claim and short-circuit.
+    */
+  def commitAppendOnceZOrdered(df: DataFrame, path: String, c1: String,
+      c2: String, nFiles: Int, batchId: Long,
+      writerId: String = ""): Boolean =
+    appendOnce(path, Writers.zOrderLayout(df, c1, c2, nFiles), c1, Nil,
+      batchId, writerId)
+
+  private def appendOnce(path: String, laid: DataFrame, zcol: String,
+      bloomCols: Seq[String], batchId: Long, writerId: String): Boolean = {
     require(batchId >= 0, "batchId must be >= 0 (-1 marks non-batch commits)")
     val (prevPtr, v, nonce) = claimNext(path)
     try {
       if (prevPtr.exists(p => p._2 == batchId && p._3 == writerId))
         return false
-      appendCore(path, v, prevPtr.map(_._1), (batchId, writerId),
-        rangeLayout(df, zcol, nFiles), zcol, bloomCols, Some(nonce))
+      appendCore(path, v, prevPtr.map(_._1), (batchId, writerId), laid,
+        zcol, bloomCols, Some(nonce))
       true
     } finally releaseClaim(path, v)
   }
@@ -1919,11 +1945,8 @@ object SnapshotTable {
     // counts are schema-independent and exact — no decode caveats, so
     // no scan fallback needed); drop empty round-robin leftovers
     moved.flatMap { m =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(Paths.get(path, m)))
-      val rows =
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
+      val rows = Writers.parquetRowCount(s"$path/$m").getOrElse(
+        throw new java.io.IOException(s"unreadable footer: $path/$m"))
       if (rows > 0) Some((m, rows))
       else { Files.deleteIfExists(Paths.get(path, m)); None }
     }
@@ -2321,10 +2344,10 @@ object SnapshotTable {
   /** ZONE-PRUNED snapshot read on the legacy double channel:
     * (candidates, filesRead, filesTotal). Planning descends the
     * metadata pyramid — manifest-list envelopes first, surviving
-    * manifests' file bounds second — and skipping is SOUND by the same
-    * argument as [[Writers.readZonePruned]]: a file is dropped only
-    * when its recorded bounds exclude the whole range, so the
-    * candidates plus the exact residual equal a full-snapshot filter.
+    * manifests' file bounds second — and skipping is SOUND: a file is
+    * dropped only when its recorded bounds exclude the whole range, so
+    * the candidates plus the exact residual equal a full-snapshot
+    * filter.
     * Works at any `version`: bounds are immutable with the files they
     * describe, so time travel and pruning compose for free.
     */

@@ -181,10 +181,10 @@ object TxJsonSink {
     * affected files — only DISTINCT FILE NAMES are collected, bounded by
     * the manifest's own file count, which is already driver-side by
     * design. Survivor rows are read only from affected files. At lake
-    * scale the probe scan itself would be pruned by a key zone map
-    * (`sources.Writers` zone-map layer) before the semi join; the sink's
-    * minimal JSON payload carries no per-file stats, so here the probe
-    * reads the snapshot once.
+    * scale the probe scan itself would be pruned by per-file key
+    * bounds (as [[SnapshotTable]] records them) before the semi join;
+    * the sink's minimal JSON payload carries no per-file stats, so here
+    * the probe reads the snapshot once.
     *
     * `deletes` is the WHEN MATCHED DELETE arm: snapshot rows whose key
     * appears in it are dropped from the new version — their files are

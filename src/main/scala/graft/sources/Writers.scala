@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Layout-controlled parquet writes — the sink-side half of the 100 TB
@@ -78,9 +78,8 @@ object Writers {
 
   /** The Morton layout WITHOUT the write — `df` range-partitioned and
     * sorted on the interleaved code of (c1, c2), scaled against the
-    * input's own min/max. Exposed separately so the COW delete's
-    * survivor rewrite and the streaming ingest's stage write lay rows
-    * out exactly like the original [[writeZOrdered]] did.
+    * input's own min/max. Exposed separately so the snapshot table's
+    * Z-ordered appends lay rows out exactly like [[writeZOrdered]].
     */
   private[sources] def zOrderLayout(df: DataFrame, c1: String, c2: String,
       nFiles: Int): DataFrame = {
@@ -154,31 +153,21 @@ object Writers {
     * metadata only; any other scheme degrades to a filesystem-level
     * copy, O(bytes), since a cluster table format would carry them in
     * a manifest instead), and the swap is the same crash-safe
-    * double-rename as [[compact]]. Table METADATA (zone-map manifests,
-    * commit ledgers — underscore-prefixed, invisible to parquet reads)
-    * is copied into the staging dir BEFORE the swap, so every crash
+    * double-rename as [[compact]]. Table METADATA (ledgers and other
+    * underscore-prefixed entries, invisible to parquet reads) is
+    * copied into the staging dir BEFORE the swap, so every crash
     * window really does leave either the complete old layout or the
     * complete new one, metadata included — a post-swap metadata move
     * would leave a window where the published layout has data but no
     * ledger. The touched-file list is the sanctioned bounded collect:
     * in a band-clustered index a key's rows land in at most (cluster
     * buckets) files, so the list is sized by the TOMBSTONE BATCH, not
-    * the table. Returns (rows deleted, touched file names, file count
-    * before).
+    * the table. The touched files' survivors coalesce back into at
+    * most as many files as were touched. Returns (rows deleted,
+    * touched file names, file count before).
     */
   def deleteKeys(spark: SparkSession, path: String, keyCol: String,
-      keys: DataFrame,
-      // how the touched files' SURVIVORS are laid back out. The default
-      // coalesce bounds the file count but inherits the scan's packing
-      // (core-count-dependent); layout-sensitive tables pass a
-      // deterministic partitioner — deleteKeysZoneMapped range-sorts on
-      // the zone column so a delete preserves the table's clustering
-      // AND its file count at any parallelism
-      rewrite: (DataFrame, Int) => DataFrame =
-        (df, n) => df.coalesce(n)): (Long, Seq[String], Int) = {
-    import java.nio.file.{Files, Paths}
-    def localPath(uri: String): java.nio.file.Path =
-      Paths.get(new java.net.URI(uri).getPath)
+      keys: DataFrame): (Long, Seq[String], Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(conf)
@@ -212,19 +201,18 @@ object Writers {
       .join(k, Seq(keyCol), "left_semi")
       .select(col("_file")).distinct().collect().map(_.getString(0)).toSeq
     if (touched.isEmpty) return (0L, Nil, before.length)
-    val touchedNames = touched.map(f => localPath(f).getFileName.toString)
-      .toSet
+    val touchedNames =
+      touched.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val tmp = path.stripSuffix("/") + "._delete_tmp"
     val touchedDf = spark.read.parquet(touched: _*)
     val survivors = touchedDf.join(k, Seq(keyCol), "left_anti")
-    rewrite(survivors, touched.length)
-      .write.mode("overwrite").parquet(tmp)
+    survivors.coalesce(touched.length).write.mode("overwrite").parquet(tmp)
     // rows deleted = touched-file rows minus staged-survivor rows, both
     // from parquet footers (exact block row counts, driver metadata) —
     // the rewrite is then the ONLY pass over the touched bytes, where
     // two count jobs re-read them before (guide §1.2: fewer passes).
     // Non-local/unreadable footers fall back to the scan counts.
-    val rowsTouched = parquetRowCountFiles(touched)
+    val rowsTouched = parquetRowCount(touched: _*)
       .getOrElse(touchedDf.count())
     // fallback recomputes the anti-join, not a read of tmp: an all-rows
     // -deleted rewrite can stage ZERO part files, which a parquet read
@@ -236,17 +224,15 @@ object Writers {
     // file, no data movement — the rewrite cost tracks the touched
     // subset), FileUtil.copy on any other scheme
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    for (f <- before
-         if !touchedNames(localPath(f).getFileName.toString)) {
+    for (f <- before.map(new org.apache.hadoop.fs.Path(_))
+         if !touchedNames(f.getName)) {
       if (isLocal) {
-        val p = localPath(f)
-        Files.createLink(Paths.get(tmp).resolve(p.getFileName), p)
-      } else {
-        val src = new org.apache.hadoop.fs.Path(f)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-          new org.apache.hadoop.fs.Path(tmpPath, src.getName),
-          false, conf)
-      }
+        val p = localPath(f.toString)
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(tmp).resolve(p.getFileName), p)
+      } else
+        org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+          new org.apache.hadoop.fs.Path(tmpPath, f.getName), false, conf)
     }
     // stage the table METADATA into the new layout BEFORE the swap (a
     // copy, so the live table keeps its own until the rename): after
@@ -272,1296 +258,43 @@ object Writers {
     (rowsDeleted, touchedNames.toSeq.sorted, before.length)
   }
 
-  /** [[deleteKeys]] for a ZONE-MAPPED table — the composition that
-    * keeps data skipping sound through a delete: the touched-files-only
-    * COW rewrite replaces files the manifest still lists, so after the
-    * data swap the touched files' manifest rows are dropped (a
-    * metadata-scale rewrite — the manifest is file-count-sized), the
-    * rewritten survivor files are adopted as orphans by the diff-driven
-    * [[refreshZoneMap]], and the meta summary is rebuilt
-    * unconditionally from the healed manifest — a reader between these
-    * steps degrades to the reconciliation paths (orphans read
-    * unconditionally; meta-divergence bypasses to the full manifest),
-    * never to a missing-file crash or an unsound skip. Numeric-bounds
-    * tables (`writeWithZoneMap`); the string variant would compose the
-    * same way against its own refresh.
+  /** A local file's java.nio path from a plain path or a `file:` URI in
+    * any of the spellings Hadoop and Spark render (`file:/x`,
+    * `file:///x`). Any other scheme throws: its bytes are not local.
     */
-  def deleteKeysZoneMapped(spark: SparkSession, path: String,
-      keyCol: String, keys: DataFrame, zcol: String)
-      : (Long, Seq[String], Int) = {
-    val res @ (deleted, touched, _) = deleteKeys(spark, path, keyCol,
-      keys, (df, n) => df.repartitionByRange(n, col(zcol))
-        .sortWithinPartitions(col(zcol)))
-    if (deleted > 0 && touched.nonEmpty) {
-      val grid = readMeta(spark, path)
-        .select(col("z_lo"), col("z_w")).head()
-      val touchedSet = touched.toSet
-      val kept = spark.read.parquet(s"$path/_zonemap")
-        .withColumn("_name", substring_index(col("file"), "/", -1))
-        .filter(!col("_name").isInCollection(touchedSet))
-        .drop("_name")
-        .localCheckpoint() // materialize before overwriting the source
-      if (kept.isEmpty) {
-        // spread tombstones can touch EVERY file (the band/codes tables
-        // cluster by content key, not by delete key) — then nothing of
-        // the old manifest survives, an empty partitioned rewrite would
-        // leave a schema-less shard dir, and the honest move is a
-        // from-scratch rebuild over the fully-rewritten table
-        val fs = hadoopPath(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(hadoopPath(s"$path/_zonemap"), true)
-        fs.delete(hadoopPath(s"$path/_zonemap_meta"), true)
-        buildZoneMap(spark, path, zcol)
-      } else {
-        kept.write.partitionBy("zb").mode("overwrite")
-          .parquet(s"$path/_zonemap")
-        refreshZoneMap(spark, path, zcol) // adopt the rewritten survivors
-        // heal meta even when the rewrite produced no survivor files
-        // (every row of every touched file deleted): refreshZoneMap's
-        // orphan diff finds nothing then, and meta would stay divergent
-        // (sound but bypassed) until the next append
-        refreshMeta(spark, path, grid.getDouble(0), grid.getDouble(1))
-      }
-    }
-    res
-  }
+  private def localPath(p: String): java.nio.file.Path =
+    if (p.startsWith("file:")) java.nio.file.Paths.get(java.net.URI.create(p))
+    else if (!p.contains(":")) java.nio.file.Paths.get(p)
+    else throw new java.io.IOException(s"non-local scheme: $p")
 
-  /** EXACTLY-ONCE commit of one streaming micro-batch into a
-    * zone-mapped table — the foreachBatch body that makes streaming
-    * ingestion into the lakehouse layer safe under BOTH failure modes
-    * foreachBatch exposes (Spark's contract is at-least-once: a batch
-    * can be re-run after a crash anywhere inside the commit):
-    *
-    *  1. stage the batch under `_staging_b<id>` (overwrite — a
-    *     half-written stage from a dead attempt is wiped, and no table
-    *     file has been touched yet);
-    *  2. publish the MOVELIST (`_commits/b<id>.files`, the staged part
-    *     names in sorted order) by atomic rename — from here on every
-    *     retry replays THIS list; it never re-stages, because Spark
-    *     part names differ per attempt and a re-staged write could
-    *     otherwise interleave files of two attempts;
-    *  3. move each listed file to its DETERMINISTIC table name
-    *     (`b<id>-p<i>.parquet`): each rename is atomic, an
-    *     already-moved file is skipped, a file in neither place fails
-    *     loudly;
-    *  4. derive the zone map from disk ([[buildZoneMap]] on first
-    *     commit, diff-driven [[refreshZoneMap]] after — both
-    *     idempotent);
-    *  5. write the batch LEDGER entry — the earliest point a retry
-    *     short-circuits to "already committed".
-    *
-    * Returns false iff the ledger already had the batch. Every crash
-    * window therefore converges to exactly one copy of the batch's
-    * rows, which is what lets the zone-mapped table sit at the end of
-    * a Structured Streaming pipeline.
+  /** Total row count of parquet data from its FOOTERS — one small
+    * driver metadata read per part file instead of a Spark job (row
+    * counts are schema-independent and exact). Each path is a part
+    * file or a flat table directory, whose visible `.parquet` parts
+    * count. None when no part file is found, a path is non-local, or
+    * any footer fails to read — callers fall back to a scan count.
     */
-  def zoneMapIngestCommit(df: DataFrame, path: String, zcol: String,
-      nFiles: Int, batchId: Long): Boolean =
-    ingestCommitCore(df, path, batchId,
-      b => b.repartitionByRange(nFiles, col(zcol))
-        .sortWithinPartitions(col(zcol)),
-      (s, metaExists) =>
-        if (!metaExists) buildZoneMap(s, path, zcol)
-        else refreshZoneMap(s, path, zcol))
-
-  /** [[zoneMapIngestCommit]] for the STRING/date zone map — same
-    * exactly-once protocol, batches range-sorted lexicographically and
-    * the manifest derived by the string build/refresh pair.
-    */
-  def zoneMapIngestCommitString(df: DataFrame, path: String,
-      zcol: String, nFiles: Int, batchId: Long): Boolean =
-    ingestCommitCore(df, path, batchId,
-      b => b.repartitionByRange(nFiles, col(zcol))
-        .sortWithinPartitions(col(zcol)),
-      (s, metaExists) =>
-        if (!metaExists) buildZoneMapString(s, path, zcol)
-        else refreshZoneMapString(s, path, zcol))
-
-  /** [[zoneMapIngestCommit]] for the TWO-COLUMN (Morton) zone map:
-    * batches stage in their own Z-order layout (tight bounds in both
-    * dimensions per staged file — the batch's grid, not the table's,
-    * which only shifts where file boundaries fall, never what bounds
-    * the manifest records) and the manifest derives from the files on
-    * disk by the 2-col build/refresh pair.
-    */
-  def zoneMapIngestCommit2(df: DataFrame, path: String, c1: String,
-      c2: String, nFiles: Int, batchId: Long): Boolean =
-    ingestCommitCore(df, path, batchId,
-      b => zOrderLayout(b, c1, c2, nFiles),
-      (s, metaExists) =>
-        if (!metaExists) buildZoneMap2(s, path, c1, c2)
-        else refreshZoneMap2(s, path, c1, c2))
-
-  private def ingestCommitCore(df: DataFrame, path: String,
-      batchId: Long, stageLayout: DataFrame => DataFrame,
-      derive: (SparkSession, Boolean) => Unit): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val s = df.sparkSession
-    val root = new Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ledger = new Path(s"$path/_commits/b$batchId")
-    if (fs.exists(ledger)) return false
-    fs.mkdirs(root)
-    fs.mkdirs(new Path(s"$path/_commits"))
-    val stage = new Path(s"$path/_staging_b$batchId")
-    val movelist = new Path(s"$path/_commits/b$batchId.files")
-    // an EMPTY micro-batch (foreachBatch can deliver one — e.g. a
-    // trigger that found only already-processed files) commits as a
-    // no-op ledger entry: no stage, no table file, no manifest churn.
-    // A retry of the same batch id short-circuits on the ledger above.
-    // Guarded by the movelist: once an attempt has staged and
-    // published a (possibly non-empty) movelist, replay must follow it.
-    if (!fs.exists(movelist) && df.isEmpty) {
-      fs.create(ledger, true).close()
-      return true
-    }
-    if (!fs.exists(movelist)) {
-      stageLayout(df).write.mode("overwrite").parquet(stage.toString)
-      val parts = fs.listStatus(stage).map(_.getPath.getName)
-        .filter(_.startsWith("part-")).sorted
-      val tmp = new Path(s"$path/_commits/b$batchId.files.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(parts.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, movelist))
-        throw new java.io.IOException(s"ingest: could not publish $movelist")
-    }
-    val names = {
-      val in = fs.open(movelist)
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .split("\n").filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
-    for ((name, i) <- names.zipWithIndex) {
-      val src = new Path(stage, name)
-      val dst = new Path(root, f"b$batchId-p$i%05d.parquet")
-      if (fs.exists(src)) {
-        if (!fs.exists(dst) && !fs.rename(src, dst))
-          throw new java.io.IOException(s"ingest: could not move $src")
-      } else require(fs.exists(dst),
-        s"ingest commit b$batchId lost staged file $name")
-    }
-    fs.delete(stage, true)
-    derive(s, fs.exists(new Path(s"$path/_zonemap_meta")))
-    fs.create(ledger, true).close()
-    true
-  }
-
-  // ---- zone maps (two-level partitioned manifest) ----------------------
-  //
-  // `path/_zonemap/zb=<bucket>/…` : parquet manifest, HIVE-PARTITIONED
-  //   by `zb` — the bucket of each file's z_min under a fixed global
-  //   (origin, width) recorded at table creation. One row per data
-  //   file: (file, z_min, z_max, n_rows).
-  // `path/_zonemap_meta/` : tiny single-file summary, one row per
-  //   OCCUPIED bucket: (zb, z_lo, z_w, bz_min, bz_max, n_files) — the
-  //   per-bucket envelope planning consults FIRST, so a range probe
-  //   reads only the manifest shards whose envelope intersects the
-  //   query box. At 100 TB the driver never materializes the full
-  //   manifest: planning cost is (meta rows = buckets) + (hit files),
-  //   not (table files). Both dirs are underscore-prefixed so plain
-  //   table reads skip them like `_SUCCESS`.
-  //
-  // CRASH SAFETY: meta is republished by the same double-rename swap
-  // as [[compact]] (never a delete-then-write window), and the append
-  // protocol has TWO distinct crash windows, both reconciled at read
-  // time from one disk-vs-meta file count compare:
-  //  - crash between the DATA append and the MANIFEST append: the new
-  //    files are in neither `_zonemap` nor meta. The reader anti-joins
-  //    the disk listing against the manifest and reads the orphans
-  //    UNCONDITIONALLY.
-  //  - crash between the MANIFEST append and the META republish: the
-  //    new files ARE in `_zonemap` (so the orphan anti-join finds
-  //    nothing) but meta's bucket envelopes don't cover them — a file
-  //    in a not-yet-listed bucket, or one extending a bucket's
-  //    envelope, would be skipped by the two-level plan. The reader
-  //    detects this by comparing meta's n_files sum against the
-  //    MANIFEST row count and, on divergence, bypasses the meta level:
-  //    it plans from the full manifest (every shard's tight per-file
-  //    bounds, no bucket pre-filter), which stays sound at the cost of
-  //    one manifest-wide scan until the next append's refreshMeta
-  //    heals the summary.
-  //  - crash inside the meta swap itself: [[publishSwapped]] parks the
-  //    previous copy at `._old` before publishing, and [[readMeta]]
-  //    falls back to it — the parked copy is at worst stale, which the
-  //    divergence check above already covers.
-
-  private val ZoneBuckets = 64
-
-  private def hadoopPath(p: String) = new org.apache.hadoop.fs.Path(p)
-
-  /** Publish `df` (tiny — meta summaries) at `dest` via write-to-temp +
-    * double-rename, the [[compact]] swap: at every instant either the
-    * old or the new copy exists under a recoverable name.
-    */
-  private def publishSwapped(df: DataFrame, dest: String): Unit = {
-    val s = df.sparkSession
-    val tmp = dest.stripSuffix("/") + "._tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val dst = hadoopPath(dest)
-    val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val old = hadoopPath(dest.stripSuffix("/") + "._old")
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"publishSwapped: could not park $dst")
-    if (!fs.rename(hadoopPath(tmp), dst)) {
-      if (fs.exists(old)) fs.rename(old, dst)
-      throw new java.io.IOException(s"publishSwapped: could not publish $tmp")
-    }
-    fs.delete(old, true)
-  }
-
-  /** The `_zonemap_meta` summary of `path`, falling back to the parked
-    * `._old` copy when a crash inside [[publishSwapped]] left no
-    * current one (the instant between parking the old meta and
-    * publishing its replacement). The fallback is at worst STALE,
-    * never wrong: the readers' meta-vs-manifest count reconciliation
-    * detects staleness and bypasses the meta level, so a reader that
-    * lands in the swap window degrades to a full-manifest plan instead
-    * of failing — or worse, silently skipping.
-    */
-  private def readMeta(spark: SparkSession, path: String): DataFrame = {
-    val dest = s"$path/_zonemap_meta"
-    val fs = hadoopPath(dest)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src =
-      if (fs.exists(hadoopPath(dest))) dest
-      else if (fs.exists(hadoopPath(dest + "._old"))) dest + "._old"
-      else dest // nothing recoverable: fail loudly with the primary name
-    spark.read.parquet(src)
-  }
-
-  /** Per-file stats relation for `paths` (or the whole table when
-    * empty): one column-pruned pass over zcol (a production writer
-    * collects these bounds from the write tasks' own parquet footers
-    * instead of re-reading; the re-scan keeps this portable).
-    *
-    * ZERO-ROW files (a full-table takedown's survivor write, an empty
-    * micro-batch's stage) still get a manifest row, with SENTINEL
-    * bounds (+inf, -inf) that no finite probe range intersects: listed
-    * but never selected, so pruning stays strict and the reconcile
-    * path never mistakes an empty file for a crash orphan it must read
-    * forever. The scan-derived rows carry no file identity for them
-    * (input_file_name needs rows), so the listing left-joins the stats
-    * by basename — `inputFiles` and `input_file_name()` render the
-    * scheme prefix differently, full-URI equality would silently
-    * mismatch.
-    */
-  private[graft] def fileStats(s: SparkSession, path: String,
-      paths: Seq[String], zcol: String): DataFrame = {
-    import s.implicits._
-    val files = if (paths.isEmpty)
-      s.read.parquet(path).inputFiles.toIndexedSeq else paths.toIndexedSeq
-    footerBounds(files, Seq(zcol), numeric = true).map { rows =>
-      rows.map { case (f, n, bs) =>
-        val (mn, mx) = bs.head
-          .map { case (a, b) => (a.asInstanceOf[Double],
-            b.asInstanceOf[Double]) }
-          .getOrElse((Double.MaxValue, -Double.MaxValue))
-        (f, mn, mx, n)
-      }.toDF("file", "z_min", "z_max", "n_rows")
-    }.getOrElse(scanFileStats(s, path, paths, zcol))
-  }
-
-  private[graft] def scanFileStats(s: SparkSession, path: String,
-      paths: Seq[String], zcol: String): DataFrame = {
-    import s.implicits._
-    val src = if (paths.isEmpty) s.read.parquet(path)
-      else s.read.parquet(paths: _*)
-    val listed = (if (paths.isEmpty) src.inputFiles.toIndexedSeq
-      else paths.toIndexedSeq).toDF("file")
-      .select(col("file"), substring_index(col("file"), "/", -1).as("_n"))
-    val scanned = src.select(input_file_name().as("f"),
-        col(zcol).cast("double").as("z"))
-      .groupBy(col("f"))
-      .agg(min(col("z")).as("_zmn"), max(col("z")).as("_zmx"),
-        count(lit(1)).as("_nr"))
-      .select(substring_index(col("f"), "/", -1).as("_n"),
-        col("_zmn"), col("_zmx"), col("_nr"))
-    listed.join(scanned, Seq("_n"), "left")
-      .select(col("file"),
-        coalesce(col("_zmn"), lit(Double.MaxValue)).as("z_min"),
-        coalesce(col("_zmx"), lit(-Double.MaxValue)).as("z_max"),
-        coalesce(col("_nr"), lit(0L)).as("n_rows"))
-  }
-
-  // ---- footer-decoded file stats (the production writer shape the
-  // fileStats docstring promises: bounds from the files' own parquet
-  // footers, no second read pass over data just written) --------------
-
-  /** Per-file (file, rows, per-column Option[(lo, hi)]) decoded from
-    * parquet FOOTERS — one small driver metadata read per file instead
-    * of a Spark scan job over data the caller typically just wrote.
-    * None when any file/column lacks an exactly-decodable statistic
-    * (missing/dropped chunk stats, non-local scheme, unsupported
-    * physical type, float/double physical storage — parquet widens
-    * ±0.0 bounds so footer values can differ from a scan's); the
-    * caller then falls back to the scan, trading speed for exactness.
-    * `numeric = true` decodes to Double exactly as the scan's
-    * CAST(.. AS DOUBLE) (long→toDouble, decimal→BigDecimal.doubleValue
-    * — both monotone, so per-file min/max commute with the cast);
-    * `numeric = false` decodes UTF8 binary to String (parquet's
-    * unsigned byte order = Spark's UTF8String order, so footer min/max
-    * ARE the scan's).
-    */
-  private def footerBounds(files: Seq[String], cols: Seq[String],
-      numeric: Boolean)
-      : Option[Seq[(String, Long, IndexedSeq[Option[(Any, Any)]])]] = {
+  private[graft] def parquetRowCount(paths: String*): Option[Long] = {
     import scala.jdk.CollectionConverters._
-    def localPath(p: String): java.nio.file.Path =
-      if (p.startsWith("file:"))
-        java.nio.file.Paths.get(java.net.URI.create(p))
-      else if (!p.contains(":")) java.nio.file.Paths.get(p)
-      else throw FooterUnusable // non-local scheme: scan handles it
-    def decode(pt: org.apache.parquet.schema.PrimitiveType,
-        v: Any): Any = {
-      import org.apache.parquet.schema.LogicalTypeAnnotation._
-      val ann = pt.getLogicalTypeAnnotation
-      if (numeric) ann match {
-        case d: DecimalLogicalTypeAnnotation =>
-          val bd = v match {
-            case n: java.lang.Integer =>
-              java.math.BigDecimal.valueOf(n.longValue, d.getScale)
-            case n: java.lang.Long =>
-              java.math.BigDecimal.valueOf(n.longValue, d.getScale)
-            case b: org.apache.parquet.io.api.Binary =>
-              new java.math.BigDecimal(
-                new java.math.BigInteger(b.getBytes), d.getScale)
-            case _ => throw FooterUnusable
-          }
-          bd.doubleValue
-        case a if a == null || (a.isInstanceOf[IntLogicalTypeAnnotation] &&
-            a.asInstanceOf[IntLogicalTypeAnnotation].isSigned) => v match {
-          case n: java.lang.Integer => n.doubleValue
-          case n: java.lang.Long => n.doubleValue
-          case _ => throw FooterUnusable
-        }
-        case ts: TimestampLogicalTypeAnnotation
-            if ts.getUnit == org.apache.parquet.schema
-              .LogicalTypeAnnotation.TimeUnit.MICROS &&
-              ts.isAdjustedToUTC => v match {
-          // the scan twin is CAST(ts AS DOUBLE) = micros / 10^6 as one
-          // double division — replicated bit for bit here; division by
-          // a positive constant is monotone, so per-file min/max
-          // commute with the cast. Only the micros/UTC INT64 encoding
-          // [[graft.Graft.configure]] pins qualifies; INT96 (Binary
-          // raw) or other units decline to the scan.
-          case n: java.lang.Long => n.longValue / 1000000.0
-          case _ => throw FooterUnusable
-        }
-        case _ => throw FooterUnusable
-      } else ann match {
-        case _: StringLogicalTypeAnnotation => v match {
-          case b: org.apache.parquet.io.api.Binary =>
-            new String(b.getBytes, java.nio.charset.StandardCharsets.UTF_8)
-          case _ => throw FooterUnusable
-        }
-        case _ => throw FooterUnusable
-      }
-    }
-    def one(f: String): (String, Long, IndexedSeq[Option[(Any, Any)]]) = {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(localPath(f)))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toIndexedSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val bounds = cols.toIndexedSeq.map { c =>
-          var acc: Option[(Any, Any)] = None
-          blocks.foreach { b =>
-            val chunk = b.getColumns.asScala
-              .find(_.getPath.toDotString == c)
-              .getOrElse(throw FooterUnusable)
-            val st = chunk.getStatistics
-            if (st == null) throw FooterUnusable
-            else if (st.hasNonNullValue) {
-              val mn = decode(chunk.getPrimitiveType, st.genericGetMin)
-              val mx = decode(chunk.getPrimitiveType, st.genericGetMax)
-              acc = Some(acc.map { case (a, b2) =>
-                (if (lt(mn, a)) mn else a, if (lt(b2, mx)) mx else b2)
-              }.getOrElse((mn, mx)))
-            } else if (!(st.isNumNullsSet &&
-                st.getNumNulls == b.getRowCount))
-              throw FooterUnusable // "stats dropped" vs "all null"
-          }
-          acc
-        }
-        (f, rows, bounds)
-      } finally reader.close()
-    }
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Double, y: java.lang.Double) => x < y
-      case (x: String, y: String) =>
-        // UTF-8 byte order — the order parquet recorded the bounds in
-        // and the order Spark's UTF8String min/max would use
-        val xb = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val yb = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        java.util.Arrays.compareUnsigned(xb, yb) < 0
-      case _ => throw FooterUnusable
-    }
-    // Each per-file read SETTLES (Either) instead of failing its
-    // future: a failed future would make Await rethrow while sibling
-    // reads are still in flight, and the finally's pool.shutdown would
-    // then reject their continuations with RejectedExecutionException
-    // noise. Awaiting all settled results first keeps shutdown clean;
-    // any non-fatal error declines to the (always-exact) scan.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, files.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val settled =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(files.toList)(f =>
-          scala.concurrent.Future(
-            try Right(one(f))
-            catch { case scala.util.control.NonFatal(_) => Left(()) })),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    if (settled.forall(_.isRight)) Some(settled.flatMap(_.toOption))
-    else None
-  }
-
-  private object FooterUnusable
-    extends RuntimeException("footer stats unusable")
-      with scala.util.control.NoStackTrace
-
-  /** Total row count of a flat parquet directory from its FOOTERS —
-    * one small driver metadata read per part file instead of a Spark
-    * job (row counts are schema-independent and exact, the
-    * stageTombstone argument). None when the directory has no part
-    * files or any footer fails to read — callers fall back to a scan
-    * count. The per-trigger standing-count jobs in the streaming
-    * lifecycle gates are the target: a count() per micro-batch is pure
-    * job-scheduling fixed cost at any scale.
-    */
-  private[graft] def parquetRowCount(dir: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return None
-    import scala.jdk.CollectionConverters._
-    val st = java.nio.file.Files.list(p)
-    val parts =
-      try st.iterator().asScala.filter { f =>
-        val n = f.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.toIndexedSeq
-      finally st.close()
-    if (parts.isEmpty) return None
-    try Some(parts.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(f))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally reader.close()
-    }.sum)
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** [[parquetRowCount]] over an EXPLICIT file list (scan-reported URIs
-    * like `file:/...` or plain paths): the delete path's touched files
-    * live under the table dir next to untouched ones, so the dir-level
-    * decode doesn't apply. Any unreadable footer or non-local scheme →
-    * None (callers fall back to a scan count).
-    */
-  private[graft] def parquetRowCountFiles(files: Seq[String])
-      : Option[Long] = {
-    import scala.jdk.CollectionConverters._
-    def localFile(uri: String): java.nio.file.Path = {
-      val u = new java.net.URI(uri)
-      if (u.getScheme != null && u.getScheme != "file")
-        throw new java.io.IOException(s"non-local scheme: $uri")
-      java.nio.file.Paths.get(
-        if (u.getScheme == null) uri else u.getPath)
-    }
-    try Some(files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(localFile(f)))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally reader.close()
-    }.sum)
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Test hook: the raw footer decode, so specs can assert the fast
-    * path ENGAGED (isDefined) and not merely that the dispatcher's
-    * values match the scan via a silent fallback.
-    */
-  private[graft] def footerBoundsForTest(files: Seq[String],
-      cols: Seq[String], numeric: Boolean)
-      : Option[Seq[(String, Long, IndexedSeq[Option[(Any, Any)]])]] =
-    footerBounds(files, cols, numeric)
-
-  /** Bucket id for a z_min under the table's fixed (origin, width) —
-    * values outside the creation-time range land in out-of-range
-    * bucket ids, which are just additional hive partition values, so
-    * appends never re-bucket the existing manifest.
-    */
-  private def zbOf(zmin: Column, zLo: Double, zW: Double): Column =
-    floor((zmin - lit(zLo)) / lit(zW)).cast("int")
-
-  /** Republish `_zonemap_meta` from the manifest: one aggregation over
-    * the (buckets-sized) manifest relation, swapped in atomically.
-    */
-  private def refreshMeta(s: SparkSession, path: String, zLo: Double,
-      zW: Double): Unit = {
-    val meta = s.read.parquet(s"$path/_zonemap")
-      .groupBy(col("zb"))
-      .agg(min(col("z_min")).as("bz_min"), max(col("z_max")).as("bz_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("z_lo", lit(zLo)).withColumn("z_w", lit(zW))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** Write `df` range-sorted by `zcol` into `nFiles` files and record a
-    * ZONE-MAP manifest (see the layout note above). This is lakehouse
-    * data skipping (Iceberg manifest lists + manifests' column bounds,
-    * Delta's file stats): the planner consults the per-bucket meta,
-    * lists only intersecting manifest shards, and file-level skipping
-    * composes with the row-group pruning parquet footers already give.
-    */
-  def writeWithZoneMap(df: DataFrame, path: String, zcol: String,
-      nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .write.mode("overwrite").parquet(path)
-    buildZoneMap(df.sparkSession, path, zcol)
-  }
-
-  /** Build the manifest + meta FROM the table's current on-disk files —
-    * the manifest half of [[writeWithZoneMap]], exposed for ingest
-    * protocols that land data files by other means (the staged-move
-    * streaming commit) and then need the zone map derived from what is
-    * actually on disk. Idempotent: a re-run recomputes the same
-    * manifest from the same files.
-    */
-  def buildZoneMap(s: SparkSession, path: String, zcol: String): Unit = {
-    val stats = fileStats(s, path, Nil, zcol).localCheckpoint()
-    // the bucket grid derives from FINITE bounds only; a table whose
-    // every file is empty (post-takedown) gets the SENTINEL grid
-    // z_w = 0, which [[refreshZoneMap]] recognizes as "no real grid
-    // yet — rebuild from scratch when data arrives" so a revived table
-    // gets a grid fitted to its actual range, not a degenerate one
-    val finite = stats.filter(col("n_rows") > 0)
-      .agg(min(col("z_min")), max(col("z_max"))).head()
-    val (mn, zW) =
-      if (finite.isNullAt(0)) (0.0, 0.0)
+    def parts(p: java.nio.file.Path): Seq[java.nio.file.Path] =
+      if (!java.nio.file.Files.isDirectory(p)) Seq(p)
       else {
-        val (a, b) = (finite.getDouble(0), finite.getDouble(1))
-        (a, if (b > a) (b - a) / ZoneBuckets else 1.0)
+        val st = java.nio.file.Files.list(p)
+        try st.iterator().asScala.filter { f =>
+          val n = f.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }.toIndexedSeq
+        finally st.close()
       }
-    val withZb = stats.withColumn("zb",
-        when(col("n_rows") > 0, zbOf(col("z_min"), mn, math.max(zW, 1.0e-12)))
-          .otherwise(lit(Int.MaxValue)))
-      .localCheckpoint()
-    withZb.write.partitionBy("zb").mode("overwrite")
-      .parquet(s"$path/_zonemap")
-    // meta aggregates straight off the checkpointed stats — identical
-    // to a manifest rebuild (the manifest was just written FROM these
-    // rows) without re-listing/re-reading the shard dirs it just wrote
-    val meta = withZb.groupBy(col("zb"))
-      .agg(min(col("z_min")).as("bz_min"), max(col("z_max")).as("bz_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("z_lo", lit(mn)).withColumn("z_w", lit(zW))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** APPEND a batch to a zone-mapped table and maintain the manifest
-    * INCREMENTALLY: stats are computed for the new files only and
-    * appended to their manifest shards — the manifest update cost
-    * tracks the batch, not the table, which is what makes daily
-    * appends to a 100 TB zone-mapped table affordable (a rebuild would
-    * rescan everything). The new-file diff is a distributed anti-join
-    * (disk listing vs manifest), so the driver materializes only the
-    * BATCH's file names, never the table's. File identity is by
-    * basename (unique within the dir) — `inputFiles` and
-    * `input_file_name()` render the scheme prefix differently, so
-    * full-URI comparison would silently mismatch. Crash anywhere in
-    * the protocol: covered by the reader's reconciliation path.
-    */
-  def appendWithZoneMap(df: DataFrame, path: String, zcol: String,
-      nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .write.mode("append").parquet(path)
-    refreshZoneMap(df.sparkSession, path, zcol)
-  }
-
-  /** Incremental manifest + meta maintenance driven by the DISK-vs-
-    * MANIFEST diff — the maintenance half of [[appendWithZoneMap]],
-    * exposed for ingest protocols that land files by other means. A
-    * second run after a crash finds no new files and is a no-op, which
-    * is what makes the streaming ingest commit retry-safe.
-    */
-  def refreshZoneMap(s: SparkSession, path: String, zcol: String): Unit = {
-    // the meta summary is buckets-sized BY DESIGN (the readers collect
-    // it for planning), so the merge below runs driver-side over these
-    // rows — one collect instead of checkpoint + aggregate + join jobs
-    val metaRows = readMeta(s, path)
-      .select(col("zb"), col("bz_min"), col("bz_max"), col("n_files"),
-        col("z_lo"), col("z_w")).collect()
-    if (metaRows.isEmpty || metaRows.head.getDouble(5) == 0.0) {
-      // the SENTINEL grid ([[buildZoneMap]] over an all-empty table —
-      // a full takedown's aftermath): there is no real bucket grid to
-      // fold the batch into, so rebuild from scratch over whatever is
-      // on disk now — the revived table gets a grid fitted to its
-      // actual value range instead of a degenerate one
-      buildZoneMap(s, path, zcol)
-      return
-    }
-    val (zLo, zW) = (metaRows.head.getDouble(4), metaRows.head.getDouble(5))
-    import s.implicits._
-    val manifest = s.read.parquet(s"$path/_zonemap")
-    val onDisk = s.read.parquet(path).inputFiles.toIndexedSeq.toDF("p")
-      .select(col("p"), substring_index(col("p"), "/", -1).as("name"))
-    val knownNames = manifest
-      .select(substring_index(col("file"), "/", -1).as("name"))
-    val newPaths = onDisk.join(knownNames, Seq("name"), "left_anti")
-      .select(col("p")).collect().map(_.getString(0)).toIndexedSeq
-    if (newPaths.nonEmpty) {
-      // counted BEFORE the manifest append: the in-sync test below must
-      // compare meta against the manifest state meta claims to summarize
-      val manifestCountPre = manifest.count()
-      val batchStats = fileStats(s, path, newPaths, zcol)
-        .withColumn("zb",
-          when(col("n_rows") > 0, zbOf(col("z_min"), zLo, zW))
-            .otherwise(lit(Int.MaxValue)))
-        .localCheckpoint()
-      batchStats.write.partitionBy("zb").mode("append")
-        .parquet(s"$path/_zonemap")
-      // INCREMENTAL meta merge: the batch's per-bucket envelopes fold
-      // into the previous summary (appends only ever EXTEND a bucket —
-      // least/greatest of old and new bounds, counts add), so the meta
-      // update costs the batch's bucket count, never a manifest-wide
-      // rescan. Safe only from a meta that was IN SYNC with the
-      // pre-append manifest: if a previous crash left meta behind
-      // (n_files sum != manifest rows before this batch), merging onto
-      // the stale base would preserve the hole — rebuild from the full
-      // manifest instead, which also heals the crash.
-      val metaTotal = metaRows.map(_.getLong(3)).sum
-      if (metaTotal == manifestCountPre) {
-        val batchMeta = batchStats.groupBy(col("zb"))
-          .agg(min(col("z_min")).as("nb_min"),
-            max(col("z_max")).as("nb_max"),
-            count(lit(1)).as("nb_files"))
-          .collect().map(r => r.getInt(0) -> (r.getDouble(1),
-            r.getDouble(2), r.getLong(3))).toMap
-        val old = metaRows.map(r => r.getInt(0) ->
-          (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
-        val merged = (old.keySet ++ batchMeta.keySet).toIndexedSeq.sorted
-          .map { zb =>
-            (old.get(zb), batchMeta.get(zb)) match {
-              case (Some((omn, omx, on)), Some((bmn, bmx, bn))) =>
-                (zb, math.min(omn, bmn), math.max(omx, bmx), on + bn,
-                  zLo, zW)
-              case (Some((omn, omx, on)), None) =>
-                (zb, omn, omx, on, zLo, zW)
-              case (None, Some((bmn, bmx, bn))) =>
-                (zb, bmn, bmx, bn, zLo, zW)
-              case _ => sys.error("unreachable: zb in neither side")
-            }
-          }
-        publishSwapped(
-          merged.toDF("zb", "bz_min", "bz_max", "n_files", "z_lo", "z_w"),
-          s"$path/_zonemap_meta")
-      } else refreshMeta(s, path, zLo, zW)
-    }
-  }
-
-  /** [[writeZOrdered]] plus a TWO-column zone-map manifest: because the
-    * Morton layout gives every file a compact block of the (c1, c2)
-    * plane, the per-file min/max bounds are tight in BOTH dimensions —
-    * so a range predicate on EITHER column skips files, where a
-    * lexicographic (c1, c2) sort leaves c2's bounds spanning the whole
-    * domain in every file and skips nothing for it. This is the
-    * read-side payoff the Z-order write exists for.
-    */
-  def writeZOrderedWithZoneMap(df: DataFrame, path: String, c1: String,
-      c2: String, nFiles: Int): Unit = {
-    writeZOrdered(df, path, c1, c2, nFiles)
-    buildZoneMap2(df.sparkSession, path, c1, c2)
-  }
-
-  /** [[fileStats]] with bounds in BOTH mapped columns — same listing
-    * left-join and zero-row sentinel discipline (all four bounds
-    * sentinel, so no finite 2-D probe box selects an empty file).
-    */
-  private[graft] def fileStats2(s: SparkSession, path: String,
-      paths: Seq[String], c1: String, c2: String): DataFrame = {
-    import s.implicits._
-    val files = if (paths.isEmpty)
-      s.read.parquet(path).inputFiles.toIndexedSeq else paths.toIndexedSeq
-    footerBounds(files, Seq(c1, c2), numeric = true).map { rows =>
-      rows.map { case (f, n, bs) =>
-        def d(i: Int) = bs(i)
-          .map { case (a, b) => (a.asInstanceOf[Double],
-            b.asInstanceOf[Double]) }
-          .getOrElse((Double.MaxValue, -Double.MaxValue))
-        val ((a1, b1), (a2, b2)) = (d(0), d(1))
-        (f, a1, b1, a2, b2, n)
-      }.toDF("file", "z1_min", "z1_max", "z2_min", "z2_max", "n_rows")
-    }.getOrElse(scanFileStats2(s, path, paths, c1, c2))
-  }
-
-  private[graft] def scanFileStats2(s: SparkSession, path: String,
-      paths: Seq[String], c1: String, c2: String): DataFrame = {
-    import s.implicits._
-    val src = if (paths.isEmpty) s.read.parquet(path)
-      else s.read.parquet(paths: _*)
-    val listed = (if (paths.isEmpty) src.inputFiles.toIndexedSeq
-      else paths.toIndexedSeq).toDF("file")
-      .select(col("file"), substring_index(col("file"), "/", -1).as("_n"))
-    val scanned = src.select(input_file_name().as("f"),
-        col(c1).cast("double").as("z1"), col(c2).cast("double").as("z2"))
-      .groupBy(col("f"))
-      .agg(min(col("z1")).as("_a"), max(col("z1")).as("_b"),
-        min(col("z2")).as("_c"), max(col("z2")).as("_d"),
-        count(lit(1)).as("_nr"))
-      .select(substring_index(col("f"), "/", -1).as("_n"),
-        col("_a"), col("_b"), col("_c"), col("_d"), col("_nr"))
-    listed.join(scanned, Seq("_n"), "left")
-      .select(col("file"),
-        coalesce(col("_a"), lit(Double.MaxValue)).as("z1_min"),
-        coalesce(col("_b"), lit(-Double.MaxValue)).as("z1_max"),
-        coalesce(col("_c"), lit(Double.MaxValue)).as("z2_min"),
-        coalesce(col("_d"), lit(-Double.MaxValue)).as("z2_max"),
-        coalesce(col("_nr"), lit(0L)).as("n_rows"))
-  }
-
-  /** Build the TWO-COLUMN manifest + meta from the table's current
-    * files — [[buildZoneMap]] over the Morton layout: per-file bounds
-    * in both dimensions, buckets on the c1 grid (the same fixed-origin
-    * rule), sentinel grid z_w = 0 when every file is empty.
-    */
-  def buildZoneMap2(s: SparkSession, path: String, c1: String,
-      c2: String): Unit = {
-    val stats = fileStats2(s, path, Nil, c1, c2).localCheckpoint()
-    val finite = stats.filter(col("n_rows") > 0)
-      .agg(min(col("z1_min")), max(col("z1_max"))).head()
-    val (mn, zW) =
-      if (finite.isNullAt(0)) (0.0, 0.0)
-      else {
-        val (a, b) = (finite.getDouble(0), finite.getDouble(1))
-        (a, if (b > a) (b - a) / ZoneBuckets else 1.0)
-      }
-    val withZb = stats.withColumn("zb",
-        when(col("n_rows") > 0,
-          zbOf(col("z1_min"), mn, math.max(zW, 1.0e-12)))
-          .otherwise(lit(Int.MaxValue)))
-      .localCheckpoint()
-    withZb.write.partitionBy("zb").mode("overwrite")
-      .parquet(s"$path/_zonemap")
-    val meta = withZb.groupBy(col("zb"))
-      .agg(min(col("z1_min")).as("b1_min"), max(col("z1_max")).as("b1_max"),
-        min(col("z2_min")).as("b2_min"), max(col("z2_max")).as("b2_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("z_lo", lit(mn)).withColumn("z_w", lit(zW))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** Diff-driven incremental maintenance of the two-column manifest —
-    * [[refreshZoneMap]]'s shape with four bounds per file: batch stats
-    * append to their c1-grid shards, the meta merges driver-side when
-    * in sync, rebuilds from the manifest when stale or the grid is the
-    * sentinel.
-    */
-  def refreshZoneMap2(s: SparkSession, path: String, c1: String,
-      c2: String): Unit = {
-    val metaRows = readMeta(s, path)
-      .select(col("zb"), col("b1_min"), col("b1_max"), col("b2_min"),
-        col("b2_max"), col("n_files"), col("z_lo"), col("z_w")).collect()
-    if (metaRows.isEmpty || metaRows.head.getDouble(7) == 0.0) {
-      buildZoneMap2(s, path, c1, c2)
-      return
-    }
-    val (zLo, zW) = (metaRows.head.getDouble(6), metaRows.head.getDouble(7))
-    import s.implicits._
-    val manifest = s.read.parquet(s"$path/_zonemap")
-    val onDisk = s.read.parquet(path).inputFiles.toIndexedSeq.toDF("p")
-      .select(col("p"), substring_index(col("p"), "/", -1).as("name"))
-    val knownNames = manifest
-      .select(substring_index(col("file"), "/", -1).as("name"))
-    val newPaths = onDisk.join(knownNames, Seq("name"), "left_anti")
-      .select(col("p")).collect().map(_.getString(0)).toIndexedSeq
-    if (newPaths.nonEmpty) {
-      val manifestCountPre = manifest.count()
-      val batchStats = fileStats2(s, path, newPaths, c1, c2)
-        .withColumn("zb",
-          when(col("n_rows") > 0, zbOf(col("z1_min"), zLo, zW))
-            .otherwise(lit(Int.MaxValue)))
-        .localCheckpoint()
-      batchStats.write.partitionBy("zb").mode("append")
-        .parquet(s"$path/_zonemap")
-      val metaTotal = metaRows.map(_.getLong(5)).sum
-      if (metaTotal == manifestCountPre) {
-        type B = (Double, Double, Double, Double, Long)
-        val batchMeta = batchStats.groupBy(col("zb"))
-          .agg(min(col("z1_min")).as("a"), max(col("z1_max")).as("b"),
-            min(col("z2_min")).as("c"), max(col("z2_max")).as("e"),
-            count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> (r.getDouble(1),
-            r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getLong(5)))
-          .toMap
-        val old = metaRows.map(r => r.getInt(0) -> (r.getDouble(1),
-          r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getLong(5)))
-          .toMap
-        def merge(o: Option[B], b: Option[B]): B = (o, b) match {
-          case (Some((a1, b1, c1m, d1, n1)), Some((a2, b2, c2m, d2, n2))) =>
-            (math.min(a1, a2), math.max(b1, b2), math.min(c1m, c2m),
-              math.max(d1, d2), n1 + n2)
-          case (Some(x), None) => x
-          case (None, Some(x)) => x
-          case _ => sys.error("unreachable: zb in neither side")
-        }
-        val merged = (old.keySet ++ batchMeta.keySet).toIndexedSeq.sorted
-          .map { zb =>
-            val (a, b, c, e, n) = merge(old.get(zb), batchMeta.get(zb))
-            (zb, a, b, c, e, n, zLo, zW)
-          }
-        publishSwapped(
-          merged.toDF("zb", "b1_min", "b1_max", "b2_min", "b2_max",
-            "n_files", "z_lo", "z_w"),
-          s"$path/_zonemap_meta")
-      } else refreshMeta2(s, path, zLo, zW)
-    }
-  }
-
-  /** Republish the 2-col meta from the manifest (the stale-base heal). */
-  private def refreshMeta2(s: SparkSession, path: String, zLo: Double,
-      zW: Double): Unit = {
-    val meta = s.read.parquet(s"$path/_zonemap")
-      .groupBy(col("zb"))
-      .agg(min(col("z1_min")).as("b1_min"), max(col("z1_max")).as("b1_max"),
-        min(col("z2_min")).as("b2_min"), max(col("z2_max")).as("b2_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("z_lo", lit(zLo)).withColumn("z_w", lit(zW))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** [[deleteKeysZoneMapped]] for the Z-ORDERED two-column table: the
-    * COW delete re-Mortons the touched files' survivors (their own
-    * grid — bounds stay tight in both dimensions whatever the scaling
-    * origin), the touched manifest rows drop, the rewritten files are
-    * adopted with four-bound stats, and the meta heals. Skipping on
-    * EITHER column stays sound through the takedown.
-    */
-  def deleteKeysZoneMapped2(spark: SparkSession, path: String,
-      keyCol: String, keys: DataFrame, c1: String, c2: String)
-      : (Long, Seq[String], Int) = {
-    val res @ (deleted, touched, _) = deleteKeys(spark, path, keyCol,
-      keys, (df, n) => zOrderLayout(df, c1, c2, n))
-    if (deleted > 0 && touched.nonEmpty) {
-      val grid = readMeta(spark, path)
-        .select(col("z_lo"), col("z_w")).head()
-      val touchedSet = touched.toSet
-      val kept = spark.read.parquet(s"$path/_zonemap")
-        .withColumn("_name", substring_index(col("file"), "/", -1))
-        .filter(!col("_name").isInCollection(touchedSet))
-        .drop("_name")
-        .localCheckpoint()
-      if (kept.isEmpty) {
-        val fs = hadoopPath(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(hadoopPath(s"$path/_zonemap"), true)
-        fs.delete(hadoopPath(s"$path/_zonemap_meta"), true)
-        buildZoneMap2(spark, path, c1, c2)
-      } else {
-        kept.write.partitionBy("zb").mode("overwrite")
-          .parquet(s"$path/_zonemap")
-        refreshZoneMap2(spark, path, c1, c2)
-        refreshMeta2(spark, path, grid.getDouble(0), grid.getDouble(1))
-      }
-    }
-    res
-  }
-
-  // ---- TYPED zone maps (string / date bounds) --------------------------
-  //
-  // The numeric zone map casts its column to DOUBLE, which makes
-  // string (and therefore date: a DATE renders losslessly as its
-  // ISO-8601 string, whose lexicographic order IS the date order)
-  // predicates inexpressible. The string variant keeps min/max bounds
-  // as STRINGS with native lexicographic comparison end to end. The
-  // bucket function replaces the numeric (origin, width) grid: files
-  // bucket by the first two characters of z_min AFTER the corpus's
-  // creation-time COMMON PREFIX (recorded in meta as p_len, the string
-  // analogue of z_lo/z_w) — range-sorted string keys share long
-  // prefixes ("Customer#0000…", "2024-…"), so bucketing on raw leading
-  // characters would degenerate to one bucket and the meta level would
-  // stop pre-selecting manifest shards. Values outside the creation
-  // range pad with '~' / land in new bucket values — extra hive
-  // partitions, same as the numeric out-of-range rule. The crash
-  // protocol, reconciliation, and ._old fallback are shared with the
-  // numeric readers (reconcile is bounds-type-agnostic).
-
-  private def zbOfString(zmin: Column, pLen: Int): Column =
-    concat(lit("b"), substring(rpad(zmin, pLen + 2, "~"), pLen + 1, 2))
-
-  // string sentinels for ZERO-ROW files (the [[fileStats]] rule in
-  // lexicographic space): z_min above any real key, z_max below — no
-  // finite probe range selects the file, but it stays listed so the
-  // reconcile path never mistakes it for a crash orphan. U+FFFF is a
-  // noncharacter that sorts above all BMP text in UTF-8 binary order.
-  private val StrSentinelLo = "￿"
-  private val StrSentinelHi = ""
-  private val StrSentinelBucket = "b!empty"
-
-  /** [[fileStats]] with STRING bounds — lexicographic min/max, same
-    * listing left-join and zero-row sentinel discipline.
-    */
-  private[graft] def fileStatsString(s: SparkSession, path: String,
-      paths: Seq[String], zcol: String): DataFrame = {
-    import s.implicits._
-    val files = if (paths.isEmpty)
-      s.read.parquet(path).inputFiles.toIndexedSeq else paths.toIndexedSeq
-    footerBounds(files, Seq(zcol), numeric = false).map { rows =>
-      rows.map { case (f, n, bs) =>
-        val (mn, mx) = bs.head
-          .map { case (a, b) => (a.asInstanceOf[String],
-            b.asInstanceOf[String]) }
-          .getOrElse((StrSentinelLo, StrSentinelHi))
-        (f, mn, mx, n)
-      }.toDF("file", "z_min", "z_max", "n_rows")
-    }.getOrElse(scanFileStatsString(s, path, paths, zcol))
-  }
-
-  private[graft] def scanFileStatsString(s: SparkSession, path: String,
-      paths: Seq[String], zcol: String): DataFrame = {
-    import s.implicits._
-    val src = if (paths.isEmpty) s.read.parquet(path)
-      else s.read.parquet(paths: _*)
-    val listed = (if (paths.isEmpty) src.inputFiles.toIndexedSeq
-      else paths.toIndexedSeq).toDF("file")
-      .select(col("file"), substring_index(col("file"), "/", -1).as("_n"))
-    val scanned = src.select(input_file_name().as("f"),
-        col(zcol).cast("string").as("z"))
-      .groupBy(col("f"))
-      .agg(min(col("z")).as("_zmn"), max(col("z")).as("_zmx"),
-        count(lit(1)).as("_nr"))
-      .select(substring_index(col("f"), "/", -1).as("_n"),
-        col("_zmn"), col("_zmx"), col("_nr"))
-    listed.join(scanned, Seq("_n"), "left")
-      .select(col("file"),
-        coalesce(col("_zmn"), lit(StrSentinelLo)).as("z_min"),
-        coalesce(col("_zmx"), lit(StrSentinelHi)).as("z_max"),
-        coalesce(col("_nr"), lit(0L)).as("n_rows"))
-  }
-
-  /** Build the STRING manifest + meta from the table's current files —
-    * [[buildZoneMap]] with lexicographic bounds. The bucket grid is the
-    * creation-time common prefix (p_len); an all-empty table records
-    * the SENTINEL grid p_len = -1 ("no real grid yet"), which
-    * [[refreshZoneMapString]] turns into a from-scratch rebuild when
-    * data arrives.
-    */
-  def buildZoneMapString(s: SparkSession, path: String,
-      zcol: String): Unit = {
-    val stats = fileStatsString(s, path, Nil, zcol).localCheckpoint()
-    val finite = stats.filter(col("n_rows") > 0)
-      .agg(min(col("z_min")), max(col("z_max"))).head()
-    val pLen =
-      if (finite.isNullAt(0)) -1
-      else {
-        val (mn, mx) = (finite.getString(0), finite.getString(1))
-        mn.zip(mx).takeWhile { case (a, b) => a == b }.length
-      }
-    val withZb = stats.withColumn("zb",
-        when(col("n_rows") > 0, zbOfString(col("z_min"), math.max(pLen, 0)))
-          .otherwise(lit(StrSentinelBucket)))
-      .localCheckpoint()
-    withZb.write.partitionBy("zb").mode("overwrite")
-      .parquet(s"$path/_zonemap")
-    val meta = withZb.groupBy(col("zb"))
-      .agg(min(col("z_min")).as("bz_min"), max(col("z_max")).as("bz_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("p_len", lit(pLen))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** Diff-driven incremental maintenance of the STRING manifest —
-    * [[refreshZoneMap]] with lexicographic bounds: new files' stats
-    * append to their prefix-bucket shards, the meta summary merges
-    * driver-side (least/greatest strings, counts add) when in sync,
-    * rebuilds from the manifest when stale, and a sentinel grid
-    * triggers the from-scratch rebuild.
-    */
-  def refreshZoneMapString(s: SparkSession, path: String,
-      zcol: String): Unit = {
-    val metaRows = readMeta(s, path)
-      .select(col("zb"), col("bz_min"), col("bz_max"), col("n_files"),
-        col("p_len")).collect()
-    if (metaRows.isEmpty || metaRows.head.getInt(4) < 0) {
-      buildZoneMapString(s, path, zcol)
-      return
-    }
-    val pLen = metaRows.head.getInt(4)
-    import s.implicits._
-    val manifest = s.read.parquet(s"$path/_zonemap")
-    val onDisk = s.read.parquet(path).inputFiles.toIndexedSeq.toDF("p")
-      .select(col("p"), substring_index(col("p"), "/", -1).as("name"))
-    val knownNames = manifest
-      .select(substring_index(col("file"), "/", -1).as("name"))
-    val newPaths = onDisk.join(knownNames, Seq("name"), "left_anti")
-      .select(col("p")).collect().map(_.getString(0)).toIndexedSeq
-    if (newPaths.nonEmpty) {
-      val manifestCountPre = manifest.count()
-      val batchStats = fileStatsString(s, path, newPaths, zcol)
-        .withColumn("zb",
-          when(col("n_rows") > 0, zbOfString(col("z_min"), pLen))
-            .otherwise(lit(StrSentinelBucket)))
-        .localCheckpoint()
-      batchStats.write.partitionBy("zb").mode("append")
-        .parquet(s"$path/_zonemap")
-      val metaTotal = metaRows.map(_.getLong(3)).sum
-      if (metaTotal == manifestCountPre) {
-        val batchMeta = batchStats.groupBy(col("zb"))
-          .agg(min(col("z_min")).as("nb_min"),
-            max(col("z_max")).as("nb_max"),
-            count(lit(1)).as("nb_files"))
-          .collect().map(r => r.getString(0) -> (r.getString(1),
-            r.getString(2), r.getLong(3))).toMap
-        val old = metaRows.map(r => r.getString(0) ->
-          (r.getString(1), r.getString(2), r.getLong(3))).toMap
-        val merged = (old.keySet ++ batchMeta.keySet).toIndexedSeq.sorted
-          .map { zb =>
-            (old.get(zb), batchMeta.get(zb)) match {
-              case (Some((omn, omx, on)), Some((bmn, bmx, bn))) =>
-                (zb, if (omn <= bmn) omn else bmn,
-                  if (omx >= bmx) omx else bmx, on + bn, pLen)
-              case (Some((omn, omx, on)), None) => (zb, omn, omx, on, pLen)
-              case (None, Some((bmn, bmx, bn))) => (zb, bmn, bmx, bn, pLen)
-              case _ => sys.error("unreachable: zb in neither side")
-            }
-          }
-        publishSwapped(
-          merged.toDF("zb", "bz_min", "bz_max", "n_files", "p_len"),
-          s"$path/_zonemap_meta")
-      } else refreshMetaString(s, path, pLen)
-    }
-  }
-
-  /** Republish the string meta from the manifest (the stale-base heal). */
-  private def refreshMetaString(s: SparkSession, path: String,
-      pLen: Int): Unit = {
-    val meta = s.read.parquet(s"$path/_zonemap")
-      .groupBy(col("zb"))
-      .agg(min(col("z_min")).as("bz_min"), max(col("z_max")).as("bz_max"),
-        count(lit(1)).as("n_files"))
-      .withColumn("p_len", lit(pLen))
-    publishSwapped(meta, s"$path/_zonemap_meta")
-  }
-
-  /** Write `df` range-sorted by STRING column `zcol` into `nFiles`
-    * files with a string-bounds zone-map manifest — [[writeWithZoneMap]]
-    * for keys whose order is lexicographic, not numeric.
-    */
-  def writeWithZoneMapString(df: DataFrame, path: String, zcol: String,
-      nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .write.mode("overwrite").parquet(path)
-    buildZoneMapString(df.sparkSession, path, zcol)
-  }
-
-  /** APPEND a batch to a string-zone-mapped table with incremental
-    * manifest maintenance — [[appendWithZoneMap]]'s lexicographic twin.
-    */
-  def appendWithZoneMapString(df: DataFrame, path: String, zcol: String,
-      nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .write.mode("append").parquet(path)
-    refreshZoneMapString(df.sparkSession, path, zcol)
-  }
-
-  /** [[deleteKeysZoneMapped]] for the STRING/date zone map: the same
-    * touched-files-only COW delete + manifest surgery + diff-driven
-    * survivor adoption + meta heal, with lexicographic bounds. A
-    * takedown against a date-partitioned table is the first delete a
-    * production user runs — this is that path.
-    */
-  def deleteKeysZoneMappedString(spark: SparkSession, path: String,
-      keyCol: String, keys: DataFrame, zcol: String)
-      : (Long, Seq[String], Int) = {
-    val res @ (deleted, touched, _) = deleteKeys(spark, path, keyCol,
-      keys, (df, n) => df.repartitionByRange(n, col(zcol))
-        .sortWithinPartitions(col(zcol)))
-    if (deleted > 0 && touched.nonEmpty) {
-      val pLen = readMeta(spark, path).select(col("p_len")).head.getInt(0)
-      val touchedSet = touched.toSet
-      val kept = spark.read.parquet(s"$path/_zonemap")
-        .withColumn("_name", substring_index(col("file"), "/", -1))
-        .filter(!col("_name").isInCollection(touchedSet))
-        .drop("_name")
-        .localCheckpoint()
-      if (kept.isEmpty) {
-        val fs = hadoopPath(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(hadoopPath(s"$path/_zonemap"), true)
-        fs.delete(hadoopPath(s"$path/_zonemap_meta"), true)
-        buildZoneMapString(spark, path, zcol)
-      } else {
-        kept.write.partitionBy("zb").mode("overwrite")
-          .parquet(s"$path/_zonemap")
-        refreshZoneMapString(spark, path, zcol)
-        refreshMetaString(spark, path, pLen)
-      }
-    }
-    res
-  }
-
-  /** String-ordered pruned read over a [[writeWithZoneMapString]] table
-    * — the [[readZonePruned]] contract (two-level planning, sound
-    * skipping, crash reconciliation) with lexicographic range bounds.
-    */
-  def readZonePrunedString(spark: SparkSession, path: String,
-      lo: String, hi: String): (DataFrame, Long, Long) = {
-    val meta = readMeta(spark, path)
-      .select(col("zb"), col("bz_min"), col("bz_max"), col("n_files"))
-      .collect()
-    val total = meta.map(_.getLong(3)).sum
-    val (orphans, metaStale, diskCount) = reconcile(spark, path, total)
-    val fileFilter = col("z_min") <= hi && col("z_max") >= lo
-    val hit =
-      if (metaStale)
-        spark.read.parquet(s"$path/_zonemap").filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      else {
-        val buckets = meta
-          .filter(r => r.getString(1) <= hi && r.getString(2) >= lo)
-          .map(_.getString(0)).toIndexedSeq
-        if (buckets.isEmpty) IndexedSeq.empty[String]
-        else spark.read.parquet(s"$path/_zonemap")
-          .filter(col("zb").isin(buckets: _*))
-          .filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      }
-    val all = (hit ++ orphans).sorted
-    (plannedScan(spark, path, all), all.length.toLong, diskCount)
-  }
-
-  /** Disk-vs-meta reconciliation shared by the pruned readers: returns
-    * (unlistedPaths, metaIsStale, filesOnDisk). In the normal state the
-    * meta covers every data file and this costs one count compare.
-    * After a crash the mismatch decomposes into the two append-protocol
-    * windows (see the CRASH SAFETY note above):
-    *  - files on disk but not in the MANIFEST (crash before the
-    *    manifest append) come back as `unlistedPaths` via a distributed
-    *    anti-join — the driver holds only the orphan names — and the
-    *    caller reads them UNCONDITIONALLY;
-    *  - manifest rows the META has not absorbed (crash after the
-    *    manifest append but before refreshMeta) set `metaIsStale`:
-    *    meta's n_files sum diverges from the manifest's row count, and
-    *    the caller must bypass the per-bucket envelopes and plan from
-    *    the full manifest — the stale envelopes could silently skip a
-    *    file in an unlisted bucket or one extending a bucket's range.
-    * (Spark's own FileIndex already lists the table's files on the
-    * driver for any scan; `inputFiles` reuses that listing.)
-    */
-  private def reconcile(spark: SparkSession, path: String,
-      metaTotal: Long): (Seq[String], Boolean, Long) = {
-    val onDisk = spark.read.parquet(path).inputFiles.toIndexedSeq
-    if (onDisk.length.toLong == metaTotal) (Nil, false, onDisk.length.toLong)
-    else {
-      import spark.implicits._
-      val manifest = spark.read.parquet(s"$path/_zonemap")
-      val manifestCount = manifest.count()
-      val stale = manifestCount != metaTotal
-      val orphans =
-        if (onDisk.length.toLong == manifestCount) Nil
-        else {
-          val disk = onDisk.toDF("p")
-            .select(col("p"), substring_index(col("p"), "/", -1).as("name"))
-          val known = manifest
-            .select(substring_index(col("file"), "/", -1).as("name"))
-          disk.join(known, Seq("name"), "left_anti")
-            .select(col("p")).collect().map(_.getString(0)).toIndexedSeq
-        }
-      (orphans, stale, onDisk.length.toLong)
-    }
-  }
-
-  private def plannedScan(spark: SparkSession, path: String,
-      hit: Seq[String]): DataFrame =
-    if (hit.isEmpty) spark.read.parquet(path).filter(lit(false))
-    else spark.read.parquet(hit: _*)
-
-  /** Prune a Z-ordered table on ranges over BOTH mapped columns (pass
-    * (-inf, inf) to leave one unconstrained). Same soundness contract
-    * and two-level planning as [[readZonePruned]].
-    */
-  def readZonePruned2(spark: SparkSession, path: String,
-      lo1: Double, hi1: Double, lo2: Double,
-      hi2: Double): (DataFrame, Long, Long) = {
-    val meta = readMeta(spark, path)
-      .select(col("zb"), col("b1_min"), col("b1_max"), col("b2_min"),
-        col("b2_max"), col("n_files")).collect()
-    val total = meta.map(_.getLong(5)).sum
-    val (orphans, metaStale, diskCount) = reconcile(spark, path, total)
-    val fileFilter = col("z1_min") <= hi1 && col("z1_max") >= lo1 &&
-      col("z2_min") <= hi2 && col("z2_max") >= lo2
-    val hit =
-      if (metaStale)
-        // stale envelopes can't be trusted to pre-select shards: plan
-        // from the full manifest (per-file bounds are still tight)
-        spark.read.parquet(s"$path/_zonemap").filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      else {
-        val buckets = meta.filter(r => r.getDouble(1) <= hi1 &&
-            r.getDouble(2) >= lo1 && r.getDouble(3) <= hi2 &&
-            r.getDouble(4) >= lo2)
-          .map(_.getInt(0)).toIndexedSeq
-        if (buckets.isEmpty) IndexedSeq.empty[String]
-        else spark.read.parquet(s"$path/_zonemap")
-          .filter(col("zb").isin(buckets: _*))
-          .filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      }
-    val all = (hit ++ orphans).sorted
-    (plannedScan(spark, path, all), all.length.toLong, diskCount)
-  }
-
-  /** Return (candidates, filesRead, filesTotal): a scan over ONLY the
-    * files whose [z_min, z_max] intersects [lo, hi], per the zone map
-    * written by [[writeWithZoneMap]]. Skipping is SOUND — a file is
-    * dropped only when its recorded bounds exclude the whole range (and
-    * files a crashed append left out of the manifest are read
-    * unconditionally, see [[reconcile]]) — so re-applying the exact
-    * predicate on the candidates gives the same answer as a full scan;
-    * only the I/O shrinks with the selectivity. Planning is two-level:
-    * the per-bucket meta (buckets rows, kilobytes at any table size)
-    * selects manifest SHARDS, hive partition pruning reads only those,
-    * and the driver materializes only the HIT file list — there is no
-    * full-manifest collect at any table size.
-    */
-  def readZonePruned(spark: SparkSession, path: String,
-      lo: Double, hi: Double): (DataFrame, Long, Long) = {
-    val meta = readMeta(spark, path)
-      .select(col("zb"), col("bz_min"), col("bz_max"), col("n_files"))
-      .collect()
-    val total = meta.map(_.getLong(3)).sum
-    val (orphans, metaStale, diskCount) = reconcile(spark, path, total)
-    val fileFilter = col("z_min") <= hi && col("z_max") >= lo
-    val hit =
-      if (metaStale)
-        // stale envelopes can't be trusted to pre-select shards: plan
-        // from the full manifest (per-file bounds are still tight)
-        spark.read.parquet(s"$path/_zonemap").filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      else {
-        val buckets = meta
-          .filter(r => r.getDouble(1) <= hi && r.getDouble(2) >= lo)
-          .map(_.getInt(0)).toIndexedSeq
-        if (buckets.isEmpty) IndexedSeq.empty[String]
-        else spark.read.parquet(s"$path/_zonemap")
-          .filter(col("zb").isin(buckets: _*))
-          .filter(fileFilter)
-          .select(col("file")).collect().map(_.getString(0))
-          .sorted.toIndexedSeq
-      }
-    val all = (hit ++ orphans).sorted
-    (plannedScan(spark, path, all), all.length.toLong, diskCount)
+    try {
+      val files = paths.flatMap(p => parts(localPath(p)))
+      if (files.isEmpty) None
+      else Some(files.map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.parquet.io.LocalInputFile(f))
+        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally reader.close()
+      }.sum)
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 }

@@ -665,6 +665,16 @@ class SnapshotTableSpec extends SparkSpec {
     val (_, eRead, _) = SnapshotTable.readPrunedCol(
       spark, t, "day", "ed000", "ed050", Some(1))
     assert(eRead == 0)
+    // a 100,000-character string bound round-trips through the manifest
+    // and snapshot lines (a regex that recursed per character would
+    // overflow the stack parsing them) and still prunes exactly
+    val long = "f" + "x" * 100000
+    SnapshotTable.commitAppend(Seq((900L, long)).toDF("id", "day")
+      .withColumn("dt", to_date(lit("2021-06-01"))), t, "day", 1)
+    val (lCand, lRead, lTotal) =
+      SnapshotTable.readPrunedCol(spark, t, "day", long, long)
+    assert(lRead == 1 && lRead < lTotal, s"long-bound prune $lRead/$lTotal")
+    assert(lCand.filter(col("day") === long).count() == 1)
   }
 
   test("z-ordered append prunes typed probes on either dimension") {

@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.Writers
+import graft.sources.{SnapshotTable, Writers}
 
 /** Sink-side layout control (Writers): bounded files per partition dir,
   * within-file ordering, and compaction — asserted on the actual file
-  * layout the write produced, not just the data.
+  * layout the write produced, not just the data. The last two tests
+  * hold the zone-mapped sink contracts on [[SnapshotTable]], the one
+  * format that keeps file-level zone maps.
   */
 class WritersSpec extends SparkSpec {
 
@@ -150,466 +152,6 @@ class WritersSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 73)
   }
 
-  test("deleteKeysZoneMapped keeps skipping sound: manifest rows never " +
-      "point at missing files, meta stays in sync, both branches") {
-    import spark.implicits._
-    def manifestNames(t: String) = spark.read.parquet(s"$t/_zonemap")
-      .select(col("file")).collect()
-      .map(_.getString(0).split('/').last).toSet
-    def diskNames(t: String) = spark.read.parquet(t).inputFiles
-      .map(_.split('/').last).toSet
-    def metaInSync(t: String): Boolean = {
-      val metaN = spark.read.parquet(s"$t/_zonemap_meta")
-        .agg(sum(col("n_files"))).head.getLong(0)
-      metaN == spark.read.parquet(s"$t/_zonemap").count()
-    }
-    def probesSound(t: String): Unit =
-      for ((lo, hi) <- Seq((0.0, 100.0), (250.0, 600.0), (900.0, 2000.0))) {
-        val (cand, _, _) = Writers.readZonePruned(spark, t, lo, hi)
-        assert(cand.filter(col("z").between(lo, hi)).count() ==
-          spark.read.parquet(t).filter(col("z").between(lo, hi)).count(),
-          s"unsound skip for [$lo,$hi]")
-      }
-    // table range-sorted on z, so id-keyed tombstones spray; with ids
-    // CORRELATED to z here, a narrow id band touches FEW files
-    val t = Files.createTempDirectory("graft-zmdel").toString + "/t"
-    Writers.writeWithZoneMap(
-      (0 until 1000).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
-      t, "z", 10)
-    // PARTIAL branch: ids 100-119 live in one z-range file
-    val (d1, touched1, before1) = Writers.deleteKeysZoneMapped(
-      spark, t, "id", (100L until 120L).toDF("id"), "z")
-    assert(d1 == 20 && touched1.nonEmpty && touched1.length < before1)
-    assert(manifestNames(t) == diskNames(t), "manifest/disk diverged")
-    assert(metaInSync(t))
-    probesSound(t)
-    assert(spark.read.parquet(t).count() == 980)
-    // ALL-TOUCH branch: every 10th id hits every z-range file
-    val (d2, touched2, before2) = Writers.deleteKeysZoneMapped(
-      spark, t, "id", (0L until 1000L by 10).toDF("id"), "z")
-    assert(touched2.length == before2, "expected every file touched")
-    assert(d2 == 98) // 100 multiples of 10, minus 100 and 110 (gone)
-    assert(manifestNames(t) == diskNames(t))
-    assert(metaInSync(t))
-    probesSound(t)
-    assert(spark.read.parquet(t).count() == 882)
-  }
-
-  test("zone map skips files soundly; disjoint range reads zero files") {
-    val d = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-zmap").toString
-    val orders = Tables.orders(spark, d)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-    Writers.writeWithZoneMap(orders, out, "price", 16)
-
-    // the manifest is hidden from plain table reads (underscore dir)
-    assert(spark.read.parquet(out).count() == orders.count())
-
-    // a ~10%-of-value-range predicate must open a strict subset, and
-    // the pruned scan + exact residual must equal the full-scan filter
-    val (cand, read, total) =
-      Writers.readZonePruned(spark, out, 100000.0, 150000.0)
-    assert(total == 16 && read > 0 && read < total,
-      s"expected a strict subset, got $read of $total")
-    val exact = orders
-      .filter(col("price").between(lit(100000), lit(150000)))
-    val pruned = cand
-      .filter(col("price").between(lit(100000), lit(150000)))
-    assert(pruned.count() == exact.count())
-    assert(pruned.agg(sum(col("o_orderkey"))).head.getLong(0) ==
-      exact.agg(sum(col("o_orderkey"))).head.getLong(0))
-    // the candidate files really are the smaller scan
-    assert(cand.inputFiles.length.toLong == read)
-
-    // a range below every price: zero candidate files, empty result,
-    // and the empty-path scan still carries the table schema
-    val (none, read0, total0) =
-      Writers.readZonePruned(spark, out, -10.0, -1.0)
-    assert(read0 == 0 && total0 == 16 && none.count() == 0)
-    assert(none.columns.toSeq == Seq("o_orderkey", "price"))
-
-    // soundness sweep: across a probe grid spanning empty, boundary,
-    // interior, and over-the-top ranges, the pruned scan + exact
-    // residual must ALWAYS equal the full-scan filter — no range may
-    // lose a row to a dropped file, whatever the file boundaries are
-    val probes = Seq(
-      (0.0, 1500.0), (1320.51, 1320.51), (50000.0, 120000.0),
-      (123456.78, 234567.89), (400000.0, 600000.0),
-      (499705.05, 499705.05), (1000.0, 500000.0))
-    probes.foreach { case (lo, hi) =>
-      val (cand, _, _) = Writers.readZonePruned(spark, out, lo, hi)
-      val p = cand.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      val e = orders.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      assert(p == e, s"unsound skip for [$lo, $hi]: $p != $e")
-    }
-  }
-
-  test("zone map append crash window: unlisted files are still read") {
-    val d = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-zcrash").toString
-    val orders = Tables.orders(spark, d)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-    Writers.writeWithZoneMap(
-      orders.filter(col("o_orderkey") % 5 < 3), out, "price", 8)
-
-    // simulate a crash BETWEEN the data append and the manifest append:
-    // the batch's parquet files land, the manifest never learns of them
-    orders.filter(col("o_orderkey") % 5 === 3)
-      .repartition(2).write.mode("append").parquet(out)
-
-    // every probe (even one whose manifest hits are EMPTY) must still
-    // see the orphaned rows — skipping stays sound across the crash
-    val visible = orders.filter(col("o_orderkey") % 5 <= 3)
-    val probes = Seq((100000.0, 150000.0), (0.0, 600000.0),
-      (-10.0, -1.0))
-    probes.foreach { case (lo, hi) =>
-      val (cand, read, total) = Writers.readZonePruned(spark, out, lo, hi)
-      val p = cand.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      val e = visible.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      assert(p == e, s"crash window lost rows for [$lo, $hi]: $p != $e")
-      assert(read >= 2 && total == 10,
-        s"orphans not counted: read=$read total=$total")
-    }
-
-    // the NEXT append reconciles: its disk-vs-manifest diff adopts the
-    // orphans alongside its own batch, and pruning is strict again
-    Writers.appendWithZoneMap(
-      orders.filter(col("o_orderkey") % 5 === 4), out, "price", 1)
-    val (_, read2, total2) =
-      Writers.readZonePruned(spark, out, -10.0, -1.0)
-    assert(read2 == 0 && total2 == 11,
-      s"reconciled manifest should prune fully: read=$read2 total=$total2")
-    val (all, readA, _) =
-      Writers.readZonePruned(spark, out, 0.0, 600000.0)
-    assert(readA == 11 && all.count() == orders.count())
-  }
-
-  private def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(src).iterator().asScala.foreach { p =>
-      val t = dst.resolve(src.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  private def deleteDir(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-  }
-
-  test("string zone map skips files soundly with lexicographic bounds") {
-    val d = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-zstr").toString
-    val cust = Tables.customer(spark, d)
-      .select(col("c_custkey"), col("c_name"))
-    Writers.writeWithZoneMapString(cust, out, "c_name", 10)
-    assert(spark.read.parquet(out).count() == cust.count())
-
-    // a mid-range name probe reads a strict subset, and pruned + exact
-    // residual equals the full-scan filter
-    val (cand, read, total) = Writers.readZonePrunedString(spark, out,
-      "Customer#000000020", "Customer#000000060")
-    assert(total == 10 && read > 0 && read < total, s"$read of $total")
-    val exact = cust.filter(col("c_name") >= "Customer#000000020" &&
-      col("c_name") <= "Customer#000000060")
-    val pruned = cand.filter(col("c_name") >= "Customer#000000020" &&
-      col("c_name") <= "Customer#000000060")
-    assert(pruned.count() == exact.count())
-    assert(pruned.agg(sum(col("c_custkey"))).head.getLong(0) ==
-      exact.agg(sum(col("c_custkey"))).head.getLong(0))
-
-    // below-range and above-range probes read zero files
-    val (_, r0, _) = Writers.readZonePrunedString(spark, out, "A", "B")
-    val (_, r1, _) = Writers.readZonePrunedString(spark, out, "Z", "ZZ")
-    assert(r0 == 0 && r1 == 0)
-
-    // soundness grid across boundary/interior/exhaustive ranges
-    val probes = Seq(
-      ("Customer#000000001", "Customer#000000001"),
-      ("Customer#000000001", "Customer#000000150"),
-      ("Customer#000000099", "Customer#000000101"),
-      ("Customer#00000005", "Customer#0000000700"))
-    probes.foreach { case (lo, hi) =>
-      val (c, _, _) = Writers.readZonePrunedString(spark, out, lo, hi)
-      val p = c.filter(col("c_name") >= lo && col("c_name") <= hi)
-        .agg(count(lit(1)), sum(col("c_custkey"))).head()
-      val e = cust.filter(col("c_name") >= lo && col("c_name") <= hi)
-        .agg(count(lit(1)), sum(col("c_custkey"))).head()
-      assert(p == e, s"unsound skip for [$lo, $hi]: $p != $e")
-    }
-
-    // crash window (data appended, manifest never learned of it): the
-    // orphaned rows are read unconditionally — same reconcile path as
-    // the numeric reader
-    cust.limit(17).withColumn("c_name",
-        concat(lit("Zz-"), col("c_name")))
-      .repartition(1).write.mode("append").parquet(out)
-    val (cAll, readA, totalA) =
-      Writers.readZonePrunedString(spark, out, "A", "Zzz")
-    assert(readA == 11 && totalA == 11)
-    assert(cAll.count() == cust.count() + 17)
-  }
-
-  test("zone map META crash window: stale bucket envelopes cannot skip " +
-      "manifest-listed files") {
-    val d = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-zmeta").toString
-    val orders = Tables.orders(spark, d)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-    Writers.writeWithZoneMap(
-      orders.filter(col("o_orderkey") % 5 < 3), out, "price", 8)
-
-    // park a copy of the v1 meta, run a REAL append (data + manifest +
-    // meta), then restore the v1 meta — the post-crash state of a
-    // writer killed between the `_zonemap` shard append and
-    // refreshMeta: the manifest lists the new files (so the orphan
-    // anti-join finds NOTHING), but the bucket envelopes don't cover
-    // them. Before the fix, planning from the stale envelopes silently
-    // skipped any new file in an unlisted bucket or extending a
-    // bucket's range — lost rows.
-    val metaDir = java.nio.file.Paths.get(out, "_zonemap_meta")
-    val save = Files.createTempDirectory("graft-zmeta-save")
-    copyDir(metaDir, save)
-    Writers.appendWithZoneMap(
-      orders.filter(col("o_orderkey") % 5 === 3), out, "price", 2)
-    deleteDir(metaDir)
-    copyDir(save, metaDir)
-
-    val visible = orders.filter(col("o_orderkey") % 5 <= 3)
-    val probes = Seq((100000.0, 150000.0), (0.0, 600000.0),
-      (400000.0, 600000.0), (-10.0, -1.0))
-    probes.foreach { case (lo, hi) =>
-      val (cand, _, total) = Writers.readZonePruned(spark, out, lo, hi)
-      val p = cand.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      val e = visible.filter(col("price") >= lo && col("price") <= hi)
-        .agg(count(lit(1)), sum(col("o_orderkey"))).head()
-      assert(p == e, s"stale meta lost rows for [$lo, $hi]: $p != $e")
-      assert(total == 10, s"filesTotal should count the disk: $total")
-    }
-
-    // the next append detects the stale base (meta n_files sum !=
-    // manifest rows) and REBUILDS meta from the full manifest instead
-    // of merging onto the hole — after it, two-level pruning is strict
-    // again and the incremental-merge meta equals a from-scratch rebuild
-    Writers.appendWithZoneMap(
-      orders.filter(col("o_orderkey") % 5 === 4), out, "price", 1)
-    val (_, read0, total0) = Writers.readZonePruned(spark, out, -10.0, -1.0)
-    assert(read0 == 0 && total0 == 11,
-      s"healed meta should prune fully: read=$read0 total=$total0")
-    val (allC, readA, _) = Writers.readZonePruned(spark, out, 0.0, 600000.0)
-    assert(readA == 11 && allC.count() == orders.count())
-    val rebuilt = spark.read.parquet(s"$out/_zonemap")
-      .groupBy(col("zb"))
-      .agg(min(col("z_min")).as("bz_min"), max(col("z_max")).as("bz_max"),
-        count(lit(1)).as("n_files"))
-      .orderBy(col("zb")).collect().toSeq
-    val published = spark.read.parquet(s"$out/_zonemap_meta")
-      .select(col("zb"), col("bz_min"), col("bz_max"), col("n_files"))
-      .orderBy(col("zb")).collect().toSeq
-    assert(published == rebuilt,
-      s"published meta diverges from a manifest rebuild")
-  }
-
-  test("deleteKeysZoneMappedString keeps lexicographic skipping sound " +
-      "through partial, all-touch, and takedown branches") {
-    import spark.implicits._
-    def manifestNames(t: String) = spark.read.parquet(s"$t/_zonemap")
-      .select(col("file")).collect()
-      .map(_.getString(0).split('/').last).toSet
-    def diskNames(t: String) = spark.read.parquet(t).inputFiles
-      .map(_.split('/').last).toSet
-    def metaInSync(t: String): Boolean = {
-      val metaN = spark.read.parquet(s"$t/_zonemap_meta")
-        .agg(sum(col("n_files"))).head.getLong(0)
-      metaN == spark.read.parquet(s"$t/_zonemap").count()
-    }
-    def probesSound(t: String): Unit =
-      for ((lo, hi) <- Seq(("k0000", "k0100"), ("k0250", "k0600"),
-          ("k0900", "k9999"), ("a", "zz"))) {
-        val (cand, _, _) = Writers.readZonePrunedString(spark, t, lo, hi)
-        assert(cand.filter(col("z").between(lo, hi)).count() ==
-          spark.read.parquet(t).filter(col("z").between(lo, hi)).count(),
-          s"unsound skip for [$lo,$hi]")
-      }
-    val t = Files.createTempDirectory("graft-zsdel").toString + "/t"
-    Writers.writeWithZoneMapString(
-      (0 until 1000).map(i => (i.toLong, f"k$i%04d")).toDF("id", "z"),
-      t, "z", 10)
-    // PARTIAL: a narrow id band lives in one lexicographic-range file
-    val (d1, touched1, before1) = Writers.deleteKeysZoneMappedString(
-      spark, t, "id", (100L until 120L).toDF("id"), "z")
-    assert(d1 == 20 && touched1.nonEmpty && touched1.length < before1)
-    assert(manifestNames(t) == diskNames(t))
-    assert(metaInSync(t))
-    probesSound(t)
-    assert(spark.read.parquet(t).count() == 980)
-    // ALL-TOUCH: every 10th id sprays across every file
-    val (d2, touched2, before2) = Writers.deleteKeysZoneMappedString(
-      spark, t, "id", (0L until 1000L by 10).toDF("id"), "z")
-    assert(touched2.length == before2 && d2 == 98)
-    assert(manifestNames(t) == diskNames(t))
-    assert(metaInSync(t))
-    probesSound(t)
-    // TAKEDOWN: everything goes; table reads empty, readers degrade
-    // soundly, and an append revives with a fresh prefix grid
-    val rest = spark.read.parquet(t).select(col("id")).as[Long].collect()
-    val (d3, _, _) = Writers.deleteKeysZoneMappedString(
-      spark, t, "id", rest.toIndexedSeq.toDF("id"), "z")
-    assert(d3 == 882 && spark.read.parquet(t).count() == 0)
-    val (c0, _, _) = Writers.readZonePrunedString(spark, t, "a", "zz")
-    assert(c0.count() == 0)
-    Writers.appendWithZoneMapString(
-      (2000 until 2100).map(i => (i.toLong, f"k$i%04d")).toDF("id", "z"),
-      t, "z", 2)
-    assert(spark.read.parquet(t).count() == 100)
-    val (c1, r1, _) = Writers.readZonePrunedString(spark, t,
-      "k2000", "k2049")
-    assert(r1 > 0 && c1.filter(col("z").between("k2000", "k2049"))
-      .count() == 50)
-    val (_, r2, _) = Writers.readZonePrunedString(spark, t, "k0", "k1999")
-    assert(r2 == 0, "revived grid should prune the dead range fully")
-  }
-
-  test("deleteKeysZoneMapped2 keeps 2-D skipping sound through the " +
-      "COW delete and a later append") {
-    import spark.implicits._
-    val inf = Double.MaxValue
-    def metaInSync(t: String): Boolean = {
-      val metaN = spark.read.parquet(s"$t/_zonemap_meta")
-        .agg(sum(col("n_files"))).head.getLong(0)
-      metaN == spark.read.parquet(s"$t/_zonemap").count()
-    }
-    def probesSound(t: String): Unit =
-      for ((l1, h1, l2, h2) <- Seq(
-          (10.0, 30.0, -inf, inf), (-inf, inf, 500.0, 800.0),
-          (0.0, 100.0, 0.0, 3000.0), (90.0, 95.0, 2700.0, 2850.0))) {
-        val (cand, _, _) =
-          Writers.readZonePruned2(spark, t, l1, h1, l2, h2)
-        val p = cand.filter(col("x").between(l1, h1) &&
-          col("y").between(l2, h2)).count()
-        val e = spark.read.parquet(t).filter(col("x").between(l1, h1) &&
-          col("y").between(l2, h2)).count()
-        assert(p == e, s"unsound 2-D skip for [$l1,$h1]x[$l2,$h2]")
-      }
-    // 2-D grid: x in [0,100), y = 30x-ish so both dims have real spread
-    val t = Files.createTempDirectory("graft-z2del").toString + "/t"
-    val rows = (0 until 2000).map { i =>
-      (i.toLong, (i % 100).toDouble, ((i * 37) % 3000).toDouble)
-    }.toDF("id", "x", "y")
-    Writers.writeZOrderedWithZoneMap(rows, t, "x", "y", 16)
-    val (d1, touched1, before1) = Writers.deleteKeysZoneMapped2(
-      spark, t, "id", (0L until 2000L by 7).toDF("id"), "x", "y")
-    assert(d1 == 286 && touched1.nonEmpty)
-    assert(metaInSync(t))
-    probesSound(t)
-    assert(spark.read.parquet(t).count() == 1714)
-    // both-column pruning still bites after the delete
-    val (_, rX, totX) = Writers.readZonePruned2(spark, t,
-      10.0, 20.0, -inf, inf)
-    val (_, rY, _) = Writers.readZonePruned2(spark, t,
-      -inf, inf, 100.0, 400.0)
-    assert(rX > 0 && rX < totX, s"x-probe read $rX of $totX")
-    assert(rY > 0 && rY < totX, s"y-probe read $rY of $totX")
-    // an appended batch is adopted incrementally and stays prunable
-    val more = (5000 until 5200).map { i =>
-      (i.toLong, 200.0 + (i % 10), 5000.0 + (i % 50))
-    }.toDF("id", "x", "y")
-    Writers.writeZOrdered(more, s"$t/._stage_tmp", "x", "y", 2)
-    spark.read.parquet(s"$t/._stage_tmp").write.mode("append").parquet(t)
-    Writers.refreshZoneMap2(spark, t, "x", "y")
-    assert(metaInSync(t))
-    probesSound(t)
-    val (c2, r2, _) = Writers.readZonePruned2(spark, t,
-      200.0, 300.0, -inf, inf)
-    assert(r2 >= 1 && c2.count() == 200)
-  }
-
-  test("zoneMapIngestCommitString and zoneMapIngestCommit2 commit " +
-      "exactly once and keep pruning strict") {
-    import spark.implicits._
-    // STRING table: two batches + a replay + an empty batch
-    val ts = Files.createTempDirectory("graft-zmis").toString + "/t"
-    val b0 = (0 until 500).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
-    val b1 = (500 until 800).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
-    assert(Writers.zoneMapIngestCommitString(b0, ts, "z", 4, 0L))
-    assert(Writers.zoneMapIngestCommitString(b1, ts, "z", 4, 1L))
-    assert(!Writers.zoneMapIngestCommitString(b1, ts, "z", 4, 1L))
-    assert(Writers.zoneMapIngestCommitString(
-      b0.filter(col("id") < 0), ts, "z", 4, 2L))
-    assert(spark.read.parquet(ts).count() == 800)
-    val (cs, rs, tots) = Writers.readZonePrunedString(spark, ts,
-      "n0100", "n0199")
-    assert(rs > 0 && rs < tots)
-    assert(cs.filter(col("z").between("n0100", "n0199")).count() == 100)
-    // MORTON table: two batches + a replay; both dims prune after
-    val t2 = Files.createTempDirectory("graft-zmi2").toString + "/t"
-    val m0 = (0 until 1000).map(i =>
-      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
-      .toDF("id", "x", "y")
-    val m1 = (1000 until 1600).map(i =>
-      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
-      .toDF("id", "x", "y")
-    assert(Writers.zoneMapIngestCommit2(m0, t2, "x", "y", 8, 0L))
-    assert(Writers.zoneMapIngestCommit2(m1, t2, "x", "y", 8, 1L))
-    assert(!Writers.zoneMapIngestCommit2(m1, t2, "x", "y", 8, 1L))
-    assert(spark.read.parquet(t2).count() == 1600)
-    val inf = Double.MaxValue
-    val (cx, rx, totx) = Writers.readZonePruned2(spark, t2,
-      5.0, 10.0, -inf, inf)
-    assert(rx > 0 && rx < totx, s"x-probe read $rx of $totx")
-    assert(cx.filter(col("x").between(5.0, 10.0)).count() ==
-      spark.read.parquet(t2).filter(col("x").between(5.0, 10.0)).count())
-    val (cy, ry, _) = Writers.readZonePruned2(spark, t2,
-      -inf, inf, 100.0, 300.0)
-    assert(ry > 0 && ry < totx, s"y-probe read $ry of $totx")
-    assert(cy.filter(col("y").between(100.0, 300.0)).count() ==
-      spark.read.parquet(t2).filter(col("y").between(100.0, 300.0))
-        .count())
-  }
-
-  test("full-table takedown leaves an empty, readable, zone-mapped " +
-      "table that a later append revives") {
-    import spark.implicits._
-    val t = Files.createTempDirectory("graft-zm-takedown").toString + "/t"
-    Writers.writeWithZoneMap(
-      (0 until 200).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
-      t, "z", 4)
-    // every key tombstoned: all files touched, zero survivors
-    val (deleted, touched, before) = Writers.deleteKeysZoneMapped(
-      spark, t, "id", (0L until 200L).toDF("id"), "z")
-    assert(deleted == 200 && touched.length == before)
-    // the table reads as EMPTY, not as a schema-inference crash
-    val empty = spark.read.parquet(t)
-    assert(empty.count() == 0)
-    assert(empty.columns.toSeq == Seq("id", "z"))
-    // zone-mapped readers degrade to a sound empty plan
-    val (cand, _, _) = Writers.readZonePruned(spark, t, 0.0, 1000.0)
-    assert(cand.count() == 0)
-    // and the table comes back to life: the next append rebuilds the
-    // zone map from scratch (no stale grid to bucket against)
-    Writers.appendWithZoneMap(
-      (500 until 600).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
-      t, "z", 2)
-    assert(spark.read.parquet(t).count() == 100)
-    val (c2, r2, _) = Writers.readZonePruned(spark, t, 500.0, 540.0)
-    assert(r2 > 0)
-    assert(c2.filter(col("z").between(500.0, 540.0)).count() == 41)
-    val (_, r3, _) = Writers.readZonePruned(spark, t, 0.0, 100.0)
-    assert(r3 == 0, "rebuilt map should prune a now-empty range fully")
-  }
-
   test("deleteKeys stages metadata before the swap and rescues " +
       "metadata stranded in a crashed old layout") {
     import spark.implicits._
@@ -645,103 +187,79 @@ class WritersSpec extends SparkSpec {
     assert(spark.read.parquet(t).count() == 98)
   }
 
-  test("zone map meta swap window: reader falls back to the parked ._old") {
-    val d = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-zold").toString
-    val orders = Tables.orders(spark, d)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-    Writers.writeWithZoneMap(orders, out, "price", 16)
-
-    // simulate a crash inside publishSwapped AFTER parking the old meta
-    // and BEFORE publishing the replacement: only `._old` exists
-    val metaDir = java.nio.file.Paths.get(out, "_zonemap_meta")
-    Files.move(metaDir,
-      java.nio.file.Paths.get(out, "_zonemap_meta._old"))
-
-    // the reader must degrade to the parked copy, not fail — and since
-    // that copy is in sync here, pruning stays strict and sound
-    val (cand, read, total) =
-      Writers.readZonePruned(spark, out, 100000.0, 150000.0)
-    assert(read > 0 && read < total && total == 16)
-    val exact = orders.filter(col("price").between(lit(100000), lit(150000)))
-    assert(cand.filter(col("price").between(lit(100000), lit(150000)))
-      .count() == exact.count())
-
-    // an append through the fallback heals: it reads (z_lo, z_w) from
-    // the parked copy and publishes a fresh current meta
-    Writers.appendWithZoneMap(
-      orders.limit(50).withColumn("price", col("price") + 1000000),
-      out, "price", 1)
-    assert(Files.exists(metaDir), "append should republish a current meta")
-    val (_, readH, totalH) = Writers.readZonePruned(spark, out, -10.0, -1.0)
-    assert(readH == 0 && totalH == 17)
+  test("zoneMapIngestCommitString and zoneMapIngestCommit2 commit " +
+      "exactly once and keep pruning strict") {
+    import spark.implicits._
+    // STRING table: two batches + a replay + an empty batch
+    val ts = Files.createTempDirectory("graft-zmis").toString + "/t"
+    val b0 = (0 until 500).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
+    val b1 = (500 until 800).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
+    assert(SnapshotTable.commitAppendOnce(b0, ts, "z", 4, 0L, writerId = "w"))
+    assert(SnapshotTable.commitAppendOnce(b1, ts, "z", 4, 1L, writerId = "w"))
+    assert(!SnapshotTable.commitAppendOnce(b1, ts, "z", 4, 1L,
+      writerId = "w"), "a replayed batch must short-circuit")
+    assert(SnapshotTable.commitAppendOnce(b0.filter(col("id") < 0), ts,
+      "z", 4, 2L, writerId = "w"))
+    assert(SnapshotTable.read(spark, ts).count() == 800)
+    val (cs, rs, tots) =
+      SnapshotTable.readPrunedCol(spark, ts, "z", "n0100", "n0199")
+    assert(rs > 0 && rs < tots, s"string probe read $rs of $tots")
+    assert(cs.filter(col("z").between("n0100", "n0199")).count() == 100)
+    // MORTON table: two batches + a replay; both dims prune after
+    val t2 = Files.createTempDirectory("graft-zmi2").toString + "/t"
+    val m0 = (0 until 1000).map(i =>
+      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
+      .toDF("id", "x", "y")
+    val m1 = (1000 until 1600).map(i =>
+      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
+      .toDF("id", "x", "y")
+    assert(SnapshotTable.commitAppendOnceZOrdered(m0, t2, "x", "y", 8, 0L,
+      "w"))
+    assert(SnapshotTable.commitAppendOnceZOrdered(m1, t2, "x", "y", 8, 1L,
+      "w"))
+    assert(!SnapshotTable.commitAppendOnceZOrdered(m1, t2, "x", "y", 8, 1L,
+      "w"), "a replayed batch must short-circuit")
+    val all = SnapshotTable.read(spark, t2)
+    assert(all.count() == 1600)
+    for ((c, lo, hi) <- Seq(("x", 5.0, 10.0), ("y", 100.0, 300.0))) {
+      val (cand, read, total) =
+        SnapshotTable.readPrunedCol(spark, t2, c, lo, hi)
+      assert(read > 0 && read < total, s"$c-probe read $read of $total")
+      assert(cand.filter(col(c).between(lo, hi)).count() ==
+        all.filter(col(c).between(lo, hi)).count())
+    }
   }
 
-  test("footer-decoded zone-map stats are value-identical to the scan " +
-      "path: numeric (long/decimal), two-column, and string bounds") {
-    val dir = Files.createTempDirectory("graft-wfs").toString
-    val df = spark.range(0, 500).toDF("k")
-      .select(col("k"),
-        ((col("k") - 250) / 10.0).cast("decimal(18,3)").as("price"),
-        concat(lit("grp-"), (col("k") % 37)).as("tag"),
-        when(col("k") % 5 === 0, concat(lit("u"), col("k")))
-          .otherwise(lit(null)).cast("string").as("maybe"))
-    df.repartition(6).write.mode("overwrite").parquet(dir)
-    def sortRows(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy(col("file")).collect().toSeq
-    // numeric, decimal zcol
-    assert(sortRows(Writers.fileStats(spark, dir, Nil, "price")) ==
-      sortRows(Writers.scanFileStats(spark, dir, Nil, "price")))
-    // numeric, long zcol
-    assert(sortRows(Writers.fileStats(spark, dir, Nil, "k")) ==
-      sortRows(Writers.scanFileStats(spark, dir, Nil, "k")))
-    // two-column bounds
-    assert(sortRows(Writers.fileStats2(spark, dir, Nil, "k", "price")) ==
-      sortRows(Writers.scanFileStats2(spark, dir, Nil, "k", "price")))
-    // string bounds, incl. a nulls-carrying column
-    assert(sortRows(Writers.fileStatsString(spark, dir, Nil, "tag")) ==
-      sortRows(Writers.scanFileStatsString(spark, dir, Nil, "tag")))
-    assert(sortRows(Writers.fileStatsString(spark, dir, Nil, "maybe")) ==
-      sortRows(Writers.scanFileStatsString(spark, dir, Nil, "maybe")))
-    // a DOUBLE zcol must decline the fast path yet return scan-exact
-    // values (parquet widens ±0.0 double bounds — exactness first)
-    val ddir = Files.createTempDirectory("graft-wfsd").toString
-    df.withColumn("x", col("k").cast("double") - 250.0)
-      .repartition(3).write.mode("overwrite").parquet(ddir)
-    assert(sortRows(Writers.fileStats(spark, ddir, Nil, "x")) ==
-      sortRows(Writers.scanFileStats(spark, ddir, Nil, "x")))
-    // a TIMESTAMP zcol rides the footer path under the INT64
-    // TIMESTAMP_MICROS writer encoding (the Graft.configure default):
-    // footer micros / 10^6 must equal the scan's CAST(ts AS DOUBLE)
-    // bit for bit, odd micro remainders included — and the fast path
-    // must actually ENGAGE, not silently fall back
-    val tdir = Files.createTempDirectory("graft-wfst").toString
-    val k = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.get(k)
-    spark.conf.set(k, "TIMESTAMP_MICROS")
-    try df.withColumn("ts",
-        timestamp_micros(lit(1577836800000000L) + col("k") * 86400000001L))
-      .repartition(4).write.mode("overwrite").parquet(tdir)
-    finally spark.conf.set(k, prevTs)
-    val tFiles = spark.read.parquet(tdir).inputFiles.toIndexedSeq
-    assert(Writers.footerBoundsForTest(tFiles, Seq("ts"),
-      numeric = true).isDefined,
-      "footer fast path must engage for TIMESTAMP_MICROS columns")
-    assert(sortRows(Writers.fileStats(spark, tdir, Nil, "ts")) ==
-      sortRows(Writers.scanFileStats(spark, tdir, Nil, "ts")))
-    // the legacy INT96 encoding must DECLINE (no usable stats)
-    val t96 = Files.createTempDirectory("graft-wfs96").toString
-    spark.conf.set(k, "INT96")
-    try df.withColumn("ts",
-        timestamp_micros(lit(1577836800000000L) + col("k") * 86400000001L))
-      .repartition(2).write.mode("overwrite").parquet(t96)
-    finally spark.conf.set(k, prevTs)
-    val files96 = spark.read.parquet(t96).inputFiles.toIndexedSeq
-    assert(Writers.footerBoundsForTest(files96, Seq("ts"),
-      numeric = true).isEmpty,
-      "INT96 timestamps must fall back to the scan")
-    assert(sortRows(Writers.fileStats(spark, t96, Nil, "ts")) ==
-      sortRows(Writers.scanFileStats(spark, t96, Nil, "ts")))
+  test("full-table takedown leaves an empty, readable, zone-mapped " +
+      "table that a later append revives") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft-zm-takedown").toString + "/t"
+    SnapshotTable.commitAppend(
+      (0 until 200).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
+      t, "z", 4)
+    // every key deleted: zero survivors
+    val (deleted, _) = SnapshotTable.commitDelete(spark, t, "id",
+      (0L until 200L).toDF("id"), "z")
+    assert(deleted == 200)
+    // the table reads as EMPTY, not as a schema-inference crash
+    val empty = SnapshotTable.read(spark, t)
+    assert(empty.count() == 0)
+    assert(empty.columns.toSeq == Seq("id", "z"))
+    // pruned readers degrade to a sound empty plan
+    val (cand, read, _) = SnapshotTable.readPrunedCol(spark, t, "z",
+      0.0, 1000.0)
+    assert(read == 0 && cand.count() == 0)
+    // and the table comes back to life: the next append's manifest
+    // prunes strictly (no stale envelope to select against)
+    SnapshotTable.commitAppend(
+      (500 until 600).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
+      t, "z", 2)
+    assert(SnapshotTable.read(spark, t).count() == 100)
+    val (c2, r2, tot2) = SnapshotTable.readPrunedCol(spark, t, "z",
+      500.0, 540.0)
+    assert(r2 > 0 && r2 < tot2, s"revived probe read $r2 of $tot2")
+    assert(c2.filter(col("z").between(500.0, 540.0)).count() == 41)
+    val (_, r3, _) = SnapshotTable.readPrunedCol(spark, t, "z", 0.0, 100.0)
+    assert(r3 == 0, "the revived table should prune a now-empty range fully")
   }
 }

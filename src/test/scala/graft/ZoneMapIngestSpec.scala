@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.Writers
+import graft.sources.SnapshotTable
 
-/** Crash-window replays for the exactly-once zone-map ingest commit
-  * (Writers.zoneMapIngestCommit): foreachBatch is at-least-once, so the
-  * commit must converge to ONE copy of the batch from every interrupt
-  * point — before the movelist (restage), after a partial move
-  * (resume), and after the ledger (no-op).
+/** Edge batches for the exactly-once zone-mapped ingest commit that the
+  * `q_stream_zonemap_ingest*` gates run ([[SnapshotTable.commitAppendOnce]]
+  * with the checkpoint path as `writerId`): foreachBatch may deliver an
+  * empty micro-batch, and the commit must take it without a crash, a
+  * replay must short-circuit, and the table's rows, files and pruning
+  * must come through untouched. Its crash-window replays are in
+  * SnapshotTableSpec ("commitAppendOnce is exactly-once across both
+  * replay windows").
   */
 class ZoneMapIngestSpec extends SparkSpec {
 
@@ -18,98 +21,42 @@ class ZoneMapIngestSpec extends SparkSpec {
       .toDF("id", "tag", "price")
   }
 
-  test("ingest commit converges to one copy from every crash window") {
-    val t = Files.createTempDirectory("graft-zmi").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def tableCount = spark.read.parquet(t).count()
-
-    // batch 0 commits clean and creates the table + zone map
-    assert(Writers.zoneMapIngestCommit(rows(0 until 100, "b0"), t,
-      "price", 4, 0L))
-    assert(tableCount == 100)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$t/_zonemap_meta")))
-
-    // ledger short-circuit: a replay of a committed batch is a no-op
-    assert(!Writers.zoneMapIngestCommit(rows(0 until 100, "b0"), t,
-      "price", 4, 0L))
-    assert(tableCount == 100)
-
-    // CRASH WINDOW A — before the movelist: a dead attempt left a
-    // half-staged (here: wrong) stage dir; the retry must restage the
-    // real batch and commit exactly its rows
-    rows(900 until 950, "garbage").write.mode("overwrite")
-      .parquet(s"$t/_staging_b1")
-    assert(Writers.zoneMapIngestCommit(rows(100 until 180, "b1"), t,
-      "price", 4, 1L))
-    assert(tableCount == 180)
-    assert(spark.read.parquet(t).filter(col("tag") === "garbage")
-      .count() == 0)
-
-    // CRASH WINDOW B — after the movelist, after a PARTIAL move: build
-    // the interrupted state by hand (stage written, movelist published,
-    // first file already moved), then retry must resume the remaining
-    // moves without re-staging
-    val b2 = rows(180 until 260, "b2")
-    b2.repartitionByRange(4, col("price"))
-      .sortWithinPartitions(col("price"))
-      .write.mode("overwrite").parquet(s"$t/_staging_b2")
-    val stage = new org.apache.hadoop.fs.Path(s"$t/_staging_b2")
-    val parts = fs.listStatus(stage).map(_.getPath.getName)
-      .filter(_.startsWith("part-")).sorted
-    assert(parts.length >= 2, "need multiple part files for the replay")
-    val ml = new org.apache.hadoop.fs.Path(s"$t/_commits/b2.files")
-    val out = fs.create(ml, true)
-    out.write(parts.mkString("\n").getBytes("UTF-8")); out.close()
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(stage, parts.head),
-      new org.apache.hadoop.fs.Path(t, "b2-p00000.parquet")))
-    // pass a DIFFERENT df: with the movelist published, the retry must
-    // replay the staged files, never restage from its input
-    assert(Writers.zoneMapIngestCommit(rows(0 until 3, "decoy"), t,
-      "price", 4, 2L))
-    assert(tableCount == 260, s"partial-move resume lost rows")
-    assert(spark.read.parquet(t).filter(col("tag") === "decoy")
-      .count() == 0)
-    assert(spark.read.parquet(t).filter(col("tag") === "b2")
-      .count() == 80)
-
-    // the zone map stayed sound through all of it: pruned read equals
-    // the whole-table filter
-    val (cand, read, total) = Writers.readZonePruned(spark, t, 100, 300)
-    assert(read > 0 && read < total, s"read $read of $total")
-    val pruned = cand.filter(col("price").between(100, 300)).count()
-    val full = spark.read.parquet(t)
-      .filter(col("price").between(100, 300)).count()
-    assert(pruned == full && full > 0)
-  }
-
   test("an empty micro-batch commits as a no-op ledger entry — " +
       "first-ever batch and mid-stream, no crash, no table churn") {
     val t = Files.createTempDirectory("graft-zmi-empty").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ckpt = s"$t-checkpoint"
     val none = rows(0 until 1, "x").filter(col("id") < 0)
 
-    // FIRST-EVER batch empty: commits (ledger written), no data files,
-    // no zone map to trip over
-    assert(Writers.zoneMapIngestCommit(none, t, "price", 4, 0L))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$t/_commits/b0")))
-    assert(!Writers.zoneMapIngestCommit(none, t, "price", 4, 0L),
-      "replay of a committed empty batch must short-circuit")
+    // FIRST-EVER batch empty: commits, the table reads empty, a probe
+    // plans zero files
+    assert(SnapshotTable.commitAppendOnce(none, t, "price", 4, 0L,
+      writerId = ckpt))
+    assert(!SnapshotTable.commitAppendOnce(none, t, "price", 4, 0L,
+      writerId = ckpt), "replay of a committed empty batch must short-circuit")
+    assert(SnapshotTable.read(spark, t).count() == 0)
+    val (eCand, eRead, _) =
+      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 1000L)
+    assert(eRead == 0 && eCand.count() == 0)
 
-    // a real batch lands next and builds the table + zone map
-    assert(Writers.zoneMapIngestCommit(rows(0 until 60, "b1"), t,
-      "price", 4, 1L))
-    assert(spark.read.parquet(t).count() == 60)
+    // a real batch lands next
+    assert(SnapshotTable.commitAppendOnce(rows(0 until 60, "b1"), t,
+      "price", 4, 1L, writerId = ckpt))
+    assert(SnapshotTable.read(spark, t).count() == 60)
 
-    // MID-STREAM empty batch: no-op entry, table and manifest untouched
-    val manifestBefore = spark.read.parquet(s"$t/_zonemap").count()
-    assert(Writers.zoneMapIngestCommit(none, t, "price", 4, 2L))
-    assert(spark.read.parquet(t).count() == 60)
-    assert(spark.read.parquet(s"$t/_zonemap").count() == manifestBefore)
-    val (cand, _, _) = Writers.readZonePruned(spark, t, 0, 500)
+    // MID-STREAM empty batch: rows and data files untouched, its replay
+    // short-circuits, pruning stays strict and sound
+    val filesBefore = SnapshotTable.read(spark, t).inputFiles.toSet
+    assert(SnapshotTable.commitAppendOnce(none, t, "price", 4, 2L,
+      writerId = ckpt))
+    assert(!SnapshotTable.commitAppendOnce(none, t, "price", 4, 2L,
+      writerId = ckpt))
+    val after = SnapshotTable.read(spark, t)
+    assert(after.count() == 60)
+    assert(after.inputFiles.toSet == filesBefore)
+    val (cand, read, total) =
+      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 500L)
+    assert(read > 0 && read < total, s"read $read of $total")
     assert(cand.filter(col("price").between(0, 500)).count() ==
-      spark.read.parquet(t).filter(col("price").between(0, 500)).count())
+      after.filter(col("price").between(0, 500)).count())
   }
 }
