@@ -266,8 +266,13 @@ object GmailPipeline {
     // Stage-1 CSV (S7): header + quote-all approximates pandas
     // QUOTE_NONNUMERIC (documented divergence: Spark quotes everything,
     // pandas leaves numerics bare; no numeric columns exist here anyway).
+    // Spark's CSV WRITER trims each value's outer whitespace by default
+    // (its reader does not): both ignore*WhiteSpace options are off so
+    // a value lands byte-identical.
     formatted.write.mode(SaveMode.Overwrite)
       .option("header", true).option("quoteAll", true)
+      .option("ignoreLeadingWhiteSpace", false)
+      .option("ignoreTrailingWhiteSpace", false)
       .csv(s"${cfg.stage1Dir}/$outName")
 
     // Archive only after a successful stage-1 write (S8; reference

@@ -390,19 +390,6 @@ object Relational {
     orders(s, d).select(col("o_orderkey"), col("o_orderpriority"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
 
-  /** The two status-clustered TxJsonSink commits q_tx_merge and
-    * q_tx_merge_delete both open on — one cached build serves both.
-    */
-  private def txMergeFixture(s: SparkSession, d: String, base: DataFrame,
-      t: String): Unit =
-    cachedPrologue("txbase", d, t) { b =>
-      Seq(0, 1).foreach(par =>
-        base.filter(col("k").cast("long") % 2 === par)
-          .repartition(6, col("status"))
-          .write.format("graft.sources.TxJsonSink").option("path", b)
-          .mode("append").save())
-    }
-
   /** A fresh mutable copy of the snapshot base (v1 = even keys, v2 =
     * odd keys, price-clustered at 8 files) at `dir`.
     */
@@ -4249,40 +4236,38 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // VACUUM under the gate: version 1 holds one subset of orders,
-    // version 2 OVERWRITES it with the complement (truncate commit —
-    // v2's manifest references none of v1's files), then retention
-    // keepLast=1 drops v1's manifest AND physically deletes its
-    // now-unreferenced data files. The gated aggregate proves the
-    // retained snapshot still reads exactly its committed data (vacuum
-    // may only delete what no retained manifest lists), and the boolean
-    // pins that v1 really became untravelable, its manifest was
-    // dropped, and data files were actually reclaimed — the retention
-    // trade every lakehouse table format documents.
+    // VACUUM under the gate: version 1 appends every order, version 2
+    // is a copy-on-write DELETE of the o_orderkey % 3 = 0 keys — every
+    // range file holds such a key, so every v1 file is rewritten and
+    // v2's snapshot lists none of them — then retention keepLast=1
+    // drops v1's snapshot AND physically deletes its now-unreferenced
+    // data files. The gated aggregate proves the retained snapshot
+    // still reads exactly the complement (vacuum may only delete what
+    // no retained snapshot lists), and the boolean pins that v2 is now
+    // the oldest travelable version, a snapshot was dropped, and data
+    // files were actually reclaimed — the retention trade every
+    // lakehouse table format documents.
     "q_vacuum" -> ((s, d) => {
       val dir = rtDir("vac", d)
       deleteRecursive(java.nio.file.Paths.get(dir))
       val t = s"$dir/t"
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
-      base.filter(col("o_orderkey") % 3 === 0)
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("append").save()
-      base.filter(col("o_orderkey") % 3 =!= 0)
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("overwrite").save()
-      val (droppedManifests, reclaimedFiles) =
-        graft.sources.TxJsonSink.vacuum(t, keepLast = 1)
-      val v1Gone =
-        graft.sources.TxJsonSink.manifest(t, Some(1)).isEmpty
-      graft.sources.TxJsonSink.read(s, t)
+      graft.sources.SnapshotTable.commitAppend(base, t, "o_orderkey", 4)
+      graft.sources.SnapshotTable.commitDelete(s, t, "o_orderkey",
+        base.filter(col("o_orderkey") % 3 === 0), "o_orderkey")
+      val (droppedSnapshots, reclaimedFiles) =
+        graft.sources.SnapshotTable.vacuum(t, keepLast = 1)
+      val held =
+        graft.sources.SnapshotTable.oldestRetainedVersion(t).contains(2) &&
+          droppedSnapshots > 0 && reclaimedFiles > 0
+      graft.sources.SnapshotTable.read(s, t)
         .select(col("o_orderkey").cast("long").as("k"),
           col("o_orderpriority").as("p"))
         .groupBy(col("p")).agg(count(lit(1)).as("n"),
           sum(col("k")).as("keysum"))
         .select(col("p").as("o_orderpriority"), col("n"), col("keysum"),
-          lit(v1Gone && droppedManifests > 0 && reclaimedFiles > 0)
-            .as("retention_held"))
+          lit(held).as("retention_held"))
         .orderBy(col("o_orderpriority"))
     }),
 
@@ -4362,32 +4347,30 @@ object Relational {
         .toDF("n_all", "n_f", "min_key", "max_key", "n_f_rows")
     }),
 
-    // TIME TRAVEL through the transactional sink's versioned manifests:
+    // TIME TRAVEL through the snapshot table's versioned snapshots:
     // two committed appends split orders on o_orderkey % 3, then BOTH
     // snapshots are read back — version 1 must see exactly the first
-    // batch forever (its manifest is immutable; later commits only add
-    // manifests), latest must see the union. The oracle recomputes both
+    // batch forever (its snapshot is immutable; later commits only add
+    // snapshots), latest must see the union. The oracle recomputes both
     // per-priority aggregates from the raw table with the same split
     // predicate, so a versioned read that leaks a later file, drops a
     // committed one, or mangles a value fails the hash. This is the
     // query-level gate over the snapshot-isolation protocol
-    // TxJsonSinkSpec/EndToEndPipelineSpec prove at the file level.
+    // SnapshotTableSpec/EndToEndPipelineSpec prove at the file level.
     "q_time_travel" -> ((s, d) => {
       val dir = rtDir("ttr", d)
-      // the sink is append-only by design: a re-run in this process
-      // must start from a fresh table, not stack a third version
+      // every commit adds a version: a re-run in this process must
+      // start from a fresh table, not stack a third version
       deleteRecursive(java.nio.file.Paths.get(dir))
       val t = s"$dir/t"
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
-      base.filter(col("o_orderkey") % 3 === 0)
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("append").save()
-      base.filter(col("o_orderkey") % 3 =!= 0)
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("append").save()
+      graft.sources.SnapshotTable.commitAppend(
+        base.filter(col("o_orderkey") % 3 === 0), t, "o_orderkey", 4)
+      graft.sources.SnapshotTable.commitAppend(
+        base.filter(col("o_orderkey") % 3 =!= 0), t, "o_orderkey", 4)
       def snap(version: Option[Int]) =
-        graft.sources.TxJsonSink.read(s, t, version)
+        graft.sources.SnapshotTable.read(s, t, version)
           .select(col("o_orderkey").cast("long").as("k"),
             col("o_orderpriority").as("p"))
       val v1 = snap(Some(1)).groupBy(col("p"))
@@ -4401,14 +4384,14 @@ object Relational {
         .orderBy(col("o_orderpriority"))
     }),
 
-    // ADDITIVE SCHEMA EVOLUTION on the transactional sink: v1 commits
-    // two columns, v2 appends rows carrying a THIRD — the manifest
-    // records each snapshot's column list, so the latest read returns
-    // three columns with NULL day for the v1 files (unionByName-
-    // allowMissingColumns semantics) and a v1 time-travel read still
-    // returns exactly two. Without an evolvable schema a lakehouse
-    // table can only add columns by rewriting history — the one
-    // migration a 100 TB table cannot afford. The oracle recomputes
+    // ADDITIVE SCHEMA EVOLUTION on the snapshot table: v1 commits two
+    // columns, v2 appends rows carrying a THIRD — the commit log
+    // records each version's merged schema (earlier columns first), so
+    // the latest read returns three columns with NULL day for the v1
+    // files and a v1 time-travel read still returns exactly two.
+    // Without an evolvable schema a lakehouse table can only add
+    // columns by rewriting history — the one migration a 100 TB table
+    // cannot afford. The oracle recomputes
     // the merged aggregate from the raw table (CASE arithmetic for
     // which half carries day) and pins the old-reader boolean.
     "q_schema_evolve" -> ((s, d) => {
@@ -4418,15 +4401,14 @@ object Relational {
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-      base.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("append").save()
-      base.filter(col("o_orderkey") % 2 === 1)
-        .write.format("graft.sources.TxJsonSink")
-        .option("path", t).mode("append").save()
-      val v1Cols = graft.sources.TxJsonSink.read(s, t, Some(1)).columns
-      val latest = graft.sources.TxJsonSink.read(s, t)
+      graft.sources.SnapshotTable.commitAppend(
+        base.filter(col("o_orderkey") % 2 === 0)
+          .select(col("o_orderkey"), col("o_orderstatus")),
+        t, "o_orderkey", 4)
+      graft.sources.SnapshotTable.commitAppend(
+        base.filter(col("o_orderkey") % 2 === 1), t, "o_orderkey", 4)
+      val v1Cols = graft.sources.SnapshotTable.read(s, t, Some(1)).columns
+      val latest = graft.sources.SnapshotTable.read(s, t)
       val unevolved = v1Cols.toSeq == Seq("o_orderkey", "o_orderstatus") &&
         latest.columns.toSeq == Seq("o_orderkey", "o_orderstatus", "day")
       latest.groupBy(col("o_orderstatus"))
@@ -4436,16 +4418,18 @@ object Relational {
         .orderBy(col("o_orderstatus"))
     }),
 
-    // COPY-ON-WRITE MERGE on the transactional sink — the upsert commit
-    // (TxJsonSink.merge): rows of a change batch replace same-key rows
-    // and new keys insert, by rewriting ONLY the files that contain a
-    // matched key; every untouched file is carried into the new manifest
-    // by reference. Two status-clustered commits concentrate the
-    // matched keys ('F' rows) in a file subset, so the gated cow_subset
-    // boolean pins that the merge both carried files AND replaced files
-    // — whole-table rewrite or no-op would fail it — and old_intact pins
-    // that the pre-merge snapshot still reads bit-identically (replaced
-    // files stay on disk for time travel until vacuum). The oracle
+    // COPY-ON-WRITE MERGE on the snapshot table — the upsert commit
+    // (SnapshotTable.commitMerge): rows of a change batch replace
+    // same-key rows and new keys insert, by rewriting ONLY the files
+    // that contain a matched key; every untouched file is carried into
+    // the new snapshot by reference. Two commits range-clustered on
+    // status concentrate the matched keys ('F' rows) in a file subset
+    // (one cached build serves this gate and q_tx_merge_delete), so
+    // the gated cow_subset boolean pins that the merge both carried
+    // files AND replaced files — whole-table rewrite or no-op would
+    // fail it — and old_intact pins that the pre-merge snapshot still
+    // reads bit-identically (replaced files stay on disk for time
+    // travel until vacuum). The oracle
     // recomputes the merged table from raw orders (updates as CASE
     // arithmetic, inserts as a mirrored union).
     "q_tx_merge" -> ((s, d) => {
@@ -4457,16 +4441,20 @@ object Relational {
         col("o_orderstatus").as("status"),
         (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
           .cast("string").as("cents"))
-      txMergeFixture(s, d, base, t)
-      val preVersion = graft.sources.TxJsonSink.manifest(t).get.version
+      cachedPrologue("txbase", d, t) { b =>
+        Seq(0, 1).foreach(par => graft.sources.SnapshotTable.commitAppend(
+          base.filter(col("k").cast("long") % 2 === par), b, "status", 6))
+      }
+      val preVersion = graft.sources.SnapshotTable.latestVersion(t).get
       val fRows = base.filter(col("status") === "F")
       val changes = fRows.select(col("k"), col("status"),
           (col("cents").cast("long") + 100000).cast("string").as("cents"))
         .unionByName(fRows.select(
           (col("k").cast("long") + 10000000).cast("string").as("k"),
           lit("N").as("status"), col("cents")))
-      val mr = graft.sources.TxJsonSink.merge(s, t, changes, "k")
-      val cow = mr.filesReplaced > 0 && mr.filesCarried > 0
+      val (replaced, carried, _) = graft.sources.SnapshotTable
+        .commitMerge(s, t, changes, "k", "status")
+      val cow = replaced > 0 && carried > 0
       // the pre-merge snapshot must still read exactly as committed
       def sig(df: DataFrame): (Long, Long, Long) = {
         val r = df.agg(count(lit(1)),
@@ -4474,8 +4462,9 @@ object Relational {
         (r.getLong(0), r.getLong(1), r.getLong(2))
       }
       val oldIntact =
-        sig(graft.sources.TxJsonSink.read(s, t, Some(preVersion))) == sig(base)
-      graft.sources.TxJsonSink.read(s, t).groupBy(col("status"))
+        sig(graft.sources.SnapshotTable.read(s, t, Some(preVersion))) ==
+          sig(base)
+      graft.sources.SnapshotTable.read(s, t).groupBy(col("status"))
         .agg(count(lit(1)).as("n"),
           sum(col("cents").cast("long")).as("sum_cents"),
           min(col("k").cast("long")).as("min_k"))
@@ -4504,8 +4493,11 @@ object Relational {
         col("o_orderstatus").as("status"),
         (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
           .cast("string").as("cents"))
-      txMergeFixture(s, d, base, t)
-      val preVersion = graft.sources.TxJsonSink.manifest(t).get.version
+      cachedPrologue("txbase", d, t) { b =>
+        Seq(0, 1).foreach(par => graft.sources.SnapshotTable.commitAppend(
+          base.filter(col("k").cast("long") % 2 === par), b, "status", 6))
+      }
+      val preVersion = graft.sources.SnapshotTable.latestVersion(t).get
       val fEven = base.filter(col("status") === "F" &&
         col("k").cast("long") % 2 === 0)
       val changes = fEven.select(col("k"), col("status"),
@@ -4515,17 +4507,18 @@ object Relational {
           lit("N").as("status"), col("cents")))
       val deletes = base.filter(col("status") === "F" &&
         col("k").cast("long") % 2 === 1).select(col("k"))
-      val mr = graft.sources.TxJsonSink.merge(s, t, changes, "k",
-        Some(deletes))
-      val cow = mr.filesReplaced > 0 && mr.filesCarried > 0
+      val (replaced, carried, _) = graft.sources.SnapshotTable
+        .commitMerge(s, t, changes, "k", "status", Some(deletes))
+      val cow = replaced > 0 && carried > 0
       def sig(df: DataFrame): (Long, Long, Long) = {
         val r = df.agg(count(lit(1)),
           sum(col("cents").cast("long")), sum(col("k").cast("long"))).head()
         (r.getLong(0), r.getLong(1), r.getLong(2))
       }
       val oldIntact =
-        sig(graft.sources.TxJsonSink.read(s, t, Some(preVersion))) == sig(base)
-      graft.sources.TxJsonSink.read(s, t).groupBy(col("status"))
+        sig(graft.sources.SnapshotTable.read(s, t, Some(preVersion))) ==
+          sig(base)
+      graft.sources.SnapshotTable.read(s, t).groupBy(col("status"))
         .agg(count(lit(1)).as("n"),
           sum(col("cents").cast("long")).as("sum_cents"),
           min(col("k").cast("long")).as("min_k"))

@@ -8,11 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** SNAPSHOT TABLE — the repo's one zone-mapped table format: the
-  * commit-log mechanism of [[TxJsonSink]] (immutable versioned
-  * manifests, atomic latest-pointer, time travel, vacuum) with per-file
-  * bounds for data skipping in the same manifests — the Iceberg/Delta
-  * shape in miniature, over plain parquet data files:
+/** SNAPSHOT TABLE — the repo's one table format: a commit log
+  * (immutable versioned manifests, atomic latest-pointer, time travel,
+  * vacuum, additive schema evolution, copy-on-write and merge-on-read
+  * MERGE/DELETE) with per-file bounds for data skipping in the same
+  * manifests — the Iceberg/Delta shape in miniature, over plain
+  * parquet data files:
   *
   * {{{
   *   path/
@@ -67,9 +68,11 @@ import org.apache.spark.sql.types._
   * holder died without releasing blocks waiters for [[claimStaleMs]],
   * then is broken and its orphans swept — the standard lease trade
   * every lock-service-free format makes on a plain filesystem.
-  * Single-FILESYSTEM by design — the same documented scope as
-  * [[TxJsonSink]] (an object-store port swaps java.nio for the
-  * FileSystem API plus a conditional-put; the protocol is unchanged).
+  * Single-FILESYSTEM by design: every commit step goes through
+  * java.nio against one shared path namespace (true on local[*] and
+  * any shared mount); an object-store port swaps java.nio for the
+  * FileSystem API plus a conditional-put, and the protocol is
+  * unchanged.
   *
   * Deletion is COPY-ON-WRITE at the file level and O(metadata) at the
   * manifest level: touched files' survivors rewrite as new files,
@@ -454,12 +457,15 @@ object SnapshotTable {
   // before the per-column era (and the spec's hand-crafted crash
   // fixtures) parse to cols=Nil, which planning treats as "no stats:
   // cannot prune" — old tables stay readable and merely un-prunable
-  // on typed columns.
+  // on typed columns. (?s): `esc` leaves U+0085/U+2028/U+2029 raw in a
+  // string bound, and a plain `.` stops at them — the line would fail
+  // to parse and every file it lists would vanish from reads.
   private val FileLine =
-    ("""\{"file":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),"rows":(\d+)""" +
+    ("""(?s)\{"file":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
+      """"rows":(\d+)""" +
       """(?:,"cols":\[(.*?)\])?(?:,"bf":\[(.*?)\])?\}""").r
   private val RefLine =
-    ("""\{"manifest":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
+    ("""(?s)\{"manifest":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
       """"files":(\d+),"rows":(\d+)""" +
       """(?:,"cols":\[(.*?)\])?(?:,"bf":\[(.*?)\])?\}""").r
   // one JSON string body (escapes included) in the UNROLLED form
@@ -1838,14 +1844,17 @@ object SnapshotTable {
         .map(_.getString(0).split('/').last).toSet
       if (touched.isEmpty) return (0L, planned, total, prev)
       val touchedPaths = touched.toIndexedSeq.sorted.map(n => s"$path/$n")
-      val touchedDf = readFiles(spark, path, prev, touchedPaths)
-      val rowsTouched = touchedDf.count()
-      val survivors = touchedDf.join(kj, Seq(keyCol), "left_anti")
-      val rowsDeleted = rowsTouched - survivors.count()
+      val survivors = readFiles(spark, path, prev, touchedPaths)
+        .join(kj, Seq(keyCol), "left_anti")
       sweepUncommitted(path, v)
       writeMergedSchema(path, v, Some(prev), survivors.schema)
       val survStats = writeDataFiles(survivors, path, v, zcol,
         if (nFiles > 0) nFiles else touched.size, Some(nonce))
+      // both counts come off metadata: the touched files' manifest rows
+      // (exact — the snapshot carries no tombstones) minus the rows the
+      // survivor write recorded, so the delete runs no counting job
+      val rowsDeleted = candFiles.filter(f => touched(f.file))
+        .map(_.rows).sum - survStats.map(_.rows).sum
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
       writeAtomic(logDir(path).resolve(mName), manifestLines(survStats))
@@ -2151,12 +2160,21 @@ object SnapshotTable {
     * bit until vacuum. A change set with MULTIPLE rows per matched key
     * is rejected (nondeterministic which would win — the standard
     * MERGE contract; multiple inserts of one NEW key are the caller's
-    * own data). Returns (filesReplaced, filesCarried, newVersion).
+    * own data).
+    *
+    * `deletes` is the WHEN MATCHED DELETE arm: rows whose key appears
+    * in it vanish from the new version by the same touched-files-only
+    * rewrite (a key that matches nothing is a no-op), while prior
+    * versions still read them until vacuum. A key in BOTH arms is
+    * rejected before anything is claimed — upsert-then-delete is
+    * order-dependent, so the caller must resolve intent. Returns
+    * (filesReplaced, filesCarried, newVersion).
     */
   def commitMerge(spark: SparkSession, path: String,
-      changes: DataFrame, key: String, zcol: String): (Int, Int, Int) = {
+      changes: DataFrame, key: String, zcol: String,
+      deletes: Option[DataFrame] = None): (Int, Int, Int) = {
     val (replaced, carried, _, _, v) =
-      commitMergePlanned(spark, path, changes, key, zcol)
+      commitMergePlanned(spark, path, changes, key, zcol, deletes)
     (replaced, carried, v)
   }
 
@@ -2165,12 +2183,13 @@ object SnapshotTable {
     * check) descend the metadata pyramid on `key`'s typed bounds and
     * read only the files whose recorded key range can hold a change
     * key — a narrow upsert against a 100 TB table opens a handful of
-    * files to learn what it replaces. Caps as in
-    * [[commitDeletePlanned]]. Returns (filesReplaced, filesCarried,
-    * filesPlanned, filesTotal, newVersion).
+    * files to learn what it replaces. `deletes` as in [[commitMerge]],
+    * caps as in [[commitDeletePlanned]]. Returns (filesReplaced,
+    * filesCarried, filesPlanned, filesTotal, newVersion).
     */
   def commitMergePlanned(spark: SparkSession, path: String,
       changes: DataFrame, key: String, zcol: String,
+      deletes: Option[DataFrame] = None,
       collectKeyCap: Int = CollectKeyCapDefault,
       broadcastKeyCap: Long = BroadcastKeyCapDefault)
       : (Int, Int, Long, Long, Int) = {
@@ -2180,9 +2199,21 @@ object SnapshotTable {
         predDeleteRefs(path, Some(prev)).isEmpty,
       "snapshot carries merge-on-read tombstones - run compactCommit " +
         "to materialize them before a copy-on-write rewrite")
+    val changeKeys = changes.select(col(key))
+    val deleteKeys = deletes.map(_.select(col(key)))
+    deleteKeys.foreach { dk =>
+      val both = dk.join(changeKeys, Seq(key), "left_semi").distinct()
+        .limit(5).collect().map(_.get(0))
+      require(both.isEmpty,
+        s"merge: key(s) in both changes and deletes: ${both.mkString(",")}" +
+          " — upsert-then-delete is order-dependent, resolve before merging")
+    }
     val (v, nonce) = claimCow(path, prev, "commitMerge")
     try {
-      val plan = planKeys(changes, key, collectKeyCap, broadcastKeyCap)
+      // a file is touched when it holds a key of EITHER arm; survivors
+      // anti-join the same plan, so deleted rows drop with replaced ones
+      val touchKeys = deleteKeys.fold(changeKeys)(changeKeys.unionByName(_))
+      val plan = planKeys(touchKeys, key, collectKeyCap, broadcastKeyCap)
       val refs = snapshot(path, Some(prev))
       val total = refs.map(_.files.toLong).sum
       val parsedCand = refs

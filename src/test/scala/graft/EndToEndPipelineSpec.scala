@@ -6,19 +6,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.schema.GmailSchema
-import graft.sources.TxJsonSink
+import graft.sources.SnapshotTable
 
 /** The composed EP1→EP2 lifecycle (reference gmail_dag.py:9) in ONE spec:
   * PagedApiSource MICRO_BATCH stream → the full formatMessages transform
-  * chain → TxJsonSink batch commit, with a failure injected mid-stream.
-  * The pieces are proven separately (SourcesSpec mid-batch kill,
-  * TxJsonSinkSpec abort visibility, StreamingSpec drain); this asserts
-  * the END STATE of the composition: after the crash the sink's latest
-  * snapshot holds exactly the committed batches, and after the restart
-  * every message appears in the committed snapshot exactly once — the
-  * reference's write-raw-then-commit idempotence, delivered by the
-  * DSv2 two-phase sink under the streaming checkpoint instead of a
-  * hand-rolled id table.
+  * chain → SnapshotTable exactly-once append, with a failure injected
+  * mid-stream. The pieces are proven separately (SourcesSpec mid-batch
+  * kill, SnapshotTableSpec crash windows, StreamingSpec drain); this
+  * asserts the END STATE of the composition: after the crash the
+  * table's latest snapshot holds exactly the committed batches, and
+  * after the restart every message appears in the committed snapshot
+  * exactly once — the reference's write-raw-then-commit idempotence,
+  * delivered by `commitAppendOnce` (the batch id rides the table's
+  * pointer) under the streaming checkpoint instead of a hand-rolled id
+  * table.
   */
 class EndToEndPipelineSpec extends SparkSpec {
 
@@ -55,18 +56,18 @@ class EndToEndPipelineSpec extends SparkSpec {
     }
 
     // batches admit ids [1-4], [5-8], [9-12]; the armed id blows up the
-    // per-message GET INSIDE batch 2's sink-write job, after batch 1
-    // committed — exercising the sink's abort path from a SOURCE fault
+    // per-message GET INSIDE batch 2's commit job, after batch 1
+    // committed — a SOURCE fault that kills the commit before its
+    // pointer swing
     FailOnceApiClient.arm("e006")
     intercept[StreamingQueryException](run())
 
     // mid-crash state: exactly the pre-crash batch is visible — one
     // committed snapshot holding ids e001-e004; the aborted batch left
-    // no partial files behind the manifest
-    val mid = TxJsonSink.manifest(sink)
-    assert(mid.isDefined, "batch 1 must have committed before the crash")
-    assert(mid.get.version == 1)
-    val midIds = TxJsonSink.read(spark, sink)
+    // nothing behind the pointer
+    assert(SnapshotTable.latestVersion(sink).contains(1),
+      "batch 1 alone must have committed before the crash")
+    val midIds = SnapshotTable.read(spark, sink)
       .select("id").collect().map(_.getString(0)).sorted.toSeq
     assert(midIds == (1 to 4).map(i => f"e$i%03d"),
       s"latest snapshot after crash: $midIds")
@@ -75,7 +76,7 @@ class EndToEndPipelineSpec extends SparkSpec {
     // batch replays, the tail drains, and the LATEST committed snapshot
     // carries every message exactly once
     run()
-    val result = TxJsonSink.read(spark, sink)
+    val result = SnapshotTable.read(spark, sink)
     assert(result.count() == 12)
     assert(result.select("id").distinct().count() == 12)
 
@@ -103,9 +104,10 @@ class EndToEndPipelineSpec extends SparkSpec {
 
     // snapshot history is the batch history: v1 = batch 1, then the
     // replayed batch and the tail — 3 committed versions, monotone rows
-    val versions = (1 to 3).flatMap(v => TxJsonSink.manifest(sink, Some(v)))
-    assert(versions.map(_.version) == Seq(1, 2, 3))
-    assert(versions.map(_.totalRows) == Seq(4L, 8L, 12L))
+    // (per-version counts off the manifests, no data file opened)
+    assert(SnapshotTable.latestVersion(sink).contains(3))
+    assert((1 to 3).map(v => SnapshotTable.statsAgg(sink, Some(v))._1) ==
+      Seq(4L, 8L, 12L))
   }
 }
 
@@ -115,8 +117,8 @@ class EndToEndPipelineSpec extends SparkSpec {
 private object Streams2 {
   def commit(df: org.apache.spark.sql.DataFrame, ckpt: String,
       sink: String): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.Streams.runWithBatchCommit(df, ckpt) { (batch, _) =>
-      batch.write.format("graft.sources.TxJsonSink")
-        .option("path", sink).mode("append").save()
+    graft.streaming.Streams.runWithBatchCommit(df, ckpt) { (batch, id) =>
+      SnapshotTable.commitAppendOnce(batch, sink, "id", 1, id,
+        writerId = ckpt)
     }
 }

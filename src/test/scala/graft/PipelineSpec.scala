@@ -57,6 +57,26 @@ class PipelineSpec extends SparkSpec {
     assert(GmailPipeline.transformLoadRaw(spark, c, "run2") == ((0L, 0)))
   }
 
+  test("transformLoadRaw: stage-1 CSV keeps outer whitespace") {
+    val root = tmp(); val c = cfg(root)
+    // the cleaned body keeps the spaces the dropped non-ASCII chars
+    // shielded from the per-node trim; the subject header is verbatim
+    writeBlob(c.rawDir, "2022-12-01T000000.json",
+      Seq(message("w1", headers = Seq(("Subject", "  padded subject  ")),
+        bodyData = Some(b64url("\u00e9 hello there \u00e9")))))
+    val formatted = GmailPipeline.formatMessages(GmailPipeline.readRaw(
+      spark, Seq(s"${c.rawDir}/2022-12-01T000000.json")))
+      .select("subject", "body").head()
+    assert(formatted.getString(0) == "  padded subject  ")
+    assert(formatted.getString(1) == " hello there ")
+    assert(GmailPipeline.transformLoadRaw(spark, c, "ws") == ((1L, 1)))
+    val landed = spark.read.option("header", true)
+      .option("multiLine", true).csv(s"${c.stage1Dir}/ws")
+      .select("subject", "body").head()
+    assert(landed.getString(0) == "  padded subject  ")
+    assert(landed.getString(1) == " hello there ")
+  }
+
   test("extract: anti-join dedup, within-batch dups, budget, state commit") {
     val root = tmp(); val c = cfg(root).copy(limit = 2)
     val msgs = GmailPipeline.readRaw(spark,

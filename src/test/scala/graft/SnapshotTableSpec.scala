@@ -154,6 +154,58 @@ class SnapshotTableSpec extends SparkSpec {
     assert(read > 0 && read < total)
     assert(cand.filter(col("z").between(0, 300)).count() ==
       latest.filter(col("z").between(0, 300)).count())
+    // duplicate change keys that match NO target row are legal MERGE:
+    // both rows insert...
+    SnapshotTable.commitMerge(spark, t,
+      Seq((7777L, 1.0, "ins-a"), (7777L, 2.0, "ins-b"))
+        .toDF("id", "z", "tag"), "id", "z")
+    assert(SnapshotTable.read(spark, t).filter(col("id") === 7777L)
+      .count() == 2)
+    // ...and once duplicated in the TARGET, a later change matching that
+    // key is a multiple-target match and is rejected, committing nothing
+    val vDup = SnapshotTable.latestVersion(t)
+    val e2 = intercept[IllegalArgumentException] {
+      SnapshotTable.commitMerge(spark, t,
+        Seq((7777L, 3.0, "x"), (7777L, 4.0, "y")).toDF("id", "z", "tag"),
+        "id", "z")
+    }
+    assert(e2.getMessage.contains("multiple rows per matched key"))
+    assert(SnapshotTable.latestVersion(t) == vDup)
+  }
+
+  test("commitMerge delete arm: latest view only, history kept until " +
+      "vacuum") {
+    val t = Files.createTempDirectory("graft-snapmd").toString + "/t"
+    SnapshotTable.commitAppend(rows(0 until 400), t, "z", 4)
+    // one commit: update 1-2, insert 1001, DELETE 3-5 and 111; the
+    // absent 99999 is a WHEN MATCHED no-op
+    val (replaced, carried, v) = SnapshotTable.commitMerge(spark, t,
+      Seq((1L, 1.0, "upd"), (2L, 2.0, "upd"), (1001L, 1001.0, "ins"))
+        .toDF("id", "z", "tag"), "id", "z",
+      deletes = Some(Seq(3L, 4L, 5L, 111L, 99999L).toDF("id")))
+    assert(v == 2 && replaced == 2 && carried == 2,
+      (replaced, carried, v))
+    val latest = SnapshotTable.read(spark, t)
+    assert(latest.count() == 400 - 4 + 1)
+    assert(latest.filter(col("id").isin(3L, 4L, 5L, 111L)).count() == 0)
+    assert(latest.filter(col("tag") === "upd").count() == 2)
+    assert(latest.filter(col("id") === 1001L).count() == 1)
+    // the previous version still reads every deleted row
+    val old = SnapshotTable.read(spark, t, Some(1))
+    assert(old.count() == 400)
+    assert(old.filter(col("id").isin(3L, 4L, 5L, 111L)).count() == 4)
+    // a key in BOTH arms is order-dependent: rejected, nothing commits
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.commitMerge(spark, t,
+        Seq((7L, 7.0, "x")).toDF("id", "z", "tag"), "id", "z",
+        deletes = Some(Seq(7L).toDF("id")))
+    }
+    assert(e.getMessage.contains("both changes and deletes"))
+    assert(SnapshotTable.latestVersion(t).contains(2))
+    // vacuum to the latest snapshot reclaims exactly the replaced files
+    // and ends the deleted rows' travelability
+    assert(SnapshotTable.vacuum(t, keepLast = 1) == ((1, replaced)))
+    assert(SnapshotTable.read(spark, t).count() == 397)
   }
 
   test("commitAppendOnce is exactly-once across both replay windows") {
@@ -603,6 +655,61 @@ class SnapshotTableSpec extends SparkSpec {
       spark, t, "id", Seq(50000L, 60000L).toDF("id"), "z")
     assert(d0 == 0 && p0 == 0 && v0 == 3,
       s"out-of-range keys must not open any file, planned $p0")
+  }
+
+  test("commitDelete counts rows off metadata, fully consumed files " +
+      "included") {
+    val t = Files.createTempDirectory("graft-snapdc").toString + "/t"
+    SnapshotTable.commitAppend(rows(0 until 400), t, "z", 4)
+    def live(v: Int) = SnapshotTable.statsAgg(t, Some(v))._1
+    // keys covering one whole range file: its survivors are empty, so
+    // the rewrite records no file for it at all
+    val (d1, v1) = SnapshotTable.commitDelete(spark, t, "id",
+      (0L until 100L).toDF("id"), "z")
+    assert(v1 == 2 && d1 == 100 && d1 == live(1) - live(2), (d1, v1))
+    // a whole file plus part of another in one commit
+    val (d2, v2) = SnapshotTable.commitDelete(spark, t, "id",
+      ((100L until 200L) ++ (250L until 260L)).toDF("id"), "z")
+    assert(v2 == 3 && d2 == 110 && d2 == live(2) - live(3), (d2, v2))
+    assert(SnapshotTable.read(spark, t).count() == 190)
+  }
+
+  test("a first commitAppend whose task throws leaves no snapshot") {
+    val t = Files.createTempDirectory("graft-snapff").toString + "/t"
+    val boom = udf((i: Long) =>
+      if (i == 99L) throw new RuntimeException("induced") else i)
+    intercept[Exception] {
+      SnapshotTable.commitAppend(
+        rows(0 until 100).withColumn("id", boom(col("id"))), t, "z", 4)
+    }
+    assert(SnapshotTable.latestVersion(t).isEmpty)
+    val e = intercept[IllegalArgumentException](SnapshotTable.read(spark, t))
+    assert(e.getMessage.contains("no committed snapshot"))
+  }
+
+  test("escaped and line-break string values round-trip data and bounds") {
+    val t = Files.createTempDirectory("graft-snapes").toString + "/t"
+    // every value ends in a character the manifest line must escape or
+    // carry verbatim, so every file's string min/max holds one
+    val tails = Seq("\n", "\r", "\t", "\\", "\"", "]}", "\u0085",
+      "\u2028")
+    val vals = (0 until 400).map(i => f"k$i%03d" + tails(i % tails.size))
+    SnapshotTable.commitAppend(vals.zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("id", "s"), t, "s", 8)
+    val full = SnapshotTable.read(spark, t)
+    assert(full.select("s").as[String].collect().sorted.toSeq ==
+      vals.sorted)
+    val (n, bounds) = SnapshotTable.statsAggCol(t, "s")
+    assert(n == 400 && bounds == Some(("s", vals.min, vals.max)), bounds)
+    // a probe bounded by such values stays sound and strict
+    val (lo, hi) = (vals(100), vals(149))
+    val (cand, read, total) =
+      SnapshotTable.readPrunedCol(spark, t, "s", lo, hi)
+    assert(read > 0 && read < total, s"string prune $read/$total")
+    assert(cand.filter(col("s").between(lo, hi)).count() == 50)
+    val (one, oneRead, _) =
+      SnapshotTable.readPrunedCol(spark, t, "s", vals(7), vals(7))
+    assert(oneRead == 1 && one.filter(col("s") === vals(7)).count() == 1)
   }
 
   test("planned COW merge confines the matched-file probe the same " +
