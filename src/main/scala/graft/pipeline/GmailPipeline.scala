@@ -35,19 +35,16 @@ object GmailPipeline {
       limit: Int = 300,
       linkedinEnabled: Boolean = false)
 
-  /** Raw-zone read (S4): each blob is a JSON ARRAY of messages.get
-    * resources (reference writes `json.dumps(data)`,
-    * gmail_functions.py:127-129); multiLine mode explodes the array into
-    * rows. `jsonl = true` reads line-delimited JSON instead (the format
-    * this engine's own raw sink emits at scale — one array blob per run
-    * doesn't parallelize; JSONL splits).
+  /** Raw-zone read (S4), line mode: each line is one JSON value. A line
+    * holding a JSON ARRAY of messages.get resources — the reference's
+    * one-line `json.dumps(data)` blob, gmail_functions.py:127-129 —
+    * explodes into one row per element, and a line holding one object
+    * is one row, so the same read takes the reference's blobs and the
+    * line-delimited files [[extract]]'s raw sink writes (which split
+    * across tasks).
     */
-  def readRaw(spark: SparkSession, paths: Seq[String],
-      jsonl: Boolean = false): DataFrame = {
-    val r = spark.read.schema(GmailSchema.messageType)
-    if (jsonl) r.json(paths: _*)
-    else r.option("multiLine", true).json(paths: _*)
-  }
+  def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(GmailSchema.messageType).json(paths: _*)
 
   /** State read (S9): parquet directory with schema `emails(id, date)`.
     *
@@ -75,8 +72,7 @@ object GmailPipeline {
 
   /** J1: exact dedup — keep only ids not present in state. */
   def newMessages(incoming: DataFrame, state: DataFrame): DataFrame =
-    incoming.join(broadcastIfSmall(state.select(col("id"))), Seq("id"),
-      "left_anti")
+    incoming.join(state.select(col("id")), Seq("id"), "left_anti")
 
   /** Dedup with SOURCE-LEVEL skip: when the seen-id state is small
     * enough to inline (like a broadcast decision), the anti-join becomes
@@ -98,12 +94,6 @@ object GmailPipeline {
     else if (ids.isEmpty) incoming
     else incoming.filter(!col("id").isin(ids.toIndexedSeq: _*))
   }
-
-  /** The state side is tiny relative to a 100 TB incoming scan for
-    * realistic retention; broadcast it below the threshold, else let
-    * Catalyst pick sort-merge. (Heuristic: defer to AQE when unknown.)
-    */
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df
 
   /** EP1 extract: dedup → budget → raw sink → state append.
     * `today` is the ingestion date the reference stamps into the state

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the Gmail pipeline over a bundled sample
   * blob: `runMain graft.pipeline.PipelineDemo <workDir>`.
-  * Writes a raw array-blob, runs extract (dedup+state) and
+  * Writes a one-line raw array-blob, runs extract (dedup+state) and
   * transformLoadRaw (format+CSV+archive), prints the stage-1 rows.
   */
 object PipelineDemo {
@@ -31,6 +31,8 @@ object PipelineDemo {
       """<div dir="rtl"><p>Application submitted!</p>
         |<p>Data Engineer</p><a href="#">Austin - Remote</a>
         |<p>Acme Corp</p></div>""".stripMargin)
+    // the reference's raw blob: a JSON array of messages.get resources
+    // on ONE line (`json.dumps(data)`)
     val blob =
       s"""[
          |{"id": "m1", "threadId": "m1", "payload": {"mimeType": "text/html",
@@ -42,7 +44,7 @@ object PipelineDemo {
          |{"id": "m2", "threadId": "m2", "payload": {"mimeType": "text/plain",
          |  "headers": [{"name": "From", "value": "a@b.c"}],
          |  "body": {"size": 1, "data": "${b64url("plain body")}"}}}
-         |]""".stripMargin
+         |]""".stripMargin.replace('\n', ' ')
     Files.createDirectories(Paths.get(s"$work/incoming"))
     Files.writeString(Paths.get(s"$work/incoming/page.json"), blob)
 
@@ -51,9 +53,8 @@ object PipelineDemo {
       java.sql.Date.valueOf(java.time.LocalDate.now()))
     println(s"[demo] extract ingested $n new messages into ${cfg.rawDir}")
 
-    // extract writes JSONL; transform reads it back in jsonl mode here
-    val raw = GmailPipeline.readRaw(spark,
-      Seq(cfg.rawDir), jsonl = true)
+    // extract's raw sink writes JSONL; the same line-mode read takes it
+    val raw = GmailPipeline.readRaw(spark, Seq(cfg.rawDir))
     val formatted = GmailPipeline.formatMessages(raw)
     println("[demo] formatted stage-1 rows:")
     formatted.orderBy("id").show(truncate = false)

@@ -281,6 +281,22 @@ object Ext {
       explode(TextOps.lshBands(col("sig"), Bands, RowsPerBand))
         .as("band_key"))
 
+  /** The fragmented standing band index as a snapshot table at `b`:
+    * the corpus bands in 8 band-key-clustered files, then one appended
+    * batch commit of the near-dup docs' bands in 1 file.
+    */
+  private def bandIndexFixture(s: SparkSession, d: String, b: String): Unit = {
+    val all = docsWithNearDups(s, d)
+    graft.sources.SnapshotTable.commitAppend(
+      bandsOf(all.filter(col("doc_id") === col("base_id"))), b, "band_key", 8)
+    graft.sources.SnapshotTable.commitAppend(
+      bandsOf(all.filter(col("doc_id") =!= col("base_id"))), b, "band_key", 1)
+  }
+
+  /** Bare file names of data-file paths or `file:` URIs. */
+  private def fileNames(paths: Array[String]): Set[String] =
+    paths.map(f => new java.net.URI(f).getPath.split('/').last).toSet
+
   /** The STANDING corpus band index of the incremental-dedup family:
     * (doc_id, band_key) over the base corpus, built once per (session,
     * sfDir) and probed by every daily-batch query — the in-process
@@ -4213,42 +4229,32 @@ object Ext {
     }),
 
     // The standing index LIFECYCLE closes with COMPACTION: daily
-    // appends fragment the band index (each adds a small file), and
-    // the standing compaction job ([[sources.Writers.compact]], the
-    // crash-safe double-rename swap) rewrites it to bounded file
-    // sizes. The gated contract: the post-compaction FRESH-SESSION
-    // probe must equal the incremental accounting bit for bit (a
-    // compaction that loses/duplicates index rows changes the
-    // answer), and `compacted` pins that files actually shrank. Note
-    // the probe runs against the corpus+batch index — batch-side
-    // band rows collide with the probe's own bands, but the verify
-    // stage semi-joins matches against the CORPUS relation, so
-    // self/batch collisions drop and the accounting is unchanged:
-    // exactly why index maintenance can append blindly.
+    // appends fragment the band index (each commits a small file), and
+    // the standing compaction job ([[sources.SnapshotTable.compactCommit]],
+    // one new version behind a single pointer swing) rewrites it to
+    // bounded file sizes. The gated contract: the post-compaction
+    // FRESH-SESSION probe must equal the incremental accounting bit for
+    // bit (a compaction that loses/duplicates index rows changes the
+    // answer), and `compacted` pins that the manifest's row count held
+    // and its file count shrank. Note the probe runs against the
+    // corpus+batch index — batch-side band rows collide with the
+    // probe's own bands, but the verify stage semi-joins matches
+    // against the CORPUS relation, so self/batch collisions drop and
+    // the accounting is unchanged: exactly why index maintenance can
+    // append blindly.
     "q_dedup_index_compact" -> ((s, d) => {
       val dir = Relational.rtDir("bidxc", d)
       // the fragmented opening state (corpus index + one appended
       // batch) is deterministic fixture; the teeth — compaction and
       // the fresh-session probe — run on this gate's own copy
-      Relational.cachedPrologue("bidxc", d, dir) { b =>
-        val all = docsWithNearDups(s, d)
-        bandsOf(all.filter(col("doc_id") === col("base_id")))
-          .repartition(8, col("band_key"))
-          .sortWithinPartitions(col("band_key"))
-          .write.mode("overwrite").parquet(b)
-        bandsOf(all.filter(col("doc_id") =!= col("base_id")))
-          .repartition(1, col("band_key"))
-          .sortWithinPartitions(col("band_key"))
-          .write.mode("append").parquet(b)
-      }
-      val total = Relational.diskRowCount(s, dir)
-      val (rows, filesBefore) =
-        graft.sources.Writers.compact(s, dir, targetRowsPerFile =
-          math.max(1L, (total + 1) / 2))
+      Relational.cachedPrologue("bidxc", d, dir)(bandIndexFixture(s, d, _))
+      val total = graft.sources.SnapshotTable.statsAgg(dir)._1
+      val (filesBefore, filesAfter, _) = graft.sources.SnapshotTable
+        .compactCommit(s, dir, "band_key", math.max(1L, (total + 1) / 2))
       val s2 = s.newSession()
-      val idx = s2.read.parquet(dir)
-      val compacted = rows == total &&
-        idx.inputFiles.length < filesBefore
+      val idx = graft.sources.SnapshotTable.read(s2, dir)
+      val compacted = graft.sources.SnapshotTable.statsAgg(dir)._1 ==
+        total && filesAfter < filesBefore
       incrementalCrossAccounting(s2, d, idx)
         .withColumn("compacted", lit(compacted))
     }),
@@ -4257,73 +4263,62 @@ object Ext {
     // that compaction/refit don't cover: takedown / PII-removal
     // requests mean upstream row deletes must reach the standing index,
     // not just the base table. A tombstone batch (here: corpus docs
-    // with doc_id % 50 == 7) drives [[sources.Writers.deleteKeys]] —
-    // touched-files-ONLY copy-on-write (files without a tombstoned row
-    // carry over by hard link / manifest re-listing; the rewrite cost
-    // tracks the deletion batch) behind the same crash-safe
-    // double-rename swap as compaction. The gated contract: the
-    // post-delete FRESH-SESSION probe equals the incremental accounting
-    // computed over the corpus MINUS the tombstones (a batch doc whose
-    // only near-dup was deleted must now read clean), `deleted_gone`
-    // pins zero tombstoned rows remaining AND exactly Bands rows per
-    // tombstoned doc removed, `untouched_kept` pins that exactly the
-    // touched files changed.
+    // with doc_id % 50 == 7) drives [[sources.SnapshotTable.commitDelete]]
+    // — touched-files-ONLY copy-on-write (files without a tombstoned
+    // row carry into the new snapshot by manifest reference; the
+    // rewrite cost tracks the deletion batch) behind one pointer swing.
+    // The gated contract: the post-delete FRESH-SESSION probe equals
+    // the incremental accounting computed over the corpus MINUS the
+    // tombstones (a batch doc whose only near-dup was deleted must now
+    // read clean), `deleted_gone` pins zero tombstoned rows remaining
+    // AND exactly Bands rows per tombstoned doc removed,
+    // `untouched_kept` pins that the files leaving the snapshot are
+    // exactly the pre-delete files holding a tombstoned key, found by
+    // an independent `input_file_name` semi-join.
     "q_dedup_index_delete" -> ((s, d) => {
       val dir = Relational.rtDir("bidxdel", d)
       // opening state (corpus index + appended batch) is deterministic
       // fixture; the takedown propagation teeth run on this gate's copy
-      Relational.cachedPrologue("bidxdel", d, dir) { b =>
-        val all = docsWithNearDups(s, d)
-        bandsOf(all.filter(col("doc_id") === col("base_id")))
-          .repartition(8, col("band_key"))
-          .sortWithinPartitions(col("band_key"))
-          .write.mode("overwrite").parquet(b)
-        bandsOf(all.filter(col("doc_id") =!= col("base_id")))
-          .repartition(1, col("band_key"))
-          .sortWithinPartitions(col("band_key"))
-          .write.mode("append").parquet(b)
-      }
-      val pre = s.read.parquet(dir)
+      Relational.cachedPrologue("bidxdel", d, dir)(bandIndexFixture(s, d, _))
+      val pre = graft.sources.SnapshotTable.read(s, dir)
       val preCount = pre.count()
-      val preFiles = pre.inputFiles
-        .map(f => new java.net.URI(f).getPath.split('/').last).toSet
       val tomb = documents(s, d).filter(col("doc_id") % 50 === 7)
         .select(col("doc_id"))
       val nTomb = tomb.count()
-      val (rowsDeleted, touchedNames, _) =
-        graft.sources.Writers.deleteKeys(s, dir, "doc_id", tomb)
+      val hit = fileNames(pre.withColumn("_f", input_file_name())
+        .join(broadcast(tomb), Seq("doc_id"), "left_semi")
+        .select(col("_f")).distinct().collect().map(_.getString(0)))
+      val (rowsDeleted, _) = graft.sources.SnapshotTable.commitDelete(
+        s, dir, "doc_id", tomb, "band_key")
       val s2 = s.newSession()
-      val idx = s2.read.parquet(dir)
+      val idx = graft.sources.SnapshotTable.read(s2, dir)
       val tomb2 = documents(s2, d).filter(col("doc_id") % 50 === 7)
         .select(col("doc_id"))
       val deletedGone = rowsDeleted == nTomb * Bands &&
         idx.count() == preCount - nTomb * Bands &&
         idx.join(broadcast(tomb2), Seq("doc_id"), "left_semi").count() == 0
-      val postFiles = idx.inputFiles
-        .map(f => new java.net.URI(f).getPath.split('/').last).toSet
-      val untouchedKept =
-        (preFiles -- postFiles) == touchedNames.toSet &&
-          (preFiles -- touchedNames.toSet).subsetOf(postFiles)
+      val untouchedKept = hit.nonEmpty &&
+        (fileNames(pre.inputFiles) -- fileNames(idx.inputFiles)) == hit
       incrementalCrossAccounting(s2, d, idx)
         .withColumn("deleted_gone", lit(deletedGone))
         .withColumn("untouched_kept", lit(untouchedKept))
     }),
 
     // TABLE -> INDEX SYNC through the snapshot table — the two
-    // lifecycle families meet: the documents corpus lives in a
-    // [[sources.SnapshotTable]] (commit log + skipping), and the
-    // standing band index is maintained ONLY from the table's own
-    // change surfaces — never by re-reading the table. An append
-    // commit's [[readChanges]] delta (required to read a strict
-    // subset of files: O(delta)) drives the index append; a
-    // merge-on-read takedown's TOMBSTONE FILE is itself the delete
-    // feed driving [[sources.Writers.deleteKeys]] against the index —
-    // the takedown lands O(metadata) on the table and propagates to
-    // the derived index without either side scanning the corpus. The
-    // gate require()s the maintained index bag-equal to one rebuilt
-    // from the table's latest read (tombstones applied), and the
-    // accounting oracle equals q_dedup_index_delete's — same final
-    // index, different (incremental) plumbing.
+    // lifecycle families meet: the documents corpus and the standing
+    // band index are both [[sources.SnapshotTable]]s, and the index is
+    // maintained ONLY from the corpus table's own change surfaces —
+    // never by re-reading the table. An append commit's [[readChanges]]
+    // delta (required to read a strict subset of files: O(delta))
+    // drives the index append; a merge-on-read takedown's TOMBSTONE
+    // FILE is itself the key feed of the index's
+    // [[sources.SnapshotTable.commitDelete]] — the takedown lands
+    // O(metadata) on the table and propagates to the derived index
+    // without either side scanning the corpus. The gate require()s the
+    // maintained index bag-equal to one rebuilt from the table's latest
+    // read (tombstones applied), and the accounting oracle equals
+    // q_dedup_index_delete's — same final index, different
+    // (incremental) plumbing.
     "q_snapshot_index_sync" -> ((s, d) => {
       val dir = Relational.rtDir("snapis", d)
       val all = docsWithNearDups(s, d)
@@ -4337,10 +4332,9 @@ object Ext {
       Relational.cachedPrologue("snapis", d, dir) { b =>
         graft.sources.SnapshotTable.commitAppend(
           corpus, s"$b/t", "doc_id", 8)
-        bandsOf(graft.sources.SnapshotTable.read(s, s"$b/t"))
-          .repartition(8, col("band_key"))
-          .sortWithinPartitions(col("band_key"))
-          .write.mode("overwrite").parquet(s"$b/x")
+        graft.sources.SnapshotTable.commitAppend(
+          bandsOf(graft.sources.SnapshotTable.read(s, s"$b/t")),
+          s"$b/x", "band_key", 8)
       }
       val tdir = s"$dir/t"
       val xdir = s"$dir/x"
@@ -4352,11 +4346,10 @@ object Ext {
       require(fr12 < tot12,
         s"q_snapshot_index_sync: append delta must be O(delta), read " +
           s"$fr12/$tot12 files")
-      bandsOf(ch12.filter(col("_change") === "insert")
-          .select(col("doc_id"), col("text")))
-        .repartition(1, col("band_key"))
-        .sortWithinPartitions(col("band_key"))
-        .write.mode("append").parquet(xdir)
+      graft.sources.SnapshotTable.commitAppend(
+        bandsOf(ch12.filter(col("_change") === "insert")
+          .select(col("doc_id"), col("text"))),
+        xdir, "band_key", 1)
       // day 3: merge-on-read takedown; the tombstone file IS the
       // delete feed for the index
       val tomb = documents(s, d).filter(col("doc_id") % 50 === 7)
@@ -4365,10 +4358,10 @@ object Ext {
       graft.sources.SnapshotTable.commitDeleteMor(s, tdir, "doc_id", tomb)
       val dref = graft.sources.SnapshotTable.deleteRefs(tdir).head
       val tombKeys = s.read.parquet(s"$tdir/${dref.file}")
-      val (rowsDeleted, _, _) =
-        graft.sources.Writers.deleteKeys(s, xdir, "doc_id", tombKeys)
+      val (rowsDeleted, _) = graft.sources.SnapshotTable.commitDelete(
+        s, xdir, "doc_id", tombKeys, "band_key")
       val s2 = s.newSession()
-      val idx = s2.read.parquet(xdir)
+      val idx = graft.sources.SnapshotTable.read(s2, xdir)
       val fromScratch = bandsOf(
         graft.sources.SnapshotTable.read(s2, tdir))
       require(Relational.bagEqual(idx, fromScratch),
@@ -5014,13 +5007,14 @@ object Ext {
     // DELETION PROPAGATION for the PQ codes index — the
     // q_dedup_index_delete arm on the vector side: an upstream removal
     // request (vec_id % 10 == 7, 10% of the corpus) drives
-    // [[sources.Writers.deleteKeys]] over the persisted codes table
-    // (touched-files-only COW behind the crash-safe swap), and the
-    // fresh-session ADC probe must equal the probe over the filtered
-    // code relation — deleted vectors can no longer be RETRIEVED, the
-    // privacy contract an ANN index actually owes. Unlike the
-    // band-index arm, spread tombstones touch most files of a
-    // hash-clustered codes table BY NATURE (the keys spray), so the
+    // [[sources.SnapshotTable.commitDelete]] over the codes snapshot
+    // table (touched-files-only copy-on-write behind one pointer
+    // swing; the book is written once and stays plain parquet), and
+    // the fresh-session ADC probe must equal the probe over the
+    // filtered code relation — deleted vectors can no longer be
+    // RETRIEVED, the privacy contract an ANN index actually owes.
+    // Unlike the band-index arm, spread tombstones touch every file of
+    // a vec_id-clustered codes table BY NATURE (the keys spray), so the
     // gate pins row accounting (`deleted_gone`), not file locality;
     // PqDeleteSpec pins that the deletion has retrieval teeth (the
     // top-k actually changes).
@@ -5031,19 +5025,18 @@ object Ext {
       Relational.cachedPrologue("pqdel", d, dir) { b =>
         pqTrainedBook(s, d).coalesce(1)
           .write.mode("overwrite").parquet(s"$b/book")
-        pqTrainedCodes(s, d).repartition(4, col("vec_id"))
-          .sortWithinPartitions(col("vec_id"))
-          .write.mode("overwrite").parquet(s"$b/codes")
+        graft.sources.SnapshotTable.commitAppend(
+          pqTrainedCodes(s, d), s"$b/codes", "vec_id", 4)
       }
       val nCorpus = embeddings(s, d).count()
       val tomb = embeddings(s, d).filter(col("vec_id") % 10 === 7)
         .select(col("vec_id"))
       val nTomb = tomb.count()
-      val (rowsDeleted, _, _) =
-        graft.sources.Writers.deleteKeys(s, s"$dir/codes", "vec_id", tomb)
+      val (rowsDeleted, _) = graft.sources.SnapshotTable.commitDelete(
+        s, s"$dir/codes", "vec_id", tomb, "vec_id")
       val s2 = s.newSession()
       val bookD = s2.read.parquet(s"$dir/book")
-      val codesD = s2.read.parquet(s"$dir/codes")
+      val codesD = graft.sources.SnapshotTable.read(s2, s"$dir/codes")
       val tomb2 = embeddings(s2, d).filter(col("vec_id") % 10 === 7)
         .select(col("vec_id"))
       val deletedGone = rowsDeleted == nTomb &&

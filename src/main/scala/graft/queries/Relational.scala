@@ -339,16 +339,18 @@ object Relational {
       java.nio.file.Paths.get(dir))
   }
 
-  /** Row count of a flat on-disk parquet table from its footers —
+  /** Row count of a flat on-disk parquet directory from its footers —
     * driver metadata reads instead of a Spark count job (exact: parquet
-    * footers carry the row count; [[sources.Writers.parquetRowCount]]).
-    * Falls back to the scan count when the directory isn't local flat
-    * parquet. The lifecycle gates' "maintained/ingested-once" teeth
-    * compare on-disk row counts per run — each was a full job whose
-    * only output is one long.
+    * footers carry the row count;
+    * [[sources.SnapshotTable.parquetRowCount]]). Falls back to the scan
+    * count when the directory isn't local flat parquet. For append-only
+    * index directories only: a snapshot table's directory also holds
+    * the files its later versions replaced. The persisted index gates'
+    * "maintained" teeth compare on-disk row counts per run — each was a
+    * full job whose only output is one long.
     */
   private[queries] def diskRowCount(s: SparkSession, dir: String): Long =
-    graft.sources.Writers.parquetRowCount(dir)
+    graft.sources.SnapshotTable.parquetRowCount(dir)
       .getOrElse(s.read.parquet(dir).count())
 
   /** Bag (multiset) equality of two same-schema relations in ONE job:
@@ -4206,33 +4208,34 @@ object Relational {
           lit(priceRead > 0 && priceRead < total))
     }),
 
-    // COMPACTION under the gate: a fragmented layout (50 writer tasks'
-    // files — the standing outcome of streaming/incremental appends) is
-    // rewritten to ~5000-row files by Writers.compact, whose crash-safe
-    // double-rename swap is proven at the file level in WritersSpec;
-    // here the ORACLE proves the data level — the compacted table must
+    // COMPACTION under the gate: a fragmented snapshot table (one
+    // 50-file append — the standing outcome of streaming/incremental
+    // appends) is rewritten to ~5000-row files by
+    // SnapshotTable.compactCommit, a new version whose one manifest
+    // replaces every previous one behind a single pointer swing; the
+    // ORACLE proves the data level — the compacted snapshot must
     // aggregate exactly like the raw table (no row lost or doubled in
-    // the swap), and the gated boolean pins that the rewrite really
-    // shrank the file count. At 100 TB compaction is a daily job;
-    // an engine that can't prove rows survive it can't run one.
+    // the rewrite), and the gated boolean pins that the manifest's file
+    // count really shrank. At 100 TB compaction is a daily job; an
+    // engine that can't prove rows survive it can't run one.
     "q_compact_roundtrip" -> ((s, d) => {
       val dir = rtDir("cmp", d)
       // the fragmented opening layout is deterministic fixture; the
-      // teeth — the compaction swap and the aggregate equality — run
+      // teeth — the compaction commit and the aggregate equality — run
       // on the gate's own copy
       cachedPrologue("cmp", d, dir)(b =>
-        orders(s, d)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice").cast("decimal(18,2)").as("price"))
-          .repartition(50)
-          .write.mode("overwrite").parquet(b))
-      val (_, before) = graft.sources.Writers.compact(s, dir, 5000L)
-      val after = s.read.parquet(dir)
-      val filesAfter = after.inputFiles.length
-      after.groupBy(col("o_orderstatus"))
+        graft.sources.SnapshotTable.commitAppend(
+          orders(s, d)
+            .select(col("o_orderkey"), col("o_orderstatus"),
+              col("o_totalprice").cast("decimal(18,2)").as("price")),
+          b, "o_orderkey", 50))
+      val (before, after, _) = graft.sources.SnapshotTable
+        .compactCommit(s, dir, "o_orderkey", 5000L)
+      graft.sources.SnapshotTable.read(s, dir)
+        .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("price")).cast("double").as("revenue"))
-        .withColumn("compacted", lit(filesAfter < before))
+        .withColumn("compacted", lit(after < before))
         .orderBy(col("o_orderstatus"))
     }),
 

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -743,6 +743,45 @@ object SnapshotTable {
       nFiles: Int): DataFrame =
     df.repartitionByRange(nFiles, col(zcol)).sortWithinPartitions(col(zcol))
 
+  /** Morton (Z-order) layout on two numeric columns: each value is
+    * scaled to 16 bits against the input's own [min, max] (one tiny
+    * pre-pass, floor-quantized so the mapping is engine-exact), the
+    * bits interleave via the standard mask-spread ladder — pure integer
+    * Column arithmetic, fully codegen'd, no UDF — and rows
+    * range-partition and sort on the interleaved code, so each file
+    * covers a compact 2-D block of the (c1, c2) space.
+    */
+  private def zOrderLayout(df: DataFrame, c1: String, c2: String,
+      nFiles: Int): DataFrame = {
+    val mm = df.agg(
+      min(col(c1)).cast("double").as("mn1"),
+      max(col(c1)).cast("double").as("mx1"),
+      min(col(c2)).cast("double").as("mn2"),
+      max(col(c2)).cast("double").as("mx2"))
+    def scaled(c: String, mn: Column, mx: Column) =
+      when(mx === mn, lit(0L)).otherwise(
+        floor((col(c).cast("double") - mn) * 65535.0 / (mx - mn))
+          .cast("long"))
+    val z = df.crossJoin(broadcast(mm))
+      .withColumn("_z",
+        spread16(scaled(c1, col("mn1"), col("mx1")))
+          .bitwiseOR(shiftleft(
+            spread16(scaled(c2, col("mn2"), col("mx2"))), 1)))
+      .drop("mn1", "mx1", "mn2", "mx2")
+    z.repartitionByRange(nFiles, col("_z"))
+      .sortWithinPartitions(col("_z"))
+      .drop("_z")
+  }
+
+  /** Spread the low 16 bits of `c` so bit i lands at position 2i. */
+  private def spread16(c: Column): Column = {
+    val a = c.bitwiseAND(lit(0xFFFFL))
+    val b = a.bitwiseOR(shiftleft(a, 8)).bitwiseAND(lit(0x00FF00FFL))
+    val d = b.bitwiseOR(shiftleft(b, 4)).bitwiseAND(lit(0x0F0F0F0FL))
+    val e = d.bitwiseOR(shiftleft(d, 2)).bitwiseAND(lit(0x33333333L))
+    e.bitwiseOR(shiftleft(e, 1)).bitwiseAND(lit(0x55555555L))
+  }
+
   /** Stage an already-laid-out `df`, move the staged parts to their
     * immutable `v<N>-p<i>.parquet` names, and collect their stats in
     * ONE distributed pass: row count, legacy double z bounds, and the
@@ -1221,7 +1260,7 @@ object SnapshotTable {
     */
   def commitAppendZOrdered(df: DataFrame, path: String, c1: String,
       c2: String, nFiles: Int): Int =
-    append(path, Writers.zOrderLayout(df, c1, c2, nFiles), c1, Nil)
+    append(path, zOrderLayout(df, c1, c2, nFiles), c1, Nil)
 
   /** Claim the next slot and append the already-laid-out `laid`. */
   private def append(path: String, laid: DataFrame, zcol: String,
@@ -1348,8 +1387,9 @@ object SnapshotTable {
     * — fan-out derived from the batch's actual bytes, not a constant
     * (without AQE it degrades to the plain by-value shuffle). An
     * explicit `filesPerValue > 1` instead SALTS the shuffle WITHIN
-    * each value (the [[Writers.writePartitioned]] pattern) across a
-    * pinned partition count, and `filesPerValue = 1` pins the legacy
+    * each value (a row hash modulo `filesPerValue` joins the value in
+    * the shuffle keys, so one value spreads over that many tasks)
+    * across a pinned partition count, and `filesPerValue = 1` pins the legacy
     * one-task-per-value shuffle. Either way the manifest invariant is
     * untouched because it is per-FILE, not per-value (the stage write
     * is partitionBy, so a task holding several values still emits
@@ -1554,7 +1594,7 @@ object SnapshotTable {
   def commitAppendOnceZOrdered(df: DataFrame, path: String, c1: String,
       c2: String, nFiles: Int, batchId: Long,
       writerId: String = ""): Boolean =
-    appendOnce(path, Writers.zOrderLayout(df, c1, c2, nFiles), c1, Nil,
+    appendOnce(path, zOrderLayout(df, c1, c2, nFiles), c1, Nil,
       batchId, writerId)
 
   private def appendOnce(path: String, laid: DataFrame, zcol: String,
@@ -1924,6 +1964,40 @@ object SnapshotTable {
   @volatile private[graft] var ReadBroadcastKeyCap: Long =
     BroadcastKeyCapDefault
 
+  /** A local file's java.nio path from a plain path or a `file:` URI in
+    * any of the spellings Hadoop and Spark render (`file:/x`,
+    * `file:///x`). Any other scheme throws: its bytes are not local.
+    */
+  private def localPath(p: String): java.nio.file.Path =
+    if (p.startsWith("file:")) Paths.get(java.net.URI.create(p))
+    else if (!p.contains(":")) Paths.get(p)
+    else throw new java.io.IOException(s"non-local scheme: $p")
+
+  /** Total row count of parquet data from its FOOTERS — one small
+    * driver metadata read per part file instead of a Spark job (row
+    * counts are schema-independent and exact). Each path is a part
+    * file or a flat table directory, whose visible `.parquet` parts
+    * count. None when no part file is found, a path is non-local, or
+    * any footer fails to read — callers fall back to a scan count.
+    */
+  private[graft] def parquetRowCount(paths: String*): Option[Long] = {
+    def parts(p: java.nio.file.Path): Seq[java.nio.file.Path] =
+      if (!Files.isDirectory(p)) Seq(p)
+      else listDirNames(p).filter { n =>
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.map(p.resolve)
+    try {
+      val files = paths.flatMap(p => parts(localPath(p)))
+      if (files.isEmpty) None
+      else Some(files.map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.parquet.io.LocalInputFile(f))
+        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally reader.close()
+      }.sum)
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   /** Stage the distinct `keyCol` values of `keys` as immutable
     * tombstone files `v<N>-d<i>.parquet`, at most
     * [[TombstoneRowsPerFile]] keys per file (one file for takedowns;
@@ -1954,7 +2028,7 @@ object SnapshotTable {
     // counts are schema-independent and exact — no decode caveats, so
     // no scan fallback needed); drop empty round-robin leftovers
     moved.flatMap { m =>
-      val rows = Writers.parquetRowCount(s"$path/$m").getOrElse(
+      val rows = parquetRowCount(s"$path/$m").getOrElse(
         throw new java.io.IOException(s"unreadable footer: $path/$m"))
       if (rows > 0) Some((m, rows))
       else { Files.deleteIfExists(Paths.get(path, m)); None }

@@ -21,9 +21,13 @@ class PipelineSpec extends SparkSpec {
     processedDir = s"$root/raw/processed",
     limit = 300)
 
+  /** A raw blob as the reference writes it (`json.dumps(data)`): one
+    * JSON array on ONE line.
+    */
   private def writeBlob(dir: String, name: String, msgs: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(dir))
-    Files.writeString(Paths.get(dir, name), msgs.mkString("[", ",\n", "]"))
+    Files.writeString(Paths.get(dir, name),
+      msgs.map(_.replace('\n', ' ')).mkString("[", ",", "]"))
   }
 
   test("transformLoadRaw: multi-blob union, format, archive, malformed skip") {
@@ -75,6 +79,25 @@ class PipelineSpec extends SparkSpec {
       .select("subject", "body").head()
     assert(landed.getString(0) == "  padded subject  ")
     assert(landed.getString(1) == " hello there ")
+  }
+
+  test("extract then transformLoadRaw delivers every new message") {
+    val root = tmp(); val c = cfg(root)
+    val ids = (1 to 6).map(i => s"n$i")
+    val incoming = GmailPipeline.readRaw(spark, Seq(seedBlob(root,
+      ids.map(i => message(i, headers = Seq(("Subject", s"subject $i")))))))
+    assert(GmailPipeline.extract(spark, incoming, c,
+      java.sql.Date.valueOf("2022-12-01")) == 6)
+    // the raw sink writes line-delimited files, several messages each;
+    // every message must reach stage-1, not one per raw file
+    val (rows, moved) = GmailPipeline.transformLoadRaw(spark, c, "day1")
+    assert(moved >= 1)
+    assert(rows == 6)
+    import spark.implicits._
+    val landed = spark.read.option("header", true)
+      .option("multiLine", true).csv(s"${c.stage1Dir}/day1")
+      .select("id", "subject").as[(String, String)].collect().sorted
+    assert(landed.toSeq == ids.map(i => (i, s"subject $i")))
   }
 
   test("extract: anti-join dedup, within-batch dups, budget, state commit") {

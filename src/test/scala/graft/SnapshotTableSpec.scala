@@ -75,10 +75,15 @@ class SnapshotTableSpec extends SparkSpec {
       s"v1's untouched manifest should carry by reference: $refs3")
     assert(!refs3.contains("m-2.json"),
       s"v2's touched manifest must not carry unrewritten: $refs3")
-    // deleting keys that match nothing is a no-op commit
-    val (d0, v0) = SnapshotTable.commitDelete(spark, t, "id",
-      Seq(999999L).toDF("id"), "z")
-    assert(d0 == 0 && v0 == 3)
+    // deleting keys that match nothing is a no-op commit: an id outside
+    // every file's bounds (plans no file), and a tag inside every
+    // file's [p0, p6] bounds (plans every file; the probe finds no row)
+    for ((c, keys) <- Seq("id" -> Seq(999999L).toDF("id"),
+        "tag" -> Seq("p3x").toDF("tag"))) {
+      val (d0, v0) = SnapshotTable.commitDelete(spark, t, c, keys, "z")
+      assert(d0 == 0 && v0 == 3, s"$c: ($d0, $v0)")
+    }
+    assert(SnapshotTable.latestVersion(t).contains(3))
     // pruning stays strict after the delete
     val (cand, read, total) = SnapshotTable.readPruned(spark, t, 100, 200)
     assert(read > 0 && read < total)
@@ -1585,5 +1590,123 @@ class SnapshotTableSpec extends SparkSpec {
       s"narrow bloom path diverged from the full scan:\n$fast\nvs\n$scan")
     assert(fast.forall(f => f.rows == 0 || f.blooms.map(_._1) ==
       Seq("id", "name")), "every live file must carry both sketches")
+  }
+
+  test("zoneMapIngestCommitString and zoneMapIngestCommit2 commit " +
+      "exactly once and keep pruning strict") {
+    // STRING table: two batches + a replay + an empty batch
+    val ts = Files.createTempDirectory("graft-zmis").toString + "/t"
+    val b0 = (0 until 500).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
+    val b1 = (500 until 800).map(i => (i.toLong, f"n$i%04d")).toDF("id", "z")
+    assert(SnapshotTable.commitAppendOnce(b0, ts, "z", 4, 0L, writerId = "w"))
+    assert(SnapshotTable.commitAppendOnce(b1, ts, "z", 4, 1L, writerId = "w"))
+    assert(!SnapshotTable.commitAppendOnce(b1, ts, "z", 4, 1L,
+      writerId = "w"), "a replayed batch must short-circuit")
+    assert(SnapshotTable.commitAppendOnce(b0.filter(col("id") < 0), ts,
+      "z", 4, 2L, writerId = "w"))
+    assert(SnapshotTable.read(spark, ts).count() == 800)
+    val (cs, rs, tots) =
+      SnapshotTable.readPrunedCol(spark, ts, "z", "n0100", "n0199")
+    assert(rs > 0 && rs < tots, s"string probe read $rs of $tots")
+    assert(cs.filter(col("z").between("n0100", "n0199")).count() == 100)
+    // MORTON table: two batches + a replay; both dims prune after
+    val t2 = Files.createTempDirectory("graft-zmi2").toString + "/t"
+    val m0 = (0 until 1000).map(i =>
+      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
+      .toDF("id", "x", "y")
+    val m1 = (1000 until 1600).map(i =>
+      (i.toLong, (i % 50).toDouble, (i * 13 % 997).toDouble))
+      .toDF("id", "x", "y")
+    assert(SnapshotTable.commitAppendOnceZOrdered(m0, t2, "x", "y", 8, 0L,
+      "w"))
+    assert(SnapshotTable.commitAppendOnceZOrdered(m1, t2, "x", "y", 8, 1L,
+      "w"))
+    assert(!SnapshotTable.commitAppendOnceZOrdered(m1, t2, "x", "y", 8, 1L,
+      "w"), "a replayed batch must short-circuit")
+    val all = SnapshotTable.read(spark, t2)
+    assert(all.count() == 1600)
+    for ((c, lo, hi) <- Seq(("x", 5.0, 10.0), ("y", 100.0, 300.0))) {
+      val (cand, read, total) =
+        SnapshotTable.readPrunedCol(spark, t2, c, lo, hi)
+      assert(read > 0 && read < total, s"$c-probe read $read of $total")
+      assert(cand.filter(col(c).between(lo, hi)).count() ==
+        all.filter(col(c).between(lo, hi)).count())
+    }
+  }
+
+  test("full-table takedown leaves an empty, readable, zone-mapped " +
+      "table that a later append revives") {
+    val t = Files.createTempDirectory("graft-zm-takedown").toString + "/t"
+    SnapshotTable.commitAppend(
+      (0 until 200).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
+      t, "z", 4)
+    // every key deleted: zero survivors
+    val (deleted, _) = SnapshotTable.commitDelete(spark, t, "id",
+      (0L until 200L).toDF("id"), "z")
+    assert(deleted == 200)
+    // the table reads as EMPTY, not as a schema-inference crash
+    val empty = SnapshotTable.read(spark, t)
+    assert(empty.count() == 0)
+    assert(empty.columns.toSeq == Seq("id", "z"))
+    // pruned readers degrade to a sound empty plan
+    val (cand, read, _) = SnapshotTable.readPrunedCol(spark, t, "z",
+      0.0, 1000.0)
+    assert(read == 0 && cand.count() == 0)
+    // and the table comes back to life: the next append's manifest
+    // prunes strictly (no stale envelope to select against)
+    SnapshotTable.commitAppend(
+      (500 until 600).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
+      t, "z", 2)
+    assert(SnapshotTable.read(spark, t).count() == 100)
+    val (c2, r2, tot2) = SnapshotTable.readPrunedCol(spark, t, "z",
+      500.0, 540.0)
+    assert(r2 > 0 && r2 < tot2, s"revived probe read $r2 of $tot2")
+    assert(c2.filter(col("z").between(500.0, 540.0)).count() == 41)
+    val (_, r3, _) = SnapshotTable.readPrunedCol(spark, t, "z", 0.0, 100.0)
+    assert(r3 == 0, "the revived table should prune a now-empty range fully")
+  }
+
+  test("an empty micro-batch commits as a no-op ledger entry — " +
+      "first-ever batch and mid-stream, no crash, no table churn") {
+    // the exactly-once ingest commit the q_stream_zonemap_ingest* gates
+    // run, with the checkpoint path as writerId
+    val t = Files.createTempDirectory("graft-zmi-empty").toString + "/t"
+    val ckpt = s"$t-checkpoint"
+    def batch(r: Range, tag: String) =
+      r.map(i => (i.toLong, tag, (i * 37 % 1000).toLong))
+        .toDF("id", "tag", "price")
+    val none = batch(0 until 1, "x").filter(col("id") < 0)
+
+    // FIRST-EVER batch empty: commits, the table reads empty, a probe
+    // plans zero files
+    assert(SnapshotTable.commitAppendOnce(none, t, "price", 4, 0L,
+      writerId = ckpt))
+    assert(!SnapshotTable.commitAppendOnce(none, t, "price", 4, 0L,
+      writerId = ckpt), "replay of a committed empty batch must short-circuit")
+    assert(SnapshotTable.read(spark, t).count() == 0)
+    val (eCand, eRead, _) =
+      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 1000L)
+    assert(eRead == 0 && eCand.count() == 0)
+
+    // a real batch lands next
+    assert(SnapshotTable.commitAppendOnce(batch(0 until 60, "b1"), t,
+      "price", 4, 1L, writerId = ckpt))
+    assert(SnapshotTable.read(spark, t).count() == 60)
+
+    // MID-STREAM empty batch: rows and data files untouched, its replay
+    // short-circuits, pruning stays strict and sound
+    val filesBefore = SnapshotTable.read(spark, t).inputFiles.toSet
+    assert(SnapshotTable.commitAppendOnce(none, t, "price", 4, 2L,
+      writerId = ckpt))
+    assert(!SnapshotTable.commitAppendOnce(none, t, "price", 4, 2L,
+      writerId = ckpt))
+    val after = SnapshotTable.read(spark, t)
+    assert(after.count() == 60)
+    assert(after.inputFiles.toSet == filesBefore)
+    val (cand, read, total) =
+      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 500L)
+    assert(read > 0 && read < total, s"read $read of $total")
+    assert(cand.filter(col("price").between(0, 500)).count() ==
+      after.filter(col("price").between(0, 500)).count())
   }
 }
