@@ -25,15 +25,47 @@ object Relational {
 
   /** Scratch dir for the sink-roundtrip queries. Keyed by (kind,
     * dataset) so repeated runs in one process overwrite in place, and
-    * by process id so two concurrent graft processes on the same
-    * dataset (a bench running next to a verify) never share a
-    * directory — with a shared dir, one process's read could see the
-    * other's half-committed overwrite and aggregate a partially
-    * rewritten directory into a plausible-but-wrong result.
+    * rooted in [[rtRoot]], one directory per process, so two concurrent
+    * graft processes on the same dataset (a bench running next to a
+    * verify) never share a directory — with a shared dir, one process's
+    * read could see the other's half-committed overwrite and aggregate
+    * a partially rewritten directory into a plausible-but-wrong result.
     */
   private[queries] def rtDir(kind: String, d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_rt_${kind}_" +
-      s"${d.hashCode.toHexString}_p${ProcessHandle.current().pid}"
+    rtRoot.resolve(s"${kind}_${d.hashCode.toHexString}").toString
+
+  /** `graft_rt_p<pid>_<random>`, a fresh directory under
+    * `java.io.tmpdir` that a shutdown hook deletes. Creating it first
+    * sweeps the roots (and the older per-gate
+    * `graft_rt_<kind>_<dataset>_p<pid>` directories) of processes that
+    * are no longer alive, which a killed process leaves behind. The
+    * sweep removes only real directories owned by this process's user:
+    * a symlink or another user's entry is left alone, and the delete
+    * never descends through a link. A directory that a concurrent
+    * sweeper removes first is skipped.
+    */
+  private lazy val rtRoot: java.nio.file.Path = {
+    import java.nio.file.{Files, LinkOption, Paths}
+    def quietDelete(p: java.nio.file.Path): Unit =
+      try deleteRecursive(p) catch { case _: java.io.IOException => }
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val root = Files.createTempDirectory(tmp,
+      s"graft_rt_p${ProcessHandle.current().pid}_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => quietDelete(root)))
+    val me = Files.getOwner(root)
+    def ownDir(p: java.nio.file.Path): Boolean =
+      try Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS) &&
+        Files.getOwner(p, LinkOption.NOFOLLOW_LINKS) == me
+      catch { case _: java.io.IOException => false }
+    val st = Files.list(tmp)
+    try st.iterator().forEachRemaining { p =>
+      val name = p.getFileName.toString
+      val pid = name.drop(name.lastIndexOf("_p") + 2).takeWhile(_.isDigit)
+      if (name.startsWith("graft_rt_") && pid.toLongOption.exists(n =>
+        !ProcessHandle.of(n).isPresent) && ownDir(p)) quietDelete(p)
+    } finally st.close()
+    root
+  }
 
   // ---- streaming-drain infrastructure (the q_stream_drain pattern) -------
   // Each drain query runs the REAL micro-batch engine (readStream ->
@@ -263,9 +295,12 @@ object Relational {
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
   }
 
+  /** Deletes `p` and, when it is a directory, everything under it. A
+    * symlink is deleted itself, never followed.
+    */
   private[queries] def deleteRecursive(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.isDirectory(p)) {
+    import java.nio.file.{Files, LinkOption}
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
       val st = Files.list(p)
       try {
         val it = st.iterator()

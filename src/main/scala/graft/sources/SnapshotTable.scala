@@ -4,6 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
+import com.fasterxml.jackson.annotation.JsonInclude.Include.{NON_ABSENT, NON_EMPTY}
+import com.fasterxml.jackson.databind.{DeserializationFeature => DF}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -80,6 +85,15 @@ import org.apache.spark.sql.types._
   * manifests carry into the new snapshot BY REFERENCE. Old snapshots
   * still list the replaced files, so every prior version stays
   * readable bit for bit until [[vacuum]] reclaims it.
+  *
+  * METADATA CODEC: every JSON line under `_log` — a manifest's `file`
+  * lines, a snapshot's `manifest`/`delete`/`pdelete` lines and
+  * `part.json` — is one of the case classes below ([[FileStat]],
+  * [[ManifestRef]], [[DeleteRef]], [[PredDeleteRef]], [[PartitionSpec]])
+  * written and read by ONE Jackson mapper. A line that decodes as none
+  * of its file's kinds throws, naming the file and the line: a
+  * metadata line is never skipped, so a codec fault is loud instead of
+  * a silent row loss. `LATEST` and the claim files are plain text.
   */
 /** A changes-feed consumer's cursor points BELOW the vacuum horizon:
   * the snapshot its incremental fold would diff against no longer
@@ -104,15 +118,26 @@ object SnapshotTable {
     * predicate. A column of unsupported type simply has no ColStat,
     * which planning treats as "unknown: keep".
     */
-  case class ColStat(col: String, t: String,
+  case class ColStat(@JsonProperty("c") col: String, t: String,
       lo: Option[String], hi: Option[String])
 
-  case class FileStat(file: String, zMin: Double, zMax: Double,
-      rows: Long, cols: Seq[ColStat] = Nil,
-      blooms: Seq[(String, String)] = Nil)
-  case class ManifestRef(name: String, zMin: Double, zMax: Double,
-      files: Int, rows: Long, cols: Seq[ColStat] = Nil,
-      blooms: Seq[(String, String)] = Nil)
+  /** Base64 of column `c`'s key bloom (Spark's sketch format). */
+  case class Bloom(c: String, b: String)
+
+  /** One data file: a manifest's `file` line. `cols` and `bf` are
+    * omitted when empty — such a line (written before per-column
+    * stats, or a hand-crafted fixture) reads as "no stats: keep".
+    */
+  case class FileStat(file: String, @JsonProperty("z_min") zMin: Double,
+      @JsonProperty("z_max") zMax: Double, rows: Long,
+      @JsonInclude(NON_EMPTY) cols: Seq[ColStat] = Nil,
+      @JsonProperty("bf") @JsonInclude(NON_EMPTY) blooms: Seq[Bloom] = Nil)
+  /** One manifest: a snapshot's `manifest` line, with its envelope. */
+  case class ManifestRef(@JsonProperty("manifest") name: String,
+      @JsonProperty("z_min") zMin: Double,
+      @JsonProperty("z_max") zMax: Double, files: Int, rows: Long,
+      @JsonInclude(NON_EMPTY) cols: Seq[ColStat] = Nil,
+      @JsonProperty("bf") @JsonInclude(NON_EMPTY) blooms: Seq[Bloom] = Nil)
   /** An equality-delete tombstone: `file` holds the distinct keys of
     * column `key`; it applies to rows in manifests COMMITTED BEFORE
     * version `v` (Iceberg v2's sequence-number scoping) — a later
@@ -121,7 +146,8 @@ object SnapshotTable {
     * (same `v`, same `key`): the refs' recorded row counts are what
     * lets the read path pick broadcast vs shuffle per tombstone.
     */
-  case class DeleteRef(file: String, key: String, rows: Long, v: Int)
+  case class DeleteRef(@JsonProperty("delete") file: String, key: String,
+      rows: Long, v: Int)
 
   /** A PREDICATE merge-on-read delete: rows of stat-carrying column
     * `col` inside the closed range [lo, hi] (canonical forms under tag
@@ -132,8 +158,8 @@ object SnapshotTable {
     * data file or key file is written at all. NULL values never match
     * a range predicate and always survive.
     */
-  case class PredDeleteRef(col: String, t: String, lo: Option[String],
-      hi: Option[String], v: Int)
+  case class PredDeleteRef(@JsonProperty("pdelete") col: String, t: String,
+      lo: Option[String], hi: Option[String], v: Int)
 
   // ---- typed column stats: tags, canonical forms, comparison ---------
 
@@ -385,190 +411,98 @@ object SnapshotTable {
     (v, nonce)
   }
 
-  /** Bounded re-plan-and-retry around a COPY-ON-WRITE commit for the
-    * standing-compactor shape: COW commits fail cleanly on a lost race
-    * ([[claimCow]]), and a background OPTIMIZE racing a stream of
-    * appends should re-plan against the new latest and try again
-    * rather than surface every benign collision. `body` must RE-READ
-    * the latest version itself (every commit in this object does);
-    * between attempts the helper waits for the competing writer's
-    * pointer swing (or its claim release) so the retry re-plans
-    * against settled state instead of spinning into the same claim.
+  // ---- the metadata codec: one Jackson mapper, one case class per line
+
+  /** Writes omit absent Options (and the annotated empty `cols`/`bf`);
+    * reads fail on a missing or null field, an unknown key or trailing
+    * text instead of defaulting them.
     */
-  def withCowRetry[T](path: String, attempts: Int = 3)(body: => T): T = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          left -= 1
-          if (left <= 0) throw e
-          val v0 = latestVersion(path)
-          val t0 = System.currentTimeMillis()
-          while (latestVersion(path) == v0 &&
-            latestVersion(path).exists(v =>
-              Files.exists(claimPath(path, v + 1))) &&
-            System.currentTimeMillis() - t0 < claimStaleMs)
-            Thread.sleep(2)
+  private val Json = JsonMapper.builder().addModule(DefaultScalaModule)
+    .defaultPropertyInclusion(JsonInclude.Value.construct(NON_ABSENT, NON_ABSENT))
+    .enable(DF.FAIL_ON_NULL_FOR_PRIMITIVES, DF.FAIL_ON_NULL_CREATOR_PROPERTIES,
+      DF.FAIL_ON_TRAILING_TOKENS)
+    .build()
+
+  /** A file's line kinds, each named by the key that marks it. */
+  private[sources] type Kinds = Seq[(String, Class[_ <: AnyRef])]
+  private[sources] val ManifestKinds: Kinds = Seq("file" -> classOf[FileStat])
+  private[sources] val SnapshotKinds: Kinds = Seq(
+    "manifest" -> classOf[ManifestRef], "delete" -> classOf[DeleteRef],
+    "pdelete" -> classOf[PredDeleteRef])
+  private[sources] val PartSpecKinds: Kinds =
+    Seq("transform" -> classOf[PartitionSpec])
+
+  private[sources] def encodeLine(line: AnyRef): String =
+    Json.writeValueAsString(line)
+
+  /** Decode each of `file`'s lines as the first of `kinds` whose key it
+    * carries. A line that decodes as none of them throws, naming the
+    * file and the line — never skipped.
+    */
+  private[sources] def decodeLines(file: String, lines: Seq[String],
+      kinds: Kinds): Seq[AnyRef] =
+    lines.zipWithIndex.map { case (line, i) =>
+      try {
+        val node = Json.readTree(line)
+        val cls = kinds.collectFirst { case (k, c) if node.has(k) => c }
+          .getOrElse(throw new IllegalArgumentException(
+            "no key of " + kinds.map(_._1).mkString("/")))
+        Json.treeToValue(node, cls)
+      } catch {
+        case e: Exception => throw new IllegalStateException(
+          s"undecodable metadata line ${i + 1} of $file: ${line.take(200)}",
+          e)
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
-  // ---- manifest / snapshot / tombstone line encoding ------------------
+  private def writeLines(p: java.nio.file.Path, lines: Seq[AnyRef]): Unit =
+    writeAtomic(p, lines.map(encodeLine).mkString("\n"))
 
-  private def esc(s: String): String = s.flatMap {
-    case '\\' => "\\\\"
-    case '"' => "\\\""
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case c => c.toString
-  }
+  private def readLines(p: java.nio.file.Path, kinds: Kinds): Seq[AnyRef] =
+    decodeLines(p.toString,
+      Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toIndexedSeq, kinds)
 
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => b += '\n'
-          case 'r' => b += '\r'
-          case o => b += o
-        }
-        i += 2
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
-  private def colStatJson(c: ColStat): String = (c.lo, c.hi) match {
-    case (Some(l), Some(h)) =>
-      s"""{"c":"${esc(c.col)}","t":"${c.t}","lo":"${esc(l)}",""" +
-        s""""hi":"${esc(h)}"}"""
-    case _ => s"""{"c":"${esc(c.col)}","t":"${c.t}"}"""
-  }
-
-  private def colsJson(cols: Seq[ColStat]): String =
-    if (cols.isEmpty) ""
-    else cols.map(colStatJson).mkString(""","cols":[""", ",", "]")
-
-  // `cols` and `bf` are optional in BOTH lines: manifests written
-  // before the per-column era (and the spec's hand-crafted crash
-  // fixtures) parse to cols=Nil, which planning treats as "no stats:
-  // cannot prune" — old tables stay readable and merely un-prunable
-  // on typed columns. (?s): `esc` leaves U+0085/U+2028/U+2029 raw in a
-  // string bound, and a plain `.` stops at them — the line would fail
-  // to parse and every file it lists would vanish from reads.
-  private val FileLine =
-    ("""(?s)\{"file":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
-      """"rows":(\d+)""" +
-      """(?:,"cols":\[(.*?)\])?(?:,"bf":\[(.*?)\])?\}""").r
-  private val RefLine =
-    ("""(?s)\{"manifest":"([^"]+)","z_min":([^,]+),"z_max":([^,]+),""" +
-      """"files":(\d+),"rows":(\d+)""" +
-      """(?:,"cols":\[(.*?)\])?(?:,"bf":\[(.*?)\])?\}""").r
-  // one JSON string body (escapes included) in the UNROLLED form
-  // normal* (escape normal*)*: java.util.regex recurses once per
-  // repetition of a group, so the alternation form (?:[^"\\]|\\.)*
-  // overflows the stack on a ~1,000-character bound, while this form
-  // recurses once per ESCAPE and parses any length
-  private val JStr = """[^"\\]*(?:\\.[^"\\]*)*"""
-
-  private val BloomRe =
-    raw"""\{"c":"($JStr)","b":"([A-Za-z0-9+/=]*)"\}""".r
-
-  private def bloomsJson(bfs: Seq[(String, String)]): String =
-    if (bfs.isEmpty) ""
-    else bfs.map { case (c, b) => s"""{"c":"${esc(c)}","b":"$b"}""" }
-      .mkString(""","bf":[""", ",", "]")
-
-  private def parseBlooms(payload: String): Seq[(String, String)] =
-    if (payload == null || payload.isEmpty) Nil
-    else BloomRe.findAllMatchIn(payload)
-      .map(m => (unesc(m.group(1)), m.group(2))).toIndexedSeq
-  private val ColRe =
-    (raw"""\{"c":"($JStr)","t":"([a-z]+)"""" +
-      raw"""(?:,"lo":"($JStr)","hi":"($JStr)")?\}""").r
-
-  private def parseCols(payload: String): Seq[ColStat] =
-    if (payload == null || payload.isEmpty) Nil
-    else ColRe.findAllMatchIn(payload).map { m =>
-      ColStat(unesc(m.group(1)), m.group(2),
-        Option(m.group(3)).map(unesc), Option(m.group(4)).map(unesc))
-    }.toIndexedSeq
-
-  private def manifestLines(stats: Seq[FileStat]): String =
-    stats.map(f =>
-      s"""{"file":"${f.file}","z_min":${f.zMin},"z_max":${f.zMax},""" +
-        s""""rows":${f.rows}${colsJson(f.cols)}${bloomsJson(f.blooms)}}""")
-      .mkString("\n")
+  private def writeManifest(path: String, name: String,
+      stats: Seq[FileStat]): Unit =
+    writeLines(logDir(path).resolve(name), stats)
 
   private def parseManifest(path: String, name: String): Seq[FileStat] =
-    Files.readAllLines(logDir(path).resolve(name), StandardCharsets.UTF_8)
-      .asScala.toIndexedSeq.collect {
-        case FileLine(f, mn, mx, n, cols, bfs) =>
-          FileStat(f, mn.toDouble, mx.toDouble, n.toLong, parseCols(cols),
-            parseBlooms(bfs))
-      }
+    readLines(logDir(path).resolve(name), ManifestKinds)
+      .map { case f: FileStat => f }
 
-  private def snapshotLines(refs: Seq[ManifestRef]): String =
-    refs.map(refLine).mkString("\n")
-
-  private def refLine(r: ManifestRef): String =
-    s"""{"manifest":"${r.name}","z_min":${r.zMin},"z_max":${r.zMax},""" +
-      s""""files":${r.files},"rows":${r.rows}${colsJson(r.cols)}""" +
-      bloomsJson(r.blooms) + "}"
-
-  private val DelLine =
-    """\{"delete":"([^"]+)","key":"([^"]+)","rows":(\d+),"v":(\d+)\}""".r
-
-  private def delLine(d: DeleteRef): String =
-    s"""{"delete":"${d.file}","key":"${d.key}","rows":${d.rows},""" +
-      s""""v":${d.v}}"""
-
-  private val PredDelLine =
-    (raw"""\{"pdelete":"($JStr)","t":"([a-z]+)"""" +
-      raw"""(?:,"lo":"($JStr)")?(?:,"hi":"($JStr)")?""" +
-      ""","v":(\d+)\}""").r
-
-  private def predDelLine(d: PredDeleteRef): String =
-    s"""{"pdelete":"${esc(d.col)}","t":"${d.t}"""" +
-      d.lo.map(l => s""","lo":"${esc(l)}"""").getOrElse("") +
-      d.hi.map(h => s""","hi":"${esc(h)}"""").getOrElse("") +
-      s""","v":${d.v}}"""
-
-  /** The raw snapshot lines of `v` — manifest refs AND tombstone refs,
-    * carried verbatim by append commits so a tombstone stays visible
-    * until a compaction materializes it.
+  /** A snapshot file decoded once: its manifest list and the tombstones
+    * that append commits carry forward until a compaction materializes
+    * them.
     */
-  private def rawSnapshotLines(path: String, v: Int): Seq[String] = {
+  private case class Snap(refs: Seq[ManifestRef],
+      dels: Seq[DeleteRef] = Nil, pdels: Seq[PredDeleteRef] = Nil)
+
+  private def readSnap(path: String, v: Int): Snap = {
     val p = logDir(path).resolve(s"v$v")
     require(Files.exists(p), s"snapshot v$v does not exist (vacuumed?)")
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toIndexedSeq
+    val lines = readLines(p, SnapshotKinds)
+    Snap(lines.collect { case r: ManifestRef => r },
+      lines.collect { case d: DeleteRef => d },
+      lines.collect { case d: PredDeleteRef => d })
   }
+
+  /** No merge-on-read tombstones: the manifests alone describe the rows. */
+  private def tombstoneFree(s: Snap): Boolean = s.dels.isEmpty && s.pdels.isEmpty
+
+  private def writeSnap(path: String, v: Int, s: Snap): Unit =
+    writeLines(logDir(path).resolve(s"v$v"), s.refs ++ s.dels ++ s.pdels)
+
+  private def snapOf(path: String, version: Option[Int]): Snap =
+    readSnap(path, version.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed snapshot in $path")))
 
   /** The equality-delete tombstones of `version`'s snapshot. */
   def deleteRefs(path: String, version: Option[Int] = None)
-      : Seq[DeleteRef] = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    rawSnapshotLines(path, v).collect {
-      case DelLine(f, k, n, dv) => DeleteRef(f, k, n.toLong, dv.toInt)
-    }
-  }
+      : Seq[DeleteRef] = snapOf(path, version).dels
 
   /** The predicate-delete tombstones of `version`'s snapshot. */
   def predDeleteRefs(path: String, version: Option[Int] = None)
-      : Seq[PredDeleteRef] = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    rawSnapshotLines(path, v).collect {
-      case PredDelLine(c, t, lo, hi, dv) =>
-        PredDeleteRef(unesc(c), t, Option(lo).map(unesc),
-          Option(hi).map(unesc), dv.toInt)
-    }
-  }
+      : Seq[PredDeleteRef] = snapOf(path, version).pdels
 
   /** The commit version a manifest's FILES belong to for tombstone
     * scoping ("m-5.json" and the COW rewrite "m-5-r2.json" are both 5
@@ -580,18 +514,7 @@ object SnapshotTable {
 
   /** The manifest list of `version` (or latest). */
   def snapshot(path: String, version: Option[Int] = None)
-      : Seq[ManifestRef] = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val p = logDir(path).resolve(s"v$v")
-    require(Files.exists(p), s"snapshot v$v does not exist (vacuumed?)")
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toIndexedSeq
-      .collect {
-        case RefLine(m, mn, mx, nf, nr, cols, bfs) =>
-          ManifestRef(m, mn.toDouble, mx.toDouble, nf.toInt, nr.toLong,
-            parseCols(cols), parseBlooms(bfs))
-      }
-  }
+      : Seq[ManifestRef] = snapOf(path, version).refs
 
   /** The manifest's envelope over its files: legacy double z bounds
     * plus the per-column merge. A column's envelope exists only when
@@ -615,17 +538,17 @@ object SnapshotTable {
     * would make envelope-level bloom pruning unsound.
     */
   private def bloomEnvelope(live: Seq[FileStat])
-      : Seq[(String, String)] = {
+      : Seq[Bloom] = {
     val enc = java.util.Base64.getEncoder
-    live.head.blooms.map(_._1).flatMap { c =>
-      val per = live.map(f => f.blooms.find(_._1 == c))
+    live.head.blooms.map(_.c).flatMap { c =>
+      val per = live.map(f => f.blooms.find(_.c == c))
       if (per.exists(_.isEmpty)) None
       else try {
-        val bfs = per.map(b => readBloom(b.get._2))
+        val bfs = per.map(b => readBloom(b.get.b))
         val merged = bfs.reduce { (a, b) => a.mergeInPlace(b); a }
         val bos = new java.io.ByteArrayOutputStream()
         merged.writeTo(bos)
-        Some(c -> enc.encodeToString(bos.toByteArray))
+        Some(Bloom(c, enc.encodeToString(bos.toByteArray)))
       } catch { case _: Exception => None } // incompatible: no envelope
     }
   }
@@ -894,13 +817,13 @@ object SnapshotTable {
 
   private def fileBlooms(s: SparkSession, path: String,
       names: Seq[String], bloomCols: Seq[String])
-      : Map[String, Seq[(String, String)]] = {
+      : Map[String, Seq[Bloom]] = {
     val enc = java.util.Base64.getEncoder
     fileBloomsDF(s, path, names, bloomCols)
       .collect().map { r =>
         r.getString(0) -> bloomCols.zipWithIndex.flatMap { case (c, i) =>
           Option(r.get(1 + i)).map(b =>
-            c -> enc.encodeToString(b.asInstanceOf[Array[Byte]]))
+            Bloom(c, enc.encodeToString(b.asInstanceOf[Array[Byte]])))
         }
       }.toMap
   }
@@ -1084,16 +1007,6 @@ object SnapshotTable {
     (collectFileStats(s, path, names, zcol, bloomCols, schema),
       fileColStats(s, path, names, zcol, bloomCols))
 
-  private[graft] def bloomFastForTest(s: SparkSession, path: String,
-      names: Seq[String], zcol: String, schema: StructType,
-      bloomCols: Seq[String]): Seq[FileStat] =
-    collectFileStats(s, path, names, zcol, bloomCols, schema)
-
-  private[graft] def bloomScanForTest(s: SparkSession, path: String,
-      names: Seq[String], zcol: String, bloomCols: Seq[String])
-      : Seq[FileStat] =
-    fileColStats(s, path, names, zcol, bloomCols)
-
   /** Expected distinct keys per file for the manifest blooms — sizes
     * the sketch (Spark's 2-arg bloom_agg allocates items×8 bits, ~2%
     * FPP at the expectation). Overshooting only raises the false-
@@ -1163,7 +1076,7 @@ object SnapshotTable {
           }
           val blooms = bloomCols.zipWithIndex.flatMap { case (c, i) =>
             Option(r.get(2 + 2 * nF + i)).map(b =>
-              c -> enc.encodeToString(b.asInstanceOf[Array[Byte]]))
+              Bloom(c, enc.encodeToString(b.asInstanceOf[Array[Byte]])))
           }
           val (zmn, zmx) = legacyZ(cols, zcol)
           FileStat(n, zmn, zmx, rows, cols, blooms)
@@ -1224,10 +1137,10 @@ object SnapshotTable {
     val stats = stageLaidOut(laid, path, v, zcol, bloomCols, nonce)
     nonce.foreach(n => requireClaimHeld(path, v, n))
     val mName = s"m-$v.json"
-    writeAtomic(logDir(path).resolve(mName), manifestLines(stats))
-    val prevLines = prev.map(p => rawSnapshotLines(path, p)).getOrElse(Nil)
-    writeAtomic(logDir(path).resolve(s"v$v"),
-      (prevLines :+ refLine(envelope(stats, mName))).mkString("\n"))
+    writeManifest(path, mName, stats)
+    val prevSnap = prev.map(readSnap(path, _)).getOrElse(Snap(Nil))
+    writeSnap(path, v,
+      prevSnap.copy(refs = prevSnap.refs :+ envelope(stats, mName)))
     swingPointer(path, v, prov._1, prov._2)
   }
 
@@ -1317,9 +1230,7 @@ object SnapshotTable {
     if (Files.exists(p)) return
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(s"part-${newNonce()}.tmp")
-    Files.write(tmp, (s"""{"transform":"${spec.transform}","col":""" +
-      s""""${esc(spec.col)}","n":${spec.n}}""")
-      .getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, encodeLine(spec).getBytes(StandardCharsets.UTF_8))
     try Files.move(tmp, p)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -1342,15 +1253,10 @@ object SnapshotTable {
   def readPartitionSpec(path: String): Option[PartitionSpec] = {
     val p = partSpecPath(path)
     if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      val Re =
-        raw"""\{"transform":"(\w+)","col":"($JStr)","n":(\d+)\}""".r
-      s.trim match {
-        case Re(t, c, n) => Some(PartitionSpec(t, unesc(c), n.toInt))
-        case _ => throw new IllegalStateException(
-          s"unparseable partition spec in $p: $s")
-      }
+    else readLines(p, PartSpecKinds) match {
+      case Seq(spec: PartitionSpec) => Some(spec)
+      case lines => throw new IllegalStateException(
+        s"$p holds ${lines.size} partition specs, not one")
     }
   }
 
@@ -1468,11 +1374,10 @@ object SnapshotTable {
           Some(valOf(f.file).toString), Some(valOf(f.file).toString))))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(stats))
-      val prevLines = prevPtr.map(p => rawSnapshotLines(path, p._1))
-        .getOrElse(Nil)
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (prevLines :+ refLine(envelope(stats, mName))).mkString("\n"))
+      writeManifest(path, mName, stats)
+      val prevSnap = prevPtr.map(p => readSnap(path, p._1)).getOrElse(Snap(Nil))
+      writeSnap(path, v,
+        prevSnap.copy(refs = prevSnap.refs :+ envelope(stats, mName)))
       val (cb, cw) = carriedBatchId(prevPtr)
       swingPointer(path, v, cb, cw)
       v
@@ -1498,14 +1403,14 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
     require(readPartitionSpec(path).nonEmpty,
       s"dropPartition: $path has no partition spec")
-    require(deleteRefs(path, Some(prev)).isEmpty &&
-        predDeleteRefs(path, Some(prev)).isEmpty,
+    val prevSnap = readSnap(path, prev)
+    require(tombstoneFree(prevSnap),
       "dropPartition: snapshot carries merge-on-read tombstones - run " +
         "compactCommit to materialize them first")
     val vs = value.toString
     val (v, nonce) = claimCow(path, prev, "dropPartition")
     try {
-      val refs = snapshot(path, Some(prev))
+      val refs = prevSnap.refs
       // envelope test: a manifest whose _pt envelope excludes the value
       // carries by reference, unparsed — the pyramid payoff
       def mayHold(cols: Seq[ColStat]): Boolean =
@@ -1537,7 +1442,7 @@ object SnapshotTable {
           else {
             ri += 1
             val rn = s"m-${manifestVersion(ref.name)}-r$v-$ri.json"
-            writeAtomic(logDir(path).resolve(rn), manifestLines(kept))
+            writeManifest(path, rn, kept)
             Some(envelope(kept, rn))
           }
         }
@@ -1546,7 +1451,7 @@ object SnapshotTable {
       requireClaimHeld(path, v, nonce)
       readSchema(path, prev).foreach(sc =>
         writeAtomic(schemaPath(path, v), sc.json))
-      writeAtomic(logDir(path).resolve(s"v$v"), snapshotLines(carried))
+      writeSnap(path, v, Snap(carried))
       swingPointerCarried(path, v)
       (rows, filesDropped, v)
     } finally releaseClaim(path, v)
@@ -1640,9 +1545,8 @@ object SnapshotTable {
         zcol, Nil, Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(newStats))
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        snapshotLines(Seq(envelope(newStats, mName))))
+      writeManifest(path, mName, newStats)
+      writeSnap(path, v, Snap(Seq(envelope(newStats, mName))))
       swingPointerCarried(path, v)
       (filesBefore, newStats.size, v)
     } finally releaseClaim(path, v)
@@ -1670,10 +1574,8 @@ object SnapshotTable {
       : (Int, Int, Int) = {
     val prev = latestVersion(path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val dels = deleteRefs(path, Some(prev))
-    val pdels = predDeleteRefs(path, Some(prev))
-    val byManifest = snapshot(path, Some(prev))
-      .map(r => r -> parseManifest(path, r.name))
+    val prevSnap = readSnap(path, prev)
+    val byManifest = prevSnap.refs.map(r => r -> parseManifest(path, r.name))
     val isSmall = (f: FileStat) => f.rows < smallThresholdRows
     val small = byManifest.flatMap { case (r, fs) =>
       fs.filter(isSmall).map(f => (manifestVersion(r.name), f)) }
@@ -1682,7 +1584,7 @@ object SnapshotTable {
     val (v, nonce) = claimCow(path, prev, "compactSmallFiles")
     try {
       sweepUncommitted(path, v)
-      val df = readApplying(spark, path, prev,
+      val df = readApplying(spark, path, prev, prevSnap,
         small.map { case (mv, f) => (mv, s"$path/${f.file}") })
       val smallRows = small.map(_._2.rows).sum
       val nFiles = math.max(1L,
@@ -1693,7 +1595,7 @@ object SnapshotTable {
         zcol, Nil, Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(newStats))
+      writeManifest(path, mName, newStats)
       val smallNames = small.map(_._2.file).toSet
       var ri = 0
       val carried = byManifest.flatMap { case (ref, fs) =>
@@ -1708,16 +1610,14 @@ object SnapshotTable {
           // rewrites, which run tombstone-free by contract
           ri += 1
           val rn = s"m-${manifestVersion(ref.name)}-r$v-$ri.json"
-          writeAtomic(logDir(path).resolve(rn), manifestLines(kept))
+          writeManifest(path, rn, kept)
           Some(envelope(kept, rn))
         }
       }
       // carried files still need their tombstones; the compacted rows
       // had theirs applied in the rewrite
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (carried.map(refLine) ++ dels.map(delLine) ++
-          pdels.map(predDelLine) :+
-          refLine(envelope(newStats, mName))).mkString("\n"))
+      writeSnap(path, v,
+        prevSnap.copy(refs = carried :+ envelope(newStats, mName)))
       swingPointerCarried(path, v)
       (small.size, carriedCount, v)
     } finally releaseClaim(path, v)
@@ -1802,10 +1702,10 @@ object SnapshotTable {
     * spread across a table intersect every file's key RANGE but almost
     * no file's key SET).
     */
-  private def bloomHitsKeys(blooms: Seq[(String, String)],
+  private def bloomHitsKeys(blooms: Seq[Bloom],
       keyCol: String, plan: KeyPlan): Boolean =
-    (blooms.find(_._1 == keyCol), plan.hashes) match {
-      case (Some((_, b64)), Some(hs)) if hs.nonEmpty =>
+    (blooms.find(_.c == keyCol), plan.hashes) match {
+      case (Some(Bloom(_, b64)), Some(hs)) if hs.nonEmpty =>
         try { val bf = readBloom(b64); hs.exists(bf.mightContainLong) }
         catch { case _: Exception => true } // unreadable: keep
       case _ => true
@@ -1856,14 +1756,14 @@ object SnapshotTable {
       : (Long, Long, Long, Int) = {
     val prev = latestVersion(path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    require(deleteRefs(path, Some(prev)).isEmpty &&
-        predDeleteRefs(path, Some(prev)).isEmpty,
+    val prevSnap = readSnap(path, prev)
+    require(tombstoneFree(prevSnap),
       "snapshot carries merge-on-read tombstones - run compactCommit " +
         "to materialize them before a copy-on-write rewrite")
     val (v, nonce) = claimCow(path, prev, "commitDelete")
     try {
       val plan = planKeys(keys, keyCol, collectKeyCap, broadcastKeyCap)
-      val refs = snapshot(path, Some(prev))
+      val refs = prevSnap.refs
       val total = refs.map(_.files.toLong).sum
       // pyramid descent: envelope-pruned manifests are never parsed
       val parsedCand = refs
@@ -1897,7 +1797,7 @@ object SnapshotTable {
         .map(_.rows).sum - survStats.map(_.rows).sum
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(survStats))
+      writeManifest(path, mName, survStats)
       val parsedOf = parsedCand.toMap
       var ri = 0
       val carried = refs.flatMap { ref =>
@@ -1910,13 +1810,12 @@ object SnapshotTable {
             else {
               ri += 1
               val rn = s"m-$v-r$ri.json"
-              writeAtomic(logDir(path).resolve(rn), manifestLines(kept))
+              writeManifest(path, rn, kept)
               Some(envelope(kept, rn))
             }
         }
       }
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        snapshotLines(carried :+ envelope(survStats, mName)))
+      writeSnap(path, v, Snap(carried :+ envelope(survStats, mName)))
       swingPointerCarried(path, v)
       (rowsDeleted, planned, total, v)
     } finally releaseClaim(path, v)
@@ -2065,9 +1964,9 @@ object SnapshotTable {
       // keeps resolving this version without inference
       readSchema(path, prev).foreach(sc =>
         writeAtomic(schemaPath(path, v), sc.json))
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (rawSnapshotLines(path, prev) ++ staged.map { case (dst, nk) =>
-          delLine(DeleteRef(dst, keyCol, nk, v)) }).mkString("\n"))
+      val prevSnap = readSnap(path, prev)
+      writeSnap(path, v, prevSnap.copy(dels = prevSnap.dels ++
+        staged.map { case (dst, nk) => DeleteRef(dst, keyCol, nk, v) }))
       swingPointerCarried(path, v)
       (n, v)
     } finally releaseClaim(path, v)
@@ -2116,8 +2015,8 @@ object SnapshotTable {
       sweepUncommitted(path, v)
       requireClaimHeld(path, v, nonce)
       writeAtomic(schemaPath(path, v), sc.json)
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (rawSnapshotLines(path, prev) :+ predDelLine(ref)).mkString("\n"))
+      val prevSnap = readSnap(path, prev)
+      writeSnap(path, v, prevSnap.copy(pdels = prevSnap.pdels :+ ref))
       swingPointerCarried(path, v)
       v
     } finally releaseClaim(path, v)
@@ -2162,12 +2061,12 @@ object SnapshotTable {
         Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(stats))
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (rawSnapshotLines(path, prev) ++
-          staged.map { case (dst, nk) =>
-            delLine(DeleteRef(dst, key, nk, v)) } :+
-          refLine(envelope(stats, mName))).mkString("\n"))
+      writeManifest(path, mName, stats)
+      val prevSnap = readSnap(path, prev)
+      writeSnap(path, v, prevSnap.copy(
+        refs = prevSnap.refs :+ envelope(stats, mName),
+        dels = prevSnap.dels ++
+          staged.map { case (dst, nk) => DeleteRef(dst, key, nk, v) }))
       swingPointerCarried(path, v)
       (n, v)
     } finally releaseClaim(path, v)
@@ -2215,12 +2114,12 @@ object SnapshotTable {
         Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(stats))
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        (rawSnapshotLines(path, prev) ++
-          staged.map { case (dst, nk) =>
-            delLine(DeleteRef(dst, key, nk, v)) } :+
-          refLine(envelope(stats, mName))).mkString("\n"))
+      writeManifest(path, mName, stats)
+      val prevSnap = readSnap(path, prev)
+      writeSnap(path, v, prevSnap.copy(
+        refs = prevSnap.refs :+ envelope(stats, mName),
+        dels = prevSnap.dels ++
+          staged.map { case (dst, nk) => DeleteRef(dst, key, nk, v) }))
       swingPointer(path, v, batchId, writerId)
       true
     } finally releaseClaim(path, v)
@@ -2269,8 +2168,8 @@ object SnapshotTable {
       : (Int, Int, Long, Long, Int) = {
     val prev = latestVersion(path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    require(deleteRefs(path, Some(prev)).isEmpty &&
-        predDeleteRefs(path, Some(prev)).isEmpty,
+    val prevSnap = readSnap(path, prev)
+    require(tombstoneFree(prevSnap),
       "snapshot carries merge-on-read tombstones - run compactCommit " +
         "to materialize them before a copy-on-write rewrite")
     val changeKeys = changes.select(col(key))
@@ -2288,7 +2187,7 @@ object SnapshotTable {
       // anti-join the same plan, so deleted rows drop with replaced ones
       val touchKeys = deleteKeys.fold(changeKeys)(changeKeys.unionByName(_))
       val plan = planKeys(touchKeys, key, collectKeyCap, broadcastKeyCap)
-      val refs = snapshot(path, Some(prev))
+      val refs = prevSnap.refs
       val total = refs.map(_.files.toLong).sum
       val parsedCand = refs
         .filter(r => boundsHitKeys(statFor(r.cols, key), plan) &&
@@ -2334,7 +2233,7 @@ object SnapshotTable {
         math.max(1, touched.size), Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
-      writeAtomic(logDir(path).resolve(mName), manifestLines(newStats))
+      writeManifest(path, mName, newStats)
       val parsedOf = parsedCand.toMap
       var ri = 0
       val carried = refs.flatMap { ref =>
@@ -2347,13 +2246,12 @@ object SnapshotTable {
             else {
               ri += 1
               val rn = s"m-$v-r$ri.json"
-              writeAtomic(logDir(path).resolve(rn), manifestLines(kept))
+              writeManifest(path, rn, kept)
               Some(envelope(kept, rn))
             }
         }
       }
-      writeAtomic(logDir(path).resolve(s"v$v"),
-        snapshotLines(carried :+ envelope(newStats, mName)))
+      writeSnap(path, v, Snap(carried :+ envelope(newStats, mName)))
       swingPointerCarried(path, v)
       (touched.size, (total - touched.size).toInt, planned, total, v)
     } finally releaseClaim(path, v)
@@ -2381,11 +2279,11 @@ object SnapshotTable {
   }
 
   /** Read `(manifestVersion, filePath)` pairs under `v`'s schema and
-    * apply `v`'s tombstones with sequence scoping: a tombstone at
-    * version d deletes only from files whose manifest committed before
-    * d. Files sharing an applicable-tombstone set read as ONE scan (at
-    * most #tombstones+1 groups — no tombstones means the single-scan
-    * fast path). PREDICATE tombstones apply as residual filters (null
+    * apply the tombstones of `snap` (`v`'s decoded snapshot) with
+    * sequence scoping: a tombstone at version d deletes only from files
+    * whose manifest committed before d. Files sharing an
+    * applicable-tombstone set read as ONE scan (at most #tombstones+1
+    * groups — no tombstones means the single-scan fast path). PREDICATE tombstones apply as residual filters (null
     * values never match a range and survive); equality tombstones as
     * anti-joins against their key files — broadcast while the ref's
     * recorded key count fits [[ReadBroadcastKeyCap]], shuffle beyond
@@ -2394,17 +2292,16 @@ object SnapshotTable {
     * broadcast is an OOM, not a plan).
     */
   private def readApplying(spark: SparkSession, path: String, v: Int,
-      pairs: Seq[(Int, String)]): DataFrame = {
-    val dels = deleteRefs(path, Some(v))
-    val pdels = predDeleteRefs(path, Some(v))
-    if (dels.isEmpty && pdels.isEmpty)
+      snap: Snap, pairs: Seq[(Int, String)]): DataFrame = {
+    val Snap(_, dels, pdels) = snap
+    if (tombstoneFree(snap))
       readFiles(spark, path, v, pairs.map(_._2))
     else pairs.groupBy { case (mv, _) =>
         (dels.filter(_.v > mv).map(_.file).sorted,
           pdels.filter(_.v > mv)) }
       .toSeq
       .sortBy { case ((fs, ps), _) =>
-        fs.mkString(",") + "|" + ps.map(predDelLine).mkString(",") }
+        fs.mkString(",") + "|" + ps.map(encodeLine).mkString(",") }
       .map { case ((delFiles, pds), grp) =>
         val base = readFiles(spark, path, v, grp.map(_._2))
         val predApplied = pds.foldLeft(base) { (df, pd) =>
@@ -2429,9 +2326,9 @@ object SnapshotTable {
       }.reduce(_ unionByName _)
   }
 
-  private def manifestFilePairs(path: String, v: Int)
+  private def manifestFilePairs(path: String, refs: Seq[ManifestRef])
       : Seq[(Int, String)] =
-    snapshot(path, Some(v)).flatMap(r =>
+    refs.flatMap(r =>
       parseManifest(path, r.name).map(f =>
         (manifestVersion(r.name), s"$path/${f.file}")))
 
@@ -2443,7 +2340,8 @@ object SnapshotTable {
       version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    readApplying(spark, path, v, manifestFilePairs(path, v))
+    val snap = readSnap(path, v)
+    readApplying(spark, path, v, snap, manifestFilePairs(path, snap.refs))
   }
 
   /** ZONE-PRUNED snapshot read on the legacy double channel:
@@ -2461,7 +2359,8 @@ object SnapshotTable {
       : (DataFrame, Long, Long) = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val refs = snapshot(path, Some(v))
+    val snap = readSnap(path, v)
+    val refs = snap.refs
     val total = refs.map(_.files.toLong).sum
     val hitRefs = refs.filter(r => r.zMin <= hi && r.zMax >= lo)
     val hit = hitRefs.flatMap(r =>
@@ -2470,7 +2369,7 @@ object SnapshotTable {
           .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
       .sortBy(_._2)
     val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, hit)
+      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
       else read(spark, path, Some(v)).filter(lit(false))
     (df, hit.length.toLong, total)
   }
@@ -2493,7 +2392,8 @@ object SnapshotTable {
       : (DataFrame, Long, Long) = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val refs = snapshot(path, Some(v))
+    val snap = readSnap(path, v)
+    val refs = snap.refs
     val total = refs.map(_.files.toLong).sum
     val tag = readSchema(path, v).flatMap(sc =>
         sc.fields.find(_.name == colName).flatMap(f => colTag(f.dataType)))
@@ -2517,7 +2417,7 @@ object SnapshotTable {
             .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
           .sortBy(_._2)
         val df =
-          if (hit.nonEmpty) readApplying(spark, path, v, hit)
+          if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
           else read(spark, path, Some(v)).filter(lit(false))
         (df, hit.length.toLong, total)
     }
@@ -2537,7 +2437,8 @@ object SnapshotTable {
       : (DataFrame, Long, Long) = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val refs = snapshot(path, Some(v))
+    val snap = readSnap(path, v)
+    val refs = snap.refs
     val total = refs.map(_.files.toLong).sum
     val sc = readSchema(path, v)
     // (col, tag, canonical lo, canonical hi) — a column with no
@@ -2564,7 +2465,7 @@ object SnapshotTable {
         .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
       .sortBy(_._2)
     val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, hit)
+      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
       else read(spark, path, Some(v)).filter(lit(false))
     (df, hit.length.toLong, total)
   }
@@ -2592,7 +2493,8 @@ object SnapshotTable {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
     val plan = planKeys(keys, keyCol, collectKeyCap, broadcastKeyCap)
-    val refs = snapshot(path, Some(v))
+    val snap = readSnap(path, v)
+    val refs = snap.refs
     val total = refs.map(_.files.toLong).sum
     val hit = refs
       .filter(r => boundsHitKeys(statFor(r.cols, keyCol), plan) &&
@@ -2604,7 +2506,7 @@ object SnapshotTable {
         .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
       .sortBy(_._2)
     val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, hit)
+      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
       else read(spark, path, Some(v)).filter(lit(false))
     (df, hit.length.toLong, total)
   }
@@ -2684,7 +2586,7 @@ object SnapshotTable {
   }
 
   private def testHits(ct: CompiledTest, cols: Seq[ColStat],
-      blooms: Seq[(String, String)]): Boolean = ct match {
+      blooms: Seq[Bloom]): Boolean = ct match {
     case CAlways => true
     case CRange(c, t, l, h) => statFor(cols, c) match {
       case None => true
@@ -2706,8 +2608,8 @@ object SnapshotTable {
           case Some(ColStat(_, _, None, None)) => false
           case Some(_) => true
         }
-        boundsHit && ((blooms.find(_._1 == c), hashes) match {
-          case (Some((_, b64)), Some(hs)) =>
+        boundsHit && ((blooms.find(_.c == c), hashes) match {
+          case (Some(Bloom(_, b64)), Some(hs)) =>
             try { val bf = readBloom(b64); hs.exists(bf.mightContainLong) }
             catch { case _: Exception => true } // unreadable: keep
           case _ => true
@@ -2726,7 +2628,7 @@ object SnapshotTable {
       preds: Seq[PredDnf]): (Seq[(Int, String)], Long) = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val refs = snapshot(path, Some(v))
+    val refs = readSnap(path, v).refs
     val total = refs.map(_.files.toLong).sum
     val sc = readSchema(path, v)
     def tagOf(c: String): Option[String] =
@@ -2735,7 +2637,7 @@ object SnapshotTable {
         .orElse(refs.flatMap(r => statFor(r.cols, c)).headOption.map(_.t))
     val compiled: Seq[Seq[Seq[CompiledTest]]] = preds.map(_.disjuncts
       .map(_.map(t => compileTest(t, tagOf))))
-    def hits(cols: Seq[ColStat], blooms: Seq[(String, String)]): Boolean =
+    def hits(cols: Seq[ColStat], blooms: Seq[Bloom]): Boolean =
       compiled.forall(_.exists(_.forall(ct => testHits(ct, cols, blooms))))
     val hit = refs.filter(r => hits(r.cols, r.blooms))
       .flatMap(r => parseManifest(path, r.name)
@@ -2753,7 +2655,7 @@ object SnapshotTable {
       pairs: Seq[(Int, String)]): DataFrame = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    if (pairs.nonEmpty) readApplying(spark, path, v, pairs)
+    if (pairs.nonEmpty) readApplying(spark, path, v, readSnap(path, v), pairs)
     else read(spark, path, Some(v)).filter(lit(false))
   }
 
@@ -2794,12 +2696,11 @@ object SnapshotTable {
   def statsAggCols(path: String, colNames: Seq[String],
       version: Option[Int] = None)
       : (Long, Map[String, Option[(String, String, String)]]) = {
-    require(deleteRefs(path, version.orElse(latestVersion(path))).isEmpty
-        && predDeleteRefs(path,
-          version.orElse(latestVersion(path))).isEmpty,
+    val snap = snapOf(path, version)
+    require(tombstoneFree(snap),
       "statsAggCol: snapshot carries merge-on-read tombstones whose " +
         "rows the manifest stats still count - run compactCommit first")
-    val stats = snapshot(path, version)
+    val stats = snap.refs
       .flatMap(r => parseManifest(path, r.name)).filter(_.rows > 0)
     require(stats.nonEmpty, s"statsAggCol: snapshot of $path holds no rows")
     val rows = stats.map(_.rows).sum
@@ -2856,18 +2757,22 @@ object SnapshotTable {
           "(vacuumed) — reset the cursor to 0 and rebuild from the " +
           "empty-table baseline (readChanges(0, latest) needs no " +
           "earlier snapshot)"))
-    Seq(fromV, toV).filter(_ > 0).foreach(v => require(
-      deleteRefs(path, Some(v)).isEmpty &&
-        predDeleteRefs(path, Some(v)).isEmpty,
-      s"readChanges: v$v carries merge-on-read tombstones - run " +
-        "compactCommit to materialize them first"))
+    val refsAt = Seq(fromV, toV).distinct.map { v =>
+      if (v == 0) v -> Seq.empty[ManifestRef]
+      else {
+        val snap = readSnap(path, v)
+        require(tombstoneFree(snap),
+          s"readChanges: v$v carries merge-on-read tombstones - run " +
+            "compactCommit to materialize them first")
+        v -> snap.refs
+      }
+    }.toMap
     def fileSet(v: Int): Set[String] =
-      if (v == 0) Set.empty
-      else snapshot(path, Some(v)).flatMap(r => parseManifest(path, r.name))
+      refsAt(v).flatMap(r => parseManifest(path, r.name))
         .filter(_.rows > 0).map(_.file).toSet
     val from = fileSet(fromV)
     val to = fileSet(toV)
-    val total = snapshot(path, Some(toV)).map(_.files.toLong).sum
+    val total = refsAt(toV).map(_.files.toLong).sum
     val addedF = (to -- from).toIndexedSeq.sorted.map(n => s"$path/$n")
     val removedF = (from -- to).toIndexedSeq.sorted.map(n => s"$path/$n")
     // both sides read under toV's schema (a superset of fromV's — the
@@ -3047,11 +2952,11 @@ object SnapshotTable {
     */
   def statsAgg(path: String, version: Option[Int] = None)
       : (Long, Double, Double) = {
-    val vv = version.orElse(latestVersion(path))
-    require(deleteRefs(path, vv).isEmpty && predDeleteRefs(path, vv).isEmpty,
+    val snap = snapOf(path, version)
+    require(tombstoneFree(snap),
       "statsAgg: snapshot carries merge-on-read tombstones whose rows " +
         "the manifest stats still count - run compactCommit first")
-    val stats = snapshot(path, version)
+    val stats = snap.refs
       .flatMap(r => parseManifest(path, r.name)).filter(_.rows > 0)
     require(stats.nonEmpty, s"statsAgg: snapshot of $path holds no rows")
     (stats.map(_.rows).sum, stats.map(_.zMin).min, stats.map(_.zMax).max)
@@ -3073,12 +2978,11 @@ object SnapshotTable {
   def countRange(spark: SparkSession, path: String, zcol: String,
       lo: Double, hi: Double, version: Option[Int] = None)
       : (Long, Long, Long, Long) = {
-    require(deleteRefs(path,
-        version.orElse(latestVersion(path))).isEmpty &&
-        predDeleteRefs(path, version.orElse(latestVersion(path))).isEmpty,
+    val snap = snapOf(path, version)
+    require(tombstoneFree(snap),
       "countRange: snapshot carries merge-on-read tombstones whose " +
         "rows the manifest stats still count - run compactCommit first")
-    val refs = snapshot(path, version)
+    val refs = snap.refs
     val total = refs.map(_.files.toLong).sum
     val files = refs.filter(r => r.zMin <= hi && r.zMax >= lo)
       .flatMap(r => parseManifest(path, r.name))
@@ -3110,11 +3014,11 @@ object SnapshotTable {
     val cutoff = latest - keepLast + 1
     val retained = (math.max(1, cutoff) to latest)
       .filter(v => Files.exists(logDir(path).resolve(s"v$v")))
-    val keepManifests =
-      retained.flatMap(v => snapshot(path, Some(v))).map(_.name).toSet
+    val snaps = retained.map(readSnap(path, _))
+    val keepManifests = snaps.flatMap(_.refs).map(_.name).toSet
     val keepFiles = keepManifests
       .flatMap(m => parseManifest(path, m)).map(_.file) ++
-      retained.flatMap(v => deleteRefs(path, Some(v))).map(_.file)
+      snaps.flatMap(_.dels).map(_.file)
     var sDel = 0
     (1 until cutoff).foreach { v =>
       if (Files.deleteIfExists(logDir(path).resolve(s"v$v"))) sDel += 1

@@ -1253,40 +1253,6 @@ class SnapshotTableSpec extends SparkSpec {
       .count() == 0, "bucket-3 rows leaked past the drop")
   }
 
-  test("withCowRetry re-plans after a lost race, bounded; a racing " +
-      "append and compaction both land exactly once") {
-    val t = Files.createTempDirectory("graft-snaprt").toString + "/t"
-    SnapshotTable.commitAppend(rows(0 until 400), t, "z", 6)
-    // deterministic unit: first attempt loses, second lands
-    var calls = 0
-    val out = SnapshotTable.withCowRetry(t, attempts = 3) {
-      calls += 1
-      if (calls == 1) throw new java.util.ConcurrentModificationException(
-        "simulated lost race")
-      41 + calls
-    }
-    assert(calls == 2 && out == 43)
-    // bounded: attempts exhaust and the last failure surfaces
-    intercept[java.util.ConcurrentModificationException] {
-      SnapshotTable.withCowRetry(t, attempts = 2) {
-        throw new java.util.ConcurrentModificationException("always")
-      }
-    }
-    // integration: compaction under retry races a real append; both
-    // land exactly once, whatever the interleaving
-    val appender = new Thread(() =>
-      SnapshotTable.commitAppend(rows(400 until 500), t, "z", 2))
-    appender.start()
-    val (_, _, _) = SnapshotTable.withCowRetry(t, attempts = 5) {
-      SnapshotTable.compactCommit(spark, t, "z", 300L)
-    }
-    appender.join()
-    // whichever order they landed, no row lost or doubled
-    val end = SnapshotTable.read(spark, t)
-    assert(end.count() == 500)
-    assert(end.agg(sum(col("id"))).head.getLong(0) == (0L until 500L).sum)
-  }
-
   test("a slower-than-the-lease writer loses its commit CLEANLY: the " +
       "takeover winner's version is never clobbered") {
     val t = Files.createTempDirectory("graft-snapnc").toString + "/t"
@@ -1588,7 +1554,7 @@ class SnapshotTableSpec extends SparkSpec {
       names, "k", df.schema, Seq("id", "name"))
     assert(fast == scan,
       s"narrow bloom path diverged from the full scan:\n$fast\nvs\n$scan")
-    assert(fast.forall(f => f.rows == 0 || f.blooms.map(_._1) ==
+    assert(fast.forall(f => f.rows == 0 || f.blooms.map(_.c) ==
       Seq("id", "name")), "every live file must carry both sketches")
   }
 
@@ -1708,5 +1674,38 @@ class SnapshotTableSpec extends SparkSpec {
     assert(read > 0 && read < total, s"read $read of $total")
     assert(cand.filter(col("price").between(0, 500)).count() ==
       after.filter(col("price").between(0, 500)).count())
+  }
+
+  test("a tombstone on a key column whose name needs JSON escaping " +
+      "deletes its rows") {
+    for (key <- Seq("a\"b", "a\nb")) {
+      val t = Files.createTempDirectory("graft-snapkey").toString + "/t"
+      SnapshotTable.commitAppend((0L until 100L)
+        .map(i => (i, i.toDouble)).toDF(key, "z"), t, "z", 2)
+      val (n, v) = SnapshotTable.commitDeleteMor(spark, t, key,
+        Seq(3L, 50L, 99L).toDF(key))
+      assert(n == 3 && v == 2)
+      assert(SnapshotTable.read(spark, t).count() == 97,
+        s"tombstoned rows came back on key column ${key.replace("\n", "\\n")}")
+      assert(SnapshotTable.deleteRefs(t).map(_.key).distinct == Seq(key))
+    }
+  }
+
+  test("a corrupted metadata line fails the read loudly, naming its " +
+      "file, instead of dropping the files it lists") {
+    val t = Files.createTempDirectory("graft-snapbad").toString + "/t"
+    SnapshotTable.commitAppend(rows(0 until 200), t, "z", 2)
+    SnapshotTable.commitAppend(rows(200 until 300), t, "z", 1)
+    for (name <- Seq("v2", "m-1.json")) {
+      val p = Paths.get(t, "_log", name)
+      val good = Files.readAllLines(p)
+      val bad = new java.util.ArrayList(good)
+      bad.set(bad.size - 1, bad.get(bad.size - 1).dropRight(1))
+      Files.write(p, bad)
+      val e = intercept[IllegalStateException](SnapshotTable.read(spark, t))
+      assert(e.getMessage.contains(s"line ${bad.size} of $p"), e.getMessage)
+      Files.write(p, good)
+      assert(SnapshotTable.read(spark, t).count() == 300)
+    }
   }
 }
