@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.GmailPipeline
 import graft.pipeline.GmailPipeline.Config
+import graft.sources.SnapshotTable
 
 /** E2E: raw array-blobs → transform → stage-1 CSV → archive; extract
   * dedup protocol incl. the duplicate scenarios the reference's
@@ -100,6 +103,22 @@ class PipelineSpec extends SparkSpec {
     assert(landed.toSeq == ids.map(i => (i, s"subject $i")))
   }
 
+  private def date(s: String) = java.sql.Date.valueOf(s)
+
+  private def commitState(c: Config, ids: Seq[String]): Int = {
+    import spark.implicits._
+    SnapshotTable.commitAppend(ids.map((_, date("2022-11-30"))).toDF("id", "date"),
+      c.stateDir, "id", 1)
+  }
+
+  private def ids(df: DataFrame): Seq[String] = {
+    import spark.implicits._
+    df.select("id").as[String].collect().toSeq.sorted
+  }
+
+  private def stateIds(c: Config): Seq[String] =
+    ids(SnapshotTable.read(spark, c.stateDir))
+
   test("extract: anti-join dedup, within-batch dups, budget, state commit") {
     val root = tmp(); val c = cfg(root).copy(limit = 2)
     val msgs = GmailPipeline.readRaw(spark,
@@ -108,63 +127,127 @@ class PipelineSpec extends SparkSpec {
         message("c"), message("d")))))
 
     // seen state: 'a' already ingested
-    import spark.implicits._
-    Seq(("a", java.sql.Date.valueOf("2022-11-30")))
-      .toDF("id", "date").write.parquet(c.stateDir)
+    commitState(c, Seq("a"))
 
-    val n1 = GmailPipeline.extract(spark, msgs, c,
-      java.sql.Date.valueOf("2022-12-01"))
+    val n1 = GmailPipeline.extract(spark, msgs, c, date("2022-12-01"))
     // 'a' seen, 'b' deduped within batch, budget=2 → exactly 2 new
     assert(n1 == 2)
-    val state = spark.read.parquet(c.stateDir)
-    assert(state.count() == 3)
+    assert(SnapshotTable.read(spark, c.stateDir).count() == 3)
 
     // second run over the same incoming: budget counts only NEW ids —
     // of {b,c,d} two were ingested in run 1, so exactly 1 remains
-    val n2 = GmailPipeline.extract(spark, msgs, c,
-      java.sql.Date.valueOf("2022-12-02"))
+    val n2 = GmailPipeline.extract(spark, msgs, c, date("2022-12-02"))
     assert(n2 == 1)
-    assert(spark.read.parquet(c.stateDir).count() == 4)
+    assert(SnapshotTable.read(spark, c.stateDir).count() == 4)
 
     // third run: everything seen → exact dedup, nothing written
-    val n3 = GmailPipeline.extract(spark, msgs, c,
-      java.sql.Date.valueOf("2022-12-03"))
+    val rawBefore = Paths.get(c.rawDir).toFile.list().toSet
+    val vBefore = SnapshotTable.latestVersion(c.stateDir)
+    val n3 = GmailPipeline.extract(spark, msgs, c, date("2022-12-03"))
     assert(n3 == 0)
+    assert(Paths.get(c.rawDir).toFile.list().toSet == rawBefore)
+    assert(SnapshotTable.latestVersion(c.stateDir) == vBefore)
     // dedup(dedup(x)) == dedup(x): state unchanged, ids unique
-    assert(spark.read.parquet(c.stateDir).count() == 4)
-    assert(spark.read.parquet(c.stateDir).select("id").distinct().count() == 4)
+    assert(SnapshotTable.read(spark, c.stateDir).count() == 4)
+    assert(stateIds(c).distinct.size == 4)
   }
 
-  test("compactState: many append files -> few, same ids, dedup intact") {
+  test("compactCommit on the state: many append files -> few, same ids, dedup intact") {
     val root = tmp(); val c = cfg(root)
-    import spark.implicits._
-    // 5 appended state files (one per "run")
-    for (i <- 1 to 5)
-      Seq((s"id$i", java.sql.Date.valueOf("2022-12-01")))
-        .toDF("id", "date").write.mode("append").parquet(c.stateDir)
-    val filesBefore = new java.io.File(c.stateDir)
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(filesBefore >= 5)
+    // 5 state commits (one per "run"), one file each
+    for (i <- 1 to 5) commitState(c, Seq(s"id$i"))
 
-    val n = GmailPipeline.compactState(spark, c.stateDir)
-    assert(n == 5)
-    val filesAfter = new java.io.File(c.stateDir)
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val (filesBefore, filesAfter, v) =
+      SnapshotTable.compactCommit(spark, c.stateDir, "id", 4000000L)
+    assert(filesBefore >= 5)
     assert(filesAfter < filesBefore)
-    val ids = spark.read.parquet(c.stateDir).select("id")
-      .as[String].collect().sorted
-    assert(ids.toSeq == (1 to 5).map(i => s"id$i"))
+    assert(SnapshotTable.read(spark, c.stateDir).count() == 5)
+    assert(stateIds(c) == (1 to 5).map(i => s"id$i"))
+    assert(SnapshotTable.latestVersion(c.stateDir).contains(v))
 
     // the compacted state still drives the anti-join
     val msgs = GmailPipeline.readRaw(spark,
       Seq(seedBlob(root, Seq(message("id1"), message("new1")))))
-    assert(GmailPipeline.extract(spark, msgs, c,
-      java.sql.Date.valueOf("2022-12-02")) == 1)
+    assert(GmailPipeline.extract(spark, msgs, c, date("2022-12-02")) == 1)
   }
 
-  private def seedBlob(root: Path, msgs: Seq[String]): String = {
+  test("extract after a crash between raw write and state commit ingests nothing twice") {
+    val root = tmp(); val c = cfg(root)
+    commitState(c, Seq("a"))
+    // what a run killed after its raw write leaves: b and c in the raw
+    // zone, written as the raw sink writes them, but not in the state
+    GmailPipeline.readRaw(spark,
+      Seq(seedBlob(root, Seq(message("b"), message("c")), "crashed.json")))
+      .write.json(c.rawDir)
+    val msgs = GmailPipeline.readRaw(spark, Seq(seedBlob(root,
+      Seq("a", "b", "c", "d").map(i => message(i)))))
+    // d is new; b and c are committed from the raw zone, not reselected
+    assert(GmailPipeline.extract(spark, msgs, c, date("2022-12-01")) == 3)
+    GmailPipeline.transformLoadRaw(spark, c, "day1")
+    val stage1 = spark.read.option("header", true)
+      .option("multiLine", true).csv(s"${c.stage1Dir}/day1")
+    assert(ids(stage1) == Seq("b", "c", "d"))
+    assert(stateIds(c) == Seq("a", "b", "c", "d"))
+  }
+
+  test("extract refuses a state directory without a snapshot log, writing nothing") {
+    val root = tmp(); val c = cfg(root)
+    import spark.implicits._
+    // a plain parquet state: read as "no snapshot" it would be empty
+    Seq(("a", date("2022-11-30"))).toDF("id", "date").write.parquet(c.stateDir)
+    val msgs = GmailPipeline.readRaw(spark,
+      Seq(seedBlob(root, Seq(message("a"), message("b")))))
+    val e = intercept[IllegalStateException](
+      GmailPipeline.extract(spark, msgs, c, date("2022-12-01")))
+    assert(e.getMessage.contains(c.stateDir))
+    assert(!Files.exists(Paths.get(c.rawDir)))
+    assert(!Files.exists(Paths.get(c.stateDir, "_log")))
+  }
+
+  test("extract racing compactCommit on one state: ids stay readable, compactions land or fail their claim") {
+    for (seed <- Seq(1, 2, 3)) {
+      val root = tmp(); val c = cfg(root)
+      commitState(c, Seq("s0"))
+      val days = Seq("2022-12-01", "2022-12-02")
+      val batches = days.map(d => GmailPipeline.readRaw(spark, Seq(seedBlob(
+        root, (1 to 3).map(i => message(s"$d-$i")), s"$d.json"))))
+      @volatile var done = false
+      val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[
+        scala.util.Try[(Int, Int, Int)]]()
+      val compactor = new Thread(() => {
+        val rnd = new scala.util.Random(seed)
+        while (!done) {
+          Thread.sleep(rnd.nextInt(30))
+          outcomes.add(scala.util.Try(
+            SnapshotTable.compactCommit(spark, c.stateDir, "id", 1000L)))
+        }
+      })
+      compactor.start()
+      val counts = try batches.zip(days).map { case (b, d) =>
+        GmailPipeline.extract(spark, b, c, date(d))
+      } finally { done = true; compactor.join() }
+      assert(counts == Seq(3L, 3L), s"seed $seed")
+      assert(stateIds(c) == ("s0" +: days.flatMap(d => (1 to 3).map(i => s"$d-$i"))).sorted,
+        s"seed $seed")
+      outcomes.asScala.foreach {
+        case scala.util.Success((_, after, v)) =>
+          // a landed compaction rewrites every row it read into one file
+          def rows(v: Int) =
+            SnapshotTable.snapshot(c.stateDir, Some(v)).map(_.rows).sum
+          assert(after == 1 && rows(v) == rows(v - 1), s"seed $seed v$v")
+        case scala.util.Failure(e) =>
+          assert(e.isInstanceOf[java.util.ConcurrentModificationException],
+            s"seed $seed: $e")
+      }
+      info(s"seed $seed: ${outcomes.asScala.count(_.isSuccess)} of " +
+        s"${outcomes.size} compactions landed")
+    }
+  }
+
+  private def seedBlob(root: Path, msgs: Seq[String],
+      name: String = "page.json"): String = {
     val dir = s"$root/incoming"
-    writeBlob(dir, "page.json", msgs)
-    s"$dir/page.json"
+    writeBlob(dir, name, msgs)
+    s"$dir/$name"
   }
 }

@@ -260,18 +260,6 @@ class SourcesSpec extends SparkSpec {
     assert(rows.forall(r => !seen.contains(r.getString(0))))
   }
 
-  test("newMessagesWithSourceSkip inlines small state into the scan") {
-    import spark.implicits._
-    CountingApiClient.reset()
-    val state = (1 to 22).map(i => f"m$i%03d").toDF("id")
-    val fresh = graft.pipeline.GmailPipeline
-      .newMessagesWithSourceSkip(read(), state)
-      .collect()
-    assert(fresh.map(_.getString(0)).sorted.toSeq ==
-      (23 to 25).map(i => f"m$i%03d"))
-    assert(CountingApiClient.getCalls.get() == 3) // seen ids never GET
-  }
-
   test("runtime filtering: a broadcast join dynamically prunes the GETs") {
     CountingApiClient.reset()
     val smallDir = Files.createTempDirectory("graft-rt-dim").toString
