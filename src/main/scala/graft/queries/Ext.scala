@@ -4248,13 +4248,14 @@ object Ext {
       // batch) is deterministic fixture; the teeth — compaction and
       // the fresh-session probe — run on this gate's own copy
       Relational.cachedPrologue("bidxc", d, dir)(bandIndexFixture(s, d, _))
-      val total = graft.sources.SnapshotTable.statsAgg(dir)._1
+      val total = graft.sources.SnapshotTable.statsAggCols(dir, Nil)._1
       val (filesBefore, filesAfter, _) = graft.sources.SnapshotTable
         .compactCommit(s, dir, "band_key", math.max(1L, (total + 1) / 2))
       val s2 = s.newSession()
       val idx = graft.sources.SnapshotTable.read(s2, dir)
-      val compacted = graft.sources.SnapshotTable.statsAgg(dir)._1 ==
-        total && filesAfter < filesBefore
+      val compacted =
+        graft.sources.SnapshotTable.statsAggCols(dir, Nil)._1 == total &&
+          filesAfter < filesBefore
       incrementalCrossAccounting(s2, d, idx)
         .withColumn("compacted", lit(compacted))
     }),

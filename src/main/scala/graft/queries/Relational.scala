@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.ops.{AsOfJoin, Skew}
+import graft.sources.SnapshotTable.between
 
 /** Relational coverage queries (SURVEY.md §2.1–2.7): scans, projections,
   * filters, joins, aggregations, windows, sorts, set ops, tumbling windows.
@@ -2123,7 +2124,7 @@ object Relational {
     // stats): orders are committed to a snapshot table range-sorted on
     // price into 16 files whose manifest records each file's typed
     // min/max; the read descends the manifests
-    // ([[sources.SnapshotTable.readPrunedCol]]) and opens only the
+    // ([[sources.SnapshotTable.scan]]) and opens only the
     // files whose bounds intersect the predicate range (~10% selective
     // here), then re-applies the exact predicate. At 100 TB this is the
     // layer above footer pruning — the planner reads kilobytes of stats
@@ -2143,7 +2144,7 @@ object Relational {
             col("o_totalprice").cast("decimal(18,2)").as("price")),
           b, "price", 16))
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "price", 100000, 150000)
+        .scan(s, dir, Seq(between("price", 100000, 150000)))
       cand.filter(col("price").between(lit(100000), lit(150000)))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
@@ -2182,7 +2183,7 @@ object Relational {
         graft.sources.SnapshotTable.read(s2, dir).count() ==
           orders(s2, d).count() - nTomb
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "price", 100000, 150000)
+        .scan(s2, dir, Seq(between("price", 100000, 150000)))
       require(read > 0 && read < total,
         s"q_zonemap_delete: expected a strict non-empty file subset, " +
           s"scan read $read of $total files")
@@ -2244,7 +2245,7 @@ object Relational {
         val ingestedOnce =
           graft.sources.SnapshotTable.read(s2, table).count() == o.count()
         val (cand, read, total) = graft.sources.SnapshotTable
-          .readPrunedCol(s2, table, "price", 100000, 150000)
+          .scan(s2, table, Seq(between("price", 100000, 150000)))
         require(read > 0 && read < total,
           s"q_stream_zonemap_ingest: expected a strict non-empty file " +
             s"subset, scan read $read of $total files")
@@ -2278,7 +2279,7 @@ object Relational {
           b, "c_name", 12))
       val (lo, hi) = ("Customer#000000020", "Customer#000000090")
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "c_name", lo, hi)
+        .scan(s, dir, Seq(between("c_name", lo, hi)))
       // fail DIAGNOSABLY on a pruning regression: the gated `skipped`
       // boolean is the point of the query, but a data/synth shift that
       // widens the probe to every file would surface as a misleading
@@ -2310,7 +2311,7 @@ object Relational {
           b, "day", 16))
       val (lo, hi) = ("1996-01-01", "1996-03-31")
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "day", lo, hi)
+        .scan(s, dir, Seq(between("day", lo, hi)))
       require(read > 0 && read < total,
         s"q_zonemap_date: expected a strict non-empty file subset " +
           s"for probe [$lo,$hi], scan read $read of $total files — " +
@@ -2350,7 +2351,7 @@ object Relational {
           orders(s2, d).count() - nTomb
       val (lo, hi) = ("1996-01-01", "1996-03-31")
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "day", lo, hi)
+        .scan(s2, dir, Seq(between("day", lo, hi)))
       require(read > 0 && read < total,
         s"q_zonemap_delete_date: expected a strict non-empty file " +
           s"subset, scan read $read of $total files")
@@ -2391,9 +2392,9 @@ object Relational {
         graft.sources.SnapshotTable.read(s2, dir).count() ==
           orders(s2, d).count() - nTomb
       val (dayDf, dayRead, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "day", 365, 546)
+        .scan(s2, dir, Seq(between("day", 365, 546)))
       val (priceDf, priceRead, _) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "price", 100000, 150000)
+        .scan(s2, dir, Seq(between("price", 100000, 150000)))
       require(dayRead > 0 && dayRead < total &&
         priceRead > 0 && priceRead < total,
         s"q_zonemap_delete_zorder: expected strict subsets, read " +
@@ -2451,7 +2452,7 @@ object Relational {
           graft.sources.SnapshotTable.read(s2, table).count() == o.count()
         val (lo, hi) = ("1996-01-01", "1996-03-31")
         val (cand, read, total) = graft.sources.SnapshotTable
-          .readPrunedCol(s2, table, "day", lo, hi)
+          .scan(s2, table, Seq(between("day", lo, hi)))
         require(read > 0 && read < total,
           s"q_stream_zonemap_ingest_date: expected a strict non-empty " +
             s"file subset, scan read $read of $total files")
@@ -2503,9 +2504,9 @@ object Relational {
         val ingestedOnce =
           graft.sources.SnapshotTable.read(s2, table).count() == o.count()
         val (dayDf, dayRead, total) = graft.sources.SnapshotTable
-          .readPrunedCol(s2, table, "day", 365, 546)
+          .scan(s2, table, Seq(between("day", 365, 546)))
         val (priceDf, priceRead, _) = graft.sources.SnapshotTable
-          .readPrunedCol(s2, table, "price", 100000, 150000)
+          .scan(s2, table, Seq(between("price", 100000, 150000)))
         require(dayRead > 0 && dayRead < total &&
           priceRead > 0 && priceRead < total,
           s"q_stream_zonemap_ingest_zorder: expected strict subsets, " +
@@ -2558,9 +2559,9 @@ object Relational {
           o.count() - nTomb
       val (lo, hi) = (100000.0, 150000.0)
       val (candL, readL, totalL) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi)
+        .scan(s2, dir, Seq(between("price", lo, hi)))
       val (candT, readT, totalT) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi, Some(vPre))
+        .scan(s2, dir, Seq(between("price", lo, hi)), Some(vPre))
       require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
         s"q_snapshot_time_travel: expected strict subsets, read " +
           s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -2611,9 +2612,9 @@ object Relational {
           o.count() + upd.count()
       val (lo, hi) = (100000.0, 150000.0)
       val (candL, readL, totalL) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi)
+        .scan(s2, dir, Seq(between("price", lo, hi)))
       val (candT, readT, totalT) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi, Some(vPre))
+        .scan(s2, dir, Seq(between("price", lo, hi)), Some(vPre))
       require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
         s"q_snapshot_merge: expected strict subsets, read " +
           s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -2680,9 +2681,9 @@ object Relational {
         val compacted = after < before
         val (lo, hi) = (100000.0, 150000.0)
         val (candL, readL, totalL) = graft.sources.SnapshotTable
-          .readPruned(s2, table, lo, hi)
+          .scan(s2, table, Seq(between("price", lo, hi)))
         val (candT, readT, totalT) = graft.sources.SnapshotTable
-          .readPruned(s2, table, lo, hi, Some(vPre))
+          .scan(s2, table, Seq(between("price", lo, hi)), Some(vPre))
         require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
           s"q_snapshot_stream_ingest: expected strict subsets, read " +
             s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -2749,9 +2750,9 @@ object Relational {
       val s2 = s.newSession()
       val (lo, hi) = (100000.0, 150000.0)
       val (candL, readL, totalL) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi)
+        .scan(s2, dir, Seq(between("price", lo, hi)))
       val (candT, readT, totalT) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi, Some(vPre))
+        .scan(s2, dir, Seq(between("price", lo, hi)), Some(vPre))
       require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
         s"q_snapshot_compact_small: expected strict subsets, read " +
           s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -2855,9 +2856,9 @@ object Relational {
       val n1 = graft.sources.SnapshotTable.read(s2, dir, Some(1)).count()
       val (lo, hi) = (100000.0, 150000.0)
       val (candL, readL, totalL) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi)
+        .scan(s2, dir, Seq(between("price", lo, hi)))
       val (candT, readT, totalT) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi, Some(2))
+        .scan(s2, dir, Seq(between("price", lo, hi)), Some(2))
       require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
         s"q_snapshot_mor_delete: expected strict subsets, read " +
           s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -2986,7 +2987,7 @@ object Relational {
 
     // METADATA-ONLY AGGREGATES on the unified snapshot table — the
     // planning payoff of exact per-file bounds in the commit log
-    // ([[sources.SnapshotTable.statsAgg]] / [[countRange]]): COUNT,
+    // ([[sources.SnapshotTable.statsAggCol]] / [[countRange]]): COUNT,
     // MIN, MAX answer from manifest lines with ZERO data files opened
     // (O(metadata) on a 100 TB table), and a range COUNT opens ONLY the
     // files straddling a predicate edge — fully-inside files count
@@ -3007,12 +3008,15 @@ object Relational {
       graft.sources.SnapshotTable.commitAppend(
         o.filter(col("o_orderkey") % 2 === 1), dir, "price", 24)
       val s2 = s.newSession()
-      val (nTotal, pMin, pMax) = graft.sources.SnapshotTable.statsAgg(dir)
+      // min/max come back as exact "dec" canonical strings; the gate's
+      // columns stay the doubles of those values
+      val (nTotal, Some((_, pLo, pHi))) =
+        graft.sources.SnapshotTable.statsAggCol(dir, "price")
+      val (pMin, pMax) = (pLo.toDouble, pHi.toDouble)
       val (nFull, metaFull, scanFull, totFull) = graft.sources.SnapshotTable
-        .countRange(s2, dir, "price", Double.NegativeInfinity,
-          Double.PositiveInfinity)
+        .countRange(s2, dir, "price", None, None)
       val (nRange, metaRange, scanRange, _) = graft.sources.SnapshotTable
-        .countRange(s2, dir, "price", 100000.0, 150000.0)
+        .countRange(s2, dir, "price", Some(100000.0), Some(150000.0))
       require(scanFull == 0 && nFull == nTotal && metaFull == nTotal,
         s"q_snapshot_stats_agg: unbounded count must be metadata-only, " +
           s"scanned $scanFull files, meta $metaFull vs total $nTotal")
@@ -3031,11 +3035,10 @@ object Relational {
 
     // TYPED ENVELOPES in the unified snapshot table — the manifests
     // carry per-column min/max for STRING and DATE columns (UTF-8 /
-    // epoch-day order), so [[sources.SnapshotTable.readPrunedCol]]
-    // serves a quarter probe on either representation with strict file
-    // skipping, on a table whose cluster column is the STRING day (the
-    // legacy double channel records only the never-pruning sentinel
-    // there — the typed stats do all the work). Two commits, two
+    // epoch-day order), so [[sources.SnapshotTable.scan]] serves a
+    // quarter probe on either representation with strict file
+    // skipping, on a table whose cluster column is the STRING day.
+    // Two commits, two
     // fresh-session probes (string day, DATE column), both required
     // strict subsets; the oracle recomputes the quarter aggregate and
     // the date-leg count from the raw table, so an unsound skip on
@@ -3053,9 +3056,9 @@ object Relational {
       val s2 = s.newSession()
       val (lo, hi) = ("1996-01-01", "1996-03-31")
       val (candS, readS, totalS) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "day", lo, hi)
+        .scan(s2, dir, Seq(between("day", lo, hi)))
       val (candD, readD, totalD) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "odate", lo, hi)
+        .scan(s2, dir, Seq(between("odate", lo, hi)))
       require(readS > 0 && readS < totalS && readD > 0 && readD < totalD,
         s"q_snapshot_prune_date: expected strict subsets, read " +
           s"string=$readS/$totalS date=$readD/$totalD")
@@ -3093,9 +3096,9 @@ object Relational {
         base, dir, "day", "price", 16)
       val s2 = s.newSession()
       val (dayDf, dayRead, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "day", 365, 546)
+        .scan(s2, dir, Seq(between("day", 365, 546)))
       val (priceDf, priceRead, _) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, "price", 100000, 150000)
+        .scan(s2, dir, Seq(between("price", 100000, 150000)))
       require(dayRead > 0 && dayRead < total &&
         priceRead > 0 && priceRead < total,
         s"q_snapshot_zorder: expected strict subsets, read " +
@@ -3282,7 +3285,7 @@ object Relational {
     // TableProvider ([[sources.SnapshotTableSource]]): the band
     // predicate arrives through the optimizer (`load().filter(...)`),
     // the ScanBuilder's pushed filters drive the same metadata-pyramid
-    // descent as readPrunedCols, and the gate requires the scan to
+    // descent as SnapshotTable.scan, and the gate requires the scan to
     // open a strict subset of files (the planning-evidence hook) at
     // BOTH the latest version and a versionAsOf time travel. Pushdown
     // is advisory — every filter stays residual — so the oracle's
@@ -3603,9 +3606,9 @@ object Relational {
     }),
 
     // LIBRARY-LEVEL RUNTIME FILTERING — the dim-filtered star join over
-    // a snapshot fact table ([[sources.SnapshotTable.readKeyedPruned]]):
-    // the dim side's key set drives the SAME bounds+bloom pyramid
-    // descent the planned rewrites use, at READ time — a 3-row dim
+    // a snapshot fact table ([[sources.SnapshotTable.scan]] with an
+    // InTest): the dim side's key set drives the SAME bounds+bloom
+    // pyramid descent the planned rewrites use, at READ time — a 3-row dim
     // joined against a price-clustered fact opens at most HALF the
     // fact's files (require()d; min/max bounds alone cannot confine
     // scattered ids), which is exactly the file subset DSv2's
@@ -3626,9 +3629,10 @@ object Relational {
       val dim = s.createDataFrame(
         Seq((mn, 1L), (mid, 2L), (mx, 3L))).toDF("o_orderkey", "w")
       val s2 = s.newSession()
-      val (cand, read, total) = graft.sources.SnapshotTable
-        .readKeyedPruned(s2, dir, "o_orderkey",
-          dim.select(col("o_orderkey")))
+      val (cand, read, total) = graft.sources.SnapshotTable.scan(s2, dir,
+        Seq(graft.sources.SnapshotTable.PredDnf(Seq(Seq(
+          graft.sources.SnapshotTable.InTest("o_orderkey",
+            Seq(mn, mid, mx)))))))
       require(read > 0 && read * 2 <= total,
         s"q_snapshot_join_prune: the keyed probe must open at most " +
           s"half the fact files, opened $read/$total")
@@ -3784,7 +3788,8 @@ object Relational {
         .head().getInt(0).toLong
       val s2 = s.newSession()
       val (candM, readM, totalM) = graft.sources.SnapshotTable
-        .readPrunedCol(s2, dir, graft.sources.SnapshotTable.PartCol, tm, tm)
+        .scan(s2, dir,
+          Seq(between(graft.sources.SnapshotTable.PartCol, tm, tm)))
       require(readM > 0 && readM < totalM,
         s"q_snapshot_part_drop: _pt pruning must be strict, " +
           s"read $readM/$totalM")
@@ -3875,9 +3880,9 @@ object Relational {
       val merged = nKeys > 0 && nLatest == nO + upd.count()
       val (lo, hi) = (100000.0, 150000.0)
       val (candL, readL, totalL) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi)
+        .scan(s2, dir, Seq(between("price", lo, hi)))
       val (candT, readT, totalT) = graft.sources.SnapshotTable
-        .readPruned(s2, dir, lo, hi, Some(vPre))
+        .scan(s2, dir, Seq(between("price", lo, hi)), Some(vPre))
       require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
         s"q_snapshot_mor_merge: expected strict subsets, read " +
           s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -3964,9 +3969,9 @@ object Relational {
             "prior manifest verbatim")
         val (lo, hi) = (100000.0, 150000.0)
         val (candL, readL, totalL) = graft.sources.SnapshotTable
-          .readPruned(s2, table, lo, hi)
+          .scan(s2, table, Seq(between("price", lo, hi)))
         val (candT, readT, totalT) = graft.sources.SnapshotTable
-          .readPruned(s2, table, lo, hi, Some(1))
+          .scan(s2, table, Seq(between("price", lo, hi)), Some(1))
         require(readL > 0 && readL < totalL && readT > 0 && readT < totalT,
           s"q_stream_snapshot_upsert: expected strict subsets, read " +
             s"latest=$readL/$totalL travel=$readT/$totalT")
@@ -4110,7 +4115,7 @@ object Relational {
       graft.sources.SnapshotTable.commitAppend(
         base.filter(col("o_orderkey") % 5 >= 3), dir, "price", 4)
       val (cand, read, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "price", 100000, 150000)
+        .scan(s, dir, Seq(between("price", 100000, 150000)))
       val nFilesOnDisk = s.read.parquet(dir).inputFiles.length.toLong
       cand.filter(col("price").between(lit(100000), lit(150000)))
         .groupBy(col("o_orderpriority"))
@@ -4226,9 +4231,9 @@ object Relational {
         graft.sources.SnapshotTable.commitAppendZOrdered(
           base, b, "day", "price", 16))
       val (dayDf, dayRead, total) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "day", 365, 546)
+        .scan(s, dir, Seq(between("day", 365, 546)))
       val (priceDf, priceRead, _) = graft.sources.SnapshotTable
-        .readPrunedCol(s, dir, "price", 100000, 150000)
+        .scan(s, dir, Seq(between("price", 100000, 150000)))
       val aDay = dayDf
         .filter(col("day").between(lit(365), lit(546)))
         .agg(count(lit(1)).as("n_date"),

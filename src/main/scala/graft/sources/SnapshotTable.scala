@@ -4,12 +4,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
+import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonInclude,
+  JsonProperty}
 import com.fasterxml.jackson.annotation.JsonInclude.Include.{NON_ABSENT, NON_EMPTY}
 import com.fasterxml.jackson.databind.{DeserializationFeature => DF}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,11 +26,11 @@ import org.apache.spark.sql.types._
   *     v3-p00000.parquet …      immutable data files, one prefix/commit
   *     _log/
   *       m-3.json               manifest: per-FILE stats of one commit's
-  *                              files (batch-sized): legacy double zone
-  *                              bounds + typed PER-COLUMN min/max
+  *                              files (batch-sized): row count + typed
+  *                              PER-COLUMN min/max (+ key blooms)
   *       v1 v2 v3               snapshots: the MANIFEST LIST — one line
-  *                              per manifest with its bound ENVELOPE
-  *                              (legacy + per-column)
+  *                              per manifest with its per-column bound
+  *                              ENVELOPE
   *       s-3.json               the schema AS OF v3 (see below)
   *       c-4                    a claim: version 4 is being written
   *       LATEST                 atomic pointer to the current version
@@ -48,12 +49,15 @@ import org.apache.spark.sql.types._
   * typed min/max for each supported top-level column — integral,
   * float/double, decimal, string (UTF-8 byte order, matching Spark's
   * UTF8String comparison), date (epoch day), timestamp (epoch micros).
-  * [[readPrunedCol]] serves range probes on ANY stat-carrying column,
-  * and [[commitDeletePlanned]]/[[commitMergePlanned]] use the key
-  * column's bounds to find candidate files BEFORE any data I/O — a
-  * 10-key delete on a 100 TB table opens the handful of files whose
-  * recorded key range can hold those keys, instead of scanning the
-  * table to learn which files it touches.
+  * ONE file planner ([[planFiles]]) descends the pyramid for every
+  * pruned file set: [[scan]] serves range, key-set and disjunctive
+  * probes on ANY stat-carrying column, and
+  * [[commitDeletePlanned]]/[[commitMergePlanned]] plan their touched
+  * files through the same descent on the key column's bounds and
+  * blooms BEFORE any data I/O — a 10-key delete on a 100 TB table
+  * opens the handful of files whose recorded key range can hold those
+  * keys, instead of scanning the table to learn which files it
+  * touches.
   *
   * CRASH SAFETY: data files and manifests are written before the
   * snapshot file, the snapshot before the pointer swing, and every
@@ -127,15 +131,20 @@ object SnapshotTable {
   /** One data file: a manifest's `file` line. `cols` and `bf` are
     * omitted when empty — such a line (written before per-column
     * stats, or a hand-crafted fixture) reads as "no stats: keep".
+    * Lines written before the typed stats replaced the double zone
+    * bounds still carry `z_min`/`z_max`; exactly those two keys are
+    * ignored on read, every other unknown key still fails the decode.
     */
-  case class FileStat(file: String, @JsonProperty("z_min") zMin: Double,
-      @JsonProperty("z_max") zMax: Double, rows: Long,
+  @JsonIgnoreProperties(Array("z_min", "z_max"))
+  case class FileStat(file: String, rows: Long,
       @JsonInclude(NON_EMPTY) cols: Seq[ColStat] = Nil,
       @JsonProperty("bf") @JsonInclude(NON_EMPTY) blooms: Seq[Bloom] = Nil)
-  /** One manifest: a snapshot's `manifest` line, with its envelope. */
+  /** One manifest: a snapshot's `manifest` line, with its envelope
+    * (the same `z_min`/`z_max` read compatibility as [[FileStat]]).
+    */
+  @JsonIgnoreProperties(Array("z_min", "z_max"))
   case class ManifestRef(@JsonProperty("manifest") name: String,
-      @JsonProperty("z_min") zMin: Double,
-      @JsonProperty("z_max") zMax: Double, files: Int, rows: Long,
+      files: Int, rows: Long,
       @JsonInclude(NON_EMPTY) cols: Seq[ColStat] = Nil,
       @JsonProperty("bf") @JsonInclude(NON_EMPTY) blooms: Seq[Bloom] = Nil)
   /** An equality-delete tombstone: `file` holds the distinct keys of
@@ -474,7 +483,7 @@ object SnapshotTable {
     * that append commits carry forward until a compaction materializes
     * them.
     */
-  private case class Snap(refs: Seq[ManifestRef],
+  private[sources] case class Snap(refs: Seq[ManifestRef],
       dels: Seq[DeleteRef] = Nil, pdels: Seq[PredDeleteRef] = Nil)
 
   private def readSnap(path: String, v: Int): Snap = {
@@ -516,20 +525,43 @@ object SnapshotTable {
   def snapshot(path: String, version: Option[Int] = None)
       : Seq[ManifestRef] = snapOf(path, version).refs
 
-  /** The manifest's envelope over its files: legacy double z bounds
-    * plus the per-column merge. A column's envelope exists only when
-    * EVERY live file carries a stat for it under one tag — claiming
-    * bounds over a file with unknown values would make envelope-level
-    * pruning unsound. Zero-row files carry sentinels and are excluded;
-    * an all-empty manifest gets the never-selected sentinel envelope.
+  /** The manifest's envelope over its files: the per-column merge. A
+    * column's envelope exists only when EVERY live file carries a stat
+    * for it under one tag — claiming bounds over a file with unknown
+    * values would make envelope-level pruning unsound. Zero-row files
+    * carry no stats and are excluded; an all-empty manifest records
+    * zero rows, which the planner never selects.
     */
   private def envelope(stats: Seq[FileStat], name: String): ManifestRef = {
-    val finite = stats.filter(_.rows > 0)
-    if (finite.isEmpty)
-      ManifestRef(name, Double.MaxValue, -Double.MaxValue, stats.size, 0L)
-    else ManifestRef(name, finite.map(_.zMin).min, finite.map(_.zMax).max,
-      stats.size, stats.map(_.rows).sum, colEnvelope(finite),
-      bloomEnvelope(finite))
+    val live = stats.filter(_.rows > 0)
+    if (live.isEmpty) ManifestRef(name, stats.size, 0L)
+    else ManifestRef(name, stats.size, stats.map(_.rows).sum,
+      colEnvelope(live), bloomEnvelope(live))
+  }
+
+  /** The new snapshot's manifest list: `refs` minus the files `gone`
+    * names. A manifest absent from `parsed` (never parsed: its envelope
+    * ruled it out) or losing no file carries by reference, one losing
+    * every file drops out, and any other rewrites minus the gone files
+    * under `rename(ref, i)` for the i-th rewrite.
+    */
+  private def carryManifests(path: String, refs: Seq[ManifestRef],
+      parsed: Seq[(ManifestRef, Seq[FileStat])], gone: String => Boolean,
+      rename: (ManifestRef, Int) => String): Seq[ManifestRef] = {
+    val parsedOf = parsed.toMap
+    var ri = 0
+    refs.flatMap { ref =>
+      val fs = parsedOf.getOrElse(ref, Nil)
+      val kept = fs.filterNot(f => gone(f.file))
+      if (kept.size == fs.size) Some(ref)
+      else if (kept.isEmpty) None
+      else {
+        ri += 1
+        val rn = rename(ref, ri)
+        writeManifest(path, rn, kept)
+        Some(envelope(kept, rn))
+      }
+    }
   }
 
   /** Union of the files' key blooms (same commit ⇒ same sizing, so
@@ -705,18 +737,6 @@ object SnapshotTable {
     e.bitwiseOR(shiftleft(e, 1)).bitwiseAND(lit(0x55555555L))
   }
 
-  /** Stage an already-laid-out `df`, move the staged parts to their
-    * immutable `v<N>-p<i>.parquet` names, and collect their stats in
-    * ONE distributed pass: row count, legacy double z bounds, and the
-    * typed per-column min/max of every supported column (the collect
-    * is batch-sized — one row per new file).
-    *
-    * Legacy z bounds derive from `zcol`'s typed stat when it is
-    * numeric (integral/float/decimal — the double cast is monotone, so
-    * range pruning on the cast stays sound); for string/date/timestamp
-    * cluster columns the legacy channel records the never-pruning
-    * full-range sentinel and [[readPrunedCol]] is the probe path.
-    */
   /** Pin the snapshot writer's own parquet timestamp encoding to INT64
     * TIMESTAMP_MICROS for the duration of a stage write, whatever the
     * caller's session carries: values are identical on read (Spark
@@ -733,8 +753,13 @@ object SnapshotTable {
     try body finally s.conf.set(k, prev)
   }
 
+  /** Stage an already-laid-out `df`, move the staged parts to their
+    * immutable `v<N>-p<i>.parquet` names, and collect their stats: row
+    * count and the typed per-column min/max of every supported column
+    * (see [[collectFileStats]]).
+    */
   private def stageLaidOut(laid: DataFrame, path: String, v: Int,
-      zcol: String, bloomCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil,
       nonce: Option[String] = None): Seq[FileStat] = {
     val s = laid.sparkSession
     val stage = s"$path/_log/_stage"
@@ -753,7 +778,7 @@ object SnapshotTable {
     // Spark writes one zero-row file for an empty input; the committed
     // schema lives in the log, so that file is dropped, never listed:
     // an empty batch adds no data file for every later read to open
-    val (live, empty) = collectFileStats(s, path, moved, zcol, bloomCols,
+    val (live, empty) = collectFileStats(s, path, moved, bloomCols,
       laid.schema).partition(_.rows > 0)
     empty.foreach(f => Files.delete(Paths.get(path, f.file)))
     live
@@ -780,16 +805,16 @@ object SnapshotTable {
     * pass's blooms are byte-identical to the full scan's.
     */
   private def collectFileStats(s: SparkSession, path: String,
-      names: Seq[String], zcol: String, bloomCols: Seq[String],
+      names: Seq[String], bloomCols: Seq[String],
       schema: StructType): Seq[FileStat] =
-    footerColStats(s, path, names, zcol, schema) match {
+    footerColStats(s, path, names, schema) match {
       case Some(stats) if bloomCols.isEmpty => stats
       case Some(stats) =>
         val blooms = fileBlooms(s, path, names, bloomCols)
         stats.map(f =>
           if (f.rows == 0) f
           else f.copy(blooms = blooms.getOrElse(f.file, Nil)))
-      case None => fileColStats(s, path, names, zcol, bloomCols)
+      case None => fileColStats(s, path, names, bloomCols)
     }
 
   /** Per-file manifest blooms from a KEY-COLUMNS-ONLY pass: the narrow
@@ -852,8 +877,7 @@ object SnapshotTable {
     * out by taking only bit-exact representations.
     */
   private def footerColStats(s: SparkSession, path: String,
-      names: Seq[String], zcol: String,
-      schema: StructType): Option[Seq[FileStat]] = {
+      names: Seq[String], schema: StructType): Option[Seq[FileStat]] = {
     val fields = schema.fields.toIndexedSeq
       .flatMap(f => colTag(f.dataType).map(t => (f.name, f.dataType, t)))
     if (!fields.forall { case (_, _, t) => footerExactTag(t) }) return None
@@ -928,8 +952,7 @@ object SnapshotTable {
       try scala.concurrent.Await.result(
         scala.concurrent.Future.traverse(names.sorted.toList)(n =>
           scala.concurrent.Future(
-            try Right(footerStatOne(path, n, zcol, fields,
-              inputFile, decode))
+            try Right(footerStatOne(path, n, fields, inputFile, decode))
             catch { case scala.util.control.NonFatal(_) => Left(()) })),
         scala.concurrent.duration.Duration.Inf)
       finally pool.shutdown()
@@ -937,7 +960,7 @@ object SnapshotTable {
     else None
   }
 
-  private def footerStatOne(path: String, n: String, zcol: String,
+  private def footerStatOne(path: String, n: String,
       fields: IndexedSeq[(String, DataType, String)],
       inputFile: String => org.apache.parquet.io.InputFile,
       decode: (String, DataType, org.apache.parquet.schema.PrimitiveType,
@@ -947,8 +970,7 @@ object SnapshotTable {
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toIndexedSeq
       val rows = blocks.map(_.getRowCount).sum
-      if (rows == 0L)
-        FileStat(n, Double.MaxValue, -Double.MaxValue, 0L, Nil)
+      if (rows == 0L) FileStat(n, 0L)
       else {
         val cols = fields.map { case (cName, dt, t) =>
           var lo: Option[String] = None
@@ -976,8 +998,7 @@ object SnapshotTable {
           }
           ColStat(cName, t, lo, hi)
         }
-        val (zmn, zmx) = legacyZ(cols, zcol)
-        FileStat(n, zmn, zmx, rows, cols)
+        FileStat(n, rows, cols)
       }
     } finally reader.close()
   }
@@ -992,20 +1013,20 @@ object SnapshotTable {
     * not good enough).
     */
   private[graft] def statPathsForTest(s: SparkSession, path: String,
-      names: Seq[String], zcol: String, schema: StructType)
+      names: Seq[String], schema: StructType)
       : (Option[Seq[FileStat]], Seq[FileStat]) =
-    (footerColStats(s, path, names, zcol, schema),
-      fileColStats(s, path, names, zcol, Nil))
+    (footerColStats(s, path, names, schema),
+      fileColStats(s, path, names, Nil))
 
   /** Test hook for BLOOM-carrying commits: the dispatcher's
     * footer-stats + key-columns-only-bloom path vs the one-job full
     * scan — the spec pins them byte-identical (sketches included).
     */
   private[graft] def bloomStatPathsForTest(s: SparkSession, path: String,
-      names: Seq[String], zcol: String, schema: StructType,
+      names: Seq[String], schema: StructType,
       bloomCols: Seq[String]): (Seq[FileStat], Seq[FileStat]) =
-    (collectFileStats(s, path, names, zcol, bloomCols, schema),
-      fileColStats(s, path, names, zcol, bloomCols))
+    (collectFileStats(s, path, names, bloomCols, schema),
+      fileColStats(s, path, names, bloomCols))
 
   /** Expected distinct keys per file for the manifest blooms — sizes
     * the sketch (Spark's 2-arg bloom_agg allocates items×8 bits, ~2%
@@ -1058,16 +1079,14 @@ object SnapshotTable {
   }
 
   private def fileColStats(s: SparkSession, path: String,
-      names: Seq[String], zcol: String,
-      bloomCols: Seq[String] = Nil): Seq[FileStat] = {
+      names: Seq[String], bloomCols: Seq[String]): Seq[FileStat] = {
     val (grouped, fields) = fileColStatsDF(s, path, names, bloomCols)
     val nF = fields.size
     val byFile = grouped.collect().map(r => r.getString(0) -> r).toMap
     val enc = java.util.Base64.getEncoder
     names.sorted.map { n =>
       byFile.get(n) match {
-        case None => // empty file: never-selected sentinels, no stats
-          FileStat(n, Double.MaxValue, -Double.MaxValue, 0L, Nil)
+        case None => FileStat(n, 0L) // empty file: no stats
         case Some(r) =>
           val rows = r.getLong(1)
           val cols = fields.zipWithIndex.map { case ((c, t), i) =>
@@ -1078,34 +1097,15 @@ object SnapshotTable {
             Option(r.get(2 + 2 * nF + i)).map(b =>
               Bloom(c, enc.encodeToString(b.asInstanceOf[Array[Byte]])))
           }
-          val (zmn, zmx) = legacyZ(cols, zcol)
-          FileStat(n, zmn, zmx, rows, cols, blooms)
+          FileStat(n, rows, cols, blooms)
       }
     }
   }
 
-  /** Legacy double z channel off the typed stat: numeric tags project
-    * to double (monotone cast, sound for range pruning); an all-null
-    * numeric zcol yields the never-selected sentinel (no row can
-    * satisfy a range); non-numeric cluster columns yield the
-    * never-PRUNING full range — [[readPruned]] then keeps every file
-    * and [[readPrunedCol]] is the selective path.
-    */
-  private def legacyZ(cols: Seq[ColStat], zcol: String): (Double, Double) =
-    statFor(cols, zcol) match {
-      case Some(ColStat(_, t, Some(lo), Some(hi)))
-          if t == "l" || t == "d" || t == "dec" =>
-        (lo.toDouble, hi.toDouble)
-      case Some(ColStat(_, t, None, None))
-          if t == "l" || t == "d" || t == "dec" =>
-        (Double.MaxValue, -Double.MaxValue)
-      case _ => (-Double.MaxValue, Double.MaxValue)
-    }
-
   private def writeDataFiles(df: DataFrame, path: String, v: Int,
       zcol: String, nFiles: Int,
       nonce: Option[String] = None): Seq[FileStat] =
-    stageLaidOut(rangeLayout(df, zcol, nFiles), path, v, zcol, Nil, nonce)
+    stageLaidOut(rangeLayout(df, zcol, nFiles), path, v, Nil, nonce)
 
   // seed 42 = the SQL xxhash64's default, which the stat pass feeds
   // bloom_agg — both sides of the bloom probe hash identically
@@ -1130,11 +1130,11 @@ object SnapshotTable {
     * lines, never re-derived. The caller holds the claim on `v`.
     */
   private def appendCore(path: String, v: Int, prev: Option[Int],
-      prov: (Long, String), laid: DataFrame, zcol: String,
+      prov: (Long, String), laid: DataFrame,
       bloomCols: Seq[String] = Nil, nonce: Option[String] = None): Unit = {
     sweepUncommitted(path, v)
     writeMergedSchema(path, v, prev, laid.schema)
-    val stats = stageLaidOut(laid, path, v, zcol, bloomCols, nonce)
+    val stats = stageLaidOut(laid, path, v, bloomCols, nonce)
     nonce.foreach(n => requireClaimHeld(path, v, n))
     val mName = s"m-$v.json"
     writeManifest(path, mName, stats)
@@ -1154,34 +1154,34 @@ object SnapshotTable {
 
   /** APPEND commit: new data files + their manifest + a new snapshot
     * inheriting every previous manifest by reference + the pointer
-    * swing. Returns the committed version. `zcol` may be ANY orderable
-    * type (string/date clustering records typed envelopes; numeric
-    * additionally feeds the legacy double channel). Concurrent appends
+    * swing. Returns the committed version. `zcol` is the range-layout
+    * column and may be ANY orderable type: every supported column's
+    * typed bounds are recorded whatever the layout, and clustering on
+    * `zcol` is what makes its bounds selective. Concurrent appends
     * serialize through the claim CAS — a loser re-plans and lands at
     * the next slot, so two racing appends BOTH commit.
     */
   def commitAppend(df: DataFrame, path: String, zcol: String,
       nFiles: Int, bloomCols: Seq[String] = Nil): Int =
-    append(path, rangeLayout(df, zcol, nFiles), zcol, bloomCols)
+    append(path, rangeLayout(df, zcol, nFiles), bloomCols)
 
   /** Z-ORDERED append: rows lay out on the Morton interleave of
     * (`c1`, `c2`) — each file covers a compact 2-D block, so the typed
-    * per-column envelopes are selective on EITHER column and
-    * [[readPrunedCol]] prunes both probe dimensions, where a one-column
-    * range sort leaves `c2` the full value range in every file. The
-    * legacy double channel tracks `c1`.
+    * per-column envelopes are selective on EITHER column and [[scan]]
+    * prunes both probe dimensions, where a one-column range sort
+    * leaves `c2` the full value range in every file.
     */
   def commitAppendZOrdered(df: DataFrame, path: String, c1: String,
       c2: String, nFiles: Int): Int =
-    append(path, zOrderLayout(df, c1, c2, nFiles), c1, Nil)
+    append(path, zOrderLayout(df, c1, c2, nFiles), Nil)
 
   /** Claim the next slot and append the already-laid-out `laid`. */
-  private def append(path: String, laid: DataFrame, zcol: String,
+  private def append(path: String, laid: DataFrame,
       bloomCols: Seq[String]): Int = {
     val (prevPtr, v, nonce) = claimNext(path)
     try {
       appendCore(path, v, prevPtr.map(_._1), carriedBatchId(prevPtr),
-        laid, zcol, bloomCols, Some(nonce))
+        laid, bloomCols, Some(nonce))
       v
     } finally releaseClaim(path, v)
   }
@@ -1194,7 +1194,7 @@ object SnapshotTable {
   // synthetic lo==hi stat `_pt` in its manifest line. That single
   // invariant buys the two partition payoffs at O(metadata): reads
   // prune on `_pt` through the ordinary typed-envelope descent
-  // ([[readPrunedCol]] — no special partition path), and
+  // ([[scan]] — no special partition path), and
   // [[dropPartition]] retires a whole partition by manifest surgery
   // alone — no data file opened, the retention drop a 100 TB
   // time-series table runs daily.
@@ -1369,7 +1369,7 @@ object SnapshotTable {
       }
       val valOf = movedWithVal.toMap
       val stats = collectFileStats(s, path, movedWithVal.map(_._1),
-          spec.col, Nil, df.schema)
+          Nil, df.schema)
         .map(f => f.copy(cols = f.cols :+ ColStat(PartCol, "l",
           Some(valOf(f.file).toString), Some(valOf(f.file).toString))))
       requireClaimHeld(path, v, nonce)
@@ -1410,50 +1410,27 @@ object SnapshotTable {
     val vs = value.toString
     val (v, nonce) = claimCow(path, prev, "dropPartition")
     try {
-      val refs = prevSnap.refs
-      // envelope test: a manifest whose _pt envelope excludes the value
-      // carries by reference, unparsed — the pyramid payoff
-      def mayHold(cols: Seq[ColStat]): Boolean =
-        statFor(cols, PartCol) match {
-          case Some(ColStat(_, "l", Some(lo), Some(hi))) =>
-            lo.toLong <= value && value <= hi.toLong
-          case Some(ColStat(_, "l", None, None)) => false
-          case _ => true // no/unknown stat: must parse and check files
-        }
+      // a manifest whose _pt envelope excludes the value carries by
+      // reference, unparsed — the pyramid payoff
+      val plan = planFiles(path, prevSnap,
+        testHits(CRange(PartCol, "l", Some(vs), Some(vs)), _, _))
+      plan.parsed.flatMap(_._2).filter(_.rows > 0).foreach(f => require(
+        statFor(f.cols, PartCol).exists(c => c.t == "l" &&
+          c.lo.nonEmpty && c.lo == c.hi),
+        s"dropPartition: ${f.file} carries no single-valued " +
+          s"$PartCol stat - the table mixes unpartitioned commits"))
+      val dead = plan.cands.map(_._2)
+      if (dead.isEmpty) return (0L, 0, prev)
       sweepUncommitted(path, v)
-      var rows = 0L
-      var filesDropped = 0
-      var ri = 0
-      val carried = refs.flatMap { ref =>
-        if (!mayHold(ref.cols)) Some(ref)
-        else {
-          val fs = parseManifest(path, ref.name)
-          fs.filter(_.rows > 0).foreach(f => require(
-            statFor(f.cols, PartCol).exists(c => c.t == "l" &&
-              c.lo.nonEmpty && c.lo == c.hi),
-            s"dropPartition: ${f.file} carries no single-valued " +
-              s"$PartCol stat - the table mixes unpartitioned commits"))
-          val (dead, kept) = fs.partition(f =>
-            statFor(f.cols, PartCol).exists(c => c.lo.contains(vs)))
-          rows += dead.map(_.rows).sum
-          filesDropped += dead.size
-          if (dead.isEmpty) Some(ref)
-          else if (kept.isEmpty) None
-          else {
-            ri += 1
-            val rn = s"m-${manifestVersion(ref.name)}-r$v-$ri.json"
-            writeManifest(path, rn, kept)
-            Some(envelope(kept, rn))
-          }
-        }
-      }
-      if (filesDropped == 0) return (0L, 0, prev)
+      val carried = carryManifests(path, prevSnap.refs, plan.parsed,
+        dead.map(_.file).toSet,
+        (r, i) => s"m-${manifestVersion(r.name)}-r$v-$i.json")
       requireClaimHeld(path, v, nonce)
       readSchema(path, prev).foreach(sc =>
         writeAtomic(schemaPath(path, v), sc.json))
       writeSnap(path, v, Snap(carried))
       swingPointerCarried(path, v)
-      (rows, filesDropped, v)
+      (dead.map(_.rows).sum, dead.size, v)
     } finally releaseClaim(path, v)
   }
 
@@ -1487,8 +1464,8 @@ object SnapshotTable {
   def commitAppendOnce(df: DataFrame, path: String, zcol: String,
       nFiles: Int, batchId: Long,
       bloomCols: Seq[String] = Nil, writerId: String = ""): Boolean =
-    appendOnce(path, rangeLayout(df, zcol, nFiles), zcol, bloomCols,
-      batchId, writerId)
+    appendOnce(path, rangeLayout(df, zcol, nFiles), bloomCols, batchId,
+      writerId)
 
   /** [[commitAppendOnce]] in the Morton layout of
     * [[commitAppendZOrdered]]: each micro-batch lands as Z-ordered
@@ -1499,10 +1476,10 @@ object SnapshotTable {
   def commitAppendOnceZOrdered(df: DataFrame, path: String, c1: String,
       c2: String, nFiles: Int, batchId: Long,
       writerId: String = ""): Boolean =
-    appendOnce(path, zOrderLayout(df, c1, c2, nFiles), c1, Nil,
-      batchId, writerId)
+    appendOnce(path, zOrderLayout(df, c1, c2, nFiles), Nil, batchId,
+      writerId)
 
-  private def appendOnce(path: String, laid: DataFrame, zcol: String,
+  private def appendOnce(path: String, laid: DataFrame,
       bloomCols: Seq[String], batchId: Long, writerId: String): Boolean = {
     require(batchId >= 0, "batchId must be >= 0 (-1 marks non-batch commits)")
     val (prevPtr, v, nonce) = claimNext(path)
@@ -1510,7 +1487,7 @@ object SnapshotTable {
       if (prevPtr.exists(p => p._2 == batchId && p._3 == writerId))
         return false
       appendCore(path, v, prevPtr.map(_._1), (batchId, writerId), laid,
-        zcol, bloomCols, Some(nonce))
+        bloomCols, Some(nonce))
       true
     } finally releaseClaim(path, v)
   }
@@ -1541,8 +1518,7 @@ object SnapshotTable {
       sweepUncommitted(path, v)
       val df = read(spark, path, Some(prev))
       writeMergedSchema(path, v, Some(prev), df.schema)
-      val newStats = stageLaidOut(rangeLayout(df, zcol, nFiles), path, v,
-        zcol, Nil, Some(nonce))
+      val newStats = writeDataFiles(df, path, v, zcol, nFiles, Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
       writeManifest(path, mName, newStats)
@@ -1591,29 +1567,18 @@ object SnapshotTable {
         (smallRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
       readSchema(path, prev).foreach(sc =>
         writeAtomic(schemaPath(path, v), sc.json))
-      val newStats = stageLaidOut(rangeLayout(df, zcol, nFiles), path, v,
-        zcol, Nil, Some(nonce))
+      val newStats = writeDataFiles(df, path, v, zcol, nFiles, Some(nonce))
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
       writeManifest(path, mName, newStats)
-      val smallNames = small.map(_._2.file).toSet
-      var ri = 0
-      val carried = byManifest.flatMap { case (ref, fs) =>
-        val kept = fs.filterNot(f => smallNames(f.file))
-        if (kept.size == fs.size) Some(ref)
-        else if (kept.isEmpty) None
-        else {
-          // the rewrite KEEPS the original version in its name: the
-          // carried rows were NOT materialized, so they must stay at
-          // their old sequence number or pending tombstones (dv < v)
-          // would stop applying to them — unlike the COW delete/merge
-          // rewrites, which run tombstone-free by contract
-          ri += 1
-          val rn = s"m-${manifestVersion(ref.name)}-r$v-$ri.json"
-          writeManifest(path, rn, kept)
-          Some(envelope(kept, rn))
-        }
-      }
+      // the rewrite KEEPS the original version in its name: the
+      // carried rows were NOT materialized, so they must stay at their
+      // old sequence number or pending tombstones (dv < v) would stop
+      // applying to them — unlike the COW delete/merge rewrites, which
+      // run tombstone-free by contract
+      val carried = carryManifests(path, prevSnap.refs, byManifest,
+        small.map(_._2.file).toSet,
+        (r, i) => s"m-${manifestVersion(r.name)}-r$v-$i.json")
       // carried files still need their tombstones; the compacted rows
       // had theirs applied in the rewrite
       writeSnap(path, v,
@@ -1635,81 +1600,29 @@ object SnapshotTable {
   private val CollectKeyCapDefault = 100000
   private val BroadcastKeyCapDefault = 2000000L
 
-  private case class KeyPlan(k: DataFrame, nKeys: Long, big: Boolean,
-      tag: Option[String], vals: Option[Array[String]],
-      bounds: Option[(String, String)],
-      hashes: Option[Array[Long]] = None)
-
+  /** The distinct keys of `keyCol`, whether the probe joins must
+    * shuffle instead of broadcast, and the file test they compile to
+    * under the KEYS' own tag: an [[InTest]] of the keys collected under
+    * `collectCap` (exact per-file bounds + bloom probe), else the key
+    * set's min/max range. A key type with no stat tag compiles to
+    * always-hit, and one whose tag differs from the column's keeps
+    * every file ([[testHits]]' tag check).
+    */
   private def planKeys(keys: DataFrame, keyCol: String,
-      collectCap: Int, bcastCap: Long): KeyPlan = {
+      collectCap: Int, bcastCap: Long): (DataFrame, Boolean, CompiledTest) = {
     val k = keys.select(col(keyCol)).distinct()
     val tag = colTag(k.schema(keyCol).dataType)
     val head = k.limit(collectCap + 1).collect()
-    if (head.length <= collectCap) {
-      val vals = tag.map { t =>
-        val a = head.iterator.map(_.get(0)).filter(_ != null)
-          .map(v => canonOf(t, v)).toArray
-        scala.util.Sorting.stableSort(a,
-          (x: String, y: String) => cmpCanon(t, x, y) < 0)
-        a
-      }
-      // integral and string keys pre-hash for the manifest-bloom probe
-      // — the same xxhash64 the stat pass fed bloom_agg
-      val hashes = tag match {
-        case Some("l") => vals.map(_.map(v => xx64(v.toLong)))
-        case Some("s") => vals.map(_.map(xx64Str))
-        case _ => None
-      }
-      KeyPlan(k, head.length.toLong, big = false, tag, vals,
-        vals.filter(_.nonEmpty).map(v => (v.head, v.last)), hashes)
-    } else {
+    if (head.length <= collectCap)
+      (k, false, tag.fold[CompiledTest](CAlways)(t =>
+        compileIn(keyCol, t, head.toIndexedSeq.map(_.get(0)))))
+    else {
       val r = k.agg(count(lit(1)), min(col(keyCol)), max(col(keyCol))).head()
-      val bounds = tag.flatMap(t =>
-        (Option(r.get(1)), Option(r.get(2))) match {
-          case (Some(lo), Some(hi)) => Some((canonOf(t, lo), canonOf(t, hi)))
-          case _ => None
-        })
-      KeyPlan(k, r.getLong(0), big = r.getLong(0) > bcastCap, tag,
-        None, bounds)
+      (k, r.getLong(0) > bcastCap, tag.fold[CompiledTest](CAlways)(t =>
+        CRange(keyCol, t, Option(r.get(1)).map(canonOf(t, _)),
+          Option(r.get(2)).map(canonOf(t, _)))))
     }
   }
-
-  /** May a file/manifest with these recorded bounds hold one of the
-    * planned keys? Missing stats or a tag mismatch mean "unknown:
-    * keep"; an all-null column can never equality-match a key; with
-    * collected values the test is exact per file (binary search for a
-    * key inside [lo, hi]), else the key set's own envelope intersects.
-    */
-  private def boundsHitKeys(cs: Option[ColStat], plan: KeyPlan): Boolean =
-    cs match {
-      case None => true
-      case Some(s) if !plan.tag.contains(s.t) => true
-      case Some(ColStat(_, t, Some(lo), Some(hi))) =>
-        plan.vals match {
-          case Some(vs) => anyKeyIn(vs, t, lo, hi)
-          case None => plan.bounds.exists { case (kl, kh) =>
-            cmpCanon(t, kl, hi) <= 0 && cmpCanon(t, kh, lo) >= 0 }
-        }
-      case Some(ColStat(_, _, None, None)) => false // no non-null values
-      case Some(_) => true // half-written bounds: unknown, keep
-    }
-
-  /** May a file/manifest with this key BLOOM hold one of the planned
-    * keys? True (keep) when no bloom exists, the keys were not
-    * collected, or any key might be present — false only when the
-    * bloom rules out EVERY planned key, which is what prunes the
-    * scattered-key takedown min/max bounds cannot (a handful of ids
-    * spread across a table intersect every file's key RANGE but almost
-    * no file's key SET).
-    */
-  private def bloomHitsKeys(blooms: Seq[Bloom],
-      keyCol: String, plan: KeyPlan): Boolean =
-    (blooms.find(_.c == keyCol), plan.hashes) match {
-      case (Some(Bloom(_, b64)), Some(hs)) if hs.nonEmpty =>
-        try { val bf = readBloom(b64); hs.exists(bf.mightContainLong) }
-        catch { case _: Exception => true } // unreadable: keep
-      case _ => true
-    }
 
   private def anyKeyIn(sorted: Array[String], t: String, lo: String,
       hi: String): Boolean = {
@@ -1762,22 +1675,16 @@ object SnapshotTable {
         "to materialize them before a copy-on-write rewrite")
     val (v, nonce) = claimCow(path, prev, "commitDelete")
     try {
-      val plan = planKeys(keys, keyCol, collectKeyCap, broadcastKeyCap)
-      val refs = prevSnap.refs
-      val total = refs.map(_.files.toLong).sum
-      // pyramid descent: envelope-pruned manifests are never parsed
-      val parsedCand = refs
-        .filter(r => boundsHitKeys(statFor(r.cols, keyCol), plan) &&
-          bloomHitsKeys(r.blooms, keyCol, plan))
-        .map(r => r -> parseManifest(path, r.name))
-      val candFiles = parsedCand.flatMap(_._2).filter(f =>
-        f.rows > 0 && boundsHitKeys(statFor(f.cols, keyCol), plan) &&
-          bloomHitsKeys(f.blooms, keyCol, plan))
+      val (k, big, test) =
+        planKeys(keys, keyCol, collectKeyCap, broadcastKeyCap)
+      val plan = planFiles(path, prevSnap, testHits(test, _, _))
+      val total = plan.total
+      val candFiles = plan.cands.map(_._2)
       val planned = candFiles.size.toLong
       if (planned == 0) return (0L, 0L, total, prev)
       val candDf = readFiles(spark, path, prev,
-        candFiles.map(f => s"$path/${f.file}").sorted)
-      val kj = if (plan.big) plan.k else broadcast(plan.k)
+        candFiles.map(f => s"$path/${f.file}"))
+      val kj = if (big) k else broadcast(k)
       val touched = candDf.withColumn("_f", input_file_name())
         .join(kj, Seq(keyCol), "left_semi")
         .select(col("_f")).distinct().collect()
@@ -1798,23 +1705,8 @@ object SnapshotTable {
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
       writeManifest(path, mName, survStats)
-      val parsedOf = parsedCand.toMap
-      var ri = 0
-      val carried = refs.flatMap { ref =>
-        parsedOf.get(ref) match {
-          case None => Some(ref) // envelope-pruned: carried, never parsed
-          case Some(fs) =>
-            val kept = fs.filterNot(f => touched(f.file))
-            if (kept.size == fs.size) Some(ref)
-            else if (kept.isEmpty) None // fully consumed
-            else {
-              ri += 1
-              val rn = s"m-$v-r$ri.json"
-              writeManifest(path, rn, kept)
-              Some(envelope(kept, rn))
-            }
-        }
-      }
+      val carried = carryManifests(path, prevSnap.refs, plan.parsed,
+        touched, (_, i) => s"m-$v-r$i.json")
       writeSnap(path, v, Snap(carried :+ envelope(survStats, mName)))
       swingPointerCarried(path, v)
       (rowsDeleted, planned, total, v)
@@ -2186,21 +2078,15 @@ object SnapshotTable {
       // a file is touched when it holds a key of EITHER arm; survivors
       // anti-join the same plan, so deleted rows drop with replaced ones
       val touchKeys = deleteKeys.fold(changeKeys)(changeKeys.unionByName(_))
-      val plan = planKeys(touchKeys, key, collectKeyCap, broadcastKeyCap)
-      val refs = prevSnap.refs
-      val total = refs.map(_.files.toLong).sum
-      val parsedCand = refs
-        .filter(r => boundsHitKeys(statFor(r.cols, key), plan) &&
-          bloomHitsKeys(r.blooms, key, plan))
-        .map(r => r -> parseManifest(path, r.name))
-      val candFiles = parsedCand.flatMap(_._2).filter(f =>
-        f.rows > 0 && boundsHitKeys(statFor(f.cols, key), plan) &&
-          bloomHitsKeys(f.blooms, key, plan))
-      val planned = candFiles.size.toLong
+      val (k, big, test) =
+        planKeys(touchKeys, key, collectKeyCap, broadcastKeyCap)
+      val plan = planFiles(path, prevSnap, testHits(test, _, _))
+      val total = plan.total
+      val planned = plan.cands.size.toLong
       val candDf =
         if (planned == 0) null
         else readFiles(spark, path, prev,
-          candFiles.map(f => s"$path/${f.file}").sorted)
+          plan.cands.map { case (_, f) => s"$path/${f.file}" })
       // duplicate keys are fatal only when MATCHED; a matched key can
       // only live in a candidate file, so the check scans candidates
       val dupCand = changes.groupBy(col(key))
@@ -2213,7 +2099,7 @@ object SnapshotTable {
           s"merge: changes carry multiple rows per matched key ($key): " +
             dupMatched.mkString(",") + " — pre-aggregate to one row per key")
       }
-      val kj = if (plan.big) plan.k else broadcast(plan.k)
+      val kj = if (big) k else broadcast(k)
       val touched =
         if (planned == 0) Set.empty[String]
         else candDf.withColumn("_f", input_file_name())
@@ -2234,23 +2120,8 @@ object SnapshotTable {
       requireClaimHeld(path, v, nonce)
       val mName = s"m-$v.json"
       writeManifest(path, mName, newStats)
-      val parsedOf = parsedCand.toMap
-      var ri = 0
-      val carried = refs.flatMap { ref =>
-        parsedOf.get(ref) match {
-          case None => Some(ref)
-          case Some(fs) =>
-            val kept = fs.filterNot(f => touched(f.file))
-            if (kept.size == fs.size) Some(ref)
-            else if (kept.isEmpty) None
-            else {
-              ri += 1
-              val rn = s"m-$v-r$ri.json"
-              writeManifest(path, rn, kept)
-              Some(envelope(kept, rn))
-            }
-        }
-      }
+      val carried = carryManifests(path, prevSnap.refs, plan.parsed,
+        touched, (_, i) => s"m-$v-r$i.json")
       writeSnap(path, v, Snap(carried :+ envelope(newStats, mName)))
       swingPointerCarried(path, v)
       (touched.size, (total - touched.size).toInt, planned, total, v)
@@ -2277,6 +2148,15 @@ object SnapshotTable {
     case other =>
       throw new IllegalArgumentException(s"unknown stat tag '$other'")
   }
+
+  /** `c` inside [lo, hi] (canonical bounds under `t`, None = an open
+    * side); with both sides open, simply non-null.
+    */
+  private def inRange(c: String, t: String, lo: Option[String],
+      hi: Option[String]): Column =
+    (lo.map(l => col(c) >= canonToLit(t, l)) ++
+      hi.map(h => col(c) <= canonToLit(t, h)))
+      .reduceOption(_ && _).getOrElse(col(c).isNotNull)
 
   /** Read `(manifestVersion, filePath)` pairs under `v`'s schema and
     * apply the tombstones of `snap` (`v`'s decoded snapshot) with
@@ -2305,10 +2185,7 @@ object SnapshotTable {
       .map { case ((delFiles, pds), grp) =>
         val base = readFiles(spark, path, v, grp.map(_._2))
         val predApplied = pds.foldLeft(base) { (df, pd) =>
-          val c = col(pd.col)
-          val inRange = (pd.lo.map(l => c >= canonToLit(pd.t, l)) ++
-            pd.hi.map(h => c <= canonToLit(pd.t, h))).reduce(_ && _)
-          df.filter(c.isNull || !inRange)
+          df.filter(col(pd.col).isNull || !inRange(pd.col, pd.t, pd.lo, pd.hi))
         }
         // one anti-join per TOMBSTONE (all its part files union as one
         // key relation), guarded by the tombstone's TOTAL recorded key
@@ -2344,203 +2221,27 @@ object SnapshotTable {
     readApplying(spark, path, v, snap, manifestFilePairs(path, snap.refs))
   }
 
-  /** ZONE-PRUNED snapshot read on the legacy double channel:
-    * (candidates, filesRead, filesTotal). Planning descends the
-    * metadata pyramid — manifest-list envelopes first, surviving
-    * manifests' file bounds second — and skipping is SOUND: a file is
-    * dropped only when its recorded bounds exclude the whole range, so
-    * the candidates plus the exact residual equal a full-snapshot
-    * filter.
-    * Works at any `version`: bounds are immutable with the files they
-    * describe, so time travel and pruning compose for free.
-    */
-  def readPruned(spark: SparkSession, path: String, lo: Double,
-      hi: Double, version: Option[Int] = None)
-      : (DataFrame, Long, Long) = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val snap = readSnap(path, v)
-    val refs = snap.refs
-    val total = refs.map(_.files.toLong).sum
-    val hitRefs = refs.filter(r => r.zMin <= hi && r.zMax >= lo)
-    val hit = hitRefs.flatMap(r =>
-        parseManifest(path, r.name)
-          .filter(f => f.zMin <= hi && f.zMax >= lo)
-          .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
-      .sortBy(_._2)
-    val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
-      else read(spark, path, Some(v)).filter(lit(false))
-    (df, hit.length.toLong, total)
-  }
-
-  /** TYPED pruned read: serve a range probe on ANY column whose stats
-    * the manifests carry — string (UTF-8 order), date, timestamp,
-    * integral, float, decimal — not only the legacy double channel.
-    * `lo`/`hi` accept the column's natural external forms (a string
-    * bound, a "yyyy-MM-dd" date, a number …); the column's tag comes
-    * from the committed schema. Same pyramid descent and the same
-    * soundness argument as [[readPruned]]: a file drops only when its
-    * recorded bounds exclude the whole range (a no-stats file is
-    * always kept; an all-null file cannot satisfy a range predicate
-    * and drops). Returns (candidates, filesRead, filesTotal) — a table
-    * with no recorded tag degrades to the full snapshot with
-    * filesRead = filesTotal, never to a wrong answer.
-    */
-  def readPrunedCol(spark: SparkSession, path: String, colName: String,
-      lo: Any, hi: Any, version: Option[Int] = None)
-      : (DataFrame, Long, Long) = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val snap = readSnap(path, v)
-    val refs = snap.refs
-    val total = refs.map(_.files.toLong).sum
-    val tag = readSchema(path, v).flatMap(sc =>
-        sc.fields.find(_.name == colName).flatMap(f => colTag(f.dataType)))
-      .orElse(refs.flatMap(r => statFor(r.cols, colName))
-        .headOption.map(_.t))
-    tag match {
-      case None => (read(spark, path, Some(v)), total, total)
-      case Some(t) =>
-        val (l, h) = (canonOf(t, lo), canonOf(t, hi))
-        def hits(cs: Option[ColStat]): Boolean = cs match {
-          case None => true
-          case Some(s) if s.t != t => true
-          case Some(ColStat(_, _, Some(mn), Some(mx))) =>
-            cmpCanon(t, mn, h) <= 0 && cmpCanon(t, mx, l) >= 0
-          case Some(ColStat(_, _, None, None)) => false // all-null file
-          case Some(_) => true // half-written bounds: unknown, keep
-        }
-        val hit = refs.filter(r => hits(statFor(r.cols, colName)))
-          .flatMap(r => parseManifest(path, r.name)
-            .filter(f => f.rows > 0 && hits(statFor(f.cols, colName)))
-            .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
-          .sortBy(_._2)
-        val df =
-          if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
-          else read(spark, path, Some(v)).filter(lit(false))
-        (df, hit.length.toLong, total)
-    }
-  }
-
-  /** CONJUNCTIVE typed pruned read — AND of range predicates over
-    * several stat-carrying columns: a file survives only when EVERY
-    * predicate's recorded bounds admit it, so the candidate set is the
-    * INTERSECTION of the single-column prunes (on a Morton-clustered
-    * table a 2-D box probe opens ~the files of one 2-D block). Each
-    * predicate is individually sound by the [[readPrunedCol]] argument,
-    * and dropping a file any predicate excludes is sound for a
-    * conjunction. Returns (candidates, filesRead, filesTotal).
-    */
-  def readPrunedCols(spark: SparkSession, path: String,
-      preds: Seq[(String, Any, Any)], version: Option[Int] = None)
-      : (DataFrame, Long, Long) = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val snap = readSnap(path, v)
-    val refs = snap.refs
-    val total = refs.map(_.files.toLong).sum
-    val sc = readSchema(path, v)
-    // (col, tag, canonical lo, canonical hi) — a column with no
-    // recorded tag cannot prune and drops out of the conjunction
-    val tests = preds.flatMap { case (c, lo, hi) =>
-      sc.flatMap(s => s.fields.find(_.name == c).flatMap(f =>
-          colTag(f.dataType)))
-        .orElse(refs.flatMap(r => statFor(r.cols, c)).headOption.map(_.t))
-        .map(t => (c, t, canonOf(t, lo), canonOf(t, hi)))
-    }
-    def hits(cols: Seq[ColStat]): Boolean = tests.forall {
-      case (c, t, l, h) => statFor(cols, c) match {
-        case None => true
-        case Some(s) if s.t != t => true
-        case Some(ColStat(_, _, Some(mn), Some(mx))) =>
-          cmpCanon(t, mn, h) <= 0 && cmpCanon(t, mx, l) >= 0
-        case Some(ColStat(_, _, None, None)) => false
-        case Some(_) => true
-      }
-    }
-    val hit = refs.filter(r => hits(r.cols))
-      .flatMap(r => parseManifest(path, r.name)
-        .filter(f => f.rows > 0 && hits(f.cols))
-        .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
-      .sortBy(_._2)
-    val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
-      else read(spark, path, Some(v)).filter(lit(false))
-    (df, hit.length.toLong, total)
-  }
-
-  /** KEYED pruned read — the files a KEY-SET probe must open, planned
-    * through the same bounds+bloom pyramid descent the planned
-    * rewrites use, on the READ side: the library-level form of DSv2
-    * runtime filtering for the dim-filtered star join over a snapshot
-    * fact table (the deliberate V1Scan execution boundary keeps
-    * BatchScanExec's SupportsRuntimeFiltering hook out of reach — the
-    * scan would forfeit the single tombstone-applying read path and
-    * vectorized parquet to gain it). `collectKeyCap` bounds the
-    * exact-value plan, `broadcastKeyCap` the probe broadcast, exactly
-    * as in [[commitDeletePlanned]]. Sound like every prune here: a
-    * file drops only when its recorded bounds OR its key bloom prove
-    * no planned key can be present (bloom false positives only ADD
-    * candidates), so candidates + the caller's join equal a full
-    * scan's join. Returns (candidates, filesRead, filesTotal).
-    */
-  def readKeyedPruned(spark: SparkSession, path: String, keyCol: String,
-      keys: DataFrame, version: Option[Int] = None,
-      collectKeyCap: Int = CollectKeyCapDefault,
-      broadcastKeyCap: Long = BroadcastKeyCapDefault)
-      : (DataFrame, Long, Long) = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val plan = planKeys(keys, keyCol, collectKeyCap, broadcastKeyCap)
-    val snap = readSnap(path, v)
-    val refs = snap.refs
-    val total = refs.map(_.files.toLong).sum
-    val hit = refs
-      .filter(r => boundsHitKeys(statFor(r.cols, keyCol), plan) &&
-        bloomHitsKeys(r.blooms, keyCol, plan))
-      .flatMap(r => parseManifest(path, r.name)
-        .filter(f => f.rows > 0 &&
-          boundsHitKeys(statFor(f.cols, keyCol), plan) &&
-          bloomHitsKeys(f.blooms, keyCol, plan))
-        .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
-      .sortBy(_._2)
-    val df =
-      if (hit.nonEmpty) readApplying(spark, path, v, snap, hit)
-      else read(spark, path, Some(v)).filter(lit(false))
-    (df, hit.length.toLong, total)
-  }
-
-  /** Plan the (manifestVersion, filePath) pairs surviving a
-    * conjunction of OPTIONAL-sided range predicates — the planning
-    * half of [[readPrunedCols]] exposed for the Catalyst-pushdown
-    * source ([[SnapshotTableSource]]): the same pyramid descent
-    * (envelope-pruned manifests never parse), the same soundness
-    * argument, with an open side treated as unbounded. A predicate on
-    * a column with no recorded tag drops out of the conjunction
-    * (cannot prune, never wrong). Returns (pairs, filesTotal).
-    */
-  def planPrunedFiles(path: String, version: Option[Int],
-      preds: Seq[(String, Option[Any], Option[Any])])
-      : (Seq[(Int, String)], Long) =
-    planPrunedFilesDnf(path, version, preds.map { case (c, lo, hi) =>
-      PredDnf(Seq(Seq(RangeTest(c, lo, hi)))) })
-
-  // ---- generalized file tests: ranges, key sets, disjunctions --------
-  // The pushdown source's predicate language: a pushed filter compiles
-  // to an OR of ANDs of leaf tests (disjunctive normal form), and a
-  // file survives the conjunction of pushed filters iff EVERY filter
-  // has SOME disjunct all of whose leaves admit the file. RangeTest is
-  // the typed-envelope test planPrunedFiles always ran; InTest is the
-  // point/IN shape, which additionally probes the manifest KEY BLOOMS
-  // — the pruner min/max bounds can never serve for scattered ids on a
-  // value-clustered table (every file spans ~the full key RANGE but
-  // almost no file holds the keys' SET). Soundness is per-leaf: each
-  // leaf only ever drops a file its recorded metadata PROVES cannot
-  // match (bloom false positives only ADD candidates), OR-ing admits a
-  // superset, and unknown shapes never reach the planner — so the
-  // candidate set plus Spark's residual re-evaluation equals a full
-  // scan's answer.
+  // ---- the one file planner: ranges, key sets, disjunctions ----------
+  // Every pruned file set of the table — the pruned read [[scan]], the
+  // Catalyst-pushdown source ([[SnapshotTableSource]]), [[countRange]]
+  // and the touched-file searches of the planned COW delete/merge —
+  // comes from ONE descent of the metadata pyramid ([[planFiles]]):
+  // manifest envelopes first (a manifest that fails never parses), the
+  // surviving manifests' files second, every leaf tested by
+  // [[testHits]]. A probe is a conjunction of predicates, each an OR of
+  // ANDs of leaf tests (disjunctive normal form): a file survives iff
+  // EVERY predicate has SOME disjunct all of whose leaves admit it.
+  // RangeTest is a typed range on one column (either side may be
+  // open); InTest is the point/IN shape, which additionally probes the
+  // manifest KEY BLOOMS — the pruner min/max bounds can never serve for
+  // scattered ids on a value-clustered table (every file spans ~the
+  // full key RANGE but almost no file holds the keys' SET). Soundness
+  // is per-leaf: each leaf only ever drops a file its recorded metadata
+  // PROVES cannot match (bloom false positives only ADD candidates),
+  // OR-ing admits a superset, and a column without a recorded tag
+  // compiles to always-hit — so the candidates plus the caller's exact
+  // residual equal a full scan's answer, at any version (bounds are
+  // immutable with the files they describe).
 
   sealed trait FileTest
   case class RangeTest(col: String, lo: Option[Any],
@@ -2549,11 +2250,17 @@ object SnapshotTable {
   /** One pushed predicate in DNF: OR over `disjuncts`, AND within. */
   case class PredDnf(disjuncts: Seq[Seq[FileTest]])
 
-  /** A leaf compiled against the table's committed tags: canonical
-    * bounds for ranges; sorted canonical keys + xxhash64 probes (the
-    * bloom family both commit paths feed) for key sets. None = the
-    * column has no recorded tag — the leaf cannot prune and compiles
-    * to always-hit.
+  /** The closed range [lo, hi] on `c` as a one-leaf predicate. Bounds
+    * take the column's natural external forms (a number, a string, a
+    * "yyyy-MM-dd" date …).
+    */
+  def between(c: String, lo: Any, hi: Any): PredDnf =
+    PredDnf(Seq(Seq(RangeTest(c, Some(lo), Some(hi)))))
+
+  /** A leaf compiled against a tag: canonical bounds for ranges; sorted
+    * canonical keys + xxhash64 probes (the bloom family both commit
+    * paths feed) for key sets. CAlways = the column has no recorded tag
+    * — the leaf cannot prune.
     */
   private sealed trait CompiledTest
   private case class CRange(col: String, t: String, lo: Option[String],
@@ -2562,29 +2269,38 @@ object SnapshotTable {
       hashes: Option[Array[Long]]) extends CompiledTest
   private case object CAlways extends CompiledTest
 
-  private def compileTest(test: FileTest,
-      tagOf: String => Option[String]): CompiledTest = test match {
-    case RangeTest(c, lo, hi) => tagOf(c) match {
-      case Some(t) => CRange(c, t, lo.map(canonOf(t, _)),
-        hi.map(canonOf(t, _)))
-      case None => CAlways
+  private def compileIn(c: String, t: String, keys: Seq[Any]): CIn = {
+    val a = keys.iterator.filter(_ != null).map(v => canonOf(t, v)).toArray
+    scala.util.Sorting.stableSort(a,
+      (x: String, y: String) => cmpCanon(t, x, y) < 0)
+    val hashes = t match {
+      case "l" => Some(a.map(v => xx64(v.toLong)))
+      case "s" => Some(a.map(xx64Str))
+      case _ => None
     }
-    case InTest(c, keys) => tagOf(c) match {
-      case Some(t) =>
-        val a = keys.iterator.filter(_ != null)
-          .map(v => canonOf(t, v)).toArray
-        scala.util.Sorting.stableSort(a,
-          (x: String, y: String) => cmpCanon(t, x, y) < 0)
-        val hashes = t match {
-          case "l" => Some(a.map(v => xx64(v.toLong)))
-          case "s" => Some(a.map(xx64Str))
-          case _ => None
-        }
-        CIn(c, t, a, hashes)
-      case None => CAlways
-    }
+    CIn(c, t, a, hashes)
   }
 
+  private def compileTest(test: FileTest,
+      tagOf: String => Option[String]): CompiledTest = test match {
+    case RangeTest(c, lo, hi) => tagOf(c).fold[CompiledTest](CAlways)(t =>
+      CRange(c, t, lo.map(canonOf(t, _)), hi.map(canonOf(t, _))))
+    case InTest(c, keys) =>
+      tagOf(c).fold[CompiledTest](CAlways)(compileIn(c, _, keys))
+  }
+
+  /** `c`'s stat tag: the committed schema's, else the first recorded
+    * stat's (tables written before schema tracking).
+    */
+  private def tagIn(sc: Option[StructType], refs: Seq[ManifestRef],
+      c: String): Option[String] =
+    sc.flatMap(_.fields.find(_.name == c).flatMap(f => colTag(f.dataType)))
+      .orElse(refs.flatMap(r => statFor(r.cols, c)).headOption.map(_.t))
+
+  /** May a file (or a manifest, through its envelope) with these stats
+    * hold a row the leaf admits? Missing stats or another tag mean
+    * "unknown: keep"; an all-null column admits nothing.
+    */
   private def testHits(ct: CompiledTest, cols: Seq[ColStat],
       blooms: Seq[Bloom]): Boolean = ct match {
     case CAlways => true
@@ -2617,46 +2333,78 @@ object SnapshotTable {
       }
   }
 
-  /** [[planPrunedFiles]] over the full predicate language — a
-    * conjunction of DNF predicates (ranges, IN sets, disjunctions) —
-    * with the same pyramid descent: a manifest whose ENVELOPE (typed
-    * bounds + union bloom) fails any predicate carries by exclusion
-    * and never parses; surviving manifests' files test individually.
-    * Returns (pairs, filesTotal).
+  /** The planner's answer: the manifests whose envelope passed, each
+    * with ALL its parsed files (what a COW rewrite carries or
+    * rewrites), the candidate (manifestVersion, file) pairs in file
+    * order, and the snapshot's file total.
     */
-  def planPrunedFilesDnf(path: String, version: Option[Int],
-      preds: Seq[PredDnf]): (Seq[(Int, String)], Long) = {
-    val v = version.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    val refs = readSnap(path, v).refs
-    val total = refs.map(_.files.toLong).sum
-    val sc = readSchema(path, v)
-    def tagOf(c: String): Option[String] =
-      sc.flatMap(s => s.fields.find(_.name == c).flatMap(f =>
-          colTag(f.dataType)))
-        .orElse(refs.flatMap(r => statFor(r.cols, c)).headOption.map(_.t))
-    val compiled: Seq[Seq[Seq[CompiledTest]]] = preds.map(_.disjuncts
-      .map(_.map(t => compileTest(t, tagOf))))
-    def hits(cols: Seq[ColStat], blooms: Seq[Bloom]): Boolean =
-      compiled.forall(_.exists(_.forall(ct => testHits(ct, cols, blooms))))
-    val hit = refs.filter(r => hits(r.cols, r.blooms))
-      .flatMap(r => parseManifest(path, r.name)
-        .filter(f => f.rows > 0 && hits(f.cols, f.blooms))
-        .map(f => (manifestVersion(r.name), s"$path/${f.file}")))
-      .sortBy(_._2)
-    (hit, total)
+  private[sources] case class FilePlan(
+      parsed: Seq[(ManifestRef, Seq[FileStat])],
+      cands: Seq[(Int, FileStat)], total: Long)
+
+  /** THE file planner: one pyramid descent of `snap` under `hits`. A
+    * zero-row manifest or file is never a candidate.
+    */
+  private def planFiles(path: String, snap: Snap,
+      hits: (Seq[ColStat], Seq[Bloom]) => Boolean): FilePlan = {
+    val parsed = snap.refs.filter(r => r.rows > 0 && hits(r.cols, r.blooms))
+      .map(r => r -> parseManifest(path, r.name))
+    val cands = parsed.flatMap { case (r, fs) =>
+        fs.filter(f => f.rows > 0 && hits(f.cols, f.blooms))
+          .map(f => (manifestVersion(r.name), f)) }
+      .sortBy(_._2.file)
+    FilePlan(parsed, cands, snap.refs.map(_.files.toLong).sum)
   }
 
-  /** Read planned pairs (from [[planPrunedFiles]]) under `version`'s
-    * schema with its tombstones applied — the scan body of the
-    * pushdown source; an empty plan reads as the empty snapshot.
+  /** [[planFiles]] for the conjunction `where` at `version` (latest
+    * when None), its leaves compiled against the version's tags.
+    * Returns the resolved version, its decoded snapshot and the plan.
     */
-  def readPlanned(spark: SparkSession, path: String, version: Option[Int],
-      pairs: Seq[(Int, String)]): DataFrame = {
+  private[sources] def planScan(path: String, version: Option[Int],
+      where: Seq[PredDnf]): (Int, Snap, FilePlan) = {
     val v = version.orElse(latestVersion(path)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot in $path"))
-    if (pairs.nonEmpty) readApplying(spark, path, v, readSnap(path, v), pairs)
-    else read(spark, path, Some(v)).filter(lit(false))
+    val snap = readSnap(path, v)
+    val sc = readSchema(path, v)
+    val compiled = where.map(_.disjuncts.map(_.map(
+      compileTest(_, tagIn(sc, snap.refs, _)))))
+    (v, snap, planFiles(path, snap, (cs, bs) =>
+      compiled.forall(_.exists(_.forall(testHits(_, cs, bs))))))
+  }
+
+  /** PRUNED snapshot read: the files [[planFiles]] keeps for the
+    * conjunction `where` (ranges, key sets, disjunctions — see
+    * [[FileTest]]), read under the version's schema with its
+    * tombstones applied. The caller re-applies its exact predicate:
+    * the candidates hold every matching row, not only matching rows.
+    * Returns (candidates, filesRead, filesTotal). A plan that keeps no
+    * file answers an empty relation of the version's committed schema
+    * without listing a single file.
+    */
+  def scan(spark: SparkSession, path: String, where: Seq[PredDnf] = Nil,
+      version: Option[Int] = None): (DataFrame, Long, Long) = {
+    val (v, snap, plan) = planScan(path, version, where)
+    val pairs = plan.cands.map { case (mv, f) => (mv, s"$path/${f.file}") }
+    val df =
+      if (pairs.nonEmpty) readApplying(spark, path, v, snap, pairs)
+      else readSchema(path, v) match {
+        case Some(sc) => spark.createDataFrame(
+          java.util.List.of[Row](), asNullable(sc).asInstanceOf[StructType])
+        case None => read(spark, path, Some(v)).filter(lit(false))
+      }
+    (df, pairs.size.toLong, plan.total)
+  }
+
+  /** `t` with every field, element and value nullable — the schema a
+    * parquet scan of the table reports.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+    case other => other
   }
 
   /** The OLDEST still-time-travelable version — the smallest `v<N>`
@@ -2671,14 +2419,17 @@ object SnapshotTable {
     if (vs.isEmpty) None else Some(vs.min)
   }
 
-  /** METADATA-ONLY typed aggregates: COUNT(*) plus MIN/MAX of ANY
-    * stat-carrying column off the manifest lines — zero data files
-    * opened, the [[statsAgg]] payoff extended past the legacy double
-    * channel (a string/date/decimal column answers as exactly). Bounds
-    * return in canonical form under the returned tag (see [[ColStat]]);
-    * None when no file recorded the column (pre-stats manifests or an
-    * unsupported type) — the caller's signal to scan instead. Same
-    * tombstone guard as [[statsAgg]].
+  /** METADATA-ONLY aggregates: COUNT(*) plus MIN/MAX of ANY
+    * stat-carrying column answered from the manifest lines alone —
+    * ZERO data files opened, cost O(manifest lines) regardless of table
+    * size. Sound because the stat pass records the TRUE per-file
+    * min/max and row count at write time and files are immutable
+    * afterwards; works at any `version` for the same reason time travel
+    * does. Bounds return in canonical form under the returned tag (see
+    * [[ColStat]]); None when no file recorded the column (pre-stats
+    * manifests or an unsupported type) — the caller's signal to scan
+    * instead. A snapshot carrying merge-on-read tombstones is refused:
+    * the manifest stats still count the rows they delete.
     */
   def statsAggCol(path: String, colName: String,
       version: Option[Int] = None)
@@ -2940,63 +2691,48 @@ object SnapshotTable {
     f.delete()
   }
 
-  /** METADATA-ONLY aggregates: COUNT(*), MIN(zcol), MAX(zcol) answered
-    * from the manifest stats alone — ZERO data files opened, cost
-    * O(manifest lines) regardless of table size. This is the planning
-    * payoff of carrying exact per-file bounds in the commit log: on a
-    * 100 TB table the answer comes off kilobytes of metadata. Sound
-    * because the stat pass records the TRUE per-file min/max and row
-    * count at write time and files are immutable afterwards; works at
-    * any `version` for the same reason time travel does. Empty-file
-    * sentinels are excluded the same way [[envelope]] does.
+  /** Zone-accelerated COUNT of `colName` inside [lo, hi] (either side
+    * open with None; both open counts the non-null values): files
+    * whose typed bounds fall FULLY inside the range are counted from
+    * metadata (no I/O), files the planner rules out are skipped, and
+    * only the files that STRADDLE a boundary (or carry no bounds) are
+    * scanned with the residual filter. On a range-clustered table the
+    * straddle set is O(boundary) — two files per predicate edge —
+    * independent of how many files the range covers, so a count over
+    * 10% of a 100 TB table opens a handful of files. Sound by the
+    * zone-map argument both ways: full-inside files can hold no row
+    * outside the range, ruled-out files no row inside it. Bounds take
+    * the column's natural external forms ([[canonOf]]). Returns
+    * (count, rowsFromMetadata, filesScanned, filesTotal) — the second
+    * component is the evidence that the metadata path contributed,
+    * not just a narrowed scan.
     */
-  def statsAgg(path: String, version: Option[Int] = None)
-      : (Long, Double, Double) = {
-    val snap = snapOf(path, version)
-    require(tombstoneFree(snap),
-      "statsAgg: snapshot carries merge-on-read tombstones whose rows " +
-        "the manifest stats still count - run compactCommit first")
-    val stats = snap.refs
-      .flatMap(r => parseManifest(path, r.name)).filter(_.rows > 0)
-    require(stats.nonEmpty, s"statsAgg: snapshot of $path holds no rows")
-    (stats.map(_.rows).sum, stats.map(_.zMin).min, stats.map(_.zMax).max)
-  }
-
-  /** Zone-accelerated COUNT over `[lo, hi]`: files whose bounds fall
-    * FULLY inside the range are counted from metadata (no I/O), files
-    * disjoint from the range are skipped, and only the files that
-    * STRADDLE a boundary are scanned with the residual filter. On a
-    * range-clustered table the straddle set is O(boundary) — two files
-    * per predicate edge — independent of how many files the range
-    * covers, so a count over 10% of a 100 TB table opens a handful of
-    * files. Sound by the zone-map argument both ways: full-inside
-    * files can hold no row outside the range, disjoint files no row
-    * inside it. Returns (count, rowsFromMetadata, filesScanned,
-    * filesTotal) — the second component is the evidence that the
-    * metadata path contributed, not just a narrowed scan.
-    */
-  def countRange(spark: SparkSession, path: String, zcol: String,
-      lo: Double, hi: Double, version: Option[Int] = None)
+  def countRange(spark: SparkSession, path: String, colName: String,
+      lo: Option[Any], hi: Option[Any], version: Option[Int] = None)
       : (Long, Long, Long, Long) = {
-    val snap = snapOf(path, version)
+    val v = version.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"no committed snapshot in $path"))
+    val snap = readSnap(path, v)
     require(tombstoneFree(snap),
       "countRange: snapshot carries merge-on-read tombstones whose " +
         "rows the manifest stats still count - run compactCommit first")
-    val refs = snap.refs
-    val total = refs.map(_.files.toLong).sum
-    val files = refs.filter(r => r.zMin <= hi && r.zMax >= lo)
-      .flatMap(r => parseManifest(path, r.name))
-      .filter(f => f.rows > 0 && f.zMin <= hi && f.zMax >= lo)
-    val (inside, straddle) =
-      files.partition(f => f.zMin >= lo && f.zMax <= hi)
+    val t = tagIn(readSchema(path, v), snap.refs, colName).getOrElse(
+      throw new IllegalArgumentException(
+        s"countRange: column '$colName' of $path carries no stats"))
+    val (l, h) = (lo.map(canonOf(t, _)), hi.map(canonOf(t, _)))
+    val plan = planFiles(path, snap, testHits(CRange(colName, t, l, h), _, _))
+    val (inside, straddle) = plan.cands.map(_._2).partition(f =>
+      statFor(f.cols, colName).exists {
+        case ColStat(_, `t`, Some(mn), Some(mx)) =>
+          l.forall(cmpCanon(t, mn, _) >= 0) && h.forall(cmpCanon(t, mx, _) <= 0)
+        case _ => false
+      })
     val metaRows = inside.map(_.rows).sum
     val scanned =
       if (straddle.isEmpty) 0L
-      else spark.read.parquet(
-          straddle.map(f => s"$path/${f.file}").sorted: _*)
-        .filter(col(zcol).cast("double").between(lit(lo), lit(hi)))
-        .count()
-    (metaRows + scanned, metaRows, straddle.size.toLong, total)
+      else readFiles(spark, path, v, straddle.map(f => s"$path/${f.file}"))
+        .filter(inRange(colName, t, l, h)).count()
+    (metaRows + scanned, metaRows, straddle.size.toLong, plan.total)
   }
 
   /** Retention GC — drop snapshots older than the last `keepLast`

@@ -30,9 +30,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *     .load().filter($"price" >= 100000)
   * }}}
   *
-  * prunes data files exactly like a hand-called
-  * [[SnapshotTable.readPrunedCols]] — no side API, the predicate
-  * arrives through the optimizer like any parquet scan's.
+  * prunes data files exactly like a hand-called [[SnapshotTable.scan]]
+  * — no side API, the predicate arrives through the optimizer like any
+  * parquet scan's.
   *
   * Pushdown is ADVISORY by construction: `pushFilters` keeps EVERY
   * filter as a residual (Spark re-evaluates them over the scan
@@ -44,7 +44,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * The scan itself is a [[V1Scan]]: planning resolves the candidate
   * file list on the driver (O(metadata)), and the relation body
-  * delegates to [[SnapshotTable.readPlanned]] — the tombstone-applying
+  * delegates to [[SnapshotTable.scan]] — the tombstone-applying
   * distributed read — rather than re-implementing a parquet
   * PartitionReader. This is the same v2-plans/v1-executes shape
   * Spark's own JDBC source uses, and it keeps ONE read path for
@@ -312,7 +312,7 @@ private[sources] class SnapshotScanBuilder(path: String,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  // ---- aggregate pushdown: statsAgg/statsAggCol through Catalyst ----
+  // ---- aggregate pushdown: statsAggCols through Catalyst -----------
   // COUNT(*) / MIN / MAX with no GROUP BY and no predicates answer
   // from the manifest lines alone — ZERO data files opened, the
   // metadata-only aggregate surfaced to SQL. Declined (so the ordinary
@@ -480,13 +480,11 @@ private[sources] class SnapshotV1Scan(path: String, version: Option[Int],
         val preds = pushed.toIndexedSeq
           .flatMap(SnapshotTableSource.toDnf)
           .map(SnapshotTable.PredDnf(_))
-        val (pairs, total) =
-          SnapshotTable.planPrunedFilesDnf(path, version, preds)
+        val (df, planned, total) =
+          SnapshotTable.scan(context.sparkSession, path, preds, version)
         SnapshotTableSource.lastAggPushed = false
-        SnapshotTableSource.lastPlanned = pairs.size.toLong
+        SnapshotTableSource.lastPlanned = planned
         SnapshotTableSource.lastTotal = total
-        val df = SnapshotTable.readPlanned(
-          context.sparkSession, path, version, pairs)
         val pruned =
           if (required.fieldNames.sameElements(df.schema.fieldNames)) df
           else df.select(required.fieldNames.toIndexedSeq
@@ -555,12 +553,12 @@ private[sources] class SnapshotBatchScan(path: String,
         case _ =>
           val preds = key.flatMap(SnapshotTableSource.toDnf)
             .map(SnapshotTable.PredDnf(_))
-          val (pairs, total) =
-            SnapshotTable.planPrunedFilesDnf(path, version, preds)
+          val (_, _, plan) = SnapshotTable.planScan(path, version, preds)
           SnapshotTableSource.lastAggPushed = false
-          SnapshotTableSource.lastPlanned = pairs.size.toLong
-          SnapshotTableSource.lastTotal = total
-          val ps: Array[InputPartition] = pairs.map { case (_, fp) =>
+          SnapshotTableSource.lastPlanned = plan.cands.size.toLong
+          SnapshotTableSource.lastTotal = plan.total
+          val ps: Array[InputPartition] = plan.cands.map { case (_, f) =>
+            val fp = s"$path/${f.file}"
             val len = java.nio.file.Files.size(
               java.nio.file.Paths.get(fp))
             SnapshotFilePartition(fp, len): InputPartition

@@ -106,8 +106,8 @@ class EndToEndPipelineSpec extends SparkSpec {
     // replayed batch and the tail — 3 committed versions, monotone rows
     // (per-version counts off the manifests, no data file opened)
     assert(SnapshotTable.latestVersion(sink).contains(3))
-    assert((1 to 3).map(v => SnapshotTable.statsAgg(sink, Some(v))._1) ==
-      Seq(4L, 8L, 12L))
+    assert((1 to 3).map(v =>
+      SnapshotTable.statsAggCols(sink, Nil, Some(v))._1) == Seq(4L, 8L, 12L))
   }
 }
 

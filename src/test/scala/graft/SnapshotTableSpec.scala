@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
+import graft.sources.SnapshotTable.between
 
 /** The unified snapshot table (commit log + zone-map skipping in one
   * format): snapshot isolation, time travel, pruned reads at any
@@ -39,7 +40,7 @@ class SnapshotTableSpec extends SparkSpec {
          (lo, hi) <- Seq((0.0, 120.0), (450.0, 700.0), (1100.0, 1200.0),
            (5000.0, 9000.0), (-10.0, 20000.0))) {
       val (cand, read, total) =
-        SnapshotTable.readPruned(spark, t, lo, hi, v)
+        SnapshotTable.scan(spark, t, Seq(between("z", lo, hi)), v)
       val full = SnapshotTable.read(spark, t, v)
       assert(cand.filter(col("z").between(lo, hi)).count() ==
         full.filter(col("z").between(lo, hi)).count(),
@@ -47,11 +48,27 @@ class SnapshotTableSpec extends SparkSpec {
       assert(read <= total)
     }
     // a v1-era probe on a range only v2 covers reads zero files at v1
-    val (_, r1, _) = SnapshotTable.readPruned(spark, t, 1100, 1200, Some(1))
+    val (_, r1, _) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 1100, 1200)), Some(1))
     assert(r1 == 0)
     // and a strict subset at v2
-    val (_, r2, tot2) = SnapshotTable.readPruned(spark, t, 1100, 1200)
+    val (_, r2, tot2) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 1100, 1200)))
     assert(r2 > 0 && r2 < tot2)
+  }
+
+  test("a probe that prunes every file answers an empty relation of the " +
+      "committed schema, with no file relation in its plan") {
+    val t = Files.createTempDirectory("graft-snapep").toString + "/t"
+    SnapshotTable.commitAppend(rows(0 until 400), t, "z", 4)
+    val (cand, read, total) =
+      SnapshotTable.scan(spark, t, Seq(between("z", 5000.0, 9000.0)))
+    assert(read == 0 && total == 4)
+    assert(cand.count() == 0)
+    assert(cand.schema == SnapshotTable.read(spark, t).schema)
+    val plan = cand.queryExecution.analyzed
+    assert(plan.collect { case r: org.apache.spark.sql.execution
+      .datasources.LogicalRelation => r }.isEmpty, plan.treeString)
   }
 
   test("copy-on-write delete: the new version loses exactly the keys, " +
@@ -85,7 +102,8 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(SnapshotTable.latestVersion(t).contains(3))
     // pruning stays strict after the delete
-    val (cand, read, total) = SnapshotTable.readPruned(spark, t, 100, 200)
+    val (cand, read, total) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 100, 200)))
     assert(read > 0 && read < total)
     assert(cand.filter(col("z").between(100, 200)).count() == 101)
   }
@@ -116,7 +134,7 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.read(spark, t, Some(1))
     }
     // pruning still sound on the survivors
-    val (cand, _, _) = SnapshotTable.readPruned(spark, t, 0, 100)
+    val (cand, _, _) = SnapshotTable.scan(spark, t, Seq(between("z", 0, 100)))
     assert(cand.filter(col("z").between(0, 100)).count() ==
       SnapshotTable.read(spark, t).filter(col("z").between(0, 100))
         .count())
@@ -155,7 +173,8 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("multiple rows per matched key"))
     // pruning stays strict and sound over the merged layout
-    val (cand, read, total) = SnapshotTable.readPruned(spark, t, 0, 300)
+    val (cand, read, total) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 0, 300)))
     assert(read > 0 && read < total)
     assert(cand.filter(col("z").between(0, 300)).count() ==
       latest.filter(col("z").between(0, 300)).count())
@@ -276,7 +295,8 @@ class SnapshotTableSpec extends SparkSpec {
     // the pre-compact version is untouched
     assert(SnapshotTable.read(spark, t, Some(vPre)).count() == 500)
     // pruning stays strict over the compacted layout
-    val (cand, read, total) = SnapshotTable.readPruned(spark, t, 100, 180)
+    val (cand, read, total) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 100, 180)))
     assert(read > 0 && read < total)
     assert(cand.filter(col("z").between(100, 180)).count() == 81)
     // vacuum to the compacted version reclaims every pre-compact file
@@ -331,7 +351,8 @@ class SnapshotTableSpec extends SparkSpec {
       100L, 200L)
     assert(c0 == 0 && v0 == v)
     // pruning stays strict and sound over the mixed layout
-    val (cand, rd, tot) = SnapshotTable.readPruned(spark, t, 300, 399)
+    val (cand, rd, tot) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 300, 399)))
     assert(rd > 0 && rd < tot)
     assert(cand.filter(col("z").between(300, 399)).count() == 90)
     // a full compact afterwards materializes everything
@@ -393,7 +414,8 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(col("id").between(100, 159)).count() == 0)
     assert(SnapshotTable.read(spark, t, Some(1)).count() == 1000)
     // pruned reads stay sound under the tombstone
-    val (cand, read2, tot2) = SnapshotTable.readPruned(spark, t, 50, 300)
+    val (cand, read2, tot2) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 50, 300)))
     assert(read2 > 0 && read2 < tot2)
     assert(cand.filter(col("z").between(50, 300)).count() == 191)
     // sequence scoping: a LATER append re-inserting deleted keys
@@ -412,7 +434,7 @@ class SnapshotTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SnapshotTable.commitDelete(spark, t, "id", Seq(1L).toDF("id"), "z")
     }
-    intercept[IllegalArgumentException] { SnapshotTable.statsAgg(t) }
+    intercept[IllegalArgumentException] { SnapshotTable.statsAggCol(t, "z") }
     intercept[IllegalArgumentException] {
       SnapshotTable.readChanges(spark, t, 2, 4)
     }
@@ -427,7 +449,7 @@ class SnapshotTableSpec extends SparkSpec {
     // the pre-compact version still applies its tombstones when read
     assert(SnapshotTable.read(spark, t, Some(vPre)).count() == 948)
     // stats answer again after materialization
-    val (n, _, _) = SnapshotTable.statsAgg(t)
+    val (n, _) = SnapshotTable.statsAggCol(t, "z")
     assert(n == 948)
     // vacuum keeps tombstone files while a retained snapshot lists them
     val (_, _) = SnapshotTable.vacuum(t, keepLast = 2)
@@ -460,7 +482,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t, Some(1))
       .schema.fieldNames.toSeq == Seq("id", "z"))
     // pruned reads carry the version schema too
-    val (cand, _, _) = SnapshotTable.readPruned(spark, t, 450.0, 500.0)
+    val (cand, _, _) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 450.0, 500.0)))
     assert(cand.schema.fieldNames.contains("tag"))
     // the sharp edge: a COW delete touching old- AND new-schema files
     // rewrites survivors together without dropping the evolved column
@@ -540,37 +563,39 @@ class SnapshotTableSpec extends SparkSpec {
     val t = Files.createTempDirectory("graft-snapsa").toString + "/t"
     SnapshotTable.commitAppend(rows(0 until 800), t, "z", 8)
     SnapshotTable.commitAppend(rows(800 until 1000), t, "z", 2)
-    val (n, mn, mx) = SnapshotTable.statsAgg(t)
-    assert(n == 1000 && mn == 0.0 && mx == 999.0)
+    val (n, Some((_, mn, mx))) = SnapshotTable.statsAggCol(t, "z")
+    assert(n == 1000 && mn.toDouble == 0.0 && mx.toDouble == 999.0)
     // unbounded count: every file fully inside, nothing scanned
     val (nF, metaF, scanF, totF) = SnapshotTable.countRange(spark, t, "z",
-      Double.NegativeInfinity, Double.PositiveInfinity)
+      None, None)
     assert(nF == 1000 && metaF == 1000 && scanF == 0 && totF == 10)
     // a mid-range count: exact, with a strict straddle subset and a
     // real metadata contribution (the 8 v1 files each span 100 ids)
     val (nR, metaR, scanR, _) = SnapshotTable.countRange(spark, t, "z",
-      50.0, 449.0)
+      Some(50.0), Some(449.0))
     assert(nR == 400, s"range count $nR")
     assert(metaR > 0 && scanR > 0 && scanR < totF,
       s"meta=$metaR scanned=$scanR/$totF")
     // disjoint range: zero everything
     val (n0, meta0, scan0, _) = SnapshotTable.countRange(spark, t, "z",
-      5000.0, 9000.0)
+      Some(5000.0), Some(9000.0))
     assert(n0 == 0 && meta0 == 0 && scan0 == 0)
     // boundary-exact: bounds are inclusive min/max, so a range that
     // ENDS exactly on a file boundary keeps that file metadata-only
-    val (nB, _, _, _) = SnapshotTable.countRange(spark, t, "z", 0.0, 99.0)
+    val (nB, _, _, _) = SnapshotTable.countRange(spark, t, "z",
+      Some(0.0), Some(99.0))
     assert(nB == 100)
     // versioned: v1's stats exclude the later commit
-    val (n1, mn1, mx1) = SnapshotTable.statsAgg(t, Some(1))
-    assert(n1 == 800 && mn1 == 0.0 && mx1 == 799.0)
+    val (n1, Some((_, mn1, mx1))) =
+      SnapshotTable.statsAggCol(t, "z", Some(1))
+    assert(n1 == 800 && mn1.toDouble == 0.0 && mx1.toDouble == 799.0)
     // stats stay exact after a COW delete rewrites bounds
     SnapshotTable.commitDelete(spark, t, "id",
       (990L until 1000L).toDF("id"), "z")
-    val (nD, _, mxD) = SnapshotTable.statsAgg(t)
-    assert(nD == 990 && mxD == 989.0)
+    val (nD, Some((_, _, mxD))) = SnapshotTable.statsAggCol(t, "z")
+    assert(nD == 990 && mxD.toDouble == 989.0)
     val (nRD, _, _, _) = SnapshotTable.countRange(spark, t, "z",
-      900.0, 2000.0)
+      Some(900.0), Some(2000.0))
     assert(nRD == 90)
   }
 
@@ -666,7 +691,7 @@ class SnapshotTableSpec extends SparkSpec {
       "included") {
     val t = Files.createTempDirectory("graft-snapdc").toString + "/t"
     SnapshotTable.commitAppend(rows(0 until 400), t, "z", 4)
-    def live(v: Int) = SnapshotTable.statsAgg(t, Some(v))._1
+    def live(v: Int) = SnapshotTable.statsAggCols(t, Nil, Some(v))._1
     // keys covering one whole range file: its survivors are empty, so
     // the rewrite records no file for it at all
     val (d1, v1) = SnapshotTable.commitDelete(spark, t, "id",
@@ -709,11 +734,11 @@ class SnapshotTableSpec extends SparkSpec {
     // a probe bounded by such values stays sound and strict
     val (lo, hi) = (vals(100), vals(149))
     val (cand, read, total) =
-      SnapshotTable.readPrunedCol(spark, t, "s", lo, hi)
+      SnapshotTable.scan(spark, t, Seq(between("s", lo, hi)))
     assert(read > 0 && read < total, s"string prune $read/$total")
     assert(cand.filter(col("s").between(lo, hi)).count() == 50)
     val (one, oneRead, _) =
-      SnapshotTable.readPrunedCol(spark, t, "s", vals(7), vals(7))
+      SnapshotTable.scan(spark, t, Seq(between("s", vals(7), vals(7))))
     assert(oneRead == 1 && one.filter(col("s") === vals(7)).count() == 1)
   }
 
@@ -748,21 +773,20 @@ class SnapshotTableSpec extends SparkSpec {
     val df = (0 until 400).map(i => (i.toLong, f"d$i%03d")).toDF("id", "day")
       .withColumn("dt",
         date_add(to_date(lit("2020-01-01")), col("id").cast("int")))
-    // STRING cluster column: the legacy double channel records the
-    // never-pruning sentinel; the typed envelopes do the skipping
+    // STRING cluster column: the typed envelopes do the skipping
     SnapshotTable.commitAppend(df, t, "day", 8)
     SnapshotTable.commitAppend(
       df.withColumn("id", col("id") + 400)
         .withColumn("day", concat(lit("e"), col("day"))), t, "day", 4)
     val full = SnapshotTable.read(spark, t)
     val (sCand, sRead, sTotal) =
-      SnapshotTable.readPrunedCol(spark, t, "day", "d100", "d149")
+      SnapshotTable.scan(spark, t, Seq(between("day", "d100", "d149")))
     assert(sRead > 0 && sRead < sTotal, s"string prune $sRead/$sTotal")
     assert(sCand.filter(col("day") >= "d100" && col("day") <= "d149")
       .count() ==
       full.filter(col("day") >= "d100" && col("day") <= "d149").count())
-    val (dCand, dRead, dTotal) = SnapshotTable.readPrunedCol(
-      spark, t, "dt", "2020-02-01", "2020-02-15")
+    val (dCand, dRead, dTotal) = SnapshotTable.scan(
+      spark, t, Seq(between("dt", "2020-02-01", "2020-02-15")))
     assert(dRead > 0 && dRead < dTotal, s"date prune $dRead/$dTotal")
     assert(dCand
       .filter(col("dt").between(lit("2020-02-01"), lit("2020-02-15")))
@@ -771,11 +795,11 @@ class SnapshotTableSpec extends SparkSpec {
         .count())
     // a range beyond every recorded bound opens zero files
     val (_, zRead, _) =
-      SnapshotTable.readPrunedCol(spark, t, "day", "zzz", "zzzz")
+      SnapshotTable.scan(spark, t, Seq(between("day", "zzz", "zzzz")))
     assert(zRead == 0)
     // pruning composes with time travel: v1 has no 'e…' days at all
-    val (_, eRead, _) = SnapshotTable.readPrunedCol(
-      spark, t, "day", "ed000", "ed050", Some(1))
+    val (_, eRead, _) = SnapshotTable.scan(
+      spark, t, Seq(between("day", "ed000", "ed050")), Some(1))
     assert(eRead == 0)
     // a 100,000-character string bound round-trips through the manifest
     // and snapshot lines (a regex that recursed per character would
@@ -784,7 +808,7 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.commitAppend(Seq((900L, long)).toDF("id", "day")
       .withColumn("dt", to_date(lit("2021-06-01"))), t, "day", 1)
     val (lCand, lRead, lTotal) =
-      SnapshotTable.readPrunedCol(spark, t, "day", long, long)
+      SnapshotTable.scan(spark, t, Seq(between("day", long, long)))
     assert(lRead == 1 && lRead < lTotal, s"long-bound prune $lRead/$lTotal")
     assert(lCand.filter(col("day") === long).count() == 1)
   }
@@ -798,7 +822,7 @@ class SnapshotTableSpec extends SparkSpec {
     for ((c, lo, hi, expect) <- Seq(("x", 10.0, 19.0, 64L * 10),
         ("y", 20.0, 27.0, 64L * 8))) {
       val (cand, read, total) =
-        SnapshotTable.readPrunedCol(spark, t, c, lo, hi)
+        SnapshotTable.scan(spark, t, Seq(between(c, lo, hi)))
       assert(read > 0 && read < total, s"$c prune read $read/$total")
       assert(cand.filter(col(c).between(lo, hi)).count() == expect)
     }
@@ -806,7 +830,8 @@ class SnapshotTableSpec extends SparkSpec {
     val (deleted, _) = SnapshotTable.commitDelete(spark, t, "id",
       (0L until 64L).toDF("id"), "x")
     assert(deleted == 64)
-    val (cand2, r2, t2) = SnapshotTable.readPrunedCol(spark, t, "y", 0.0, 0.0)
+    val (cand2, r2, t2) = SnapshotTable.scan(spark, t,
+      Seq(between("y", 0.0, 0.0)))
     assert(r2 < t2)
     assert(cand2.filter(col("y") === 0.0).count() == 0)
   }
@@ -1066,18 +1091,18 @@ class SnapshotTableSpec extends SparkSpec {
       .map(i => (i.toLong, (i % 64).toDouble, (i / 64).toDouble))
       .toDF("id", "x", "y")
     SnapshotTable.commitAppendZOrdered(df, t, "x", "y", 16)
-    val (_, rx, _) = SnapshotTable.readPrunedCol(spark, t, "x", 10.0, 19.0)
-    val (_, ry, _) = SnapshotTable.readPrunedCol(spark, t, "y", 20.0, 27.0)
-    val (both, rBoth, total) = SnapshotTable.readPrunedCols(spark, t,
-      Seq(("x", 10.0, 19.0), ("y", 20.0, 27.0)))
+    val (_, rx, _) = SnapshotTable.scan(spark, t, Seq(between("x", 10.0, 19.0)))
+    val (_, ry, _) = SnapshotTable.scan(spark, t, Seq(between("y", 20.0, 27.0)))
+    val (both, rBoth, total) = SnapshotTable.scan(spark, t,
+      Seq(between("x", 10.0, 19.0), between("y", 20.0, 27.0)))
     assert(rBoth <= math.min(rx, ry) && rBoth < total,
       s"box probe must intersect: box=$rBoth x=$rx y=$ry total=$total")
     assert(both.filter(col("x").between(10, 19) &&
       col("y").between(20, 27)).count() == 80)
     // an unknown column drops out of the conjunction instead of
     // wrongly pruning
-    val (all, rAll, tot2) = SnapshotTable.readPrunedCols(spark, t,
-      Seq(("nope", 0, 1)))
+    val (all, rAll, tot2) = SnapshotTable.scan(spark, t,
+      Seq(between("nope", 0, 1)))
     assert(rAll == tot2 && all.count() == 4096)
   }
 
@@ -1183,7 +1208,7 @@ class SnapshotTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SnapshotTable.commitDelete(spark, t, "id", Seq(5L).toDF("id"), "z")
     }
-    intercept[IllegalArgumentException] { SnapshotTable.statsAgg(t) }
+    intercept[IllegalArgumentException] { SnapshotTable.statsAggCol(t, "z") }
     // compaction materializes and drops the refs
     val n = SnapshotTable.read(spark, t).count()
     SnapshotTable.compactCommit(spark, t, "z", 500L)
@@ -1206,7 +1231,8 @@ class SnapshotTableSpec extends SparkSpec {
     val feb = 2024L * 12 + 1
     // every file single-valued: the _pt prune is exact, not a subset
     val (candP, readP, totalP) =
-      SnapshotTable.readPrunedCol(spark, t, SnapshotTable.PartCol, feb, feb)
+      SnapshotTable.scan(spark, t,
+        Seq(between(SnapshotTable.PartCol, feb, feb)))
     assert(readP > 0 && readP < totalP)
     assert(candP.count() == 200)
     val dataFiles0 = SnapshotTable.snapshot(t).map(_.files).sum
@@ -1488,7 +1514,7 @@ class SnapshotTableSpec extends SparkSpec {
       .toSeq.sorted
     assert(names.nonEmpty)
     val (footer, scan) =
-      SnapshotTable.statPathsForTest(spark, t, names, "k", df.schema)
+      SnapshotTable.statPathsForTest(spark, t, names, df.schema)
     assert(footer.isDefined, "fast path must engage for l/dec/s/dt")
     assert(footer.get == scan,
       s"footer stats diverged from scan:\n${footer.get}\nvs\n$scan")
@@ -1501,7 +1527,7 @@ class SnapshotTableSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
       .toSeq.sorted
     val (f2, s2) =
-      SnapshotTable.statPathsForTest(spark, t2, names2, "k", dbl.schema)
+      SnapshotTable.statPathsForTest(spark, t2, names2, dbl.schema)
     assert(f2.isEmpty, "double columns must fall back to the scan")
     assert(s2.nonEmpty)
   }
@@ -1528,7 +1554,7 @@ class SnapshotTableSpec extends SparkSpec {
       .toSeq.sorted
     assert(names.nonEmpty)
     val (footer, scan) =
-      SnapshotTable.statPathsForTest(spark, t, names, "k", df.schema)
+      SnapshotTable.statPathsForTest(spark, t, names, df.schema)
     assert(footer.isDefined,
       "fast path must engage for timestamp columns under " +
         "TIMESTAMP_MICROS output")
@@ -1551,7 +1577,7 @@ class SnapshotTableSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
       .toSeq.sorted
     val (fast, scan) = SnapshotTable.bloomStatPathsForTest(spark, t,
-      names, "k", df.schema, Seq("id", "name"))
+      names, df.schema, Seq("id", "name"))
     assert(fast == scan,
       s"narrow bloom path diverged from the full scan:\n$fast\nvs\n$scan")
     assert(fast.forall(f => f.rows == 0 || f.blooms.map(_.c) ==
@@ -1572,7 +1598,7 @@ class SnapshotTableSpec extends SparkSpec {
       "z", 4, 2L, writerId = "w"))
     assert(SnapshotTable.read(spark, ts).count() == 800)
     val (cs, rs, tots) =
-      SnapshotTable.readPrunedCol(spark, ts, "z", "n0100", "n0199")
+      SnapshotTable.scan(spark, ts, Seq(between("z", "n0100", "n0199")))
     assert(rs > 0 && rs < tots, s"string probe read $rs of $tots")
     assert(cs.filter(col("z").between("n0100", "n0199")).count() == 100)
     // MORTON table: two batches + a replay; both dims prune after
@@ -1593,7 +1619,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(all.count() == 1600)
     for ((c, lo, hi) <- Seq(("x", 5.0, 10.0), ("y", 100.0, 300.0))) {
       val (cand, read, total) =
-        SnapshotTable.readPrunedCol(spark, t2, c, lo, hi)
+        SnapshotTable.scan(spark, t2, Seq(between(c, lo, hi)))
       assert(read > 0 && read < total, s"$c-probe read $read of $total")
       assert(cand.filter(col(c).between(lo, hi)).count() ==
         all.filter(col(c).between(lo, hi)).count())
@@ -1615,8 +1641,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(empty.count() == 0)
     assert(empty.columns.toSeq == Seq("id", "z"))
     // pruned readers degrade to a sound empty plan
-    val (cand, read, _) = SnapshotTable.readPrunedCol(spark, t, "z",
-      0.0, 1000.0)
+    val (cand, read, _) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 0.0, 1000.0)))
     assert(read == 0 && cand.count() == 0)
     // and the table comes back to life: the next append's manifest
     // prunes strictly (no stale envelope to select against)
@@ -1624,11 +1650,11 @@ class SnapshotTableSpec extends SparkSpec {
       (500 until 600).map(i => (i.toLong, i.toDouble)).toDF("id", "z"),
       t, "z", 2)
     assert(SnapshotTable.read(spark, t).count() == 100)
-    val (c2, r2, tot2) = SnapshotTable.readPrunedCol(spark, t, "z",
-      500.0, 540.0)
+    val (c2, r2, tot2) = SnapshotTable.scan(spark, t,
+      Seq(between("z", 500.0, 540.0)))
     assert(r2 > 0 && r2 < tot2, s"revived probe read $r2 of $tot2")
     assert(c2.filter(col("z").between(500.0, 540.0)).count() == 41)
-    val (_, r3, _) = SnapshotTable.readPrunedCol(spark, t, "z", 0.0, 100.0)
+    val (_, r3, _) = SnapshotTable.scan(spark, t, Seq(between("z", 0.0, 100.0)))
     assert(r3 == 0, "the revived table should prune a now-empty range fully")
   }
 
@@ -1651,7 +1677,7 @@ class SnapshotTableSpec extends SparkSpec {
       writerId = ckpt), "replay of a committed empty batch must short-circuit")
     assert(SnapshotTable.read(spark, t).count() == 0)
     val (eCand, eRead, _) =
-      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 1000L)
+      SnapshotTable.scan(spark, t, Seq(between("price", 0L, 1000L)))
     assert(eRead == 0 && eCand.count() == 0)
 
     // a real batch lands next
@@ -1670,7 +1696,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(after.count() == 60)
     assert(after.inputFiles.toSet == filesBefore)
     val (cand, read, total) =
-      SnapshotTable.readPrunedCol(spark, t, "price", 0L, 500L)
+      SnapshotTable.scan(spark, t, Seq(between("price", 0L, 500L)))
     assert(read > 0 && read < total, s"read $read of $total")
     assert(cand.filter(col("price").between(0, 500)).count() ==
       after.filter(col("price").between(0, 500)).count())
