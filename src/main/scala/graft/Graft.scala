@@ -16,7 +16,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Apply graft's extensions and recommended confs to any builder. */
+  /** Apply graft's extensions and recommended confs to any builder.
+    *
+    * It turns `spark.sql.artifact.isolation.enabled` off. Spark's
+    * codegen cache is keyed on (class loader, code), and an isolated
+    * session runs its tasks under a class loader of its own, so every
+    * streaming query (which runs on a cloned session) and every
+    * `newSession()` would recompile code already in the cache. graft
+    * adds no session artifacts, so with isolation off a steady-state
+    * ingest day compiles nothing new. Applications that do add
+    * per-session jars can set it back on their builder after this call.
+    */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.withExtensions(new graft.functions.GraftExtensions)
       // AQE re-plans at runtime from real sizes: coalesces shuffle
@@ -36,6 +46,10 @@ object Graft {
       // fast path covers timestamp-carrying schemas instead of paying
       // a full read-back scan per commit.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // one codegen cache for the whole application (see above): the
+      // dead per-session loaders' entries would also crowd live plans
+      // out of the 100-entry cache
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Local single-JVM session (tests, CLI mains, dev loops): shuffle
     * width = core count, because the 200-partition default is sized for

@@ -211,9 +211,10 @@ object GmailPipeline {
     // multiLine=true, because quoteAll writes any embedded newline in
     // subject/from as a quoted multi-line field, and the default
     // per-physical-line read would split it into extra records and
-    // inflate the count
-    (formatted.sparkSession.read.option("header", true)
-      .option("multiLine", true)
+    // inflate the count; the written schema is passed, so no job runs
+    // just to read the header back
+    (formatted.sparkSession.read.schema(formatted.schema)
+      .option("header", true).option("multiLine", true)
       .csv(s"${cfg.stage1Dir}/$outName").count(), moved)
   }
 }

@@ -692,11 +692,16 @@ object SnapshotTable {
   /** Range-clustered layout on one column of ANY orderable type —
     * string/date clustering is what makes the typed envelopes
     * selective: each file then holds one compact slice of the
-    * column's lexicographic (or date) order.
+    * column's lexicographic (or date) order. One file needs no range
+    * bounds: `coalesce(1)` plans no exchange, so the commit is the
+    * write job alone, where a range exchange makes AQE run its map
+    * stage as a job of its own first.
     */
   private def rangeLayout(df: DataFrame, zcol: String,
       nFiles: Int): DataFrame =
-    df.repartitionByRange(nFiles, col(zcol)).sortWithinPartitions(col(zcol))
+    (if (nFiles == 1) df.coalesce(1)
+     else df.repartitionByRange(nFiles, col(zcol)))
+      .sortWithinPartitions(col(zcol))
 
   /** Morton (Z-order) layout on two numeric columns: each value is
     * scaled to 16 bits against the input's own [min, max] (one tiny
@@ -871,8 +876,10 @@ object SnapshotTable {
 
   /** Per-file stats decoded from parquet footers — None when ANY
     * column of ANY file lacks an exactly-decodable statistic (missing
-    * chunk stats, truncated/oversized binary bounds, unexpected
-    * physical type), in which case the caller runs the scan. False
+    * chunk stats, unexpected physical type), in which case the caller
+    * runs the scan. The one per-column exception: a string column whose
+    * bounds parquet dropped as oversized records no [[ColStat]] in that
+    * file, and the other columns keep their footer bounds. False
     * "unusable" only costs the fallback job; a wrong decode is ruled
     * out by taking only bit-exact representations.
     */
@@ -972,9 +979,10 @@ object SnapshotTable {
       val rows = blocks.map(_.getRowCount).sum
       if (rows == 0L) FileStat(n, 0L)
       else {
-        val cols = fields.map { case (cName, dt, t) =>
+        val cols = fields.flatMap { case (cName, dt, t) =>
           var lo: Option[String] = None
           var hi: Option[String] = None
+          var dropped = false
           blocks.foreach { b =>
             val chunk = b.getColumns.asScala
               .find(_.getPath.toDotString == cName)
@@ -992,11 +1000,16 @@ object SnapshotTable {
               hi = Some(hi.filter(cmpCanon(t, _, mx) >= 0)
                 .getOrElse(mx))
             } else if (!(st.isNumNullsSet &&
-                st.getNumNulls == b.getRowCount))
-              // can't tell "all null" from "stats dropped": scan
-              throw FooterUnusable
+                st.getNumNulls == b.getRowCount)) {
+              // non-null rows but no bounds: parquet drops the min/max
+              // of a binary chunk whose values exceed its statistics
+              // size limit. A string column then records no stat, which
+              // every reader of the manifest treats as "unknown: keep";
+              // any other type can't tell that from a decode gap: scan
+              if (t == "s") dropped = true else throw FooterUnusable
+            }
           }
-          ColStat(cName, t, lo, hi)
+          if (dropped) None else Some(ColStat(cName, t, lo, hi))
         }
         FileStat(n, rows, cols)
       }

@@ -17,6 +17,46 @@ class SnapshotTableSpec extends SparkSpec {
   private def rows(r: Range) =
     r.map(i => (i.toLong, i.toDouble, s"p${i % 7}")).toDF("id", "z", "tag")
 
+  /** The Spark jobs `body` launches, counted by a listener. A marker job
+    * after `body` flushes the listener bus: its end event arrives after
+    * every earlier event.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val marker = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.spec.marker") != null)
+          marker.set(e.jobId)
+        else starts.incrementAndGet()
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (e.jobId == marker.get) markerDone.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      (out, starts.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def dataFiles(t: String, v: Int): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(t)).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith(s"v$v-") && n.endsWith(".parquet"))
+      .toSeq.sorted
+  }
+
   test("append commits are snapshot-isolated and time travel reads " +
       "each version bit for bit") {
     val t = Files.createTempDirectory("graft-snap").toString + "/t"
@@ -1582,6 +1622,72 @@ class SnapshotTableSpec extends SparkSpec {
       s"narrow bloom path diverged from the full scan:\n$fast\nvs\n$scan")
     assert(fast.forall(f => f.rows == 0 || f.blooms.map(_.c) ==
       Seq("id", "name")), "every live file must carry both sketches")
+  }
+
+  test("a one-file append is one Spark job: one file, sorted on its " +
+      "layout column, footer stats equal to the scan's") {
+    val t = Files.createTempDirectory("graft-snap1j").toString + "/t"
+    // ids out of order across the local relation's partitions
+    val df = (0 until 250).map(i => ((i * 37 % 250).toLong, s"p${i % 7}"))
+      .toDF("id", "tag")
+      .withColumn("day", date_add(lit(java.sql.Date.valueOf("2024-01-01")),
+        (col("id") % 30).cast("int")))
+    val (v, jobs) = jobsOf(SnapshotTable.commitAppend(df, t, "id", 1))
+    assert(v == 1)
+    assert(jobs == 1, s"a one-file append launched $jobs jobs")
+    val names = dataFiles(t, 1)
+    assert(names.size == 1, names)
+    val ids = spark.read.parquet(s"$t/${names.head}").select("id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(ids == (0L until 250L), "the file must hold the rows sorted on id")
+    val (footer, scan) =
+      SnapshotTable.statPathsForTest(spark, t, names, df.schema)
+    assert(footer.contains(scan), s"${footer}\nvs\n$scan")
+    // the planned delete's job count, reported (not pinned): 50 keys on
+    // a 4,000-row, 8-file table
+    val td = Files.createTempDirectory("graft-snapdj").toString + "/t"
+    SnapshotTable.commitAppend(rows(0 until 4000), td, "z", 8)
+    val ((deleted, _, _, _), delJobs) = jobsOf(SnapshotTable
+      .commitDeletePlanned(spark, td, "id", (700L until 750L).toDF("id"), "z"))
+    assert(deleted == 50)
+    info(s"50-key commitDeletePlanned on 4,000 rows in 8 files: $delJobs jobs")
+  }
+
+  test("a string value over parquet's statistics limit drops only that " +
+      "column's stat: the footer path holds, and the file stays in " +
+      "every probe on that column") {
+    val t = Files.createTempDirectory("graft-snapbig").toString + "/t"
+    val big = "b" * 5000
+    val df = (0 until 200).map(i => (i.toLong, s"p${i % 7}",
+        if (i == 17) big else s"body $i", BigDecimal(i) / 4))
+      .toDF("id", "tag", "body", "price")
+      .withColumn("price", col("price").cast("decimal(12,2)"))
+    val (_, jobs) = jobsOf(SnapshotTable.commitAppend(df, t, "id", 1))
+    assert(jobs == 1, s"the commit launched $jobs jobs: the stats scanned")
+    val names = dataFiles(t, 1)
+    val (footer, scan) =
+      SnapshotTable.statPathsForTest(spark, t, names, df.schema)
+    assert(footer.isDefined, "an oversized string must not decline the footer")
+    assert(footer.get.map(_.rows) == scan.map(_.rows))
+    footer.get.zip(scan).foreach { case (f, s) =>
+      assert(f.cols.map(_.col) == Seq("id", "tag", "price"))
+      assert(f.cols == s.cols.filterNot(_.col == "body"))
+    }
+    // a second file with small bodies keeps its body bounds
+    SnapshotTable.commitAppend(df.filter(col("id") =!= 17L)
+      .withColumn("id", col("id") + 1000), t, "id", 1)
+    val (cand, read, total) =
+      SnapshotTable.scan(spark, t, Seq(between("body", "zz", "zzz")))
+    assert(total == 2 && read == 1,
+      s"the unbounded file must be kept, the bounded one pruned: $read/$total")
+    assert(cand.filter(col("body").between("zz", "zzz")).count() == 0)
+    val (hit, _, _) = SnapshotTable.scan(spark, t, Seq(between("body", big, big)))
+    assert(hit.filter(col("body") === big).count() == 1)
+    val (_, tagRead, _) =
+      SnapshotTable.scan(spark, t, Seq(between("tag", "zz", "zzz")))
+    assert(tagRead == 0, "the other columns keep pruning")
+    assert(SnapshotTable.statsAggCol(t, "body")._2.isEmpty)
+    assert(SnapshotTable.statsAggCol(t, "tag")._2.contains(("s", "p0", "p6")))
   }
 
   test("zoneMapIngestCommitString and zoneMapIngestCommit2 commit " +

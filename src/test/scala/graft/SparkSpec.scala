@@ -13,5 +13,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // as Graft.configure ships it: one codegen cache across sessions
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .getOrCreate()
 }
