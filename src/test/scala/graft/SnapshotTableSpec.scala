@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 import graft.sources.SnapshotTable.between
@@ -23,18 +27,16 @@ class SnapshotTableSpec extends SparkSpec {
     */
   private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    val starts = new java.util.concurrent.atomic.AtomicInteger
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val marker = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val starts = new AtomicInteger
+    val markerDone = new CountDownLatch(1)
+    val marker = new AtomicInteger(-1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
             e.properties.getProperty("graft.spec.marker") != null)
           marker.set(e.jobId)
         else starts.incrementAndGet()
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == marker.get) markerDone.countDown()
     }
     sc.addSparkListener(l)
@@ -43,7 +45,7 @@ class SnapshotTableSpec extends SparkSpec {
       sc.setLocalProperty("graft.spec.marker", "1")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty("graft.spec.marker", null)
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      assert(markerDone.await(60, TimeUnit.SECONDS),
         "listener bus did not deliver the marker job")
       (out, starts.get)
     } finally sc.removeSparkListener(l)
